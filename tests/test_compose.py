@@ -5,11 +5,13 @@ string-id sharding path token_pack_for grows for it."""
 from __future__ import annotations
 
 import json
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from v2_ocr_spark.operators import corpus
+from v2_ocr_spark.pipeline import compose
 from v2_ocr_spark.pipeline.compose import run_extract_clean_pipeline
 
 NP = 8
@@ -84,6 +86,30 @@ def test_run_extract_clean_pipeline_end_to_end(
     assert again["extraction"]["committed_this_run"] == 0
     assert again["outcomes"] == summary["outcomes"]
     assert again["kept_bins"] == summary["kept_bins"]
+
+
+def test_crashed_rerun_leaves_no_stale_summary(
+    spark, small_transcripts, tmp_path, monkeypatch
+):
+    """A re-run that dies after overwriting clean/ but before its new
+    summary must not leave the previous run's summary.json beside the
+    new tables: the stale summary is removed before the first write."""
+    out = str(tmp_path / "composed")
+    run_extract_clean_pipeline(
+        spark, small_transcripts, out, num_partitions=NP, budget=500
+    )
+    assert os.path.exists(f"{out}/summary.json")
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("packing crashed")
+
+    monkeypatch.setattr(compose, "token_pack_for", crash)
+    with pytest.raises(RuntimeError, match="packing crashed"):
+        run_extract_clean_pipeline(
+            spark, small_transcripts, out, num_partitions=NP, budget=500
+        )
+    assert os.path.exists(f"{out}/clean")
+    assert not os.path.exists(f"{out}/summary.json")
 
 
 def _naive_pack(docs, budget):

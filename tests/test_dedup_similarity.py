@@ -837,44 +837,6 @@ def test_blas_dot_equals_column_formulation(spark):
     assert (both.col_dot - both.blas_dot).abs().max() < 1e-12
 
 
-def test_run_clean_pipeline_end_to_end(spark, tmp_path):
-    """The composed cleaning job: outcomes partition the corpus, the
-    clean shard contains exactly the kept docs, packing covers every
-    kept doc, and the summary is consistent with the written data."""
-    import json
-
-    from v2_ocr_spark.operators import corpus
-
-    out = str(tmp_path / "cleaned")
-    summary = corpus.run_clean_pipeline(spark, SF, out, budget=500)
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    assert sum(v["n_docs"] for v in summary["outcomes"].values()) == n_docs
-
-    clean = spark.read.parquet(f"{out}/clean")
-    assert clean.count() == summary["kept_docs"] > 0
-    assert {"doc_id", "text", "pred_lang", "quality"} <= set(clean.columns)
-
-    packed = spark.read.parquet(f"{out}/packed")
-    assert packed.count() == summary["kept_docs"]
-    assert packed.select("source", "bin").distinct().count() == (
-        summary["kept_bins"]
-    )
-    # pack-after-filter: offsets are exclusive cumsums over the KEPT
-    # docs only — no gaps where dropped docs used to sit, so windows
-    # are dense (review regression: packing the raw corpus then
-    # filtering left every bin underfilled)
-    pdfp = packed.toPandas()
-    for _, g in pdfp.groupby("source"):
-        g = g.sort_values("doc_id")
-        run = 0
-        for _, r in g.iterrows():
-            assert r.start_token == run
-            assert r.bin == run // 500
-            run += r.n_tokens
-    disk = json.load(open(f"{out}/summary.json"))
-    assert disk == summary
-
-
 def test_dedup_lines_keeps_first_occurrence_order(spark, tmp_path):
     from v2_ocr_spark.operators import textstats
 

@@ -1,0 +1,87 @@
+"""Static import hygiene: every `from v2_ocr_spark... import name` in the
+package, the CLIs and the entry scripts resolves, and the CLIs under
+tools/ use only public package names. A deletion that leaves a dangling
+import fails here instead of at run time; most CLIs import inside
+main(), so no other test would load them."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = "v2_ocr_spark"
+TOOLS = sorted((ROOT / "tools").glob("*.py"))
+SOURCES = [
+    *sorted((ROOT / PKG).rglob("*.py")),
+    *TOOLS,
+    ROOT / "__spark_entry__.py",
+    ROOT / "bench.py",
+]
+
+
+def _tree(path: Path) -> ast.AST:
+    return ast.parse(path.read_text(encoding="utf-8"), str(path))
+
+
+def _package_imports(tree: ast.AST):
+    """(line, module, name) for every package import at any depth;
+    name is None for a plain `import v2_ocr_spark.x`."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            if (node.module or "").split(".")[0] == PKG:
+                for alias in node.names:
+                    yield node.lineno, node.module, alias
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PKG:
+                    yield node.lineno, alias.name, None
+
+
+def _resolves(module: str, name: str | None) -> bool:
+    mod = importlib.import_module(module)
+    return (
+        name is None
+        or hasattr(mod, name)
+        or importlib.util.find_spec(f"{module}.{name}") is not None
+    )
+
+
+def _private(name: str) -> bool:
+    return name.startswith("_") and not name.startswith("__")
+
+
+def test_every_package_import_resolves():
+    dangling = [
+        f"{path.relative_to(ROOT)}:{line}: {module} -> {alias.name}"
+        for path in SOURCES
+        for line, module, alias in _package_imports(_tree(path))
+        if not _resolves(module, alias and alias.name)
+    ]
+    assert not dangling, dangling
+
+
+def test_tools_use_only_public_package_names():
+    found = []
+    for path in TOOLS:
+        tree = _tree(path)
+        bound = set()  # local names bound to something from the package
+        for line, module, alias in _package_imports(tree):
+            if alias is None:
+                bound.add(module.split(".")[0])
+                if any(map(_private, module.split("."))):
+                    found.append(f"{path.name}:{line}: import {module}")
+                continue
+            bound.add(alias.asname or alias.name)
+            if _private(alias.name):
+                found.append(f"{path.name}:{line}: {module}.{alias.name}")
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and _private(node.attr):
+                base = node.value
+                while isinstance(base, ast.Attribute):
+                    base = base.value
+                if isinstance(base, ast.Name) and base.id in bound:
+                    found.append(f"{path.name}:{node.lineno}: .{node.attr}")
+    assert not found, found

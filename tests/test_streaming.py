@@ -216,45 +216,6 @@ def test_stream_dedup_turns(spark, sf_small, tmp_path):
     assert dups == 0
 
 
-def test_stream_sessionize_tws_matches_legacy_api(spark, tmp_path):
-    """transformWithStateInPandas sessionizer emits the identical
-    closed-session set as the applyInPandasWithState formulation. In
-    environments without protobuf (this sandbox) the operator must
-    gate cleanly instead of crashing the streaming query mid-run."""
-    import os
-
-    import pytest
-
-    from v2_ocr_spark.streaming.stateful import (
-        stream_sessionize_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_sessionize_tws(
-                spark, str(tmp_path), str(tmp_path / "o"), str(tmp_path / "c")
-            )
-        return
-
-    src = str(tmp_path / "tws_in")
-    os.makedirs(src)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src)
-
-    q = stream_sessionize_tws(
-        spark, src, str(tmp_path / "tws_out"), str(tmp_path / "tws_ckpt")
-    )
-    q.awaitTermination(300)
-
-    got = sorted(
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.read.parquet(str(tmp_path / "tws_out")).collect()
-    )
-    events = spark.read.parquet(f"{src}/events.parquet").toPandas()
-    assert got == _expected_sessions_pandas(events)
-    assert len(got) > 0
-
-
 def test_advance_session_never_moves_high_water_mark_backward():
     """Review regression (r4): a late event from an open session
     arriving in a later micro-batch must not drag `last` backward —

@@ -17,12 +17,10 @@ def fmt_plan(df) -> str:
 
 
 def main() -> None:
-    import pyspark.sql.functions as F
-
     from v2_ocr_spark.session import get_spark
     from v2_ocr_spark.operators.extract import extract_turns
     from v2_ocr_spark.operators.assemble import assemble
-    from v2_ocr_spark.operators import corpus, dedup, relational, similarity
+    from v2_ocr_spark.operators import corpus, dedup, relational
     from v2_ocr_spark.operators.dom import (
         classify_nodes, flatten_dom, reassemble_content,
     )
@@ -31,9 +29,6 @@ def main() -> None:
     spark = get_spark(master="local[8]")
     d = e._data_dir("/root/testdata/sf0.001")
     t = spark.read.parquet(f"{d}/transcripts.parquet")
-    emb_unit = similarity.with_unit_norm(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    ).select("vec_id", "unit")
 
     sections = [
         (
@@ -148,23 +143,6 @@ def main() -> None:
             "inversion); one doc_id shuffle for the ordered "
             "sort_array reassembly",
             corpus.scrub_boilerplate(spark, "/root/testdata/sf0.001"),
-        ),
-        (
-            "kmeans assignment step — the SemDeDup iteration core (r5)",
-            "k-row centroid table broadcast (BroadcastNestedLoopJoin); "
-            "argmax as partial_max_by — the corpus x k scored rows "
-            "collapse to ONE row per vector at the map side, so the "
-            "per-iteration shuffle is corpus-size (a window "
-            "formulation would shuffle all k candidates per vector)",
-            similarity._assign_euclid(
-                emb_unit,
-                similarity._centroids(emb_unit, 16).withColumn(
-                    "c2",
-                    similarity._dot_pd(
-                        F.col("centroid"), F.col("centroid")
-                    ),
-                ),
-            ),
         ),
     ]
 

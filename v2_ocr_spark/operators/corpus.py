@@ -15,15 +15,11 @@ token regexes are the same Java/RE2-agreeing patterns as textstats.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
-from v2_ocr_spark.operators.textstats import BPE_ISH
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from v2_ocr_spark.operators.textstats import BPE_ISH, _docs
 
 
 def vocabulary_topk(spark, sf_dir, k: int = 100) -> DataFrame:
@@ -275,7 +271,7 @@ def corpus_filter(
     (broadcast-size here, co-partitioned hash joins at corpus scale)
     plus the memoized LSH keeper list — nothing quadratic anywhere.
     Output order is UNSPECIFIED: the decision table is consumed by
-    joins (run_clean_pipeline) where a whole-corpus range exchange for
+    joins (the composed pipeline) where a whole-corpus range exchange for
     ordering would be pure waste; the gate query adds orderBy at
     registration for the oracle hash."""
     from v2_ocr_spark.operators.dedup import dedup_keep_list
@@ -351,9 +347,9 @@ def corpus_filter_stats(spark, sf_dir, **filter_kwargs) -> DataFrame:
 def _filter_stats_for(decisions: DataFrame, toks: DataFrame) -> DataFrame:
     """Per-reason rollup over an EXISTING decisions table joined to an
     existing (doc_id, bpe_tokens) table — the shared body of
-    corpus_filter_stats, run_clean_pipeline's summary, and the composed
-    transcript pipeline (one definition, so the gate query and every
-    pipeline lineage can't drift)."""
+    corpus_filter_stats and the composed transcript pipeline's summary
+    (one definition, so the gate query and the pipeline lineage can't
+    drift)."""
     toks = toks.select("doc_id", "bpe_tokens")
     return (
         decisions.join(toks, "doc_id")
@@ -364,110 +360,6 @@ def _filter_stats_for(decisions: DataFrame, toks: DataFrame) -> DataFrame:
         )
         .orderBy("reason")
     )
-
-
-def run_clean_pipeline(
-    spark, sf_dir: str, out_dir: str, budget: int = 2048, **filter_kwargs
-) -> dict:
-    """The composed END-TO-END cleaning job: filter (quality + lang +
-    length + near-dup) -> keep survivors -> pack into token-budget
-    windows -> write parquet + a lineage summary. One call takes a raw
-    documents table to training-ready packed shards — the pipeline a
-    user of the individual operators would otherwise hand-wire.
-
-    Writes:
-      out_dir/clean/      kept docs with their filter columns
-      out_dir/packed/     (source, doc_id, n_tokens, start_token, bin)
-      out_dir/summary.json  docs/tokens per outcome + kept bins
-
-    Scale notes: every stage is the audited operator (nothing new
-    here); the only materialization between stages is the keep
-    decision, persisted once and reused by the pack join. out_dir must
-    be a DRIVER-LOCAL path: the parquet shards go through Hadoop
-    writers (any scheme would work) but summary.json is written with
-    plain file IO — on an object store, collect the returned summary
-    and persist it yourself."""
-    from v2_ocr_spark.operators.textstats import token_counts
-
-    decisions = corpus_filter(spark, sf_dir, **filter_kwargs).persist()
-    try:
-        return _clean_pack_write(
-            spark, _docs(spark, sf_dir), decisions,
-            token_counts(spark, sf_dir), out_dir, budget,
-        )
-    finally:
-        decisions.unpersist()
-
-
-def _write_summary(out_dir: str, summary: dict) -> None:
-    """Atomic summary.json swap (tmp write + rename): a crashed writer
-    can never leave a torn or partial summary behind. ONE owner — both
-    pipeline entry points write through here exactly once."""
-    import json
-    import os
-
-    tmp = f"{out_dir}/summary.json.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(summary, f)
-    os.replace(tmp, f"{out_dir}/summary.json")
-
-
-def _clean_pack_write(
-    spark, docs: DataFrame, decisions: DataFrame, toks: DataFrame,
-    out_dir: str, budget: int, extra: dict | None = None,
-) -> dict:
-    """The filter->keep->pack->write tail shared by run_clean_pipeline
-    (fixture documents) and the composed transcript pipeline (assembled
-    conversations). ``decisions`` should arrive persisted (it is
-    consumed by the clean join AND the stats rollup). ``extra`` keys
-    (e.g. the composed pipeline's extraction lineage) fold into the
-    summary BEFORE the single atomic write — writing a cleaning-only
-    summary first and re-writing leaves a crash window where
-    summary.json exists without the promised lineage."""
-
-    kept = decisions.where(F.col("keep")).select(
-        "doc_id", "pred_lang", "quality"
-    )
-    clean = docs.join(kept, "doc_id")
-    clean.write.mode("overwrite").parquet(f"{out_dir}/clean")
-
-    # pack the SURVIVORS, not the raw corpus: packing before the
-    # filter would assign offsets/bins that include later-dropped
-    # docs, leaving every training window underfilled. Read them
-    # back from the clean/ files just written — a stage boundary:
-    # the pack plan references both its window branch and its
-    # shard-totals branch, and carrying the whole filter lineage
-    # (LSH pair join + stopword alternation regexes) into each
-    # branch makes the composed plan explode (measured: driver OOM
-    # just RENDERING the explain string at sf0.001)
-    survivors = spark.read.parquet(f"{out_dir}/clean")
-    packed = token_pack_for(survivors, budget=budget)
-    packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
-
-    # stats straight off the persisted decisions — calling
-    # corpus_filter_stats here would recompute the whole filter
-    stats = {
-        r["reason"]: {"n_docs": r["n_docs"], "bpe_tokens": r["bpe_tokens"]}
-        for r in _filter_stats_for(decisions, toks).collect()
-    }
-    # count bins from the files just written, not by re-running the
-    # pack plan (window + scan + join) a second time
-    n_bins = (
-        spark.read.parquet(f"{out_dir}/packed")
-        .select("source", "bin")
-        .distinct()
-        .count()
-    )
-    summary = {
-        "outcomes": stats,
-        "kept_docs": int(stats.get("kept", {}).get("n_docs", 0)),
-        "kept_bins": int(n_bins),
-        "budget": budget,
-    }
-    if extra:
-        summary.update(extra)
-    _write_summary(out_dir, summary)
-    return summary
 
 
 def cross_source_overlap(

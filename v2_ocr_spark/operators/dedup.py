@@ -34,14 +34,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from v2_ocr_spark.operators.textstats import _docs
+
 MERSENNE_P = (1 << 31) - 1
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def input_signature(path: str) -> tuple:

@@ -9,8 +9,8 @@ This wires the two halves the repo otherwise exposes separately:
     extract of every transcript turn, lease-owned sink, lineage
     metrics — the north-rule flagship), and
   * the training-data path (corpus_filter -> keeper selection ->
-    token_pack — run_clean_pipeline's shape, previously only runnable
-    over the synthetic `documents` fixture).
+    token_pack, the operators the gate checks over the synthetic
+    `documents` fixture).
 
 Stage boundary discipline: the extraction output is COMMITTED parquet
 (the MergeSink table), so the cleaning stages re-read a real table
@@ -37,11 +37,18 @@ cleaning tail is the training-data extension the reference lacks.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import SparkSession
 import pyspark.sql.functions as F
 
 from v2_ocr_spark.operators.assemble import assemble
-from v2_ocr_spark.operators.corpus import _clean_pack_write, corpus_filter_for
+from v2_ocr_spark.operators.corpus import (
+    _filter_stats_for,
+    corpus_filter_for,
+    token_pack_for,
+)
 from v2_ocr_spark.operators.dedup import (
     dedup_keep_list_for,
     duplicate_clusters,
@@ -50,6 +57,28 @@ from v2_ocr_spark.operators.dedup import (
 )
 from v2_ocr_spark.operators.textstats import token_counts_for
 from v2_ocr_spark.pipeline.runner import ExtractionJob
+
+
+def _drop_summary(out_dir: str) -> None:
+    """Remove a previous run's summary.json. Every composed job calls
+    this before its first table write: a crash between the table
+    writes and the new summary must never leave an old summary (old
+    params, old stats) beside new tables."""
+    path = os.path.join(out_dir, "summary.json")
+    if os.path.exists(path):
+        os.remove(path)
+
+
+def _write_summary(out_dir: str, summary: dict) -> None:
+    """Atomic summary.json swap (tmp write + rename): a crashed writer
+    can never leave a torn or partial summary behind. The ONE writer
+    for every composed job's summary. out_dir must be a DRIVER-LOCAL
+    path: the tables go through Hadoop writers, but this is plain file
+    IO."""
+    tmp = os.path.join(out_dir, "summary.json.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(summary, f)
+    os.replace(tmp, os.path.join(out_dir, "summary.json"))
 
 
 def run_extract_clean_pipeline(
@@ -77,6 +106,7 @@ def run_extract_clean_pipeline(
       clean/        kept conversations with their filter columns
       packed/       (source, doc_id, n_tokens, start_token, bin)
       summary.json  filter outcomes + pack bins + extraction lineage
+                    (a stale one is removed before the first write)
 
     Returns the summary dict; ``summary["extraction"]`` carries the
     extraction-stage lineage (run id, status, per-run committed
@@ -87,16 +117,15 @@ def run_extract_clean_pipeline(
         raise ValueError(
             f"dedup_method must be 'ngram' or 'minhash', got {dedup_method!r}"
         )
+    _drop_summary(out_dir)
     job = ExtractionJob(
         spark, input_path, f"{out_dir}/extracted",
         num_partitions=num_partitions,
     )
     res = job.run(incremental=incremental)
     # extraction lineage computed NOW (the sink's committed metrics are
-    # final once run() returns) so the cleaning tail can fold it into
-    # summary.json's single atomic write — a cleaning-only summary that
-    # is later re-written would leave a crash window where the file
-    # exists without the promised extraction key
+    # final once run() returns); it lands in summary.json's single
+    # atomic write below, together with the cleaning outcomes
     metrics = [c.get("metrics", {}) for c in job.sink.committed().values()]
     extraction = {
         "run_id": res["run_id"],
@@ -146,11 +175,34 @@ def run_extract_clean_pipeline(
             min_quality=min_quality, min_chars=min_chars, langs=langs,
         ).persist()
         try:
-            summary = _clean_pack_write(
-                spark, docs, decisions,
-                token_counts_for(docs, ["doc_id"]),
-                out_dir, budget, extra={"extraction": extraction},
+            kept = decisions.where(F.col("keep")).select(
+                "doc_id", "pred_lang", "quality"
             )
+            docs.join(kept, "doc_id").write.mode("overwrite").parquet(
+                f"{out_dir}/clean"
+            )
+            # pack the SURVIVORS, not the raw corpus: packing before the
+            # filter would assign offsets/bins that include later-dropped
+            # docs, leaving every training window underfilled. Read them
+            # back from the clean/ files just written — a stage boundary:
+            # the pack plan references both its window branch and its
+            # shard-totals branch, and carrying the whole filter lineage
+            # (LSH pair join + stopword alternation regexes) into each
+            # branch makes the composed plan explode (measured: driver OOM
+            # just RENDERING the explain string at sf0.001)
+            survivors = spark.read.parquet(f"{out_dir}/clean")
+            packed = token_pack_for(survivors, budget=budget)
+            packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
+            # stats straight off the persisted decisions — calling
+            # corpus_filter_stats here would recompute the whole filter
+            stats = {
+                r["reason"]: {
+                    "n_docs": r["n_docs"], "bpe_tokens": r["bpe_tokens"],
+                }
+                for r in _filter_stats_for(
+                    decisions, token_counts_for(docs, ["doc_id"])
+                ).collect()
+            }
         finally:
             decisions.unpersist()
     finally:
@@ -166,4 +218,20 @@ def run_extract_clean_pipeline(
             pairs.unpersist()
         docs.unpersist()
 
+    # count bins from the files just written, not by re-running the
+    # pack plan (window + scan + join) a second time
+    n_bins = (
+        spark.read.parquet(f"{out_dir}/packed")
+        .select("source", "bin")
+        .distinct()
+        .count()
+    )
+    summary = {
+        "outcomes": stats,
+        "kept_docs": int(stats.get("kept", {}).get("n_docs", 0)),
+        "kept_bins": int(n_bins),
+        "budget": budget,
+        "extraction": extraction,
+    }
+    _write_summary(out_dir, summary)
     return summary

@@ -28,11 +28,12 @@ fixture scale and linear at any scale).
 
 from __future__ import annotations
 
-import json
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from v2_ocr_spark.pipeline.compose import _drop_summary, _write_summary
 
 
 def corpus_quality_report(
@@ -111,13 +112,7 @@ def corpus_quality_report(
         )
     )
     out_table = os.path.join(out_dir, "doc_quality")
-    summary_path = os.path.join(out_dir, "summary.json")
-    # re-run discipline: drop the STALE summary before overwriting the
-    # table — a crash between the two writes must never leave an old
-    # summary (old params/stats) pointing at a new table; the new
-    # summary lands atomically below (tmp + rename)
-    if os.path.exists(summary_path):
-        os.remove(summary_path)
+    _drop_summary(out_dir)
     report.write.mode("overwrite").parquet(out_table)
 
     written = spark.read.parquet(out_table)
@@ -146,10 +141,7 @@ def corpus_quality_report(
         },
         **{k: _jsonable(v) for k, v in agg.asDict().items()},
     }
-    tmp = summary_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(summary, f, indent=2, sort_keys=True)
-    os.replace(tmp, summary_path)
+    _write_summary(out_dir, summary)
     return summary
 
 

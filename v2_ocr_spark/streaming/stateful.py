@@ -31,6 +31,12 @@ import pyspark.sql.functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from v2_ocr_spark.streaming.stream_extract import (
+    TRANSCRIPT_DDL,
+    read_parquet_stream,
+    write_parquet_stream,
+)
+
 EVENT_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -44,10 +50,8 @@ _SESSION_STATE_DDL = "start_ts double, last_ts double, n long"
 def _advance_session(
     user_id, start, last, n, ts_seconds, gap_seconds: float
 ):
-    """The gap-sessionization core, shared by the
-    applyInPandasWithState fn and the transformWithState processor
-    (they are pinned equal by test; one implementation means a fix can
-    never land in only one of them).
+    """The gap-sessionization core of the applyInPandasWithState fn,
+    kept free of Spark types so it is unit-tested directly.
 
     Cross-batch disorder: events are only sorted WITHIN a micro-batch
     (no watermark on this operator), so a late event belonging to the
@@ -117,11 +121,7 @@ def stream_sessionize(
     available_now: bool = True,
 ) -> StreamingQuery:
     """events stream -> closed sessions, open session held in state."""
-    stream = (
-        spark.readStream.schema(EVENT_DDL)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
+    stream = read_parquet_stream(spark, EVENT_DDL, input_dir)
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         _sessionize_fn(gap_minutes * 60.0),
         outputStructType=SESSION_OUT_DDL,
@@ -129,140 +129,9 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return write_parquet_stream(
+        sessions, out_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def tws_available() -> bool:
-    """True when the transformWithState python protocol dependency
-    (protobuf) is importable."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_sessionize_tws(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_minutes: int = 30,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """The same gap sessionizer on the NEWER arbitrary-state API,
-    transformWithStateInPandas (Spark 4.x): a StatefulProcessor with a
-    named ValueState instead of applyInPandasWithState's single state
-    tuple. Semantically identical output to stream_sessionize — the
-    tests pin the two against each other — but the processor model adds
-    what a production sessionizer eventually needs: multiple named
-    state variables, state TTL, and event-time timers (handleExpiredTimer)
-    to flush still-open sessions without new input.
-
-    transformWithState requires the RocksDB state store provider; this
-    sets it session-wide (it is also the right provider at scale —
-    incremental checkpoints, state larger than heap).
-
-    ENVIRONMENT GATE: the transformWithState state-server protocol
-    speaks protobuf — without the `protobuf` package the driver-side
-    Python worker crashes opaquely mid-query, so the missing dependency
-    is surfaced here as NotImplementedError instead (same pattern as
-    the Iceberg and multimodal-codec gates; `pip install protobuf` on a
-    real cluster lights this up with no other change).
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the `protobuf` package "
-            "(google.protobuf) for its state-server protocol, which is "
-            "not installed in this environment; use stream_sessionize "
-            "(applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        _prior_provider = spark.conf.get(_PROVIDER_KEY)
-    except Exception:  # noqa: BLE001 — unset in this session
-        _prior_provider = None
-    spark.conf.set(
-        _PROVIDER_KEY,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    gap_seconds = gap_minutes * 60.0
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState(
-                "session", _SESSION_STATE_DDL
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            cur = self._state.get()
-            if cur is not None:
-                start, last, n = cur
-            else:
-                start = last = None
-                n = 0
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(["ts", "event_id"])
-            start, last, n, closed = _advance_session(
-                user_id, start, last, n,
-                (ts.timestamp() for ts in batch["ts"]), gap_seconds,
-            )
-            self._state.update((start, last, n))
-            if closed:
-                yield pd.DataFrame(
-                    closed,
-                    columns=[
-                        "user_id", "session_start", "session_end", "n_events",
-                    ],
-                )
-
-        def close(self) -> None:
-            pass
-
-    stream = (
-        spark.readStream.schema(EVENT_DDL)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
-    sessions = stream.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUT_DDL,
-        outputMode="append",
-        timeMode="none",
-    )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    try:
-        return writer.start()
-    finally:
-        # the provider is captured per-query at start — restore the
-        # session conf so LATER stateful queries in this session keep
-        # the provider they would have had (a permanent session-wide
-        # swap to RocksDB was a hidden side effect the caller of some
-        # other operator never opted into)
-        if _prior_provider is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, _prior_provider)
 
 
 def stream_turn_metrics(
@@ -281,13 +150,8 @@ def stream_turn_metrics(
     the watermark are dropped rather than growing state forever.
     """
     from v2_ocr_spark.operators.extract import with_payload_kind
-    from v2_ocr_spark.streaming.stream_extract import TRANSCRIPT_DDL
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
+    stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
     agg = (
         with_payload_kind(stream)
         .withWatermark("ts", watermark)
@@ -303,15 +167,7 @@ def stream_turn_metrics(
             "chars_in",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return write_parquet_stream(agg, out_dir, checkpoint_dir, available_now)
 
 
 def stream_extract_upsert(
@@ -335,13 +191,8 @@ def stream_extract_upsert(
     """
     from v2_ocr_spark.operators.extract import extract_turns
     from v2_ocr_spark.pipeline.maintenance import merge_upsert
-    from v2_ocr_spark.streaming.stream_extract import TRANSCRIPT_DDL
 
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
+    stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
 
     def land(batch_df, batch_id: int) -> None:
         from v2_ocr_spark.pipeline.maintenance import (
@@ -436,22 +287,10 @@ def stream_dedup_turns(
     upstreams replay within their ack window, so size `watermark` to
     bound that window. Fourth Structured Streaming idiom here (append
     sink, arbitrary state, foreachBatch MERGE, keyed dedup)."""
-    from v2_ocr_spark.streaming.stream_extract import TRANSCRIPT_DDL
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("recursiveFileLookup", "true")
-        .parquet(input_dir)
-    )
+    stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["conv_id", "turn_idx"]
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return write_parquet_stream(
+        deduped, out_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

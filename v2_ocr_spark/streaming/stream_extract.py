@@ -18,7 +18,7 @@ turns/minute metrics) would add ``withWatermark("ts", ...)`` +
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from v2_ocr_spark.operators.extract import extract_turns
@@ -29,26 +29,26 @@ TRANSCRIPT_DDL = (
 )
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    reader = (
-        spark.readStream.schema(TRANSCRIPT_DDL)
+def read_parquet_stream(
+    spark: SparkSession, ddl: str, input_dir: str
+) -> DataFrame:
+    """The file source every streaming operator here reads: parquet
+    files anywhere under ``input_dir``, with a fixed schema (streaming
+    file sources cannot infer one)."""
+    return (
+        spark.readStream.schema(ddl)
         .option("recursiveFileLookup", "true")
+        .parquet(input_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
 
-    extracted = extract_turns(stream)
 
+def write_parquet_stream(
+    df: DataFrame, out_dir: str, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start an append-mode parquet sink with its checkpoint; with
+    ``available_now`` the query drains the current backlog and stops."""
     writer = (
-        extracted.writeStream.format("parquet")
+        df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
@@ -56,3 +56,16 @@ def stream_extract(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def stream_extract(
+    spark: SparkSession,
+    input_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    available_now: bool = True,
+) -> StreamingQuery:
+    stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
+    return write_parquet_stream(
+        extract_turns(stream), out_dir, checkpoint_dir, available_now
+    )
