@@ -139,7 +139,8 @@ def main() -> None:
           .collect())
     timed("scrub_boilerplate",
           lambda: corpus.scrub_boilerplate(spark, SF_DIR)
-          .agg(F.sum("kept_lines")).collect())
+          .agg(F.sum("kept_lines"), F.sum(F.length("scrubbed_text")))
+          .collect())
 
     def _semantic():
         # returns a persisted pair set (caller-owns-release contract)

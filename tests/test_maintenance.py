@@ -237,19 +237,31 @@ def test_partition_count_mismatch_rejected(spark, populated):
         job2.run()
 
 
-def test_upsert_into_unextracted_partition_refused(spark, sf_small, tmp_path):
+def test_upsert_into_unextracted_partition_refused(
+    spark, sf_small, tmp_path, monkeypatch
+):
     import pytest as _pytest
 
     from v2_ocr_spark.pipeline.maintenance import merge_upsert
     from v2_ocr_spark.pipeline.runner import ExtractionJob
+    from v2_ocr_spark.pipeline.sink import MergeSink
 
     out = str(tmp_path / "part")
     job = ExtractionJob(
         spark, f"{sf_small}/transcripts.parquet", out, num_partitions=8
     )
-    # commit only a subset of partitions (injected crash)
-    with _pytest.raises(RuntimeError):
-        job.run(fail_before_promote={4})
+    # commit only a subset of partitions (injected crash at pid 4)
+    promote = MergeSink.promote
+
+    def crashing(self, run_id, pid, metrics):
+        if pid == 4:
+            raise RuntimeError("injected crash before promoting pid=4")
+        return promote(self, run_id, pid, metrics)
+
+    with monkeypatch.context() as m:
+        m.setattr(MergeSink, "promote", crashing)
+        with _pytest.raises(RuntimeError):
+            job.run()
     committed = set(job.sink.committed())
     assert committed and 4 not in committed
     # find a conv hashing to an uncommitted pid
@@ -555,3 +567,74 @@ def test_repair_sweeps_stale_staging_dirs(spark, sf_small, tmp_path):
     assert not os.path.exists(conv_dir + ".staging-cafe0001")
     # live table untouched
     assert spark.read.parquet(conv_dir).count() == base.count()
+
+
+@pytest.mark.parametrize("op", ["merge", "delete", "backfill", "compact"])
+def test_maintenance_commit_metrics_per_op(spark, populated, op):
+    """Every maintenance rewrite commits exactly {op, rows_after, at,
+    input_rows, input_sig}: the batch input fingerprint carries forward
+    unchanged (so run(incremental=True) never re-extracts a maintained
+    partition) and rows_after is the partition's row count."""
+    from v2_ocr_spark.pipeline.maintenance import (
+        backfill_column,
+        compact_partitions,
+    )
+
+    out, job = populated
+    batch = {pid: c["metrics"] for pid, c in job.sink.committed().items()}
+    if op == "merge":
+        updates = spark.createDataFrame(
+            [("conv00000001", 1, "PATCHED", None),
+             ("convnew00", 1, "BRAND NEW", None)],
+            "conv_id string, turn_idx int, extracted_text string, "
+            "error string",
+        )
+        res = merge_upsert(spark, out, updates)
+    elif op == "delete":
+        res = delete_conversations(spark, out, ["conv00000003"])
+    elif op == "backfill":
+        res = backfill_column(
+            spark, out, "text_len", F.length("extracted_text")
+        )
+    else:
+        res = compact_partitions(spark, out)
+    assert res["rewritten"]
+    commits = job.sink.committed()
+    rows = {
+        r.pid: r.n
+        for r in job.read_output().groupBy("pid")
+        .agg(F.count("*").alias("n")).collect()
+    }
+    for pid in res["rewritten"]:
+        m = commits[pid]["metrics"]
+        assert set(m) == {"op", "rows_after", "at", "input_rows", "input_sig"}
+        assert m["op"] == op
+        assert (m["input_rows"], m["input_sig"]) == (
+            batch[pid]["input_rows"], batch[pid]["input_sig"],
+        )
+        assert m["rows_after"] == rows.get(pid, 0)
+
+
+def test_crashed_rewrite_staging_swept_by_next_rewrite(
+    spark, populated, monkeypatch
+):
+    """A maintenance rewrite that crashes before promoting strands its
+    full staged copy under _staging; the next writer of the sink (here
+    another maintenance op, not the extraction job) must sweep it."""
+    import os
+
+    from v2_ocr_spark.pipeline.maintenance import compact_partitions
+    from v2_ocr_spark.pipeline.sink import MergeSink
+
+    out, job = populated
+
+    def crash(self, run_id, pid, metrics):
+        raise RuntimeError("injected crash before promote")
+
+    with monkeypatch.context() as m:
+        m.setattr(MergeSink, "promote", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            delete_conversations(spark, out, ["conv00000003"])
+    assert os.listdir(job.sink.staging_root)  # the stranded copy
+    compact_partitions(spark, out)
+    assert os.listdir(job.sink.staging_root) == []

@@ -36,6 +36,21 @@ def _table(job):
     )
 
 
+def crash_before_promoting(monkeypatch, pid: int) -> None:
+    """Make MergeSink.promote raise for ``pid`` — a driver crash after
+    staging, with the partitions before it already committed."""
+    from v2_ocr_spark.pipeline.sink import MergeSink
+
+    promote = MergeSink.promote
+
+    def crashing(self, run_id, p, metrics):
+        if p == pid:
+            raise RuntimeError(f"injected crash before promoting pid={p}")
+        return promote(self, run_id, p, metrics)
+
+    monkeypatch.setattr(MergeSink, "promote", crashing)
+
+
 def test_single_run_commits_everything(job_factory):
     job = job_factory("single")
     res = job.run()
@@ -44,14 +59,16 @@ def test_single_run_commits_everything(job_factory):
     assert out.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
 
 
-def test_crash_resume_equals_single_run(spark, job_factory):
+def test_crash_resume_equals_single_run(spark, job_factory, monkeypatch):
     ref = job_factory("ref")
     ref.run()
     expected = _table(ref)
 
     job = job_factory("crashy")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        job.run(fail_before_promote={4})
+    with monkeypatch.context() as m:
+        crash_before_promoting(m, 4)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            job.run()
     # partial state: some partitions committed, some not
     committed = set(job.sink.committed())
     assert committed and len(committed) < 8
@@ -262,15 +279,17 @@ def test_lease_reentrant_same_owner(tmp_path):
     a.release()
 
 
-def test_lease_heartbeat_survives_long_staging(job_factory):
+def test_lease_heartbeat_survives_long_staging(job_factory, monkeypatch):
     """A staging phase longer than the lease ttl must not let another
     driver take over mid-write: the background heartbeater keeps the
     lease fresh, so a rival acquire still fails DURING the run."""
+    from v2_ocr_spark.pipeline import runner
     from v2_ocr_spark.pipeline.sink import LeaseHeld, SinkLease
 
     seen = {}
+    extract_turns = runner.extract_turns
 
-    def slow_fault(df):
+    def slow_extract(df, **kw):
         # runs driver-side while the job holds the lease: a rival
         # acquire here (with a ttl shorter than the elapsed time would
         # be without heartbeats) must still be refused
@@ -282,10 +301,11 @@ def test_lease_heartbeat_survives_long_staging(job_factory):
             seen["rival"] = "acquired"
         except LeaseHeld:
             seen["rival"] = "refused"
-        return df
+        return extract_turns(df, **kw)
 
+    monkeypatch.setattr(runner, "extract_turns", slow_extract)
     job = job_factory("beat", lease_ttl_seconds=2.0)
-    res = job.run(fault=slow_fault)
+    res = job.run()
     assert res["status"] == "ok"
     assert seen["rival"] == "refused"
 
@@ -358,15 +378,17 @@ def test_maintenance_refused_while_lease_held(spark, job_factory):
     assert res["rewritten"]
 
 
-def test_staging_swept_after_runs_and_crashes(job_factory):
+def test_staging_swept_after_runs_and_crashes(job_factory, monkeypatch):
     """Review regression (r4): _staging must not accumulate run dirs —
     a successful run removes its own leftover, and the next run sweeps
     a crashed run's stranded full table copy."""
     import os
 
     job = job_factory("sweep")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        job.run(fail_before_promote={0})
+    with monkeypatch.context() as m:
+        crash_before_promoting(m, 0)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            job.run()
     # the crashed run's staged copy is still on disk right now
     assert os.listdir(job.sink.staging_root)
     res = job.run()

@@ -273,3 +273,71 @@ def test_kmeans_recovers_separable_mixture(spark):
     pairs.unpersist()
     assert prows  # within-component near-dups exist at 0.9
     assert all(comp_of[r.id_a] == comp_of[r.id_b] for r in prows)
+
+
+@pytest.mark.parametrize("op", ["cluster_pairs", "kmeans", "srp_lsh"])
+def test_failed_materialization_releases_persists(spark, monkeypatch, op):
+    """A persist whose materializing count fails is released before the
+    error propagates — no cached RDD outlives the call without an
+    owner. The failure is planted with a raise_error column on the
+    persisted result (ragged vectors for the pair set)."""
+    from v2_ocr_spark.operators import similarity as S
+
+    boom = F.raise_error(F.lit("planted failure"))
+    emb = with_unit_norm(
+        spark.read.parquet(f"{SF}/embeddings.parquet")
+    ).select("vec_id", "unit")
+
+    def persistent():
+        # k-means' centroid tables are localCheckpoint RDDs (a k-row
+        # lineage cut the session keeps by design) — count persists only
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return sum(
+            not rdds.get(i).rdd().isLocallyCheckpointed()
+            for i in rdds.keySet().toArray()
+        )
+
+    # a persist can fail before its cached RDD exists (the planted
+    # column may abort an earlier stage) — so also check every
+    # DataFrame the call persisted is released
+    persisted = []
+    orig_persist = type(emb).persist
+
+    def tracking(df, *args, **kw):
+        persisted.append(df)
+        return orig_persist(df, *args, **kw)
+
+    monkeypatch.setattr(type(emb), "persist", tracking)
+    before = persistent()
+    planted = "planted failure"
+    if op == "cluster_pairs":
+        # ragged vectors in one cell: the guard and the join pass, and
+        # only the pair set's persist reaches the dot product (a column
+        # poisoned before the join would fail in the shuffle, before
+        # the cache exists)
+        assigned = spark.createDataFrame(
+            [(i, [1.0] * (2 + i % 2), 0) for i in range(8)],
+            "vec_id long, unit array<double>, cell_id int",
+        )
+        planted = "same shape"
+        call = lambda: S._cluster_pairs(assigned, 0.5, 50_000)  # noqa: E731
+    elif op == "kmeans":
+        orig = S._assign_euclid
+        monkeypatch.setattr(
+            S, "_assign_euclid",
+            lambda e, c: orig(e, c).withColumn("boom", boom),
+        )
+        call = lambda: kmeans_assign_for(emb, 4, 0)  # noqa: E731
+    else:
+        orig = S._topk
+        monkeypatch.setattr(
+            S, "_topk", lambda s, k: orig(s, k).withColumn("boom", boom)
+        )
+        call = lambda: S.srp_lsh_topk(spark, SF, k=2, n_queries=2)  # noqa: E731
+    with pytest.raises(Exception, match=planted):
+        call()
+    assert persistent() == before
+    assert persisted and not [
+        df for df in persisted
+        if df.storageLevel.useMemory or df.storageLevel.useDisk
+    ]

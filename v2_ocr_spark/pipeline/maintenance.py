@@ -10,12 +10,18 @@ row-level-operation stand-ins.
   * retention_cleanup — S8 (stats-service.ts:143-201): drop turns of
     conversations created before a cutoff.
 
-All three rewrite ONLY the partitions that contain affected rows
-(pmod(xxhash64(conv_id), P) pins each conversation to one partition),
-then commit each rewritten partition atomically — the copy-on-write
-pattern Iceberg uses, at per-partition granularity. Untouched
-partitions keep their snapshots: at 100 TB a delete of one conversation
-rewrites 1/P of the table, not all of it.
+All of them (and backfill_column / compact_partitions) rewrite ONLY
+the partitions that contain affected rows (pmod(xxhash64(conv_id), P)
+pins each conversation to one partition), then commit each rewritten
+partition atomically through MergeSink.stage / MergeSink.publish — the
+copy-on-write pattern Iceberg uses, at per-partition granularity.
+Untouched partitions keep their snapshots: at 100 TB a delete of one
+conversation rewrites 1/P of the table, not all of it. Every public
+mutator takes the sink ownership lease (held_lease) for its whole
+read-modify-promote: two unleased mutators hitting the same pid would
+interleave as lost updates (a concurrent delete's survivors
+overwritten by a merge built from the pre-delete snapshot,
+resurrecting the deleted rows).
 """
 
 from __future__ import annotations
@@ -41,86 +47,32 @@ def _affected_pids(keys: DataFrame, num_partitions: int) -> list[int]:
     ]
 
 
-def _rewrite_partitions(
-    spark: SparkSession,
-    sink: MergeSink,
-    new_rows: DataFrame,
-    pids: list[int],
-    num_partitions: int,
-    op: str,
-    recompute_pid: bool = True,
-    lease_lost=None,
-) -> dict:
-    """Copy-on-write: stage replacement files for the affected
-    partitions, then promote each atomically.
-
-    ``recompute_pid=False`` trusts an existing ``pid`` column instead
-    of re-hashing conv_id — REQUIRED for ops (compaction) that must
-    never re-derive partition assignment under a possibly-different
-    partition count.
+def _rewrite(sink: MergeSink, rows: DataFrame, pids: list[int], op: str,
+             held) -> dict:
+    """Copy-on-write: stage ``rows`` (keyed by pid) as the replacement
+    content of ``pids`` and promote each through the sink's commit path
+    — for every maintenance op and the streaming bootstrap, each under
+    its caller's ``held`` lease.
 
     Maintenance rewrites do not consume new input, so each promoted
     commit CARRIES FORWARD the prior commit's input fingerprint
     (input_rows/input_sig) — without this, the next incremental run
     would see a missing baseline, treat the partition as changed, and
     re-extract it from the raw source (resurrecting deleted
-    conversations and reverting upserts/backfills).
-
-    ``lease_lost`` (from held_lease) is checked before anything
-    publishes — promoting after a takeover would race the new owner."""
-    import shutil
-
-    from pyspark.errors import AnalysisException
-
+    conversations and reverting upserts/backfills)."""
     run_id = f"{op}-{uuid.uuid4().hex[:8]}"
-    if recompute_pid:
-        new_rows = new_rows.withColumn(
-            "pid", partition_id("conv_id", num_partitions)
-        )
-    # schema sidecar BEFORE staging: a rewrite that empties every
-    # partition must leave the table readable (MergeSink.record_schema)
-    sink.record_schema(new_rows.schema)
-    (
-        new_rows
-        .repartition("pid")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .write.partitionBy("pid")
-        .mode("overwrite")
-        .parquet(sink.staging_dir(run_id))
-    )
-    # ONE groupBy job fills every rows_after — a per-pid read+count
-    # loop would serialize up to P scheduler round-trips for a metrics
-    # field (the runner._stage_metrics trap)
-    counts: dict[int, int] = {}
-    try:
-        counts = {
-            int(r.pid): int(r.n)
-            for r in spark.read.parquet(sink.staging_dir(run_id))
-            .groupBy("pid")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-    except AnalysisException:
-        pass  # every affected partition emptied — nothing staged
-    if lease_lost is not None and lease_lost.is_set():
-        raise RuntimeError(
-            f"sink lease for {sink.out_dir} was lost during the {op} "
-            "rewrite; refusing to promote"
-        )
+    staged = sink.stage(rows, run_id, held, F.count("*").alias("n"))
     prior = sink.committed()
-    committed = []
+    metrics = {}
     for pid in pids:
-        metrics = {"op": op, "rows_after": counts.get(pid, 0),
-                   "at": time.time()}
         prev = prior.get(pid, {}).get("metrics", {})
-        for k in ("input_rows", "input_sig"):
-            if k in prev:
-                metrics[k] = prev[k]
-        sink.promote(run_id, pid, metrics)
-        committed.append(pid)
-    # promote renamed the pid dirs out; drop the leftover run dir so
-    # maintenance never accumulates stale _staging entries
-    shutil.rmtree(sink.staging_dir(run_id), ignore_errors=True)
+        metrics[pid] = {
+            "op": op,
+            "rows_after": staged[pid].n if pid in staged else 0,
+            "at": time.time(),
+            **{k: prev[k] for k in ("input_rows", "input_sig") if k in prev},
+        }
+    committed = [pid for pid, _ in sink.publish(run_id, metrics)]
     return {"run_id": run_id, "rewritten": committed}
 
 
@@ -129,8 +81,6 @@ def merge_upsert(
     out_dir: str,
     updates: DataFrame,
     num_partitions: int | None = None,
-    lease: bool = True,
-    _lease_lost=None,
 ) -> dict:
     """MERGE updates INTO extracted ON (conv_id, turn_idx) —
     matched rows replaced, new rows inserted, everything idempotent.
@@ -140,21 +90,15 @@ def merge_upsert(
     silently loses rows). Upserting into a partition that extraction
     has not committed yet is refused — promoting it would publish a
     commit containing only the upsert rows, and the partition's base
-    turns would never be extracted.
+    turns would never be extracted."""
+    with held_lease(out_dir) as held:
+        return _merge(spark, MergeSink(out_dir), updates, num_partitions, held)
 
-    ``lease=True`` (default) takes the sink ownership lease for the
-    whole read-modify-promote — two unleased mutators hitting the same
-    pid interleave as lost updates (a concurrent delete's survivors
-    overwritten by a merge built from the pre-delete snapshot,
-    resurrecting the deleted rows). Pass lease=False ONLY from a caller
-    that already holds the lease (the streaming landing loop)."""
-    if lease:
-        with held_lease(out_dir) as (_l, lost):
-            return merge_upsert(
-                spark, out_dir, updates, num_partitions,
-                lease=False, _lease_lost=lost,
-            )
-    sink = MergeSink(out_dir)
+
+def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame,
+           num_partitions: int | None, held) -> dict:
+    """merge_upsert's body, for a caller that already holds the sink
+    lease (``held`` from held_lease) — the streaming landing loop."""
     num_partitions = sink.ensure_num_partitions(num_partitions)
     # Iceberg MERGE errors when one target row matches several source
     # rows; a silent full_outer join would instead MULTIPLY rows (and
@@ -179,7 +123,7 @@ def merge_upsert(
     if uncommitted:
         raise ValueError(
             f"cannot upsert into unextracted partitions {uncommitted} of "
-            f"{out_dir}; run the extraction job first"
+            f"{sink.out_dir}; run the extraction job first"
         )
     # prune on the STORED pid directory column, not a recomputed hash —
     # a pmod(xxhash64(...)) predicate cannot map to the partition dirs,
@@ -212,11 +156,10 @@ def merge_upsert(
                 if c not in ("conv_id", "turn_idx")
             ],
         )
+        # inserted rows carry no stored pid — derive it for every row
+        .withColumn("pid", partition_id("conv_id", num_partitions))
     )
-    return _rewrite_partitions(
-        spark, sink, merged, pids, num_partitions, "merge",
-        lease_lost=_lease_lost,
-    )
+    return _rewrite(sink, merged, pids, "merge", held)
 
 
 def delete_conversations(
@@ -224,12 +167,10 @@ def delete_conversations(
     out_dir: str,
     conv_ids: list[str],
     num_partitions: int | None = None,
-    lease: bool = True,
 ) -> dict:
     """Cascade-delete by explicit id list (the point-delete API)."""
     keys = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-    return delete_conversation_keys(spark, out_dir, keys, num_partitions,
-                                    lease=lease)
+    return delete_conversation_keys(spark, out_dir, keys, num_partitions)
 
 
 def delete_conversation_keys(
@@ -237,8 +178,6 @@ def delete_conversation_keys(
     out_dir: str,
     keys: DataFrame,
     num_partitions: int | None = None,
-    lease: bool = True,
-    _lease_lost=None,
 ) -> dict:
     """Cascade-delete every turn of the conversations in the `keys`
     DataFrame (column conv_id).
@@ -248,32 +187,22 @@ def delete_conversation_keys(
     — a retention pass at 100 TB can match millions of conv_ids, which
     would OOM the driver and blow up the plan. The only driver-side
     materialization is the affected PARTITION id set, bounded by the
-    table's partition count regardless of key volume.
-
-    Runs under the sink ownership lease by default (see merge_upsert —
-    unleased concurrent mutators interleave as lost updates)."""
-    if lease:
-        with held_lease(out_dir) as (_l, lost):
-            return delete_conversation_keys(
-                spark, out_dir, keys, num_partitions,
-                lease=False, _lease_lost=lost,
-            )
-    sink = MergeSink(out_dir)
-    num_partitions = sink.ensure_num_partitions(num_partitions)
-    keys = keys.select("conv_id").distinct().persist()
-    try:
-        pids = _affected_pids(keys, num_partitions)
-        if not pids:
-            return {"run_id": None, "rewritten": []}
-        # stored-pid pruning, not a recomputed hash (see merge_upsert)
-        current = sink.read(spark).where(F.col("pid").isin(pids))
-        survivors = current.join(keys, "conv_id", "left_anti")
-        return _rewrite_partitions(
-            spark, sink, survivors, pids, num_partitions, "delete",
-            lease_lost=_lease_lost,
-        )
-    finally:
-        keys.unpersist()
+    table's partition count regardless of key volume. Survivors keep
+    their stored pid."""
+    with held_lease(out_dir) as held:
+        sink = MergeSink(out_dir)
+        num_partitions = sink.ensure_num_partitions(num_partitions)
+        keys = keys.select("conv_id").distinct().persist()
+        try:
+            pids = _affected_pids(keys, num_partitions)
+            if not pids:
+                return {"run_id": None, "rewritten": []}
+            # stored-pid pruning, not a recomputed hash (see merge_upsert)
+            current = sink.read(spark).where(F.col("pid").isin(pids))
+            survivors = current.join(keys, "conv_id", "left_anti")
+            return _rewrite(sink, survivors, pids, "delete", held)
+        finally:
+            keys.unpersist()
 
 
 def retention_cleanup(
@@ -282,7 +211,6 @@ def retention_cleanup(
     conversations: DataFrame,
     cutoff: str,
     num_partitions: int | None = None,
-    lease: bool = True,
 ) -> dict:
     """Drop turns of conversations created before the cutoff timestamp
     (S8; the conversations dim supplies created_at).
@@ -304,8 +232,7 @@ def retention_cleanup(
     ).select("conv_id")
     # keys flow into the delete as a DataFrame (anti-join), never as a
     # collected id list — retention can match millions of conversations
-    return delete_conversation_keys(spark, out_dir, old, num_partitions,
-                                    lease=lease)
+    return delete_conversation_keys(spark, out_dir, old, num_partitions)
 
 
 def clear_all_data(spark: SparkSession, out_dir: str) -> dict:
@@ -359,12 +286,7 @@ def _clear_all_owned(out_dir: str) -> dict:
     # defect: stale data after a recorded wipe)
     from v2_ocr_spark.pipeline.sink import CheckpointStore
 
-    for p in (
-        sink.data_dir,
-        sink.commits_dir,
-        CheckpointStore(out_dir).dir,
-        sink.staging_root,
-    ):
+    for p in (*sink.dirs, CheckpointStore(out_dir).dir):
         shutil.rmtree(p, ignore_errors=True)
         # recreate the empty layout: live MergeSink/CheckpointStore
         # handles keep working (reads report 'no committed partitions',
@@ -452,40 +374,27 @@ def backfill_column(
     col_name: str,
     expr: F.Column,
     num_partitions: int | None = None,
-    lease: bool = True,
-    _lease_lost=None,
 ) -> dict:
     """S11 — schema-evolution backfill (reference:
     dist/scripts/migrate-base64-to-storage.js:44-120 migrates a column
     across all rows). Adds/replaces a derived column over every
     committed partition via the same copy-on-write rewrite; on Iceberg
     this is ``ALTER TABLE ADD COLUMN`` + ``UPDATE``, metadata-cheap.
-    Runs under the sink ownership lease by default (see merge_upsert)."""
-    if lease:
-        with held_lease(out_dir) as (_l, lost):
-            return backfill_column(
-                spark, out_dir, col_name, expr, num_partitions,
-                lease=False, _lease_lost=lost,
-            )
-    sink = MergeSink(out_dir)
-    sink.ensure_num_partitions(num_partitions)  # validate only
-    pids = sorted(sink.committed())
-    # rows already carry their stored pid — keep it (conv_id is
-    # untouched, so re-hashing is both unnecessary and the class of bug
-    # this module guards against)
-    rewritten = sink.read(spark).withColumn(col_name, expr)
-    return _rewrite_partitions(
-        spark, sink, rewritten, pids, 0, "backfill", recompute_pid=False,
-        lease_lost=_lease_lost,
-    )
+    Rows keep their stored pid (conv_id is untouched, so re-hashing is
+    both unnecessary and the class of bug this module guards against)."""
+    with held_lease(out_dir) as held:
+        sink = MergeSink(out_dir)
+        sink.ensure_num_partitions(num_partitions)  # validate only
+        rewritten = sink.read(spark).withColumn(col_name, expr)
+        return _rewrite(
+            sink, rewritten, sorted(sink.committed()), "backfill", held
+        )
 
 
 def compact_partitions(
     spark: SparkSession,
     out_dir: str,
     pids: list[int] | None = None,
-    lease: bool = True,
-    _lease_lost=None,
 ) -> dict:
     """Small-files maintenance — the MergeSink analog of Iceberg's
     ``rewrite_data_files``. Long append workloads (and any write under
@@ -502,31 +411,21 @@ def compact_partitions(
     being promoted, i.e. silent data loss).
 
     At 100 TB: run per-partition on a schedule (the pids argument
-    bounds each run), exactly like Iceberg compaction jobs. Runs under
-    the sink ownership lease by default (see merge_upsert)."""
-    if lease:
-        with held_lease(out_dir) as (_l, lost):
-            return compact_partitions(
-                spark, out_dir, pids, lease=False, _lease_lost=lost,
-            )
-    sink = MergeSink(out_dir)
-    committed_pids = set(sink.committed())
-    # only COMMITTED partitions can be compacted: promoting an
-    # uncommitted pid would publish an empty dir + commit marker that
-    # pending_partitions then skips forever — silent data loss
-    if pids is None:
-        targets, skipped = sorted(committed_pids), []
-    else:
-        targets = sorted(set(pids) & committed_pids)
-        skipped = sorted(set(pids) - committed_pids)
-    if not targets:
-        return {"run_id": None, "rewritten": [], "skipped": skipped}
-    current = sink.read(spark)
-    res = _rewrite_partitions(
-        spark, sink,
-        current.where(F.col("pid").isin(targets)),
-        targets, 0, "compact", recompute_pid=False,
-        lease_lost=_lease_lost,
-    )
-    res["skipped"] = skipped
-    return res
+    bounds each run), exactly like Iceberg compaction jobs."""
+    with held_lease(out_dir) as held:
+        sink = MergeSink(out_dir)
+        committed_pids = set(sink.committed())
+        # only COMMITTED partitions can be compacted: promoting an
+        # uncommitted pid would publish an empty dir + commit marker
+        # that pending_partitions then skips forever — silent data loss
+        if pids is None:
+            targets, skipped = sorted(committed_pids), []
+        else:
+            targets = sorted(set(pids) & committed_pids)
+            skipped = sorted(set(pids) - committed_pids)
+        if not targets:
+            return {"run_id": None, "rewritten": [], "skipped": skipped}
+        current = sink.read(spark).where(F.col("pid").isin(targets))
+        res = _rewrite(sink, current, targets, "compact", held)
+        res["skipped"] = skipped
+        return res

@@ -23,10 +23,8 @@ then promoted per-partition. Resume scans only the pruned subset
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
@@ -38,8 +36,8 @@ from v2_ocr_spark.pipeline.sink import (
     PROCESSING,
     QUEUED,
     CheckpointStore,
+    LeaseHeld,
     MergeSink,
-    SinkLease,
     held_lease,
 )
 
@@ -135,84 +133,20 @@ class ExtractionJob:
                 changed.append(pid)
         return changed
 
-    def _stage(self, run_id: str, pids: list[int],
-               fault: Callable[[DataFrame], DataFrame] | None) -> None:
+    def _extracted(self, pids: list[int]) -> DataFrame:
         df = self.spark.read.parquet(self.input_path)
         df = df.withColumn("pid", partition_id("conv_id", self.num_partitions))
         if len(pids) < self.num_partitions:
             df = df.where(F.col("pid").isin(pids))  # resume: pruned rescan
-        extracted = extract_turns(
+        return extract_turns(
             df.select("conv_id", "turn_idx", "role", "text", "tool"),
             with_metrics=True,
         ).withColumn("pid", partition_id("conv_id", self.num_partitions))
-        if fault is not None:
-            extracted = fault(extracted)
-        # schema sidecar BEFORE staging: keeps the table readable even
-        # if every partition later empties (see MergeSink.record_schema)
-        self.sink.record_schema(extracted.schema)
-        (
-            extracted
-            .repartition("pid")
-            .sortWithinPartitions("conv_id", "turn_idx")  # W1 at rest
-            .write.partitionBy("pid")
-            .mode("overwrite")
-            .parquet(self.sink.staging_dir(run_id))
-        )
-
-    def _stage_metrics(self, run_id: str, pids: list[int]) -> dict[int, dict]:
-        """Per-partition metrics for the whole staging dir in ONE Spark
-        job (a per-partition agg job each would serialize the commit
-        loop — 32 scheduler round-trips instead of one groupBy)."""
-        empty = {"turns_seen": 0, "nodes_seen": 0, "blocks_kept": 0,
-                 "blocks_dropped": 0, "turns_errored": 0,
-                 "chars_in": 0, "chars_out": 0, "proc_ms": 0}
-        from pyspark.errors import AnalysisException
-
-        try:
-            staged = self.spark.read.parquet(self.sink.staging_dir(run_id))
-        except AnalysisException:  # nothing staged at all (no footer)
-            # ONLY the missing/empty-staging case falls back to zeroed
-            # metrics — a blanket except here would swallow a transient
-            # read failure and promote real data with turns_seen=0,
-            # permanently corrupting the commit lineage
-            return {pid: dict(empty) for pid in pids}
-        rows = (
-            staged.groupBy("pid")
-            .agg(
-                F.count("*").alias("turns"),
-                F.sum("nodes_seen").alias("nodes"),
-                F.sum("n_spans").alias("kept"),
-                F.count(F.when(F.col("error").isNotNull(), 1)).alias("errs"),
-                F.sum("chars_in").alias("ci"),
-                F.sum("chars_out").alias("co"),
-                F.sum("proc_us").alias("us"),
-            )
-            .collect()
-        )
-        out = {pid: dict(empty) for pid in pids}
-        for r in rows:
-            out[int(r.pid)] = {
-                "turns_seen": r.turns or 0,
-                "nodes_seen": int(r.nodes or 0),
-                "blocks_kept": int(r.kept or 0),
-                "blocks_dropped": int((r.nodes or 0) - (r.kept or 0)),
-                "turns_errored": int(r.errs or 0),
-                "chars_in": int(r.ci or 0),
-                "chars_out": int(r.co or 0),
-                "proc_ms": int((r.us or 0) // 1000),
-            }
-        return out
 
     # ---------------------------------------------------------------
 
-    def run(
-        self,
-        fault: Callable[[DataFrame], DataFrame] | None = None,
-        fail_before_promote: set[int] | None = None,
-        incremental: bool = False,
-    ) -> dict:
-        """One claim-loop pass. Returns a summary. ``fault`` /
-        ``fail_before_promote`` are test hooks for crash injection.
+    def run(self, incremental: bool = False) -> dict:
+        """One claim-loop pass. Returns a summary.
 
         ``incremental=True`` additionally re-extracts committed
         partitions whose input fingerprint changed since their commit
@@ -226,49 +160,25 @@ class ExtractionJob:
         # claim cleanly with LeaseHeld instead of double-promoting.
         # held_lease keeps a heartbeat fresh for the whole run (a long
         # stage must never look like a dead owner); if the lease is
-        # somehow lost anyway, the event stops promotion before any
-        # partition publishes.
-        with held_lease(self.out_dir, self.lease_ttl) as (lease, lease_lost):
-            return self._run_owned(
-                run_id, lease, lease_lost, fault, fail_before_promote,
-                incremental,
-            )
+        # somehow lost anyway, MergeSink.stage refuses to promote.
+        with held_lease(self.out_dir, self.lease_ttl) as held:
+            return self._run_owned(run_id, held, incremental)
 
-    def _run_owned(
-        self,
-        run_id: str,
-        lease: SinkLease,
-        lease_lost,
-        fault: Callable[[DataFrame], DataFrame] | None,
-        fail_before_promote: set[int] | None,
-        incremental: bool,
-    ) -> dict:
+    def _run_owned(self, run_id: str, held, incremental: bool) -> dict:
         # pin/validate the table's partition count before any staging —
         # a second job pointed at the same sink with a different count
         # must fail loudly, not scatter rows
         self.sink.ensure_num_partitions(self.num_partitions)
         # the job owns the sink exclusively: heal any interrupted
-        # promote immediately (no grace needed), and sweep stale
-        # staging run dirs — a crash between _stage and the promote
-        # loop strands a complete staged table copy per attempt, and
-        # nothing else ever cleans _staging (repeated crashes would
-        # multiply whole-table copies on disk forever)
-        import shutil
-
+        # promote immediately (no grace needed)
         self.sink.recover_partials(grace_seconds=0)
-        for stale in os.listdir(self.sink.staging_root):
-            if stale != run_id:
-                shutil.rmtree(
-                    os.path.join(self.sink.staging_root, stale),
-                    ignore_errors=True,
-                )
         self.checkpoints.recover()  # Q2
         pids = self.pending_partitions()
         if incremental:
             fps = self.input_fingerprints()
             # changed COMMITTED partitions respect the same Q4 retry
             # cap as uncommitted ones — without this, a committed
-            # partition whose appended input keeps failing _stage is
+            # partition whose appended input keeps failing to stage is
             # re-selected on every incremental run forever instead of
             # parking at max_attempts (it stays visible in checkpoints)
             changed = [
@@ -294,7 +204,18 @@ class ExtractionJob:
             )
 
         try:
-            self._stage(run_id, pids, fault)
+            staged = self.sink.stage(
+                self._extracted(pids), run_id, held,
+                F.count("*").alias("turns"),
+                F.sum("nodes_seen").alias("nodes"),
+                F.sum("n_spans").alias("kept"),
+                F.count(F.when(F.col("error").isNotNull(), 1)).alias("errs"),
+                F.sum("chars_in").alias("ci"),
+                F.sum("chars_out").alias("co"),
+                F.sum("proc_us").alias("us"),
+            )
+        except LeaseHeld:
+            raise  # ownership lost: the checkpoints are the new owner's
         except Exception as exc:  # noqa: BLE001
             for pid in pids:
                 self.checkpoints.set(
@@ -302,24 +223,24 @@ class ExtractionJob:
                 )
             raise
 
-        # ownership must still hold before anything publishes — if the
-        # background heartbeater lost the lease (takeover), promoting
-        # now would race the new owner
-        if lease_lost.is_set():
-            raise RuntimeError(
-                f"sink lease for {self.out_dir} was lost during staging; "
-                "refusing to promote"
-            )
-        lease.heartbeat()
-        all_metrics = self._stage_metrics(run_id, pids)
-        committed = []
+        metrics = {}
         for pid in pids:
-            if fail_before_promote and pid in fail_before_promote:
-                raise RuntimeError(f"injected crash before promoting pid={pid}")
-            all_metrics[pid].update(
-                fps.get(pid, {"input_rows": 0, "input_sig": 0})
-            )
-            commit = self.sink.promote(run_id, pid, all_metrics[pid])
+            r = staged.get(pid)
+            n = {k: int((r[k] if r else 0) or 0)
+                 for k in ("turns", "nodes", "kept", "errs", "ci", "co", "us")}
+            metrics[pid] = {
+                "turns_seen": n["turns"],
+                "nodes_seen": n["nodes"],
+                "blocks_kept": n["kept"],
+                "blocks_dropped": n["nodes"] - n["kept"],
+                "turns_errored": n["errs"],
+                "chars_in": n["ci"],
+                "chars_out": n["co"],
+                "proc_ms": n["us"] // 1000,
+                **fps.get(pid, {"input_rows": 0, "input_sig": 0}),
+            }
+        committed = []
+        for pid, commit in self.sink.publish(run_id, metrics):
             # attempt resets on success: the cap bounds a FAILURE
             # STREAK, not lifetime failures — a partition that failed
             # twice years ago then succeeded gets a full retry budget
@@ -329,10 +250,6 @@ class ExtractionJob:
                 snapshot_id=commit["snapshot_id"], attempt=0,
             )
             committed.append(pid)
-        # every pid dir was renamed out by promote; remove the leftover
-        # run dir (_SUCCESS marker) so successful runs don't accumulate
-        # one stale staging entry each
-        shutil.rmtree(self.sink.staging_dir(run_id), ignore_errors=True)
         return {"run_id": run_id, "committed": committed, "status": "ok"}
 
     def read_output(self) -> DataFrame:

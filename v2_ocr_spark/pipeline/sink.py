@@ -20,6 +20,12 @@ Layout:
       _commits/<N>.json               (atomic marker: snapshot + metrics)
       _checkpoints/<N>.json           (claim-state machine, Q1/Q2)
 
+This module is the single owner of the staging/promote protocol:
+every writer of the table — the extraction job, each maintenance
+rewrite, the streaming landing loop — hands its rows (already keyed by
+``pid``) to MergeSink.stage and its per-pid commit metrics to
+MergeSink.publish, under held_lease. No caller touches ``_staging``.
+
 On a real cluster the same call sites target Iceberg:
 ``MERGE INTO extracted t USING updates s ON t.conv_id = s.conv_id AND
 t.turn_idx = s.turn_idx WHEN MATCHED THEN UPDATE ... WHEN NOT MATCHED
@@ -339,7 +345,8 @@ class MergeSink:
         self.data_dir = os.path.join(out_dir, "data")
         self.commits_dir = os.path.join(out_dir, "_commits")
         self.staging_root = os.path.join(out_dir, "_staging")
-        for d in (self.data_dir, self.commits_dir, self.staging_root):
+        self.dirs = (self.data_dir, self.commits_dir, self.staging_root)
+        for d in self.dirs:
             os.makedirs(d, exist_ok=True)
 
     # -- table metadata ----------------------------------------------------
@@ -477,6 +484,70 @@ class MergeSink:
 
     def staging_dir(self, run_id: str) -> str:
         return os.path.join(self.staging_root, run_id)
+
+    def stage(self, rows, run_id: str, held, *aggs) -> dict:
+        """Stage ``rows`` (which carry ``pid``) as run ``run_id`` and
+        return {pid: Row of ``aggs``} over what was staged — steps 1-5
+        of the commit protocol; ``publish`` is steps 6-7. ``held`` is
+        the (lease, lost) pair from held_lease.
+
+        1. Sweep stale run dirs: a crash between staging and promote
+           strands a complete staged copy, and every writer runs under
+           the lease, so no other run's staging is live.
+        2. Schema sidecar BEFORE staging: keeps the table readable even
+           if every partition later empties (see record_schema).
+        3. One write, partitioned by pid, turn-sorted at rest (W1).
+        4. ONE groupBy over the staged files fills every pid's
+           aggregates — a per-pid job each would serialize up to P
+           scheduler round-trips. Pids that staged no rows are absent.
+        5. Fence: if the heartbeater lost the lease to a takeover,
+           promoting now would race the new owner — raise LeaseHeld."""
+        from pyspark.errors import AnalysisException
+
+        lease, lost = held
+        for stale in os.listdir(self.staging_root):
+            if stale != run_id:
+                shutil.rmtree(
+                    os.path.join(self.staging_root, stale), ignore_errors=True
+                )
+        self.record_schema(rows.schema)
+        staging = self.staging_dir(run_id)
+        (
+            rows.repartition("pid")
+            .sortWithinPartitions("conv_id", "turn_idx")
+            .write.partitionBy("pid")
+            .mode("overwrite")
+            .parquet(staging)
+        )
+        try:
+            staged = rows.sparkSession.read.parquet(staging)
+        except AnalysisException:  # nothing staged at all (no footer)
+            # ONLY the empty-staging case yields no rows — a blanket
+            # except would swallow a transient read failure and promote
+            # real data with zeroed metrics, corrupting the lineage
+            by_pid = {}
+        else:
+            by_pid = {
+                int(r.pid): r
+                for r in staged.groupBy("pid").agg(*aggs).collect()
+            }
+        if lost.is_set():
+            raise LeaseHeld(
+                f"sink lease for {self.out_dir} was lost during staging "
+                f"of run {run_id}; refusing to promote"
+            )
+        lease.heartbeat()
+        return by_pid
+
+    def publish(self, run_id: str, metrics: dict[int, dict]):
+        """Promote each staged pid of ``run_id`` in order, yielding
+        (pid, commit) after each so callers can record per-partition
+        state between commits; once all are published, remove the run
+        dir (promote renamed every pid dir out of it). A generator:
+        nothing is promoted until it is iterated."""
+        for pid, m in metrics.items():
+            yield pid, self.promote(run_id, pid, m)
+        shutil.rmtree(self.staging_dir(run_id), ignore_errors=True)
 
     def promote(self, run_id: str, pid: int, metrics: dict) -> dict:
         """Atomically publish one partition: swap its data dir into

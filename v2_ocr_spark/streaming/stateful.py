@@ -190,18 +190,13 @@ def stream_extract_upsert(
     (pipeline/iceberg.py).
     """
     from v2_ocr_spark.operators.extract import extract_turns
-    from v2_ocr_spark.pipeline.maintenance import merge_upsert
+    from v2_ocr_spark.pipeline.maintenance import _merge, _rewrite
+    from v2_ocr_spark.pipeline.runner import partition_id
+    from v2_ocr_spark.pipeline.sink import MergeSink, held_lease
 
     stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
 
     def land(batch_df, batch_id: int) -> None:
-        from v2_ocr_spark.pipeline.maintenance import (
-            _affected_pids,
-            _rewrite_partitions,
-        )
-        from v2_ocr_spark.pipeline.sink import MergeSink, held_lease
-        from v2_ocr_spark.pipeline.runner import partition_id
-
         sink = MergeSink(out_dir)
         # with_metrics matches the BATCH staging schema — a narrow
         # bootstrap partition would otherwise become the table's first
@@ -225,34 +220,32 @@ def stream_extract_upsert(
             # is a read-decide-write on _table.json, and pinning it
             # unleased could race a batch runner on a brand-new sink
             # (both read stored=None, both write, loser scatters rows)
-            with held_lease(out_dir) as (_l, lost):
+            with held_lease(out_dir) as held:
                 np = sink.ensure_num_partitions(num_partitions)
-                pids = _affected_pids(
-                    extracted.select("conv_id").distinct(), np
+                keyed = extracted.withColumn(
+                    "pid", partition_id("conv_id", np)
                 )
+                pids = {
+                    r.pid for r in keyed.select("pid").distinct().collect()
+                }
                 done = set(sink.committed())
-                fresh = sorted(set(pids) - done)
+                fresh = sorted(pids - done)
                 if fresh:
                     # the stream IS the extraction for partitions it
-                    # reaches first: bootstrap them through the
-                    # copy-on-write commit path (merge_upsert's
-                    # extraction-first policy is for BATCH maintenance
-                    # callers, not this source)
-                    _rewrite_partitions(
-                        spark, sink,
-                        extracted.where(
-                            partition_id("conv_id", np).isin(fresh)
-                        ),
-                        fresh, np, "bootstrap", lease_lost=lost,
+                    # reaches first: bootstrap them through the sink's
+                    # commit path (merge_upsert's extraction-first
+                    # policy is for BATCH maintenance callers, not this
+                    # source)
+                    _rewrite(
+                        sink, keyed.where(F.col("pid").isin(fresh)), fresh,
+                        "bootstrap", held,
                     )
-                touched = sorted(set(pids) & done)
+                touched = sorted(pids & done)
                 if touched:
-                    merge_upsert(
-                        spark, out_dir,
-                        extracted.where(
-                            partition_id("conv_id", np).isin(touched)
-                        ),
-                        num_partitions=np, lease=False, _lease_lost=lost,
+                    _merge(
+                        spark, sink,
+                        keyed.where(F.col("pid").isin(touched)).drop("pid"),
+                        np, held,
                     )
         finally:
             # unpersist on EVERY exit — a failed micro-batch is retried
