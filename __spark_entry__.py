@@ -11,6 +11,11 @@ into /root/repo/data/sf*/ (seed=42, byte-stable — see FIXTURES.md);
 oracles read them via DuckDB ``read_parquet``. The TPC-H-ish views the
 driver pre-registers (documents, embeddings, events, ...) are used
 directly for the dedup / similarity / text-analysis operators.
+
+This module owns every fixture read: operators take DataFrames, and
+each gate entry reads each table it needs ONCE and passes it down.
+It also owns the one memo (``_memo``) for persisted intermediates that
+several entries share.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ import pyspark.sql.functions as F
 
 from v2_ocr_spark.kernels.markdown import JS_WS
 from v2_ocr_spark.operators import (
+    combined,
     corpus,
     dedup,
     multimodal,
@@ -59,51 +65,112 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{_data_dir(sf_dir)}/transcripts.parquet")
 
 
-# one extraction per (session, input): seven registered queries consume
-# the full extraction output (spans, assembly, dedup, export); a real
-# pipeline extracts once and fans out, and the gate gets the same reuse.
-# ~25k rows at sf0.01 — executor storage cost is trivial.
-_EXTRACT_CACHE: dict[tuple, DataFrame] = {}
+def _conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{_data_dir(sf_dir)}/conversations.parquet")
+
+
+def _table(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """Reader for one of the shared fixture tables (documents,
+    embeddings, events), which live in sf_dir itself (the generated
+    transcripts/conversations go through _data_dir instead)."""
+    return lambda spark, sf_dir: spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+_documents = _table("documents")
+_embeddings = _table("embeddings")
+_events = _table("events")
+
+
+def input_signature(path: str) -> tuple:
+    """Cheap content fingerprint of a parquet file/dir — (file count,
+    total bytes, max mtime_ns). Memo keys include it so an IN-SESSION
+    rewrite of the input (regenerated corpus, a notebook iterating on a
+    dataset, a probe reusing its work dir) invalidates cached pair/
+    cluster/extraction sets instead of silently serving stale results."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (1, st.st_size, st.st_mtime_ns)
+    n = total = newest = 0
+    for root, _, files in os.walk(path):
+        for fn in files:
+            try:
+                st = os.stat(os.path.join(root, fn))
+            except FileNotFoundError:
+                continue
+            n += 1
+            total += st.st_size
+            newest = max(newest, st.st_mtime_ns)
+    return (n, total, newest)
+
+
+# every persisted intermediate that several gate entries share, keyed
+# (app, input path, input_signature, tag) — the extraction, the
+# assembled-conversation corpus and its pairs, and the documents' pair
+# set and cluster labels. A real pipeline computes each once and fans
+# out; the gate gets the same reuse.
+_MEMO: dict[tuple, object] = {}
+
+
+def _memo(spark: SparkSession, path: str, tag: str, build: Callable):
+    """Return the memoized ``build()`` for (this app, path's current
+    content, tag). Before building, entries keyed to OTHER Spark
+    applications and this path's SUPERSEDED content signatures are
+    dropped and unpersisted: neither key can ever match again, so
+    without eviction a long-lived process that cycles sessions (pytest)
+    grows the dict forever — and an in-session rewrite leaves the
+    superseded persisted DataFrames pinned in executor storage for the
+    rest of the session."""
+    key = (spark.sparkContext.applicationId, path, input_signature(path), tag)
+    if key not in _MEMO:
+        stale = [
+            k for k in _MEMO
+            if k[0] != key[0] or (k[1] == key[1] and k[2] != key[2])
+        ]
+        for k in stale:
+            v = _MEMO.pop(k)
+            for df in v if isinstance(v, tuple) else (v,):
+                try:
+                    df.unpersist()
+                except Exception:  # noqa: BLE001 — session already gone
+                    pass
+        _MEMO[key] = build()
+    return _MEMO[key]
 
 
 def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from v2_ocr_spark.operators.dedup import input_signature
-
-    d = _data_dir(sf_dir)
-    key = (
-        spark.sparkContext.applicationId, d,
-        input_signature(f"{d}/transcripts.parquet"),
-    )
-    if key not in _EXTRACT_CACHE:
-        _evict_stale(_EXTRACT_CACHE, key)
+    """The full extraction output, persisted: seven registered queries
+    consume it (spans, assembly, dedup, export). ~25k rows at sf0.01 —
+    executor storage cost is trivial."""
+    def build():
         df = extract_turns(_transcripts(spark, sf_dir)).persist()
         df.count()
-        _EXTRACT_CACHE[key] = df
-    return _EXTRACT_CACHE[key]
+        return df
+
+    path = f"{_data_dir(sf_dir)}/transcripts.parquet"
+    return _memo(spark, path, "extract", build)
 
 
-def _evict_stale(cache: dict, new_key: tuple) -> None:
-    """Drop entries keyed to OTHER Spark applications, plus this
-    app+dir's SUPERSEDED content signatures. Neither key can ever match
-    again, so without eviction a long-lived process that cycles
-    sessions (pytest) grows the dict forever — and an in-session
-    rewrite leaves the superseded signature's persisted DataFrame
-    pinned in executor storage for the rest of the session."""
-    stale = [
-        k for k in cache
-        if k[0] != new_key[0] or (k[1] == new_key[1] and k != new_key)
-    ]
-    for k in stale:
-        v = cache.pop(k)
-        for df in v if isinstance(v, tuple) else (v,):
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session already gone
-                pass
+def _doc_pairs(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
+    """The documents' MinHash-LSH pair set (persisted by the operator),
+    shared by dedup_minhash_lsh and every cluster consumer: rebuilding
+    the signature + bucket + verify cascade per entry would repeat the
+    dominant cost."""
+    return _memo(
+        spark, f"{sf_dir}/documents.parquet", "minhash_pairs",
+        lambda: dedup.minhash_lsh_pairs_for(docs),
+    )
 
 
-def _conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{_data_dir(sf_dir)}/conversations.parquet")
+def _doc_clusters(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """Cluster labels over _doc_pairs: the keeper list and both corpus
+    filter entries consume the same transitive closure, and the
+    propagation loop is their dominant cost once pairs exist."""
+    return _memo(
+        spark, f"{sf_dir}/documents.parquet", "clusters",
+        lambda: dedup.duplicate_clusters(_doc_pairs(spark, sf_dir, docs)),
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -116,6 +183,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
+
+def _over(fn, *readers, order: tuple[str, ...] = ()):
+    """Gate entry for an operator over fixture tables: each reader runs
+    ONCE and its DataFrame is passed to ``fn``; ``order`` sorts at
+    registration (operator output order is unspecified)."""
+    def q(spark, sf_dir):
+        out = fn(*(read(spark, sf_dir) for read in readers))
+        return out.orderBy(*order) if order else out
+
+    return q
+
 
 def _canon_spans(col: str = "spans") -> F.Column:
     return F.concat_ws(
@@ -209,33 +287,20 @@ def q_conversation_dedup(spark, sf_dir):
     )
 
 
-# assembled-conversation corpus + its exact near-dup pair set, shared
-# by conversation_near_dup and pipeline_clean_pack — memoized per
-# (session, input) like _EXTRACT_CACHE so the two gate entries pay the
-# shingle inverted index ONCE (same reuse a production pipeline gets)
-_CONV_CORPUS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _conv_corpus(spark, sf_dir):
-    """-> (docs, pairs): docs = (doc_id, text, source) assembled
-    conversations with whitespace-NORMALIZED text (collapse
-    [ \\t\\n\\f\\r]+ runs, trim, drop empty conversations — the
-    standard near-dup canonicalization, and it makes conversation
-    tokens equal to the concatenation of per-turn tokens, which is
-    what lets the DuckDB oracle shingle from TURN-level rows:
-    per-element lambdas over a 130k-token whole-conversation list are
-    quadratic in DuckDB, while turn-level lists stay small and a
-    window supplies the cross-turn shingles); pairs = exact ngram
-    Jaccard >= 0.1 over docs. Both persisted."""
-    from v2_ocr_spark.operators.dedup import input_signature
-
-    d = _data_dir(sf_dir)
-    key = (
-        spark.sparkContext.applicationId, d,
-        input_signature(f"{d}/transcripts.parquet"),
-    )
-    if key not in _CONV_CORPUS_CACHE:
-        _evict_stale(_CONV_CORPUS_CACHE, key)
+    """-> (docs, pairs), memoized and shared by conversation_near_dup
+    and pipeline_clean_pack so the two entries pay the shingle inverted
+    index ONCE (the reuse a production pipeline gets): docs = (doc_id,
+    text, source) assembled conversations with whitespace-NORMALIZED
+    text (collapse [ \\t\\n\\f\\r]+ runs, trim, drop empty
+    conversations — the standard near-dup canonicalization, and it
+    makes conversation tokens equal to the concatenation of per-turn
+    tokens, which is what lets the DuckDB oracle shingle from
+    TURN-level rows: per-element lambdas over a 130k-token
+    whole-conversation list are quadratic in DuckDB, while turn-level
+    lists stay small and a window supplies the cross-turn shingles);
+    pairs = exact ngram Jaccard >= 0.1 over docs. Both persisted."""
+    def build():
         out = _extracted(spark, sf_dir)
         docs = (
             assemble(out, chunk_size=256)
@@ -257,9 +322,10 @@ def _conv_corpus(spark, sf_dir):
         # stage-boundary lesson, in-memory form). Checkpointing
         # truncates the plan at the materialized pairs.
         pairs = dedup.ngram_jaccard_pairs_for(docs, threshold=0.1)
-        pairs = pairs.localCheckpoint(eager=True)
-        _CONV_CORPUS_CACHE[key] = (docs, pairs)
-    return _CONV_CORPUS_CACHE[key]
+        return docs, pairs.localCheckpoint(eager=True)
+
+    path = f"{_data_dir(sf_dir)}/transcripts.parquet"
+    return _memo(spark, path, "conv_corpus", build)
 
 
 def q_conversation_near_dup(spark, sf_dir):
@@ -295,7 +361,7 @@ def q_pipeline_clean_pack(spark, sf_dir):
     recursive-CTE transitive closure, the same quality/lang SQL the
     corpus_filter oracle uses, and the running-sum pack window."""
     docs, pairs = _conv_corpus(spark, sf_dir)
-    clusters = dedup.duplicate_clusters(spark, None, pairs=pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     try:
         # STAGE BOUNDARIES, in-memory form: compose.py re-reads the
         # clean/ parquet between filter and pack because carrying the
@@ -319,9 +385,9 @@ def q_pipeline_clean_pack(spark, sf_dir):
             "left",
         ).orderBy("doc_id")
     finally:
-        # the pairs= path hands back a persisted label table the caller
-        # owns (duplicate_clusters docstring); the shared docs/pairs
-        # stay cached for the sibling gate query
+        # duplicate_clusters hands back a persisted label table the
+        # caller owns; the shared docs/pairs stay cached for the
+        # sibling gate query
         clusters.unpersist()
 
 
@@ -333,13 +399,25 @@ def q_export(spark, sf_dir):
     )
 
 
-def _rel(fn):
-    return lambda spark, sf_dir: fn(spark, _data_dir(sf_dir))
+def _keep_list(spark, sf_dir, docs):
+    return dedup.dedup_keep_list_for(docs, _doc_clusters(spark, sf_dir, docs))
+
+
+def _corpus_filter(spark, sf_dir, docs):
+    return corpus.corpus_filter_for(docs, _keep_list(spark, sf_dir, docs))
+
+
+def q_corpus_filter_stats(spark, sf_dir):
+    docs = _documents(spark, sf_dir)
+    return corpus._filter_stats_for(
+        _corpus_filter(spark, sf_dir, docs),
+        textstats.token_counts_for(docs, ["doc_id"]),
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from v2_ocr_spark.operators import combined
-
+    docs, emb, events = _documents, _embeddings, _events
+    conv, turns = _conversations, _transcripts
     return {
         # REGISTRATION ORDER = the driver's grading order, and the
         # driver grades AT MOST ~50 entries per round (rounds 1 and 2
@@ -367,73 +445,72 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_explode": q_span_explode,
         "conversation_dedup": q_conversation_dedup,
         "export_documents": q_export,
-        # ---- dedup / corpus family (memoized pair/cluster caches
-        # amortize within the group) ----
-        "dedup_exact": dedup.exact_duplicates,
-        "dedup_ngram_jaccard": lambda spark, sf_dir: (
-            dedup.ngram_jaccard_pairs(spark, sf_dir)
-            .orderBy("doc_a", "doc_b")
+        # ---- dedup / corpus family (the memoized pair set and cluster
+        # labels amortize within the group) ----
+        "dedup_exact": _over(dedup.exact_duplicates, docs),
+        "dedup_ngram_jaccard": _over(
+            dedup.ngram_jaccard_pairs_for, docs, order=("doc_a", "doc_b")
         ),
-        "cross_source_overlap": corpus.cross_source_overlap,
-        "dedup_simhash": dedup.simhash_pairs,
-        "dedup_minhash_lsh": lambda spark, sf_dir: (
-            dedup.minhash_lsh_pairs(spark, sf_dir)
-            .orderBy("doc_a", "doc_b")
-        ),
-        "dedup_clusters": lambda spark, sf_dir: (
-            dedup.duplicate_clusters(spark, sf_dir).orderBy("doc_id")
-        ),
-        "dedup_keep_list": lambda spark, sf_dir: dedup.dedup_keep_list(
-            spark, sf_dir
+        "cross_source_overlap": _over(corpus.cross_source_overlap, docs),
+        "dedup_simhash": _over(dedup.simhash_pairs, docs),
+        "dedup_minhash_lsh": lambda spark, sf_dir: _doc_pairs(
+            spark, sf_dir, _documents(spark, sf_dir)
+        ).orderBy("doc_a", "doc_b"),
+        "dedup_clusters": lambda spark, sf_dir: _doc_clusters(
+            spark, sf_dir, _documents(spark, sf_dir)
         ).orderBy("doc_id"),
-        "corpus_filter": lambda spark, sf_dir: corpus.corpus_filter(
-            spark, sf_dir
+        "dedup_keep_list": lambda spark, sf_dir: _keep_list(
+            spark, sf_dir, _documents(spark, sf_dir)
         ).orderBy("doc_id"),
-        "corpus_filter_stats": corpus.corpus_filter_stats,
+        "corpus_filter": lambda spark, sf_dir: _corpus_filter(
+            spark, sf_dir, _documents(spark, sf_dir)
+        ).orderBy("doc_id"),
+        "corpus_filter_stats": q_corpus_filter_stats,
         "conversation_near_dup": q_conversation_near_dup,
         "pipeline_clean_pack": q_pipeline_clean_pack,
         # ---- similarity (embeddings table) ----
-        "ann_brute_force_topk": similarity.brute_force_topk,
-        "ann_ivf_topk": similarity.ivf_topk,
-        "ann_srp_lsh_topk": similarity.srp_lsh_topk,
-        "cosine_near_dup": lambda spark, sf_dir: (
-            similarity.cosine_near_dup_pairs(spark, sf_dir)
-            .orderBy("id_a", "id_b")
+        "ann_brute_force_topk": _over(similarity.brute_force_topk, emb),
+        "ann_ivf_topk": _over(similarity.ivf_topk, emb),
+        "ann_srp_lsh_topk": _over(similarity.srp_lsh_topk, emb),
+        "cosine_near_dup": _over(
+            similarity.cosine_near_dup_pairs, emb, order=("id_a", "id_b")
         ),
         # ---- corpus / textstats singletons ----
-        "vocabulary_topk": corpus.vocabulary_topk,
-        "token_pack": corpus.token_pack,
-        "doc_features": combined.doc_features,
-        "rolling_fingerprint": textstats.rolling_fingerprint,
+        "vocabulary_topk": _over(corpus.vocabulary_topk, docs),
+        "token_pack": _over(corpus.token_pack_for, docs),
+        "doc_features": _over(combined.doc_features, docs),
+        "rolling_fingerprint": _over(textstats.rolling_fingerprint, docs),
         # ---- multimodal plumbing (rows-only, cheap) ----
-        "multimodal_image_meta": multimodal.image_meta,
-        "multimodal_frame_sample": multimodal.frame_sample_stats,
-        "multimodal_audio_chunks": multimodal.audio_chunk_stats,
-        "multimodal_image_dhash": multimodal.image_dhash_table,
-        "multimodal_image_near_dup": multimodal.image_near_dup_pairs,
-        # ---- consolidated combos (operators/combined.py) ----
-        "turn_text_features": lambda spark, sf_dir: (
-            combined.turn_text_features(_transcripts(spark, sf_dir))
+        "multimodal_image_meta": _over(multimodal.image_meta, docs),
+        "multimodal_frame_sample": _over(multimodal.frame_sample_stats, docs),
+        "multimodal_audio_chunks": _over(multimodal.audio_chunk_stats, docs),
+        "multimodal_image_dhash": _over(multimodal.image_dhash_table, docs),
+        "multimodal_image_near_dup": _over(
+            multimodal.image_near_dup_pairs, docs
         ),
-        "doc_text_features": combined.doc_text_features,
-        "conv_views": _rel(combined.conv_views),
-        "scalar_stats": _rel(combined.scalar_stats),
-        "queue_views": _rel(combined.queue_views),
-        "sort_views": _rel(combined.sort_views),
-        "filter_views": _rel(combined.filter_views),
-        "turn_flags": _rel(combined.turn_flags),
-        "group_rollups": _rel(combined.group_rollups),
-        "events_views": combined.events_views,
+        # ---- consolidated combos (operators/combined.py) ----
+        "turn_text_features": _over(combined.turn_text_features, turns),
+        "doc_text_features": _over(combined.doc_text_features, docs),
+        "conv_views": _over(combined.conv_views, turns, conv),
+        "scalar_stats": _over(combined.scalar_stats, turns, conv),
+        "queue_views": _over(combined.queue_views, conv),
+        "sort_views": _over(combined.sort_views, conv),
+        "filter_views": _over(combined.filter_views, conv),
+        "turn_flags": _over(combined.turn_flags, turns),
+        "group_rollups": _over(combined.group_rollups, turns, conv),
+        "events_views": _over(combined.events_views, events),
         # ---- unfolded relational evidence (point lookup, semi join) ----
-        "results_scan": _rel(relational.results_scan),
-        "semi_join_completed": _rel(relational.semi_join_completed),
-        "approx_distinct_users": relational.approx_distinct_users,
-        "distinct_kmv": lambda spark, sf_dir: relational.distinct_kmv(
-            spark, sf_dir
-        ).orderBy("event_type"),
-        "sample_stratified": lambda spark, sf_dir: corpus.sample_stratified(
-            spark, sf_dir
-        ).orderBy("source", "doc_id"),
+        "results_scan": _over(relational.results_scan, turns),
+        "semi_join_completed": _over(
+            relational.semi_join_completed, turns, conv
+        ),
+        "approx_distinct_users": _over(relational.approx_distinct_users, events),
+        "distinct_kmv": _over(
+            relational.distinct_kmv_for, events, order=("event_type",)
+        ),
+        "sample_stratified": _over(
+            corpus.sample_stratified_for, docs, order=("source", "doc_id")
+        ),
     }
 
 
@@ -721,11 +798,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT conv_id, source_name, "
             "regexp_matches(source_name, '[֑-߿יִ-﷽ﹰ-ﻼ]') AS is_rtl "
             f"FROM {_C}"
-        ),
-        "arabic_numerals": (
-            "SELECT conv_id, turn_idx, "
-            "translate(CAST(turn_idx AS VARCHAR), '0123456789', '٠١٢٣٤٥٦٧٨٩') "
-            f"AS turn_idx_ar FROM {_T} WHERE conv_id = 'conv00000004'"
         ),
         "safe_names": (
             "WITH s AS (SELECT conv_id, source_name, "
@@ -1207,7 +1279,6 @@ def _compose_combos(sql: dict[str, str]) -> dict[str, str]:
         f"LEFT JOIN {take('fulltext_search')} f USING (conv_id, turn_idx) "
         f"JOIN ({_ARABIC_ALL}) a USING (conv_id, turn_idx)"
     )
-    p.pop("arabic_numerals")  # folded (combo applies E6 to every turn)
     p["group_rollups"] = (
         "SELECT 'status' AS which, CAST(status AS VARCHAR) AS k1, "
         f"CAST(NULL AS VARCHAR) AS k2, n FROM {take('status_counts')} "
@@ -1405,7 +1476,7 @@ def _sample_conversations_sql(rate: float = 0.1) -> str:
 
 
 def _sample_stratified_sql() -> str:
-    """Twin of corpus.sample_stratified: same cutoffs via the shared
+    """Twin of corpus.sample_stratified_for: same cutoffs via the shared
     stratified_cutoffs() derivation, same md5-bucket idiom."""
     from v2_ocr_spark.operators.corpus import stratified_cutoffs
 

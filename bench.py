@@ -68,6 +68,8 @@ def main() -> None:
     transcripts = spark.read.parquet(transcripts_path).persist()
     n_turns = transcripts.count()  # materializes the cache: the
     # headline measures extraction compute, not cold-disk variance
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
     # headline: full extraction pass (count forces materialization of
     # every cleaned turn + spans)
@@ -85,25 +87,23 @@ def main() -> None:
         .collect(),
     )
     def _lsh():
-        # cold-path timing: drop the memoized pair set first so the
-        # measured run pays the full signature+bucket+verify cascade
-        dedup.clear_pairs_cache()
-        pairs = dedup.minhash_lsh_pairs(spark, SF_DIR, use_cache=False)
+        # the operator never memoizes: every run pays the full
+        # signature+bucket+verify cascade
+        pairs = dedup.minhash_lsh_pairs_for(docs)
         pairs.count()
-        pairs.unpersist()  # uncached build: release it ourselves
+        pairs.unpersist()  # the caller owns the persisted pair set
 
-    # best-of-2 COLD passes (the cache clear keeps each run paying the
-    # full signature+bucket+verify cascade): this is the longest and
+    # best-of-2 COLD passes: this is the longest and
     # noisiest single query, and a one-sample reading has repeatedly
     # misread co-tenant interference as a 2x regression (BASELINE.md)
     timed("dedup_minhash_lsh", _lsh, runs=2)
     timed(
         "ann_brute_force_topk",
-        lambda: similarity.brute_force_topk(spark, SF_DIR).count(),
+        lambda: similarity.brute_force_topk(emb).count(),
     )
     timed(
         "ann_srp_lsh_topk",
-        lambda: similarity.srp_lsh_topk(spark, SF_DIR).count(),
+        lambda: similarity.srp_lsh_topk(emb).count(),
     )
 
     def _dom():
@@ -117,35 +117,36 @@ def main() -> None:
 
     timed("dom_flatten_classify_reassemble", _dom)
     timed("quality_score",
-          lambda: textstats.quality_score(spark, SF_DIR)
+          lambda: textstats.quality_score_for(docs, ["doc_id"])
           .agg(F.sum("quality")).collect())
 
     from v2_ocr_spark.operators import corpus
 
     timed("vocabulary_topk",
-          lambda: corpus.vocabulary_topk(spark, SF_DIR).count())
+          lambda: corpus.vocabulary_topk(docs).count())
     timed("token_pack",
-          lambda: corpus.token_pack(spark, SF_DIR)
+          lambda: corpus.token_pack_for(docs)
           .agg(F.max("bin"), F.sum("n_tokens")).collect())
     timed("token_counts",
-          lambda: textstats.token_counts(spark, SF_DIR)
+          lambda: textstats.token_counts_for(docs, ["doc_id"])
           .agg(F.sum("bpe_tokens")).collect())
     timed("lm_logloss",
-          lambda: corpus.lm_logloss(spark, SF_DIR)
+          lambda: corpus.lm_logloss_for(docs)
           .agg(F.sum("n_tokens"), F.max("bits_per_token")).collect())
     timed("dup_span_removal",
-          lambda: corpus.remove_dup_spans(spark, SF_DIR)
+          lambda: corpus.remove_dup_spans_for(docs)
           .agg(F.sum("dup_tokens"), F.sum(F.length("kept_text")))
           .collect())
     timed("scrub_boilerplate",
-          lambda: corpus.scrub_boilerplate(spark, SF_DIR)
+          lambda: corpus.scrub_boilerplate_for(docs)
           .agg(F.sum("kept_lines"), F.sum(F.length("scrubbed_text")))
           .collect())
 
     def _semantic():
         # returns a persisted pair set (caller-owns-release contract)
-        pairs = similarity.semantic_near_dup_pairs(
-            spark, SF_DIR, k=32, n_iter=3, threshold=0.4
+        unit = similarity.with_unit_norm(emb).select("vec_id", "unit")
+        pairs = similarity.semantic_near_dup_pairs_for(
+            unit, k=32, n_iter=3, threshold=0.4
         )
         pairs.count()
         pairs.unpersist()

@@ -19,7 +19,6 @@ from v2_ocr_spark.operators.corpus import (
     boilerplate_lines_for,
     decontaminate,
     decontaminate_for,
-    scrub_boilerplate,
     scrub_boilerplate_for,
 )
 
@@ -37,10 +36,10 @@ def _shingle_sql(n: int) -> str:
     )
 
 
-def test_decontaminate_matches_duckdb_twin(spark):
+def test_decontaminate_matches_duckdb_twin(spark, documents):
     got = [
         (r.doc_id, r.n_shingles, r.bench_hits, r.hit_frac, r.contaminated)
-        for r in decontaminate(spark, SF).orderBy("doc_id").collect()
+        for r in decontaminate(documents).orderBy("doc_id").collect()
     ]
     n = 5
     sql = f"""
@@ -131,15 +130,18 @@ def test_decontaminate_null_source_is_training_side(spark, tmp_path):
         "doc_id bigint, source string, text string",
     ).write.parquet(f"{tmp_path}/documents.parquet")
     rows = {
-        r.doc_id: r for r in decontaminate(spark, str(tmp_path)).collect()
+        r.doc_id: r
+        for r in decontaminate(
+            spark.read.parquet(f"{tmp_path}/documents.parquet")
+        ).collect()
     }
     assert set(rows) == {2, 3}
     assert rows[3].contaminated and rows[3].hit_frac == 1.0
 
 
-def test_decontaminate_plan_broadcasts_benchmark(spark):
+def test_decontaminate_plan_broadcasts_benchmark(spark, documents):
     p = (
-        decontaminate(spark, SF)
+        decontaminate(documents)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -218,8 +220,8 @@ def boiler_corpus(spark, tmp_path):
 def test_scrub_boilerplate_matches_duckdb_twin(spark, boiler_corpus):
     got = [
         (r.doc_id, r.n_lines, r.kept_lines, r.scrubbed_text)
-        for r in scrub_boilerplate(spark, str(boiler_corpus).rsplit(
-            "/documents.parquet", 1)[0]).orderBy("doc_id").collect()
+        for r in scrub_boilerplate_for(spark.read.parquet(boiler_corpus))
+        .orderBy("doc_id").collect()
     ]
     exp = [tuple(r) for r in duckdb.sql(
         _scrub_twin_sql(boiler_corpus, 3)).fetchall()]
@@ -289,9 +291,9 @@ def test_scrub_boilerplate_rejects_degenerate_threshold(spark):
         scrub_boilerplate_for(docs, min_docs=1)
 
 
-def test_scrub_boilerplate_plan(spark):
+def test_scrub_boilerplate_plan(spark, documents):
     p = (
-        scrub_boilerplate(spark, SF)
+        scrub_boilerplate_for(documents)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

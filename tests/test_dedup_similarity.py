@@ -7,20 +7,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+import __spark_entry__ as entry_mod
 from v2_ocr_spark.fixtures.oracle_expected import round6
 from v2_ocr_spark.operators import dedup, multimodal, similarity
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_minhash_lsh_equals_exact_pairs(spark):
+def test_minhash_lsh_equals_exact_pairs(spark, documents):
     # pair-set output order is UNSPECIFIED (r4 contract) — sort here
     lsh = (
-        dedup.minhash_lsh_pairs(spark, SF).toPandas()
+        entry_mod._doc_pairs(spark, SF, documents).toPandas()
         .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
     )
     exact = (
-        dedup.ngram_jaccard_pairs(spark, SF).toPandas()
+        dedup.ngram_jaccard_pairs_for(documents).toPandas()
         .sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
     )
     assert lsh[["doc_a", "doc_b"]].values.tolist() == (
@@ -29,11 +30,11 @@ def test_minhash_lsh_equals_exact_pairs(spark):
     assert (lsh["jaccard"] - exact["jaccard"]).abs().max() == 0
 
 
-def test_minhash_jaccard_estimate_quality(spark):
+def test_minhash_jaccard_estimate_quality(spark, documents):
     """Signature agreement must approximate true Jaccard on near-dups."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sig = dedup.minhash_signatures(docs, num_hashes=128)
-    pairs = dedup.ngram_jaccard_pairs(spark, SF, threshold=0.5)
+    pairs = dedup.ngram_jaccard_pairs_for(documents, threshold=0.5)
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     b = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -56,11 +57,11 @@ def test_minhash_jaccard_estimate_quality(spark):
     assert (est["jaccard"] - est["est"]).abs().max() < 0.25
 
 
-def test_simhash_finds_near_dups(spark):
+def test_simhash_finds_near_dups(spark, documents):
     """Every high-Jaccard pair should be within small hamming distance,
     and background pairs should not flood in."""
-    sim_pairs = dedup.simhash_pairs(spark, SF, max_hamming=6).toPandas()
-    exact = dedup.ngram_jaccard_pairs(spark, SF, threshold=0.5).toPandas()
+    sim_pairs = dedup.simhash_pairs(documents, max_hamming=6).toPandas()
+    exact = dedup.ngram_jaccard_pairs_for(documents, threshold=0.5).toPandas()
     sim_set = {tuple(r) for r in sim_pairs[["doc_a", "doc_b"]].values.tolist()}
     exact_set = {tuple(r) for r in exact[["doc_a", "doc_b"]].values.tolist()}
     found = len(exact_set & sim_set)
@@ -70,8 +71,8 @@ def test_simhash_finds_near_dups(spark):
     assert len(sim_pairs) < 20 * max(len(exact_set), 1)
 
 
-def test_exact_duplicates_empty_on_unique_corpus(spark):
-    assert dedup.exact_duplicates(spark, SF).count() == 0
+def test_exact_duplicates_empty_on_unique_corpus(spark, documents):
+    assert dedup.exact_duplicates(documents).count() == 0
 
 
 def test_exact_duplicates_detects_planted(spark):
@@ -86,10 +87,10 @@ def test_exact_duplicates_detects_planted(spark):
     assert got == 3
 
 
-def test_ivf_recall_vs_brute_force(spark):
-    bf = similarity.brute_force_topk(spark, SF, k=5, n_queries=10).toPandas()
+def test_ivf_recall_vs_brute_force(spark, embeddings):
+    bf = similarity.brute_force_topk(embeddings, k=5, n_queries=10).toPandas()
     ivf = similarity.ivf_topk(
-        spark, SF, k=5, n_queries=10, nlist=8, nprobe=4
+        embeddings, k=5, n_queries=10, nlist=8, nprobe=4
     ).toPandas()
     bf_set = {tuple(r) for r in bf[["query_id", "nbr_id"]].values.tolist()}
     ivf_set = {tuple(r) for r in ivf[["query_id", "nbr_id"]].values.tolist()}
@@ -97,15 +98,15 @@ def test_ivf_recall_vs_brute_force(spark):
     assert recall >= 0.5, f"IVF recall {recall:.2f} too low for nprobe=half"
 
 
-def test_brute_force_topk_shape(spark):
-    bf = similarity.brute_force_topk(spark, SF, k=5, n_queries=10).toPandas()
+def test_brute_force_topk_shape(spark, embeddings):
+    bf = similarity.brute_force_topk(embeddings, k=5, n_queries=10).toPandas()
     assert len(bf) == 50
     assert (bf.groupby("query_id")["rank"].max() == 5).all()
     assert (bf["cosine"] <= 1.0 + 1e-9).all()
 
 
-def test_multimodal_meta_plumbing(spark):
-    meta = multimodal.image_meta(spark, SF).toPandas()
+def test_multimodal_meta_plumbing(spark, documents):
+    meta = multimodal.image_meta(documents).toPandas()
     docs_n = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert len(meta) == docs_n
     assert meta["magic_ok"].all()
@@ -161,12 +162,12 @@ def test_multimodal_real_codec_gate(spark):
     assert (rows[2]["width"], rows[2]["height"]) == (0, 0)  # pragma: no cover
 
 
-def test_multimodal_resize_plumbing(spark):
+def test_multimodal_resize_plumbing(spark, documents):
     import struct
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     imgs = multimodal.with_fake_image(docs).select("doc_id", "image")
-    orig = {r["doc_id"]: r for r in multimodal.image_meta(spark, SF).collect()}
+    orig = {r["doc_id"]: r for r in multimodal.image_meta(documents).collect()}
     resized = multimodal.resize_images(imgs, max_dim=256).collect()
     assert len(resized) == len(orig)
     for r in resized:
@@ -229,18 +230,18 @@ def test_multimodal_audio_pipeline(spark):
         assert r["tot"] == n  # chunks tile the stream exactly
 
 
-def test_srp_lsh_recall_vs_brute_force(spark):
+def test_srp_lsh_recall_vs_brute_force(spark, embeddings):
     """Seed-deterministic planes -> deterministic recall; must clear
     0.7 on the adversarial near-uniform fixture while scanning well
     under the full corpus per query."""
     bf = {(r["query_id"], r["nbr_id"])
-          for r in similarity.brute_force_topk(spark, SF).collect()}
+          for r in similarity.brute_force_topk(embeddings).collect()}
     lsh = {(r["query_id"], r["nbr_id"])
-           for r in similarity.srp_lsh_topk(spark, SF).collect()}
+           for r in similarity.srp_lsh_topk(embeddings).collect()}
     assert len(bf) == 50
     assert len(lsh & bf) / len(bf) >= 0.7
     # candidate volume stays a strict subset of the corpus
-    emb = similarity.with_unit_norm(similarity._emb(spark, SF)).select(
+    emb = similarity.with_unit_norm(embeddings).select(
         "vec_id", "unit"
     )
     sig = similarity.srp_signatures(emb, 32, 6)
@@ -257,13 +258,13 @@ def test_srp_lsh_recall_vs_brute_force(spark):
     assert n_cand / 10 < 0.6 * 499
 
 
-def test_duplicate_clusters_transitive(spark):
+def test_duplicate_clusters_transitive(spark, documents):
     """Clusters are the transitive closure of the pair graph: every
     pair shares a cluster; the label is the component minimum."""
-    pairs = dedup.minhash_lsh_pairs(spark, SF).collect()
+    pairs = entry_mod._doc_pairs(spark, SF, documents).collect()
     labels = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.duplicate_clusters(spark, SF).collect()
+        for r in entry_mod._doc_clusters(spark, SF, documents).collect()
     }
     assert pairs
     for r in pairs:
@@ -289,21 +290,19 @@ def test_duplicate_clusters_long_chain(spark):
         [(i, i + 1, 1.0) for i in range(63)],
         "doc_a long, doc_b long, jaccard double",
     )
-    labels = dedup.duplicate_clusters(spark, None, pairs=chain)
+    labels = dedup.duplicate_clusters(chain)
     rows = labels.collect()
-    labels.unpersist()  # pairs= path: the caller owns the result
+    labels.unpersist()  # the caller owns the result
     assert len(rows) == 64
     assert {r["cluster_id"] for r in rows} == {0}
 
 
-def test_approx_distinct_within_tolerance(spark):
+def test_approx_distinct_within_tolerance(spark, events):
     from v2_ocr_spark.operators import relational
 
     approx = {
         r["event_type"]: r["approx_users"]
-        for r in relational.approx_distinct_users(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
+        for r in relational.approx_distinct_users(events).collect()
     }
     exact = {
         r["event_type"]: r["n"]
@@ -358,7 +357,7 @@ def test_ngram_pairs_string_ids_match_numeric_ids(spark):
     assert all(a < b for a, b, _ in got_s)
 
 
-def test_sample_stratified_matches_pure_python(spark):
+def test_sample_stratified_matches_pure_python(spark, documents):
     """The stratified sampler's keep set equals an independent
     pure-Python md5-bucket derivation over the real sf0.001 documents
     — per-stratum cutoffs, default-rate fallback, bucket column and
@@ -369,7 +368,7 @@ def test_sample_stratified_matches_pure_python(spark):
 
     got = {
         (r["source"], r["doc_id"], r["bucket"])
-        for r in corpus.sample_stratified(spark, SF).collect()
+        for r in corpus.sample_stratified_for(documents).collect()
     }
     cuts, default_cut = corpus.stratified_cutoffs()
     exp = set()
@@ -424,12 +423,12 @@ def test_distinct_kmv_sketch(spark):
     assert abs(est - (k - 1) / u_k) <= 5.001e-7
 
 
-def test_token_pack_bins_respect_budget_and_order(spark):
+def test_token_pack_bins_respect_budget_and_order(spark, documents):
     """Packing is deterministic and per-source: starts are the
     exclusive running sum in doc_id order, bins are start // budget."""
     from v2_ocr_spark.operators import corpus
 
-    df = corpus.token_pack(spark, SF, budget=100)
+    df = corpus.token_pack_for(documents, budget=100)
     # bin must be BIGINT: an int32 bin wraps negative once any source
     # exceeds budget * 2^31 tokens (~4.4e12 at budget 2048 — inside
     # the design scale); pinned here so a cast("int") can't come back
@@ -489,10 +488,10 @@ def test_token_pack_two_phase_equals_single_window(spark):
         assert got.equals(naive), f"shards={shards}"
 
 
-def test_cross_source_overlap_counts_distinct_shared(spark):
+def test_cross_source_overlap_counts_distinct_shared(spark, documents):
     from v2_ocr_spark.operators import corpus
 
-    out = corpus.cross_source_overlap(spark, SF).toPandas()
+    out = corpus.cross_source_overlap(documents).toPandas()
     assert (out.source_a < out.source_b).all()  # one row per unordered pair
     assert (out.shared_shingles > 0).all()
 
@@ -515,13 +514,14 @@ def test_cross_source_overlap_max_df_drops_boilerplate(spark, tmp_path):
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
+    docs = spark.read.parquet(f"{d}/documents.parquet")
     exact = {
         (r.source_a, r.source_b): r.shared_shingles
-        for r in corpus.cross_source_overlap(spark, d).collect()
+        for r in corpus.cross_source_overlap(docs).collect()
     }
     capped = {
         (r.source_a, r.source_b): r.shared_shingles
-        for r in corpus.cross_source_overlap(spark, d, max_df=2).collect()
+        for r in corpus.cross_source_overlap(docs, max_df=2).collect()
     }
     # the boilerplate 5-gram (df=3) is in every doc: it is the only
     # shingle src_a shares with doc 3's half of src_b; dropping it
@@ -552,8 +552,9 @@ def test_ngram_jaccard_max_df_is_symmetric(spark, tmp_path):
 
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(
-            spark, d, threshold=0.5, max_df=3
+        for r in dedup.ngram_jaccard_pairs_for(
+            spark.read.parquet(f"{d}/documents.parquet"),
+            threshold=0.5, max_df=3,
         ).collect()
     }
     # every trigram containing the viral tail has df<=2 except the
@@ -562,10 +563,10 @@ def test_ngram_jaccard_max_df_is_symmetric(spark, tmp_path):
     assert got.get((1, 2)) == 1.0
 
 
-def test_vocabulary_topk_order(spark):
+def test_vocabulary_topk_order(spark, documents):
     from v2_ocr_spark.operators import corpus
 
-    out = corpus.vocabulary_topk(spark, SF, k=10).toPandas()
+    out = corpus.vocabulary_topk(documents, k=10).toPandas()
     ns = list(out.n)
     assert ns == sorted(ns, reverse=True)
     assert len(out) <= 10
@@ -591,9 +592,9 @@ def test_ngram_jaccard_null_and_empty_text_policy(spark, tmp_path):
 
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in __import__(
-            "v2_ocr_spark.operators.dedup", fromlist=["dedup"]
-        ).ngram_jaccard_pairs(spark, d, threshold=0.5).collect()
+        for r in dedup.ngram_jaccard_pairs_for(
+            spark.read.parquet(f"{d}/documents.parquet"), threshold=0.5
+        ).collect()
     }
     assert got == {(1, 2): 1.0, (5, 6): 1.0}
 
@@ -621,8 +622,9 @@ def test_image_dhash_near_dup_pairs(spark, tmp_path):
 
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in multimodal.image_near_dup_pairs(spark, d, max_hamming=6)
-        .collect()
+        for r in multimodal.image_near_dup_pairs(
+            spark.read.parquet(f"{d}/documents.parquet"), max_hamming=6
+        ).collect()
     }
     assert pairs[(1, 2)] == 0
     assert (1, 3) in pairs and pairs[(1, 3)] <= 6
@@ -688,17 +690,21 @@ def test_ngram_jaccard_equals_bruteforce_on_random_corpus(spark, tmp_path):
 
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(spark, d, threshold=0.5).collect()
+        for r in dedup.ngram_jaccard_pairs_for(
+            spark.read.parquet(f"{d}/documents.parquet"), threshold=0.5
+        ).collect()
     }
     assert got == brute
     assert brute  # the corpus actually produced qualifying pairs
 
 
-def test_dedup_keep_list_matches_clusters(spark):
+def test_dedup_keep_list_matches_clusters(spark, documents):
     """keep == (not a non-canonical cluster member); every doc appears
     exactly once; survivors = corpus minus dropped members."""
-    clusters = dedup.duplicate_clusters(spark, SF).toPandas()
-    keep = dedup.dedup_keep_list(spark, SF).toPandas()
+    clusters = entry_mod._doc_clusters(spark, SF, documents).toPandas()
+    keep = dedup.dedup_keep_list_for(
+        documents, entry_mod._doc_clusters(spark, SF, documents)
+    ).toPandas()
     n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert len(keep) == n_docs
     dropped = set(keep.loc[~keep.keep, "doc_id"])
@@ -711,12 +717,12 @@ def test_dedup_keep_list_matches_clusters(spark):
     assert (kept.doc_id == kept.cluster_id).all()
 
 
-def test_corpus_filter_reason_precedence(spark):
+def test_corpus_filter_reason_precedence(spark, documents):
     """Reasons compose in fixed order: too_short beats lang beats
     low_quality beats near_duplicate; keep iff reason == 'kept'."""
     from v2_ocr_spark.operators import corpus
 
-    out = corpus.corpus_filter(spark, SF).toPandas()
+    out = entry_mod._corpus_filter(spark, SF, documents).toPandas()
     docs = (
         spark.read.parquet(f"{SF}/documents.parquet")
         .select("doc_id", "n_chars")
@@ -749,11 +755,12 @@ def test_zero_vector_never_ranks_as_neighbor(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    emb = spark.read.parquet(f"{d}/embeddings.parquet")
 
-    bf = similarity.brute_force_topk(spark, d, k=3, n_queries=2).toPandas()
+    bf = similarity.brute_force_topk(emb, k=3, n_queries=2).toPandas()
     assert 99 not in set(bf.nbr_id)          # never a neighbor
     assert not bf.cosine.isna().any()        # and no NaN scores at all
-    nd = similarity.cosine_near_dup_pairs(spark, d, threshold=0.0).toPandas()
+    nd = similarity.cosine_near_dup_pairs(emb, threshold=0.0).toPandas()
     assert 99 not in set(nd.id_a) | set(nd.id_b)
 
 
@@ -778,27 +785,37 @@ def test_nonfinite_vector_never_ranks_as_neighbor(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+    emb = spark.read.parquet(f"{d}/embeddings.parquet")
 
-    bf = similarity.brute_force_topk(spark, d, k=3, n_queries=2).toPandas()
+    bf = similarity.brute_force_topk(emb, k=3, n_queries=2).toPandas()
     assert not {97, 98, 99} & set(bf.nbr_id)  # never neighbors
     assert not bf.cosine.isna().any()         # and no NaN scores at all
-    srp = similarity.srp_lsh_topk(spark, d, k=3, n_queries=2).toPandas()
+    srp = similarity.srp_lsh_topk(emb, k=3, n_queries=2).toPandas()
     assert not {97, 98, 99} & set(srp.nbr_id)
     assert not srp.cosine.isna().any()
 
 
-def test_ngram_jaccard_rejects_nonpositive_threshold(spark):
+def test_ngram_jaccard_rejects_nonpositive_threshold(spark, documents):
     with pytest.raises(ValueError, match="threshold > 0"):
-        dedup.ngram_jaccard_pairs(spark, SF, threshold=0.0)
+        dedup.ngram_jaccard_pairs_for(documents, threshold=0.0)
 
 
 def test_pairs_cache_invalidates_on_input_rewrite(spark, tmp_path):
     """Review regression: rewriting the input IN-SESSION must not serve
-    memoized pairs from the old corpus (keys carry a content sig)."""
+    memoized pairs from the old corpus (the gate memo keys carry a
+    content sig), and the superseded pair set and cluster labels must
+    be released, not left persisted beside the new ones."""
+    q = entry_mod.queries()
     d = str(tmp_path / "mut")
+    path = f"{d}/documents.parquet"
     base = spark.read.parquet(f"{SF}/documents.parquet")
-    base.limit(50).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    first = dedup.minhash_lsh_pairs(spark, d).count()
+    base.limit(50).write.mode("overwrite").parquet(path)
+    first = q["dedup_minhash_lsh"](spark, d).count()
+    q["dedup_clusters"](spark, d).count()
+    docs = spark.read.parquet(path)
+    old_pairs = entry_mod._doc_pairs(spark, d, docs)
+    old_labels = entry_mod._doc_clusters(spark, d, docs)
+    assert old_pairs.is_cached and old_labels.is_cached
     # rewrite with a corpus that contains planted exact duplicates
     dup = base.limit(10)
     two = dup.unionByName(
@@ -807,19 +824,23 @@ def test_pairs_cache_invalidates_on_input_rewrite(spark, tmp_path):
             "text", "lang", "source", "n_chars",
         )
     )
-    two.write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    second = dedup.minhash_lsh_pairs(spark, d).count()
+    two.write.mode("overwrite").parquet(path)
+    second = q["dedup_minhash_lsh"](spark, d).count()
+    q["dedup_clusters"](spark, d).count()
     assert second >= 10  # the 10 planted dup pairs — not the stale set
     assert second != first or first >= 10
+    # the superseded signature's entries are evicted and unpersisted
+    assert not old_pairs.is_cached and not old_labels.is_cached
+    assert sum(k[1] == path for k in entry_mod._MEMO) == 2
 
 
-def test_blas_dot_equals_column_formulation(spark):
+def test_blas_dot_equals_column_formulation(spark, embeddings):
     """The Arrow/BLAS dot product and the engine-portable Column
     formulation must agree to double precision — over DISTINCT vector
     pairs (a self-join on equal ids would only ever compute ||u||^2
     ~ 1.0 and pin nothing), selected deterministically (limit without
     an order is plan-dependent)."""
-    emb = similarity.with_unit_norm(similarity._emb(spark, SF)).where(
+    emb = similarity.with_unit_norm(embeddings).where(
         F.col("vec_id") < 20
     )
     a = emb.select(F.col("vec_id").alias("ia"), F.col("unit").alias("ua"))
@@ -849,7 +870,8 @@ def test_dedup_lines_keeps_first_occurrence_order(spark, tmp_path):
         ],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    got = {r.doc_id: r.dedup_text for r in textstats.dedup_lines(spark, d).collect()}
+    docs = spark.read.parquet(f"{d}/documents.parquet")
+    got = {r.doc_id: r.dedup_text for r in textstats.dedup_lines(docs).collect()}
     assert got == {1: "b\na\nc", 2: "solo"}  # order kept; NULL doc excluded
 
 

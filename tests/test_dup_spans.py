@@ -15,9 +15,7 @@ import duckdb
 import pytest
 
 from v2_ocr_spark.operators.corpus import (
-    dup_spans,
     dup_spans_for,
-    remove_dup_spans,
     remove_dup_spans_for,
 )
 
@@ -61,10 +59,10 @@ def _spans_cte(path: str, k: int, min_count: int) -> str:
     """
 
 
-def test_dup_spans_matches_duckdb_twin(spark):
+def test_dup_spans_matches_duckdb_twin(spark, documents):
     got = sorted(
         (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in dup_spans(spark, SF, k=8, min_count=2).collect()
+        for r in dup_spans_for(documents, k=8, min_count=2).collect()
     )
     exp = sorted(
         tuple(r)
@@ -80,10 +78,10 @@ def test_dup_spans_matches_duckdb_twin(spark):
     assert len(got) > 20
 
 
-def test_remove_dup_spans_matches_duckdb_twin(spark):
+def test_remove_dup_spans_matches_duckdb_twin(spark, documents):
     got = sorted(
         (r.doc_id, r.n_tokens, r.dup_tokens, r.kept_text)
-        for r in remove_dup_spans(spark, SF, k=8, min_count=2).collect()
+        for r in remove_dup_spans_for(documents, k=8, min_count=2).collect()
     )
     exp = sorted(
         tuple(r)
@@ -255,9 +253,9 @@ def test_dup_spans_guards(spark, planted):
         dup_spans_for(planted, k=0)
 
 
-def test_dup_spans_plan(spark):
+def test_dup_spans_plan(spark, documents):
     p = (
-        remove_dup_spans(spark, SF, k=8, min_count=2)
+        remove_dup_spans_for(documents, k=8, min_count=2)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

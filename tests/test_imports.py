@@ -2,7 +2,9 @@
 package, the CLIs and the entry scripts resolves, and the CLIs under
 tools/ use only public package names. A deletion that leaves a dangling
 import fails here instead of at run time; most CLIs import inside
-main(), so no other test would load them."""
+main(), so no other test would load them. Operators take tables, not
+paths: no operator function has a `spark` or `sf_dir` parameter and no
+operator module reads parquet."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "v2_ocr_spark"
 TOOLS = sorted((ROOT / "tools").glob("*.py"))
+OPERATORS = sorted((ROOT / PKG / "operators").glob("*.py"))
 SOURCES = [
     *sorted((ROOT / PKG).rglob("*.py")),
     *TOOLS,
@@ -84,4 +87,23 @@ def test_tools_use_only_public_package_names():
                     base = base.value
                 if isinstance(base, ast.Name) and base.id in bound:
                     found.append(f"{path.name}:{node.lineno}: .{node.attr}")
+    assert not found, found
+
+
+def test_operators_take_tables_not_paths():
+    found = []
+    for path in OPERATORS:
+        for node in ast.walk(_tree(path)):
+            if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                params = {x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs)}
+                for bad in sorted(params & {"spark", "sf_dir"}):
+                    found.append(f"{path.name}:{node.lineno}: param {bad}")
+            elif (
+                isinstance(node, ast.Attribute)
+                and node.attr == "parquet"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "read"
+            ):
+                found.append(f"{path.name}:{node.lineno}: .read.parquet")
     assert not found, found

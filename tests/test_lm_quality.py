@@ -15,7 +15,7 @@ import duckdb
 import pytest
 
 from v2_ocr_spark.fixtures.oracle_expected import round6
-from v2_ocr_spark.operators.corpus import _MICRO, lm_logloss, lm_logloss_for
+from v2_ocr_spark.operators.corpus import _MICRO, lm_logloss_for
 
 SF = "/root/testdata/sf0.001"
 TOKEN_RE = r"\p{L}+|\d+|[^\p{L}\d\s]+"
@@ -66,8 +66,8 @@ def _rows(df):
     ]
 
 
-def test_lm_logloss_self_trained_matches_duckdb_twin(spark):
-    got = _rows(lm_logloss(spark, SF))
+def test_lm_logloss_self_trained_matches_duckdb_twin(spark, documents):
+    got = _rows(lm_logloss_for(documents))
     exp = [tuple(r) for r in duckdb.sql(_twin_sql(
         f"{SF}/documents.parquet", "TRUE")).fetchall()]
     assert got == exp
@@ -80,8 +80,8 @@ def test_lm_logloss_self_trained_matches_duckdb_twin(spark):
     assert len({r[3] for r in got}) > 100
 
 
-def test_lm_logloss_ref_source_matches_duckdb_twin(spark):
-    got = _rows(lm_logloss(spark, SF, ref_source="src0"))
+def test_lm_logloss_ref_source_matches_duckdb_twin(spark, documents):
+    got = _rows(lm_logloss_for(documents, ref_source="src0"))
     exp = [tuple(r) for r in duckdb.sql(_twin_sql(
         f"{SF}/documents.parquet", "source = 'src0'")).fetchall()]
     assert got == exp
@@ -90,16 +90,16 @@ def test_lm_logloss_ref_source_matches_duckdb_twin(spark):
     # vocabulary is only ~31 tokens and src0 covers all of it, so OOV
     # can't occur here — the planted test exercises the OOV path)
     self_trained = dict(
-        (r[0], r[3]) for r in _rows(lm_logloss(spark, SF))
+        (r[0], r[3]) for r in _rows(lm_logloss_for(documents))
     )
     assert any(r[3] != self_trained[r[0]] for r in got)
     assert all(r[2] == 0 for r in got)
 
 
-def test_lm_logloss_empty_reference_degrades_to_null_scores(spark):
+def test_lm_logloss_empty_reference_degrades_to_null_scores(spark, documents):
     # a reference slice with no docs trains no model: scores are NULL
     # (never NaN/Inf), token counts still exact — twin-pinned
-    got = _rows(lm_logloss(spark, SF, ref_source="no_such_source"))
+    got = _rows(lm_logloss_for(documents, ref_source="no_such_source"))
     exp = [tuple(r) for r in duckdb.sql(_twin_sql(
         f"{SF}/documents.parquet", "source = 'no_such_source'")).fetchall()]
     assert got == exp
@@ -174,9 +174,9 @@ def test_lm_logloss_oov_cross_domain(spark):
     assert rows[2].bits_per_token > rows[1].bits_per_token
 
 
-def test_lm_logloss_plan(spark):
+def test_lm_logloss_plan(spark, documents):
     p = (
-        lm_logloss(spark, SF)
+        lm_logloss_for(documents)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

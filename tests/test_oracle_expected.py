@@ -112,10 +112,9 @@ def test_winnow_twin_equals_kernel(spark, tmp_path):
 
     p = str(tmp_path / "documents.parquet")
     _micro_df(spark).coalesce(1).write.parquet(p)
-    # the operator reads {sf_dir}/documents.parquet
     got = {
         r["doc_id"]: list(r["fingerprint_set"])
-        for r in rolling_fingerprint_set(spark, str(tmp_path)).collect()
+        for r in rolling_fingerprint_set(spark.read.parquet(p)).collect()
     }
     exp = {
         doc_id: oe.winnow_fingerprints(text) for doc_id, text in MICRO_DOCS
@@ -123,14 +122,14 @@ def test_winnow_twin_equals_kernel(spark, tmp_path):
     assert got == exp
 
 
-def test_rolling_fingerprint_gate_surface_is_scalar(spark):
+def test_rolling_fingerprint_gate_surface_is_scalar(spark, documents):
     """The r3 driver failure: the gate query must never expose an
     array column (the driver's canonicalizer sorts every column)."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     from v2_ocr_spark.operators.textstats import rolling_fingerprint
 
-    out = rolling_fingerprint(spark, "/root/testdata/sf0.001")
+    out = rolling_fingerprint(documents)
     for f in out.schema.fields:
         assert not isinstance(f.dataType, (ArrayType, MapType, StructType))
     row = out.where(F.col("doc_id") == 0).collect()
@@ -235,8 +234,9 @@ def test_srp_twin_equals_operator(spark, tmp_path):
     from v2_ocr_spark.operators import similarity
 
     sf = _write_micro_emb(spark, tmp_path)
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     got = similarity.srp_lsh_topk(
-        spark, sf, k=3, n_queries=6, n_tables=8, n_bits=4
+        emb, k=3, n_queries=6, n_tables=8, n_bits=4
     ).collect()
     units = oe.unit_vectors(_f32(_micro_emb_rows()))
     assert 3 not in units and 12 not in units  # drop policy
@@ -248,8 +248,9 @@ def test_ivf_twin_equals_operator(spark, tmp_path):
     from v2_ocr_spark.operators import similarity
 
     sf = _write_micro_emb(spark, tmp_path)
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     got = similarity.ivf_topk(
-        spark, sf, k=3, n_queries=6, nlist=5, nprobe=2
+        emb, k=3, n_queries=6, nlist=5, nprobe=2
     ).collect()
     units = oe.unit_vectors(_f32(_micro_emb_rows()))
     cands = oe.ivf_candidates(units, n_queries=6, nlist=5, nprobe=2)

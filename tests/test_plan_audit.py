@@ -34,21 +34,21 @@ def test_extract_is_single_python_stage_zero_shuffle(spark, tdir):
     assert "ReadSchema: struct<conv_id:string,turn_idx:int,role:string,text:string,tool:string>" in p
 
 
-def test_relational_scan_prunes_and_pushes(spark, tdir):
-    p = plan(relational.results_scan(spark, tdir))
+def test_relational_scan_prunes_and_pushes(spark, transcripts):
+    p = plan(relational.results_scan(transcripts))
     assert "PushedFilters: [" in p and "conv_id" in p.split("PushedFilters")[1][:120]
     # equality predicate reaches the parquet reader, not a post-filter only
     assert "EqualTo(conv_id" in p
 
 
-def test_dim_join_broadcasts(spark, tdir):
-    p = plan(relational.semi_join_completed(spark, tdir))
+def test_dim_join_broadcasts(spark, transcripts, conversations):
+    p = plan(relational.semi_join_completed(transcripts, conversations))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
 
-def test_aggregations_are_partial_first(spark, tdir):
-    p = plan(relational.status_counts(spark, tdir))
+def test_aggregations_are_partial_first(spark, conversations):
+    p = plan(relational.status_counts(conversations))
     assert "partial_count" in p  # map-side combine before the exchange
 
 
@@ -62,13 +62,11 @@ def test_assembly_partial_aggregates(spark, tdir):
     assert "partial_collect_list" in p or "partial_sort_array" in p
 
 
-def test_jvm_only_paths_have_no_python(spark, sf_small):
+def test_jvm_only_paths_have_no_python(spark, documents, transcripts):
     for q in (
-        textstats.quality_score(spark, "/root/testdata/sf0.001"),
-        textstats.token_counts(spark, "/root/testdata/sf0.001"),
-        relational.fulltext_search(
-            spark, entry_mod._data_dir(sf_small)
-        ),
+        textstats.quality_score_for(documents, ["doc_id"]),
+        textstats.token_counts_for(documents, ["doc_id"]),
+        relational.fulltext_search(transcripts),
     ):
         p = plan(q)
         assert "BatchEvalPython" not in p
@@ -76,8 +74,8 @@ def test_jvm_only_paths_have_no_python(spark, sf_small):
         assert "MapInPandas" not in p
 
 
-def test_events_window_partitions_by_user(spark):
-    p = plan(relational.sessionize(spark, "/root/testdata/sf0.001"))
+def test_events_window_partitions_by_user(spark, events):
+    p = plan(relational.sessionize(events))
     # the window must partition by user_id — a global window would
     # single-task 10^12 rows
     assert "hashpartitioning(user_id" in p
@@ -102,18 +100,20 @@ def test_writer_sorts_within_partitions(spark, tdir):
     assert "Exchange" not in p
 
 
-def test_ngram_jaccard_plan_has_no_cartesian(spark):
+def test_ngram_jaccard_plan_has_no_cartesian(spark, documents):
     """The exact-Jaccard rework must stay an inverted-index equi-join:
     no CartesianProduct / BroadcastNestedLoopJoin anywhere (the round-1
     formulation was an O(n^2) crossJoin)."""
     from v2_ocr_spark.operators import dedup
 
-    p = plan(dedup.ngram_jaccard_pairs(spark, "/root/testdata/sf0.001"))
+    p = plan(dedup.ngram_jaccard_pairs_for(documents))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_pair_producers_bake_in_no_sort(spark):
+def test_pair_producers_bake_in_no_sort(
+    spark, documents, embeddings, testdata_small
+):
     """Pair-set output order is UNSPECIFIED: consumers (the composed
     pipeline's duplicate_clusters, keeper selection) JOIN the pairs, so
     a baked-in orderBy would pay a whole-pair-table range exchange on
@@ -126,18 +126,19 @@ def test_pair_producers_bake_in_no_sort(spark):
     sort)."""
     from v2_ocr_spark.operators import dedup, similarity
 
+    sf = testdata_small
     for df in (
-        dedup.ngram_jaccard_pairs(spark, "/root/testdata/sf0.001"),
-        similarity.cosine_near_dup_pairs(spark, "/root/testdata/sf0.001"),
-        dedup.minhash_lsh_pairs(spark, "/root/testdata/sf0.001"),
-        dedup.duplicate_clusters(spark, "/root/testdata/sf0.001"),
+        dedup.ngram_jaccard_pairs_for(documents),
+        similarity.cosine_near_dup_pairs(embeddings),
+        entry_mod._doc_pairs(spark, sf, documents),
+        entry_mod._doc_clusters(spark, sf, documents),
     ):
         # no global-sort exchange; (local sorts inside a sort-merge
         # join are hashpartitioning-based and fine)
         assert "rangepartitioning" not in plan(df)
 
 
-def test_distinct_kmv_plan_has_partial_group_limit(spark):
+def test_distinct_kmv_plan_has_partial_group_limit(spark, events):
     """The KMV bottom-k must stay the one-shuffle two-phase shape:
     Catalyst rewrites row_number() <= k into Partial + Final
     WindowGroupLimit around the window exchange, so each map partition
@@ -147,7 +148,7 @@ def test_distinct_kmv_plan_has_partial_group_limit(spark):
     revert to shuffling every distinct user into one sort group."""
     from v2_ocr_spark.operators import relational
 
-    p = plan(relational.distinct_kmv(spark, "/root/testdata/sf0.001"))
+    p = plan(relational.distinct_kmv_for(events))
     assert "WindowGroupLimit" in p
     assert "Partial" in p and "Final" in p
 
@@ -169,7 +170,7 @@ def test_pipeline_clean_pack_plan_stays_bounded(spark):
     assert "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_token_pack_window_is_sub_sharded(spark):
+def test_token_pack_window_is_sub_sharded(spark, documents):
     """Packing must never serialize a source through one task: the
     cumulative sum is two-phase — deterministic quantile shards drive
     the local window (hashpartitioning on _shard), so parallelism
@@ -180,7 +181,7 @@ def test_token_pack_window_is_sub_sharded(spark):
     # default call on the tiny fixture ADAPTIVELY collapses to the
     # plain per-source window (no _shard machinery: at this size the
     # boundary jobs cost more than one window task)
-    p = plan(corpus.token_pack(spark, "/root/testdata/sf0.001"))
+    p = plan(corpus.token_pack_for(documents))
     assert "SinglePartition" not in p
     assert "_shard" not in p
 
@@ -215,7 +216,7 @@ def test_token_pack_window_is_sub_sharded(spark):
     assert df1.count() == 500  # no rows lost to the offsets join
 
 
-def test_token_pack_shard_totals_reuse_the_window_exchange(spark):
+def test_token_pack_shard_totals_reuse_the_window_exchange(spark, documents):
     """The sharded pack's phase-2 totals must share ONE scan+exchange
     with the phase-1 window (the totals aggregate references
     _local_start from the window output precisely so Catalyst cannot
@@ -224,20 +225,17 @@ def test_token_pack_shard_totals_reuse_the_window_exchange(spark):
     — pin ReusedExchange in the EXECUTED final plan."""
     from v2_ocr_spark.operators import corpus
 
-    df = corpus.token_pack_for(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-        shards=4,
-    )
+    df = corpus.token_pack_for(documents, shards=4)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final
 
 
-def test_vocabulary_topk_uses_take_ordered(spark):
+def test_vocabulary_topk_uses_take_ordered(spark, documents):
     """Top-k must plan as distributed TakeOrderedAndProject, not a
     global sort of the whole token-count table."""
     from v2_ocr_spark.operators import corpus
 
-    p = plan(corpus.vocabulary_topk(spark, "/root/testdata/sf0.001"))
+    p = plan(corpus.vocabulary_topk(documents))
     assert "TakeOrderedAndProject" in p
     assert "partial_count" in p  # map-side combine on the token counts

@@ -14,16 +14,16 @@ import pyspark.sql.functions as F
 
 from v2_ocr_spark.fixtures.oracle_expected import round6
 from v2_ocr_spark.operators.corpus import (
-    lm_logloss,
-    remove_dup_spans,
-    scrub_boilerplate,
+    lm_logloss_for,
+    remove_dup_spans_for,
+    scrub_boilerplate_for,
 )
 from v2_ocr_spark.pipeline.quality import corpus_quality_report
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_quality_report_end_to_end(spark, tmp_path):
+def test_quality_report_end_to_end(spark, documents, tmp_path):
     out = str(tmp_path / "report")
     os.makedirs(out)
     summary = corpus_quality_report(spark, SF, out)
@@ -41,9 +41,9 @@ def test_quality_report_end_to_end(spark, tmp_path):
         assert json.load(f) == summary
 
     # row-level agreement with each source operator
-    lm = {r.doc_id: r for r in lm_logloss(spark, SF).collect()}
-    sp = {r.doc_id: r for r in remove_dup_spans(spark, SF).collect()}
-    bl = {r.doc_id: r for r in scrub_boilerplate(spark, SF).collect()}
+    lm = {r.doc_id: r for r in lm_logloss_for(documents).collect()}
+    sp = {r.doc_id: r for r in remove_dup_spans_for(documents).collect()}
+    bl = {r.doc_id: r for r in scrub_boilerplate_for(documents).collect()}
     for d, r in rows.items():
         # n_tokens is the SPAN-side (original-case) count — the same
         # stream dup_tokens counts over, so the row is self-consistent

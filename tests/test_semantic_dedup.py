@@ -25,7 +25,6 @@ from v2_ocr_spark.operators.similarity import (
     _COORD_NANO,
     kmeans_assign_for,
     kmeans_clusters,
-    semantic_near_dup_pairs,
     semantic_near_dup_pairs_for,
     with_unit_norm,
 )
@@ -97,10 +96,10 @@ def _py_pairs(units: dict, final: dict, threshold: float) -> set:
 
 
 @pytest.mark.parametrize("n_iter", [0, 3])
-def test_kmeans_matches_pure_python_twin(spark, n_iter):
+def test_kmeans_matches_pure_python_twin(spark, embeddings, n_iter):
     units = unit_vectors(_load_rows())
     exp = _py_kmeans(units, 16, n_iter)
-    got = kmeans_clusters(spark, SF, 16, n_iter)
+    got = kmeans_clusters(embeddings, 16, n_iter)
     rows = {r.vec_id: r.cluster_id for r in got.collect()}
     got.unpersist()
     assert rows == exp
@@ -114,11 +113,14 @@ def test_kmeans_matches_pure_python_twin(spark, n_iter):
         assert len(sizes) == 16 and min(sizes.values()) > 1
 
 
-def test_semantic_near_dup_matches_pure_python_twin(spark):
+def test_semantic_near_dup_matches_pure_python_twin(spark, embeddings):
     units = unit_vectors(_load_rows())
     final = _py_kmeans(units, 16, 3)
     exp = _py_pairs(units, final, 0.4)
-    got = semantic_near_dup_pairs(spark, SF, 16, 3, threshold=0.4)
+    got = semantic_near_dup_pairs_for(
+        with_unit_norm(embeddings).select("vec_id", "unit"), 16, 3,
+        threshold=0.4,
+    )
     rows = {
         (r.id_a, r.id_b, r.cluster_id, r.cosine) for r in got.collect()
     }
@@ -186,8 +188,11 @@ def test_kmeans_and_pair_guards(spark):
         )
 
 
-def test_semantic_near_dup_plan(spark):
-    got = semantic_near_dup_pairs(spark, SF, 16, 1, threshold=0.4)
+def test_semantic_near_dup_plan(spark, embeddings):
+    got = semantic_near_dup_pairs_for(
+        with_unit_norm(embeddings).select("vec_id", "unit"), 16, 1,
+        threshold=0.4,
+    )
     p = got._jdf.queryExecution().executedPlan().toString()
     got.unpersist()
     # centroid scoring is a broadcast of k rows, never a real
@@ -276,7 +281,7 @@ def test_kmeans_recovers_separable_mixture(spark):
 
 
 @pytest.mark.parametrize("op", ["cluster_pairs", "kmeans", "srp_lsh"])
-def test_failed_materialization_releases_persists(spark, monkeypatch, op):
+def test_failed_materialization_releases_persists(spark, embeddings, monkeypatch, op):
     """A persist whose materializing count fails is released before the
     error propagates — no cached RDD outlives the call without an
     owner. The failure is planted with a raise_error column on the
@@ -333,7 +338,7 @@ def test_failed_materialization_releases_persists(spark, monkeypatch, op):
         monkeypatch.setattr(
             S, "_topk", lambda s, k: orig(s, k).withColumn("boom", boom)
         )
-        call = lambda: S.srp_lsh_topk(spark, SF, k=2, n_queries=2)  # noqa: E731
+        call = lambda: S.srp_lsh_topk(embeddings, k=2, n_queries=2)  # noqa: E731
     with pytest.raises(Exception, match=planted):
         call()
     assert persistent() == before

@@ -10,7 +10,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from v2_ocr_spark.operators.corpus import shuffle_shards, shuffle_shards_for
+from v2_ocr_spark.operators.corpus import shuffle_shards_for
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,10 +29,10 @@ def _twin(path: str, n_shards: int, seed: str):
     """).fetchall()
 
 
-def test_shuffle_shards_matches_duckdb_twin(spark):
+def test_shuffle_shards_matches_duckdb_twin(spark, documents):
     got = sorted(
         (r.doc_id, r.shard, r.pos)
-        for r in shuffle_shards(spark, SF, n_shards=8).collect()
+        for r in shuffle_shards_for(documents, n_shards=8).collect()
     )
     exp = sorted(tuple(r) for r in _twin(
         f"{SF}/documents.parquet", 8, "shuf"))
@@ -40,9 +40,9 @@ def test_shuffle_shards_matches_duckdb_twin(spark):
     assert len(got) == 500
 
 
-def test_shuffle_shards_structure_and_determinism(spark):
-    a = shuffle_shards(spark, SF, n_shards=8).collect()
-    b = shuffle_shards(spark, SF, n_shards=8).collect()
+def test_shuffle_shards_structure_and_determinism(spark, documents):
+    a = shuffle_shards_for(documents, n_shards=8).collect()
+    b = shuffle_shards_for(documents, n_shards=8).collect()
     # deterministic across runs (and partitionings — the key is
     # content-derived, not layout-derived)
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
@@ -55,7 +55,7 @@ def test_shuffle_shards_structure_and_determinism(spark):
     for poss in by_shard.values():
         assert sorted(poss) == list(range(1, len(poss) + 1))
     # a different seed actually reshuffles
-    c = shuffle_shards(spark, SF, n_shards=8, seed="other").collect()
+    c = shuffle_shards_for(documents, n_shards=8, seed="other").collect()
     assert sorted(map(tuple, a)) != sorted(map(tuple, c))
 
 
@@ -65,9 +65,9 @@ def test_shuffle_shards_guard(spark):
         shuffle_shards_for(docs, n_shards=0)
 
 
-def test_shuffle_shards_plan(spark):
+def test_shuffle_shards_plan(spark, documents):
     p = (
-        shuffle_shards(spark, SF, n_shards=8)
+        shuffle_shards_for(documents, n_shards=8)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -5,6 +5,7 @@ changes: python tools/plan_report.py"""
 from __future__ import annotations
 
 import io
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -17,6 +18,7 @@ def fmt_plan(df) -> str:
 
 
 def main() -> None:
+    from v2_ocr_spark.fixtures.oracle_expected import TESTDATA_SF
     from v2_ocr_spark.session import get_spark
     from v2_ocr_spark.operators.extract import extract_turns
     from v2_ocr_spark.operators.assemble import assemble
@@ -27,8 +29,12 @@ def main() -> None:
     import __spark_entry__ as e
 
     spark = get_spark(master="local[8]")
-    d = e._data_dir("/root/testdata/sf0.001")
+    sf = os.path.join(os.path.dirname(TESTDATA_SF), "sf0.001")
+    d = e._data_dir(sf)
     t = spark.read.parquet(f"{d}/transcripts.parquet")
+    c = spark.read.parquet(f"{d}/conversations.parquet")
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    events = spark.read.parquet(f"{sf}/events.parquet")
 
     sections = [
         (
@@ -52,28 +58,24 @@ def main() -> None:
         (
             "semi_join_completed — dim join",
             "BroadcastHashJoin (no SortMergeJoin); pushed IsNotNull",
-            relational.semi_join_completed(spark, d),
+            relational.semi_join_completed(t, c),
         ),
         (
             "minhash LSH candidates — banded bucket pairs",
             "one shuffle to bucket lists (size-capped collect_list), "
             "pair fan-out in an Arrow batch, distinct",
             dedup.lsh_candidate_pairs(
-                dedup.minhash_signatures(
-                    spark.read.parquet(
-                        "/root/testdata/sf0.001/documents.parquet"
-                    ).select("doc_id", "text")
-                )
+                dedup.minhash_signatures(docs.select("doc_id", "text"))
             ),
         ),
         (
-            "ngram_jaccard_pairs — exact Jaccard via shingle inverted index",
+            "ngram_jaccard_pairs_for — exact Jaccard via shingle inverted index",
             "no CartesianProduct anywhere: explode distinct shingles, "
             "equi-join on the shingle (SortMergeJoin on high-cardinality "
             "key), co-occurrence count = |A∩B|, broadcast per-doc counts; "
             "r4: no baked-in sort — output order unspecified, the gate "
             "sorts at registration (no rangepartitioning Exchange)",
-            dedup.ngram_jaccard_pairs(spark, "/root/testdata/sf0.001"),
+            dedup.ngram_jaccard_pairs_for(docs),
         ),
         (
             "token_pack (sharded) — two-phase distributed prefix sum",
@@ -89,12 +91,7 @@ def main() -> None:
             "exchange), so the BPE regexp_count projection is scanned "
             "ONCE — the totals aggregate references the window output "
             "precisely to keep both branches on one subtree",
-            corpus.token_pack_for(
-                spark.read.parquet(
-                    "/root/testdata/sf0.001/documents.parquet"
-                ),
-                shards=4,
-            ),
+            corpus.token_pack_for(docs, shards=4),
         ),
         # corpus_filter is NOT plan-dumped: its keeper-list input is the
         # label-propagation loop's accumulated join lineage (a formatted
@@ -104,7 +101,7 @@ def main() -> None:
             "vocabulary_topk — corpus token frequencies",
             "partial_count before the exchange (map-side combine), "
             "distributed TakeOrderedAndProject — no global sort",
-            corpus.vocabulary_topk(spark, "/root/testdata/sf0.001"),
+            corpus.vocabulary_topk(docs),
         ),
         (
             "distinct_kmv — deterministic bottom-k distinct sketch",
@@ -114,7 +111,7 @@ def main() -> None:
             "event type never lands whole on one sort task (r5; "
             "plan-pinned — a hand-rolled salt pre-pass measured as a "
             "strictly worse 3-exchange plan)",
-            relational.distinct_kmv(spark, "/root/testdata/sf0.001"),
+            relational.distinct_kmv_for(events),
         ),
         (
             "dup_spans — duplicate-substring spans (r5)",
@@ -124,7 +121,7 @@ def main() -> None:
             "subtree twice — non-canonical exchanges, no "
             "ReuseExchange), then the lag gaps-and-islands merge back "
             "in the doc_id window family; no cartesian, no Python",
-            corpus.dup_spans(spark, "/root/testdata/sf0.001"),
+            corpus.dup_spans_for(docs),
         ),
         (
             "lm_logloss — unigram-LM perplexity filter (r5)",
@@ -134,7 +131,7 @@ def main() -> None:
             "as a broadcast one-row join (BroadcastNestedLoopJoin of "
             "1 row, no collect); token join is a plain equi-join AQE "
             "can broadcast when the vocab is small",
-            corpus.lm_logloss(spark, "/root/testdata/sf0.001"),
+            corpus.lm_logloss_for(docs),
         ),
         (
             "scrub_boilerplate — inter-document boilerplate lines (r5)",
@@ -142,7 +139,7 @@ def main() -> None:
             "(never the corpus-scale keep side — the dedup bucket-set "
             "inversion); one doc_id shuffle for the ordered "
             "sort_array reassembly",
-            corpus.scrub_boilerplate(spark, "/root/testdata/sf0.001"),
+            corpus.scrub_boilerplate_for(docs),
         ),
     ]
 

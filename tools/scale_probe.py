@@ -6,7 +6,7 @@ WORST case for near-dup machinery (maximal bucket collisions, maximal
 candidate volume: ~5k clusters x C(20,2) = ~0.95M true pairs) — and
 runs the production paths end to end:
 
-  * minhash_lsh_pairs on 100k docs (signature pass, banded bucket
+  * minhash_lsh_pairs_for on 100k docs (signature pass, banded bucket
     join with the max_bucket guardrail, chunked pair fan-out,
     candidate-proportional exact verify)
   * duplicate_clusters on the resulting ~1M-pair graph (pointer-
@@ -14,7 +14,7 @@ runs the production paths end to end:
     one cluster)
   * srp_lsh_topk on 40k vectors (BLAS signature pass, bucket
     equi-join, exact re-rank)
-  * semantic_near_dup_pairs on 40k vectors (Lloyd k-means + within-
+  * semantic_near_dup_pairs_for on 40k vectors (Lloyd k-means + within-
     cluster exact scan): identical replica vectors MUST co-cluster
     (same deterministic argmax), so every replica group's C(REPL,2)
     cosine-1.0 pairs must be found — recall of the within-cluster
@@ -67,9 +67,10 @@ def main() -> None:
     big_emb.write.mode("overwrite").parquet(f"{WORK}/embeddings.parquet")
 
     # ---- dedup stress: every doc has REPL-1 exact duplicates ----
-    dedup.clear_pairs_cache()
+    big_docs = spark.read.parquet(f"{WORK}/documents.parquet")
+    big_emb = spark.read.parquet(f"{WORK}/embeddings.parquet")
     t0 = time.perf_counter()
-    pairs = dedup.minhash_lsh_pairs(spark, WORK, use_cache=False)
+    pairs = dedup.minhash_lsh_pairs_for(big_docs)
     n_pairs = pairs.count()
     t_dedup = time.perf_counter() - t0
     # sanity: at least the exact-duplicate pairs must be found
@@ -79,7 +80,7 @@ def main() -> None:
 
     # ---- clustering stress: transitive closure over the ~1M pairs ----
     t0 = time.perf_counter()
-    clusters = dedup.duplicate_clusters(spark, None, pairs=pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     n_nodes = clusters.count()
     n_clusters = clusters.select("cluster_id").distinct().count()
     # every 20-replica group is all-pairs similar, so its members must
@@ -92,12 +93,12 @@ def main() -> None:
         .count()
     )
     t_clusters = time.perf_counter() - t0
-    clusters.unpersist()  # pairs= path: the caller owns the result
+    clusters.unpersist()  # the caller owns the label table
     pairs.unpersist()
 
     # ---- ANN stress: replicated vectors, exact-duplicate neighbors ----
     t0 = time.perf_counter()
-    topk = similarity.srp_lsh_topk(spark, WORK, k=5, n_queries=10)
+    topk = similarity.srp_lsh_topk(big_emb, k=5, n_queries=10)
     n_topk = topk.count()
     t_ann = time.perf_counter() - t0
 
@@ -107,8 +108,9 @@ def main() -> None:
     # vector are dropped too, so originals x REPL is exact)
     n_units = similarity.with_unit_norm(emb).count()
     t0 = time.perf_counter()
-    sem = similarity.semantic_near_dup_pairs(
-        spark, WORK, k=64, n_iter=2, threshold=0.999
+    sem = similarity.semantic_near_dup_pairs_for(
+        similarity.with_unit_norm(big_emb).select("vec_id", "unit"),
+        k=64, n_iter=2, threshold=0.999,
     )
     n_sem = sem.count()
     # every replica group is identical vectors -> same deterministic

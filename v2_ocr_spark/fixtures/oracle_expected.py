@@ -244,9 +244,9 @@ def ivf_candidates(
 
 def file_md5(path: str) -> str:
     """Content digest of one file — the freshness pin. (NOT the stat
-    tuple dedup.input_signature() returns; distinct name on purpose —
-    the two have incompatible semantics and the memo caches must keep
-    mtime-based invalidation.)"""
+    tuple __spark_entry__.input_signature() returns; distinct name on
+    purpose — the two have incompatible semantics and the gate memo
+    must keep mtime-based invalidation.)"""
     md5 = hashlib.md5()
     with open(path, "rb") as f:
         for chunk in iter(lambda: f.read(1 << 20), b""):

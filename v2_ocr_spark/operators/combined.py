@@ -9,7 +9,9 @@ each. Each combo is a pure COMPOSITION of the audited operator
 builders (joins on keys / tag-discriminated unions) — no expression is
 re-derived here, so a combo passing means every folded operator's
 expression matched byte-for-byte, and a mismatch names the column
-(= the operator) that broke.
+(= the operator) that broke. Each combo takes only the tables its
+parts read (`turns`, `conv`, `events`, `docs`), read once by the gate
+and shared by every part.
 
 Gate-only surface: production callers keep using the individual
 operators; nothing here is a pipeline stage.
@@ -32,21 +34,21 @@ def _s(col: F.Column | str) -> F.Column:
 # conversations-dim combos
 # ---------------------------------------------------------------------------
 
-def conv_views(spark, d) -> DataFrame:
+def conv_views(turns: DataFrame, conv: DataFrame) -> DataFrame:
     """Per-conversation scalar views: P8 viewability + P9 repair
     write-back + E5 RTL + E7 safe names + E10 human sizes/durations +
     A7 ETA + E9 camelCase + E13 labels + A5 progress — one row per
     conversation, one gate slot for ten operators."""
-    v = relational.viewable(spark, d)
-    sr = relational.status_repair(spark, d).drop("status")
-    rtl = relational.rtl_flags(spark, d).drop("source_name")
-    sn = relational.safe_names(spark, d).drop("source_name")
-    hs = relational.human_sizes(spark, d)
-    eta = relational.eta_estimate(spark, d)
-    cc = relational.camel_case_view(spark, d)
-    sl = relational.status_labels(spark, d).drop("status")
-    pg = relational.progress(spark, d)
-    du = relational.durations(spark, d)
+    v = relational.viewable(conv)
+    sr = relational.status_repair(conv).drop("status")
+    rtl = relational.rtl_flags(conv).drop("source_name")
+    sn = relational.safe_names(conv).drop("source_name")
+    hs = relational.human_sizes(conv)
+    eta = relational.eta_estimate(conv)
+    cc = relational.camel_case_view(conv)
+    sl = relational.status_labels(conv).drop("status")
+    pg = relational.progress(turns)
+    du = relational.durations(conv)
     return (
         v.join(sr, "conv_id")
         .join(rtl, "conv_id")
@@ -60,43 +62,43 @@ def conv_views(spark, d) -> DataFrame:
     )
 
 
-def scalar_stats(spark, d) -> DataFrame:
+def scalar_stats(turns: DataFrame, conv: DataFrame) -> DataFrame:
     """One-row dashboard scalars: P9 invariant count + A2 dashboard +
     A3/A4 storage + A4 text chars + J2 anti-join survivors."""
     return (
-        relational.status_invariant(spark, d)
-        .crossJoin(relational.dashboard_stats(spark, d))
-        .crossJoin(relational.storage_stats(spark, d))
-        .crossJoin(relational.text_size(spark, d))
-        .crossJoin(relational.anti_join_cancelled(spark, d))
+        relational.status_invariant(conv)
+        .crossJoin(relational.dashboard_stats(conv))
+        .crossJoin(relational.storage_stats(conv))
+        .crossJoin(relational.text_size(turns))
+        .crossJoin(relational.anti_join_cancelled(turns, conv))
     )
 
 
-def queue_views(spark, d) -> DataFrame:
+def queue_views(conv: DataFrame) -> DataFrame:
     """S3 queue scan + O3 top-k display, tag-discriminated."""
-    q = relational.queue_scan(spark, d).withColumn("which", F.lit("queue"))
-    t = relational.top_queue(spark, d).withColumn("which", F.lit("top5"))
+    q = relational.queue_scan(conv).withColumn("which", F.lit("queue"))
+    t = relational.top_queue(conv).withColumn("which", F.lit("top5"))
     return q.unionByName(t).select(
         "which", "conv_id", "status", "created_epoch"
     )
 
 
-def sort_views(spark, d) -> DataFrame:
+def sort_views(conv: DataFrame) -> DataFrame:
     """O2 sort family: multi-key ICU sort (limit 20), size sort
     (limit 10), full-table collated rank — one tagged union."""
-    multi = relational.multi_key_sort(spark, d).select(
+    multi = relational.multi_key_sort(conv).select(
         F.lit("multi").alias("which"),
         "conv_id",
         F.col("source_name").alias("str_key"),
         F.col("sort_epoch").cast("bigint").alias("num_key"),
     )
-    size = relational.size_sort(spark, d).select(
+    size = relational.size_sort(conv).select(
         F.lit("size").alias("which"),
         "conv_id",
         F.lit(None).cast("string").alias("str_key"),
         F.col("size_bytes").cast("bigint").alias("num_key"),
     )
-    coll = relational.name_sort_collated(spark, d).select(
+    coll = relational.name_sort_collated(conv).select(
         F.lit("collate").alias("which"),
         "conv_id",
         F.col("source_name").alias("str_key"),
@@ -105,16 +107,16 @@ def sort_views(spark, d) -> DataFrame:
     return multi.unionByName(size).unionByName(coll)
 
 
-def filter_views(spark, d) -> DataFrame:
+def filter_views(conv: DataFrame) -> DataFrame:
     """P5 compound UI filter + P4 range predicate, tagged union."""
-    comp = relational.compound_filter(spark, d).select(
+    comp = relational.compound_filter(conv).select(
         F.lit("compound").alias("which"),
         "conv_id",
         F.col("source_name").alias("str_a"),
         F.col("status").alias("str_b"),
         F.lit(None).cast("bigint").alias("num_key"),
     )
-    rng = relational.range_filter(spark, d).select(
+    rng = relational.range_filter(conv).select(
         F.lit("range").alias("which"),
         "conv_id",
         F.lit(None).cast("string").alias("str_a"),
@@ -124,14 +126,14 @@ def filter_views(spark, d) -> DataFrame:
     return comp.unionByName(rng)
 
 
-def turn_flags(spark, d) -> DataFrame:
+def turn_flags(turns: DataFrame) -> DataFrame:
     """Per-turn predicates: P7 validity + P6 full-text hit flag + E6
     Arabic-Indic numerals (over every turn)."""
-    v = relational.validity_check(spark, d)
-    ft = relational.fulltext_search(spark, d).withColumn(
+    v = relational.validity_check(turns)
+    ft = relational.fulltext_search(turns).withColumn(
         "matches_fox", F.lit(True)
     )
-    ar = relational.arabic_numerals_all(spark, d)
+    ar = relational.arabic_numerals_all(turns)
     return (
         v.join(ft, ["conv_id", "turn_idx"], "left")
         .withColumn("matches_fox", F.coalesce("matches_fox", F.lit(False)))
@@ -139,28 +141,28 @@ def turn_flags(spark, d) -> DataFrame:
     )
 
 
-def group_rollups(spark, d) -> DataFrame:
+def group_rollups(turns: DataFrame, conv: DataFrame) -> DataFrame:
     """Grouping family: A1 status counts + role counts + ROLLUP
     subtotals + A6 windowed turn totals, tag-discriminated."""
-    sc = relational.status_counts(spark, d).select(
+    sc = relational.status_counts(conv).select(
         F.lit("status").alias("which"),
         _s("status").alias("k1"),
         F.lit(None).cast("string").alias("k2"),
         F.col("n").cast("bigint").alias("n"),
     )
-    rc = relational.role_counts(spark, d).select(
+    rc = relational.role_counts(turns).select(
         F.lit("role").alias("which"),
         _s("role").alias("k1"),
         F.lit(None).cast("string").alias("k2"),
         F.col("n").cast("bigint").alias("n"),
     )
-    ru = relational.status_rollup(spark, d).select(
+    ru = relational.status_rollup(conv).select(
         F.lit("rollup").alias("which"),
         _s("status").alias("k1"),
         _s("is_done").alias("k2"),
         F.col("n").cast("bigint").alias("n"),
     )
-    tp = relational.turns_per_conversation(spark, d).select(
+    tp = relational.turns_per_conversation(turns).select(
         F.lit("conv2_turns").alias("which"),
         _s("conv_id").alias("k1"),
         _s("turn_idx").alias("k2"),
@@ -173,7 +175,7 @@ def group_rollups(spark, d) -> DataFrame:
 # events combo
 # ---------------------------------------------------------------------------
 
-def events_views(spark, sf_dir) -> DataFrame:
+def events_views(events: DataFrame) -> DataFrame:
     """The whole exact events-analytics family in one tagged union:
     per-type sums, daily rollup, sessionization, top-k per user,
     distinct counts, percentiles, histogram."""
@@ -193,34 +195,34 @@ def events_views(spark, sf_dir) -> DataFrame:
         return df.select(*sel)
 
     bt = tag(
-        relational.events_by_type(spark, sf_dir), "by_type",
+        relational.events_by_type(events), "by_type",
         k1=_s("event_type"), n=F.col("n").cast("bigint"),
         v1=F.col("total_value"),
     )
     dy = tag(
-        relational.events_daily(spark, sf_dir), "daily",
+        relational.events_daily(events), "daily",
         k1=_s("day"), n=F.col("n").cast("bigint"),
     )
     se = tag(
-        relational.sessionize(spark, sf_dir), "sessionize",
+        relational.sessionize(events), "sessionize",
         k1=_s("user_id"), n=F.col("n_sessions").cast("bigint"),
         v1=F.col("n_events").cast("double"),
     )
     tp = tag(
-        relational.top_events_per_user(spark, sf_dir), "top",
+        relational.top_events_per_user(events), "top",
         k1=_s("user_id"), k2=_s("rk"), k3=_s("event_type"),
         n=F.col("event_id").cast("bigint"),
     )
     du = tag(
-        relational.distinct_users(spark, sf_dir), "distinct",
+        relational.distinct_users(events), "distinct",
         n=F.col("n_users").cast("bigint"), v1=F.col("n_types").cast("double"),
     )
     pc = tag(
-        relational.value_percentiles(spark, sf_dir), "pctl",
+        relational.value_percentiles(events), "pctl",
         k1=_s("event_type"), v1=F.col("p50"), v2=F.col("p95"),
     )
     hi = tag(
-        relational.value_histogram(spark, sf_dir), "hist",
+        relational.value_histogram_for(events), "hist",
         k1=_s("event_type"), k2=_s("bin"), n=F.col("n").cast("bigint"),
     )
     out = bt
@@ -257,24 +259,24 @@ def turn_text_features(transcripts: DataFrame, sample_rate: float = 0.1
     )
 
 
-def doc_text_features(spark, sf_dir) -> DataFrame:
+def doc_text_features(docs: DataFrame) -> DataFrame:
     """Per-document text analysis: language ID + quality + repetition
     stats + line dedup transform."""
     return (
-        textstats.lang_id(spark, sf_dir)
-        .join(textstats.quality_score(spark, sf_dir), "doc_id")
-        .join(textstats.repetition_stats(spark, sf_dir), "doc_id")
-        .join(textstats.dedup_lines(spark, sf_dir), "doc_id", "left")
+        textstats.lang_id_for(docs, ["doc_id"])
+        .join(textstats.quality_score_for(docs, ["doc_id"]), "doc_id")
+        .join(textstats.repetition_stats(docs), "doc_id")
+        .join(textstats.dedup_lines(docs), "doc_id", "left")
     )
 
 
-def doc_features(spark, sf_dir) -> DataFrame:
+def doc_features(docs: DataFrame) -> DataFrame:
     """Per-document token counts + fingerprints + hash-sample
     membership (bucket surfaced for sampled docs)."""
     return (
-        textstats.token_counts(spark, sf_dir)
-        .join(textstats.fingerprints(spark, sf_dir), "doc_id")
-        .join(textstats.hash_sample(spark, sf_dir), "doc_id", "left")
+        textstats.token_counts_for(docs, ["doc_id"])
+        .join(textstats.fingerprints_for(docs, ["doc_id"]), "doc_id")
+        .join(textstats.hash_sample(docs), "doc_id", "left")
         .withColumn(
             "is_sampled", F.col("bucket").isNotNull()
         )

@@ -1,10 +1,11 @@
-"""Corpus-level training-data operators over the `documents` table —
+"""Corpus-level training-data operators over a `documents`-shaped
+table (each takes the DataFrame it reads) —
 the jobs that sit between cleaning and tokenizer-feeding in a
 pretraining pipeline:
 
   * vocabulary_topk      — global token frequency table (the vocab /
                            frequency-cutoff job)
-  * token_pack           — deterministic sequence packing: assign docs
+  * token_pack_for       — deterministic sequence packing: assign docs
                            to fixed token-budget context windows
   * cross_source_overlap — n-gram contamination check between corpus
                            sources (the benchmark-decontamination shape)
@@ -19,10 +20,10 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
-from v2_ocr_spark.operators.textstats import BPE_ISH, _docs
+from v2_ocr_spark.operators.textstats import BPE_ISH
 
 
-def vocabulary_topk(spark, sf_dir, k: int = 100) -> DataFrame:
+def vocabulary_topk(docs: DataFrame, k: int = 100) -> DataFrame:
     """Top-k corpus tokens by frequency (deterministic tiebreak on the
     token) — the vocabulary/frequency-cutoff pass.
 
@@ -32,7 +33,7 @@ def vocabulary_topk(spark, sf_dir, k: int = 100) -> DataFrame:
     shuffle, keyed by token (high cardinality, well spread)."""
     # F.lit keeps the pattern out of the SQL parser (a '\d' inside an
     # F.expr string literal would be eaten as an escape)
-    toks = _docs(spark, sf_dir).select(
+    toks = docs.select(
         F.explode(
             F.regexp_extract_all(
                 F.lower(F.col("text")), F.lit(BPE_ISH), F.lit(0)
@@ -47,16 +48,10 @@ def vocabulary_topk(spark, sf_dir, k: int = 100) -> DataFrame:
     )
 
 
-# below this many docs, token_pack's default path skips the two-phase
+# below this many docs, token_pack_for's default path skips the two-phase
 # boundary jobs: a single window task covers the input faster than the
 # count+sample jobs can run (callers passing explicit `shards` opt out)
 _SMALL_INPUT_ROWS = 1_000_000
-
-
-def token_pack(spark, sf_dir, budget: int = 2048) -> DataFrame:
-    """Deterministic sequence packing over the WHOLE documents table
-    (the oracled query surface); see token_pack_for."""
-    return token_pack_for(_docs(spark, sf_dir), budget)
 
 
 def token_pack_for(
@@ -253,12 +248,12 @@ def token_pack_for(
     ).withColumn("bin", F.expr(f"start_token DIV {int(budget)}"))
 
 
-def corpus_filter(
-    spark, sf_dir,
+def corpus_filter_for(
+    docs: DataFrame,
+    keep_list: DataFrame,
     min_quality: float = 0.5,
     min_chars: int = 100,
     langs: tuple[str, ...] = ("en", "de", "fr", "es"),
-    dedup_threshold: float = 0.5,
 ) -> DataFrame:
     """The composed C4/Gopher-style cleaning decision: per document, a
     keep/drop verdict with an auditable reason string — the join of the
@@ -269,34 +264,19 @@ def corpus_filter(
 
     Scale shape: three narrow codegen projections joined on doc_id
     (broadcast-size here, co-partitioned hash joins at corpus scale)
-    plus the memoized LSH keeper list — nothing quadratic anywhere.
+    plus the pre-computed keeper list — nothing quadratic anywhere.
     Output order is UNSPECIFIED: the decision table is consumed by
     joins (the composed pipeline) where a whole-corpus range exchange for
     ordering would be pure waste; the gate query adds orderBy at
-    registration for the oracle hash."""
-    from v2_ocr_spark.operators.dedup import dedup_keep_list
+    registration for the oracle hash.
 
-    keep_list = dedup_keep_list(spark, sf_dir, threshold=dedup_threshold)
-    return corpus_filter_for(
-        _docs(spark, sf_dir), keep_list,
-        min_quality=min_quality, min_chars=min_chars, langs=langs,
-    )
-
-
-def corpus_filter_for(
-    docs: DataFrame,
-    keep_list: DataFrame,
-    min_quality: float = 0.5,
-    min_chars: int = 100,
-    langs: tuple[str, ...] = ("en", "de", "fr", "es"),
-) -> DataFrame:
-    """corpus_filter over ANY (doc_id, text[, n_chars]) table plus a
-    pre-computed dedup keeper list — the shared body of the fixture
-    query and the composed transcript pipeline (assembled conversations
-    with string conv_id keys). ``n_chars`` is taken from the input when
-    present (the documents fixture carries it) and computed as
-    length(text) otherwise, so both callers apply the identical length
-    floor."""
+    Works over ANY (doc_id, text[, n_chars]) table plus a pre-computed
+    dedup keeper list (dedup_keep_list_for) — the shared body of the
+    documents gate query and the composed transcript pipeline
+    (assembled conversations with string conv_id keys). ``n_chars`` is
+    taken from the input when present (the documents fixture carries
+    it) and computed as length(text) otherwise, so both callers apply
+    the identical length floor."""
     from v2_ocr_spark.operators.textstats import lang_id_for, quality_score_for
 
     d = docs
@@ -330,25 +310,17 @@ def corpus_filter_for(
     )
 
 
-def corpus_filter_stats(spark, sf_dir, **filter_kwargs) -> DataFrame:
+def _filter_stats_for(decisions: DataFrame, toks: DataFrame) -> DataFrame:
     """The number every data meeting asks for: docs and token budget
     per filter outcome — how much survives cleaning, and what each
-    rule costs. One rollup over corpus_filter joined to the token
-    counts (map-side partial aggregation; the reason key has 5
-    values, so the final shuffle is trivial)."""
-    from v2_ocr_spark.operators.textstats import token_counts
+    rule costs. One rollup over the corpus_filter_for decisions
+    joined to the token counts (map-side partial aggregation; the
+    reason key has 5 values, so the final shuffle is trivial).
 
-    return _filter_stats_for(
-        corpus_filter(spark, sf_dir, **filter_kwargs),
-        token_counts(spark, sf_dir),
-    )
-
-
-def _filter_stats_for(decisions: DataFrame, toks: DataFrame) -> DataFrame:
-    """Per-reason rollup over an EXISTING decisions table joined to an
-    existing (doc_id, bpe_tokens) table — the shared body of
-    corpus_filter_stats and the composed transcript pipeline's summary
-    (one definition, so the gate query and the pipeline lineage can't
+    Takes an EXISTING decisions table and an existing (doc_id,
+    bpe_tokens) table — the shared body of the corpus_filter_stats gate
+    query and the composed transcript pipeline's summary (one
+    definition, so the gate query and the pipeline lineage can't
     drift)."""
     toks = toks.select("doc_id", "bpe_tokens")
     return (
@@ -363,7 +335,7 @@ def _filter_stats_for(decisions: DataFrame, toks: DataFrame) -> DataFrame:
 
 
 def cross_source_overlap(
-    spark, sf_dir, shingle_n: int = 5, max_df: int | None = None
+    docs: DataFrame, shingle_n: int = 5, max_df: int | None = None
 ) -> DataFrame:
     """Contamination check: for every pair of corpus sources, the count
     of distinct word n-gram shingles they share — the shape of a
@@ -372,7 +344,7 @@ def cross_source_overlap(
 
     Scale shape: distinct (source, shingle) projection, then a shingle
     equi-join between source groups — the same inverted-index idiom as
-    ngram_jaccard_pairs, cost proportional to truly-shared content.
+    ngram_jaccard_pairs_for, cost proportional to truly-shared content.
     NULL-text docs contribute no shingles.
 
     Scale note (100 TB): one viral boilerplate shingle present in every
@@ -388,7 +360,6 @@ def cross_source_overlap(
     everything identifies nothing). Default None stays exact."""
     from v2_ocr_spark.operators.dedup import shingle_explode
 
-    docs = _docs(spark, sf_dir)
     sh = shingle_explode(docs.select("doc_id", "text"), shingle_n)
     if max_df is not None:
         df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -408,7 +379,7 @@ def cross_source_overlap(
 
 
 def decontaminate(
-    spark, sf_dir, shingle_n: int = 5, min_hits: int = 1,
+    docs: DataFrame, shingle_n: int = 5, min_hits: int = 1,
     bench_source: str = "src0",
 ) -> DataFrame:
     """PER-DOCUMENT benchmark decontamination over the documents table:
@@ -421,7 +392,6 @@ def decontaminate(
     The split is null-safe: a NULL-source doc is NOT the benchmark, so
     it lands on the training side and stays in the report (a plain !=
     would evaluate to NULL and silently drop it from BOTH splits)."""
-    docs = _docs(spark, sf_dir)
     is_bench = F.col("source").eqNullSafe(F.lit(bench_source))
     return decontaminate_for(
         docs.where(~is_bench),
@@ -516,14 +486,6 @@ def boilerplate_lines_for(docs: DataFrame, min_docs: int = 3) -> DataFrame:
     )
 
 
-def scrub_boilerplate(
-    spark, sf_dir, min_docs: int = 3
-) -> DataFrame:
-    """Corpus-wide boilerplate-line removal over the documents table —
-    see scrub_boilerplate_for."""
-    return scrub_boilerplate_for(_docs(spark, sf_dir), min_docs)
-
-
 def scrub_boilerplate_for(docs: DataFrame, min_docs: int = 3) -> DataFrame:
     """-> (doc_id, n_lines, kept_lines, scrubbed_text): remove every
     line that appears in >= min_docs distinct documents (ALL of its
@@ -591,14 +553,6 @@ def scrub_boilerplate_for(docs: DataFrame, min_docs: int = 3) -> DataFrame:
     )
 
 
-def shuffle_shards(
-    spark, sf_dir, n_shards: int = 8, seed: str = "shuf"
-) -> DataFrame:
-    """Deterministic shuffle-into-shards over the documents table —
-    see shuffle_shards_for."""
-    return shuffle_shards_for(_docs(spark, sf_dir), n_shards, seed)
-
-
 def shuffle_shards_for(
     docs: DataFrame, n_shards: int = 8, seed: str = "shuf"
 ) -> DataFrame:
@@ -610,7 +564,7 @@ def shuffle_shards_for(
     identical order on any engine, partitioning, or cluster size —
     the property RNG-based orderBy(rand()) cannot give and the reason
     sampled/shuffled corpora stay auditable at 10^12 rows (the same
-    argument as sample_stratified's md5 buckets).
+    argument as sample_stratified_for's md5 buckets).
 
     Contracts (twin-checked byte-level vs DuckDB in
     tests/test_shuffle_shards.py — the gate sits at its 50-entry cap,
@@ -645,24 +599,18 @@ def shuffle_shards_for(
     )
 
 
-def dup_spans(spark, sf_dir, k: int = 8, min_count: int = 2) -> DataFrame:
-    """Duplicate-substring spans over the documents table — see
-    dup_spans_for."""
-    return dup_spans_for(_docs(spark, sf_dir), k, min_count)
-
-
 def dup_spans_for(
     docs: DataFrame, k: int = 8, min_count: int = 2
 ) -> DataFrame:
     """-> (doc_id, span_start, span_end, span_tokens): maximal runs of
     k-token shingles that occur >= min_count times in the WHOLE corpus
     — the span-level member of the dedup family (doc-level near-dup is
-    minhash/simhash/ngram; line-level is scrub_boilerplate; THIS is
+    minhash/simhash/ngram; line-level is scrub_boilerplate_for; THIS is
     the "deduplicating training data" substring pass: repeated
     licenses, templated paragraphs, self-repeating generation loops).
     Counting is by TOTAL occurrences, not distinct documents, so a
     phrase repeated inside one document is a duplicate span too — the
-    within-doc self-repetition case scrub_boilerplate's distinct-doc
+    within-doc self-repetition case scrub_boilerplate_for's distinct-doc
     counting deliberately ignores.
 
     Span positions are 0-based TOKEN indexes (the shared BPE_ISH
@@ -672,7 +620,7 @@ def dup_spans_for(
 
     Contracts (twin-checked byte-level vs DuckDB in
     tests/test_dup_spans.py — the gate sits at its 50-entry cap, so
-    this op is pytest-twinned like decontaminate / scrub_boilerplate):
+    this op is pytest-twinned like decontaminate / scrub_boilerplate_for):
       * NULL-text docs excluded; docs with < k tokens yield no spans.
       * min_count < 2 is rejected (every shingle occurs >= 1 time —
         the whole corpus would be one span).
@@ -771,14 +719,6 @@ def _tokens_indexed(docs: DataFrame) -> DataFrame:
     )
 
 
-def remove_dup_spans(
-    spark, sf_dir, k: int = 8, min_count: int = 2
-) -> DataFrame:
-    """Duplicate-substring removal over the documents table — see
-    remove_dup_spans_for."""
-    return remove_dup_spans_for(_docs(spark, sf_dir), k, min_count)
-
-
 def remove_dup_spans_for(
     docs: DataFrame, k: int = 8, min_count: int = 2
 ) -> DataFrame:
@@ -867,12 +807,6 @@ def remove_dup_spans_for(
 _MICRO = 1_000_000
 
 
-def lm_logloss(spark, sf_dir, ref_source: str | None = None) -> DataFrame:
-    """Unigram-LM perplexity quality score over the documents table —
-    see lm_logloss_for."""
-    return lm_logloss_for(_docs(spark, sf_dir), ref_source)
-
-
 def lm_logloss_for(docs: DataFrame, ref_source: str | None = None) -> DataFrame:
     """-> (doc_id, n_tokens, oov_tokens, bits_per_token, oov_frac):
     CCNet/Gopher-style language-model quality scoring — train a
@@ -894,11 +828,11 @@ def lm_logloss_for(docs: DataFrame, ref_source: str | None = None) -> DataFrame:
 
     Contracts (twin-checked byte-level vs DuckDB in
     tests/test_lm_quality.py — the gate sits at its 50-entry cap, so
-    this op is pytest-twinned like decontaminate/scrub_boilerplate):
+    this op is pytest-twinned like decontaminate/scrub_boilerplate_for):
       * NULL-text docs are excluded; ''/whitespace-only docs are kept
         with n_tokens = 0 and NULL bits_per_token / oov_frac.
       * Tokenization is the shared BPE_ISH pre-tokenizer over
-        lower(text), identical to vocabulary_topk / token_counts.
+        lower(text), identical to vocabulary_topk / token_counts_for.
       * Per-token surprise is quantized to integer micro-bits (see
         _MICRO above) so the per-doc sum is exact BIGINT arithmetic —
         order-independent on any cluster, hence oracle-exact.
@@ -1006,8 +940,8 @@ def stratified_cutoffs(
     )
 
 
-def sample_stratified(
-    spark, sf_dir, rates: dict[str, float] | None = None,
+def sample_stratified_for(
+    docs: DataFrame, rates: dict[str, float] | None = None,
     default_rate: float = STRATIFIED_DEFAULT_RATE,
 ) -> DataFrame:
     """Deterministic STRATIFIED sampling — the training-mix
@@ -1023,15 +957,6 @@ def sample_stratified(
     rate CASE dispatches on the (low-cardinality) source column and
     the bucket math is the shared _md5_bucket expression the other
     sampling operators already pin against DuckDB."""
-    return sample_stratified_for(
-        _docs(spark, sf_dir), rates, default_rate
-    )
-
-
-def sample_stratified_for(
-    docs: DataFrame, rates: dict[str, float] | None = None,
-    default_rate: float = STRATIFIED_DEFAULT_RATE,
-) -> DataFrame:
     from v2_ocr_spark.operators.textstats import _md5_bucket
 
     cuts, default_cut = stratified_cutoffs(rates, default_rate)

@@ -1,17 +1,18 @@
-"""Deduplication operators for training-data pipelines, over the
-`documents` table (doc_id, text, lang, source, n_chars).
+"""Deduplication operators for training-data pipelines. Each takes
+the (doc_id, text, ...) table it reads — the `documents` table or
+assembled conversations — and returns a DataFrame.
 
 All hot-path math stays JVM-side (xxhash64, array ops, hash
 aggregation with map-side partials) — no Python in the row path.
 
   * exact_duplicates      — hash groupBy on full text
-  * minhash_lsh_pairs     — word-shingle MinHash -> banded LSH buckets
+  * minhash_lsh_pairs_for — word-shingle MinHash -> banded LSH buckets
                             -> candidate pairs -> exact-Jaccard verify.
                             Contract: ALL pairs with Jaccard >= threshold
                             (recall of the banding at J=0.5 with r=2,b=64
                             is 1-(1-0.5^2)^64 ~ 1-1e-8).
   * simhash_pairs         — 64-bit SimHash + banded hamming search
-  * ngram_jaccard_pairs   — EXACT word-shingle Jaccard for every pair
+  * ngram_jaccard_pairs_for — EXACT word-shingle Jaccard for every pair
                             above threshold, via a shingle inverted
                             index (explode -> self-equi-join on the
                             shingle -> co-occurrence counts). Never
@@ -37,33 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from v2_ocr_spark.operators.textstats import _docs
-
 MERSENNE_P = (1 << 31) - 1
-
-
-def input_signature(path: str) -> tuple:
-    """Cheap content fingerprint of a parquet file/dir — (file count,
-    total bytes, max mtime_ns). Memo keys include it so an IN-SESSION
-    rewrite of the input (regenerated corpus, a notebook iterating on a
-    dataset, a probe reusing its work dir) invalidates cached pair/
-    cluster/extraction sets instead of silently serving stale results."""
-    import os
-
-    if os.path.isfile(path):
-        st = os.stat(path)
-        return (1, st.st_size, st.st_mtime_ns)
-    n = total = newest = 0
-    for root, _, files in os.walk(path):
-        for fn in files:
-            try:
-                st = os.stat(os.path.join(root, fn))
-            except FileNotFoundError:
-                continue
-            n += 1
-            total += st.st_size
-            newest = max(newest, st.st_mtime_ns)
-    return (n, total, newest)
 
 
 def _shingle_set(text: str, n: int) -> set[str]:
@@ -79,11 +54,10 @@ def _shingle_set(text: str, n: int) -> set[str]:
     return {" ".join(toks[i : i + n]) for i in range(m)}
 
 
-def exact_duplicates(spark, sf_dir):
+def exact_duplicates(docs: DataFrame) -> DataFrame:
     """Exact dedup: groups of byte-identical texts (size > 1)."""
-    d = _docs(spark, sf_dir)
     return (
-        d.groupBy("text")
+        docs.groupBy("text")
         .agg(
             F.count("*").alias("n_copies"),
             F.min("doc_id").alias("keeper_doc_id"),
@@ -299,74 +273,20 @@ def verify_jaccard(
     )
 
 
-# one materialized pair-set per (app, input, params) — the gate and any
-# real pipeline run several dedup stages over the SAME corpus in one
-# session (pair finding, then clustering); rebuilding the signature +
-# bucket + verify cascade per stage wastes the dominant cost. Entries
-# are persisted DataFrames; clear_pairs_cache() releases them.
-_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
-# cluster LABELS are memoized too: the keeper list and the composed
-# corpus filter all consume the same transitive closure, and the
-# propagation loop is the expensive part once pairs are cached
-_CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
-
-
-def clear_pairs_cache() -> None:
-    """Unpersist and drop every memoized pair set AND cluster label set
-    (benchmarks call this so cold-path timings stay honest)."""
-    for cache in (_PAIRS_CACHE, _CLUSTERS_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001 — session may already be gone
-                pass
-        cache.clear()
-
-
-def minhash_lsh_pairs(
-    spark, sf_dir, threshold: float = 0.5,
-    num_hashes: int = 128, rows_per_band: int = 2, shingle_n: int = 3,
-    use_cache: bool = True,
-):
-    """Near-duplicate pairs with word-shingle Jaccard >= threshold,
-    found via MinHash-LSH candidates + exact verification.
-
-    The returned DataFrame is PERSISTED and memoized per
-    (session, input, params): a second call — e.g. duplicate_clusters
-    right after pair inspection — reuses the materialized pair set
-    instead of re-running the signature pass. clear_pairs_cache()
-    releases the storage; pass use_cache=False to force a rebuild."""
-    key = (
-        spark.sparkContext.applicationId, sf_dir,
-        input_signature(f"{sf_dir}/documents.parquet"),
-        threshold, num_hashes, rows_per_band, shingle_n,
-    )
-    if use_cache and key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[key]
-    result = minhash_lsh_pairs_for(
-        _docs(spark, sf_dir), threshold=threshold, num_hashes=num_hashes,
-        rows_per_band=rows_per_band, shingle_n=shingle_n,
-    )
-    if use_cache:
-        _PAIRS_CACHE[key] = result
-    return result
-
-
 def minhash_lsh_pairs_for(
     docs: DataFrame, threshold: float = 0.5,
     num_hashes: int = 128, rows_per_band: int = 2, shingle_n: int = 3,
 ) -> DataFrame:
-    """minhash_lsh_pairs over ANY (doc_id, text) DataFrame — e.g.
-    assembled conversations with string conv_id keys, the sub-quadratic
-    near-dup path the composed pipeline takes at scale (the exact
-    inverted-index sibling is ngram_jaccard_pairs_for). The id column
-    may be any orderable primitive type. Returns a PERSISTED,
-    materialized pair set (same candidates-then-exact-verify contract);
-    no memoization — callers that re-consume it across stages own the
-    cache (the fixture wrapper minhash_lsh_pairs memoizes per content
-    signature). Output order is UNSPECIFIED (r4 contract, same as the
+    """Near-duplicate pairs with word-shingle Jaccard >= threshold,
+    found via MinHash-LSH candidates + exact verification, over ANY
+    (doc_id, text) DataFrame — e.g. assembled conversations with string
+    conv_id keys, the sub-quadratic near-dup path the composed pipeline
+    takes at scale (the exact inverted-index sibling is
+    ngram_jaccard_pairs_for). The id column may be any orderable
+    primitive type. Returns a PERSISTED, materialized pair set that the
+    CALLER owns: a caller that re-consumes it across stages (the gate's
+    memo, the composed pipeline) keeps the one copy and unpersists it
+    when done. Output order is UNSPECIFIED (r4 contract, same as the
     ngram/cosine pair producers): consumers JOIN the pairs, and a
     baked-in orderBy would range-exchange the whole pair table — at
     100 TB that table can be billions of rows — for an ordering only
@@ -402,8 +322,7 @@ def minhash_lsh_pairs_for(
     # materialize the (small) final pair set, then release every
     # intermediate cache — repeated calls in one session must not pin
     # extra copies of the corpus in executor storage. The persisted
-    # result itself stays cached (one small pair-set per distinct
-    # input/params, released by clear_pairs_cache()).
+    # result itself stays cached until its owner releases it.
     result.count()
     cand.unpersist()
     if owns_docs_cache:
@@ -438,8 +357,10 @@ def shingle_explode(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.5,
-                        shingle_n: int = 3, max_df: int | None = None):
+def ngram_jaccard_pairs_for(
+    docs: DataFrame, threshold: float = 0.5, shingle_n: int = 3,
+    max_df: int | None = None, id_col: str = "doc_id",
+) -> DataFrame:
     """EXACT word-shingle Jaccard pairs >= threshold via a shingle
     inverted index — no all-pairs product anywhere:
 
@@ -462,23 +383,13 @@ def ngram_jaccard_pairs(spark, sf_dir, threshold: float = 0.5,
     shingle universe (a symmetric approximation of the full-universe
     value, never the one-sided denominator inflation of filtering the
     join alone). The default (None) stays exact, which is this
-    operator's contract; use minhash_lsh_pairs as the tunable
+    operator's contract; use minhash_lsh_pairs_for as the tunable
     approximate path.
-    """
-    return ngram_jaccard_pairs_for(
-        _docs(spark, sf_dir), threshold=threshold, shingle_n=shingle_n,
-        max_df=max_df,
-    )
 
-
-def ngram_jaccard_pairs_for(
-    docs: DataFrame, threshold: float = 0.5, shingle_n: int = 3,
-    max_df: int | None = None, id_col: str = "doc_id",
-) -> DataFrame:
-    """ngram_jaccard_pairs over ANY (id, text) DataFrame — e.g.
-    assembled conversation texts for conversation-level near-dup. The
-    id column may be any orderable type (doc_a < doc_b dedups the
-    unordered pair either way)."""
+    Works over ANY (id, text) DataFrame — e.g. assembled conversation
+    texts for conversation-level near-dup. The id column may be any
+    orderable type (doc_a < doc_b dedups the unordered pair either
+    way)."""
     if threshold <= 0:
         raise ValueError(
             "ngram_jaccard_pairs requires threshold > 0: the inverted "
@@ -554,33 +465,22 @@ def ngram_jaccard_pairs_for(
     )
 
 
-def dedup_keep_list(
-    spark, sf_dir, threshold: float = 0.5, shingle_n: int = 3,
-) -> DataFrame:
+def dedup_keep_list_for(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """The consumable OUTPUT of near-dup dedup: per doc, whether it
     survives (cluster canonical = the minimum doc_id of its connected
     component; unclustered docs always survive) — the keep/drop table a
-    training pipeline anti-joins against before tokenization. Reuses
-    the memoized LSH pair set and the same label propagation as
-    duplicate_clusters, so a gate/pipeline that already clustered pays
-    only the final join. Output order is UNSPECIFIED (consumers join,
-    they don't scan in order — a corpus-wide range exchange here would
-    tax every pipeline run for the oracle's benefit; the gate query
-    adds orderBy at registration)."""
-    clusters = duplicate_clusters(
-        spark, sf_dir, threshold=threshold, shingle_n=shingle_n
-    )
-    return dedup_keep_list_for(_docs(spark, sf_dir), clusters)
-
-
-def dedup_keep_list_for(docs: DataFrame, clusters: DataFrame) -> DataFrame:
-    """dedup_keep_list over ANY doc universe + cluster labels — the
-    shared body of the fixture-table query and the composed transcript
-    pipeline (conversation-level keeper selection over assembled
-    conversations, where doc_id is a string conv_id). ``docs`` supplies
-    the id universe (any orderable id type); ``clusters`` is a
-    (doc_id, cluster_id) label table as produced by duplicate_clusters
-    (only docs that appear in some near-dup pair need a row)."""
+    training pipeline anti-joins against before tokenization. Shared
+    by the documents gate query and the composed transcript pipeline
+    (conversation-level keeper selection over assembled conversations,
+    where doc_id is a string conv_id). ``docs`` supplies the id
+    universe (any orderable id type); ``clusters`` is a (doc_id,
+    cluster_id) label table as produced by duplicate_clusters (only
+    docs that appear in some near-dup pair need a row), so a caller
+    that already clustered pays only the final join. Output order is
+    UNSPECIFIED (consumers join, they don't scan in order — a
+    corpus-wide range exchange here would tax every pipeline run for
+    the oracle's benefit; the gate query adds orderBy at
+    registration)."""
     return docs.select("doc_id").join(clusters, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias(
@@ -621,13 +521,12 @@ def simhash_64(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_pairs(spark, sf_dir, max_hamming: int = 3):
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming,
     via 4x16-bit band blocking. Pigeonhole: a pair within distance 3
     is GUARANTEED to share one exact 16-bit band, so recall is total at
     the default; max_hamming > 3 trades recall for reach (a pair at
     distance 4+ can spread one flip per band and be missed)."""
-    docs = _docs(spark, sf_dir)
     sim = simhash_64(docs)
     bands = sim.select(
         "doc_id",
@@ -677,8 +576,7 @@ def simhash_pairs(spark, sf_dir, max_hamming: int = 3):
 
 
 def duplicate_clusters(
-    spark, sf_dir, threshold: float = 0.5, shingle_n: int = 3,
-    max_iter: int | None = None, pairs: DataFrame | None = None,
+    pairs: DataFrame, max_iter: int | None = None
 ) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the near-dup
     pair graph, labeled by each component's minimum doc_id.
@@ -714,36 +612,14 @@ def duplicate_clusters(
     (cheap, partial-agged). DuckDB oracle: recursive CTE reachability
     over the identical exact pair set.
 
-    The returned label table is PERSISTED and materialized: on the
-    default memoized path the cluster cache owns it (released by
-    clear_pairs_cache); on the pairs=/max_iter path the CALLER owns
-    unpersisting it once downstream consumers have materialized.
+    The returned label table is PERSISTED and materialized; the CALLER
+    owns unpersisting it once downstream consumers have materialized.
     Output order is UNSPECIFIED (r4 contract): keeper selection and
     the composed pipeline JOIN the labels, so a baked-in orderBy would
     range-exchange the whole label table — bounded by docs-in-any-pair,
     still potentially billions at 100 TB — for an ordering only the
     gate oracle needs; the gate adds it at registration.
     """
-    cache_key = None
-    if pairs is None:
-        if max_iter is None:
-            # the default path memoizes the CONVERGED labels as well —
-            # keeper selection and the corpus filter re-consume the
-            # identical closure, and the propagation loop (not the
-            # cached pairs) is their dominant cost
-            cache_key = (
-                spark.sparkContext.applicationId, sf_dir,
-                input_signature(f"{sf_dir}/documents.parquet"),
-                threshold, shingle_n,
-            )
-            if cache_key in _CLUSTERS_CACHE:
-                return _CLUSTERS_CACHE[cache_key]
-        # memoized: a gate/pipeline that already ran pair-finding on
-        # this corpus reuses the persisted pair set instead of paying
-        # the signature+bucket+verify cascade again
-        pairs = minhash_lsh_pairs(
-            spark, sf_dir, threshold=threshold, shingle_n=shingle_n
-        )
     pairs = pairs.select("doc_a", "doc_b")
     edges = pairs.unionByName(
         pairs.select(
@@ -825,16 +701,11 @@ def duplicate_clusters(
 
     edges.unpersist()
     # materialize the final projection, then RELEASE the loop's last
-    # labels cache — on the memoized path a leaked copy would pin two
-    # label tables per cache entry and break clear_pairs_cache's
-    # release-everything contract; on the pairs=/max_iter path (the
-    # composed pipeline) a leaked labels cache had NO owner at all and
-    # outlived every run in the session (ADVICE r3). Either way the
-    # CALLER (or the cache) owns unpersisting the returned DataFrame —
-    # compose releases it once filter decisions are materialized.
+    # labels cache — a leaked copy would have NO owner at all and
+    # outlive every run in the session (ADVICE r3). The CALLER owns
+    # unpersisting the returned DataFrame — compose releases it once
+    # filter decisions are materialized, the gate memo on eviction.
     result = labels.select("doc_id", "cluster_id").persist()
     result.count()
     labels.unpersist()
-    if cache_key is not None:
-        _CLUSTERS_CACHE[cache_key] = result
     return result

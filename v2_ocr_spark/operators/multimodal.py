@@ -21,7 +21,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 MAGIC = b"FIMG"
@@ -102,19 +102,16 @@ def decode_image_batch(pdf: pd.DataFrame, decode=None) -> pd.DataFrame:
     )
 
 
-def image_meta(
-    spark: SparkSession, sf_dir: str, real_codec: bool = False
-) -> DataFrame:
+def image_meta(docs: DataFrame, real_codec: bool = False) -> DataFrame:
     """documents -> typed image metadata via binary mapInPandas pass.
 
     real_codec=True decodes with Pillow (environment-gated, same
     pattern as pdflayout.boxes_from_pdf_bytes) — the fixture's FIMG
     bytes are not a real format, so the real path is for tables whose
     binary column holds actual PNG/JPEG payloads."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
+    imgs = with_fake_image(docs.select("doc_id", "text")).select(
+        "doc_id", "image"
     )
-    imgs = with_fake_image(docs).select("doc_id", "image")
     return image_meta_for(imgs, real_codec=real_codec)
 
 
@@ -279,9 +276,8 @@ def sample_frames(videos: DataFrame, every_n: int = 2) -> DataFrame:
     return videos.mapInPandas(run, schema=FRAME_DDL)
 
 
-def frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def frame_sample_stats(docs: DataFrame) -> DataFrame:
     """documents -> sampled-frame counts per doc (rows-only query)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     frames = sample_frames(with_fake_video(docs), every_n=2)
     return (
         frames.groupBy("doc_id")
@@ -338,29 +334,22 @@ def image_dhash(imgs: DataFrame) -> DataFrame:
     return imgs.select("doc_id", "image").mapInPandas(run, schema=DHASH_DDL)
 
 
-def image_dhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+def image_dhash_table(docs: DataFrame) -> DataFrame:
     """documents -> the per-image dHash table (rows-only query: the
     hash is engine-specific; pair-finding over it is pytest-pinned
     with planted duplicates in test_dedup_similarity)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    return image_dhash(with_fake_image(docs)).orderBy("doc_id")
+    imgs = with_fake_image(docs.select("doc_id", "text"))
+    return image_dhash(imgs).orderBy("doc_id")
 
 
-def image_near_dup_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 6
-) -> DataFrame:
+def image_near_dup_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Image near-duplicate pairs by dHash hamming distance, found with
     an 8x8-bit banded self-join — pigeonhole: a pair within hamming 7
     must agree exactly on at least one of the 8 bands, so recall is
     total for max_hamming <= 7 and cost is an equi-join on (band, key),
     never an all-pairs product. Same LSH shape as simhash_pairs /
     minhash, applied to the image modality."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    h = image_dhash(with_fake_image(docs))
+    h = image_dhash(with_fake_image(docs.select("doc_id", "text")))
     bands = h.select(
         "doc_id",
         "dhash",
@@ -526,9 +515,8 @@ def chunk_audio(audio: DataFrame, samples_per_chunk: int = 256) -> DataFrame:
     return audio.select("doc_id", "audio").mapInPandas(run, schema=ACHUNK_DDL)
 
 
-def audio_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+def audio_chunk_stats(docs: DataFrame) -> DataFrame:
     """documents -> resampled+chunked audio segment counts (rows-only)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     chunks = chunk_audio(
         resample_audio(with_fake_audio(docs), 16000), samples_per_chunk=256
     )

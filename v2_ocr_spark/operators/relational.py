@@ -1,11 +1,11 @@
 """The reference's relational query surface (SURVEY.md §2.2-2.7),
 re-expressed as DataFrame builders.
 
-Every builder takes (spark, data_dir) where data_dir holds the
-generated transcripts/conversations parquet, and returns a DataFrame
-whose column names match the DuckDB oracle in __spark_entry__.py
-exactly. Timestamps are surfaced as epoch seconds (bigint) so value
-hashes are engine- and timezone-independent.
+Every operator takes the table(s) it reads — `turns` (transcripts),
+`conv` (conversations) or `events` — and returns a DataFrame whose
+column names match the DuckDB oracle in __spark_entry__.py exactly.
+Timestamps are surfaced as epoch seconds (bigint) so value hashes are
+engine- and timezone-independent.
 
 All of these are single-pass Catalyst plans: filters and projections
 push down to the Parquet scan, aggregates use partial (map-side)
@@ -15,19 +15,10 @@ conversations dimension.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from v2_ocr_spark.kernels.textfns import ARABIC_NUMERALS, RTL_DETECT_PATTERN
-
-
-def _t(spark: SparkSession, d: str) -> DataFrame:
-    return spark.read.parquet(f"{d}/transcripts.parquet")
-
-
-def _c(spark: SparkSession, d: str) -> DataFrame:
-    return spark.read.parquet(f"{d}/conversations.parquet")
 
 
 def _epoch(col: str) -> F.Column:
@@ -36,11 +27,10 @@ def _epoch(col: str) -> F.Column:
 
 # ---- scans / sorts / top-k ------------------------------------------------
 
-def queue_scan(spark, d):
+def queue_scan(conv):
     """S3: documents by status set, newest first (queue-service.ts:36-64)."""
     return (
-        _c(spark, d)
-        .where(F.col("status").isin("queued", "processing", "pending"))
+        conv.where(F.col("status").isin("queued", "processing", "pending"))
         .select(
             "conv_id", "status", _epoch("created_at").alias("created_epoch")
         )
@@ -48,35 +38,32 @@ def queue_scan(spark, d):
     )
 
 
-def results_scan(spark, d):
+def results_scan(turns):
     """S4: one conversation's turns in stable order (results-service.ts:23-37)."""
     return (
-        _t(spark, d)
-        .where(F.col("conv_id") == "conv00000001")
+        turns.where(F.col("conv_id") == "conv00000001")
         .select("conv_id", "turn_idx", "role", "text")
         .orderBy("turn_idx")
     )
 
 
-def top_queue(spark, d):
+def top_queue(conv):
     """O3: first 5 queue items (MAX_QUEUE_DISPLAY, config/constants.ts:4)."""
     return (
-        _c(spark, d)
-        .select("conv_id", "status", _epoch("created_at").alias("created_epoch"))
+        conv.select("conv_id", "status", _epoch("created_at").alias("created_epoch"))
         .orderBy(F.desc("created_epoch"), "conv_id")
         .limit(5)
     )
 
 
-def multi_key_sort(spark, d):
+def multi_key_sort(conv):
     """O2: sort by coalesce(processing_started_at, created_at) desc then
     name (app/documents/page.tsx:90-107), deterministic tiebreak. The
     name key compares with ICU root collation (Spark 4 `collate(...,
     'UNICODE')`) to match the reference's localeCompare — UTF-8 binary
     order diverges from UCA on any non-ASCII name."""
     return (
-        _c(spark, d)
-        .select(
+        conv.select(
             "conv_id",
             "source_name",
             F.coalesce(
@@ -92,7 +79,7 @@ def multi_key_sort(spark, d):
     )
 
 
-def name_sort_collated(spark, d):
+def name_sort_collated(conv):
     """O2 collation surface, made hash-checkable: localeCompare name
     order (app/documents/page.tsx:97-99) materialized as an explicit
     rank — an ORDER BY alone is invisible to an order-insensitive
@@ -103,18 +90,17 @@ def name_sort_collated(spark, d):
     w = Window.orderBy(
         F.collate(F.col("source_name"), "UNICODE"), "conv_id"
     )
-    return _c(spark, d).select(
+    return conv.select(
         "conv_id",
         "source_name",
         F.row_number().over(w).alias("rk"),
     )
 
 
-def size_sort(spark, d):
+def size_sort(conv):
     """O2 size variant: largest conversations first."""
     return (
-        _c(spark, d)
-        .select("conv_id", "size_bytes")
+        conv.select("conv_id", "size_bytes")
         .orderBy(F.desc("size_bytes"), "conv_id")
         .limit(10)
     )
@@ -122,12 +108,11 @@ def size_sort(spark, d):
 
 # ---- filters / predicates --------------------------------------------------
 
-def compound_filter(spark, d):
+def compound_filter(conv):
     """P5: name contains (case-insensitive) AND status filter
     (app/documents/page.tsx:109-116)."""
     return (
-        _c(spark, d)
-        .where(
+        conv.where(
             F.lower(F.col("source_name")).contains("report")
             & (F.col("status") == "completed")
         )
@@ -135,21 +120,19 @@ def compound_filter(spark, d):
     )
 
 
-def fulltext_search(spark, d):
+def fulltext_search(turns):
     """P6: case-insensitive substring over turn texts
     (app/documents/[id]/page.tsx:697-711)."""
     return (
-        _t(spark, d)
-        .where(F.lower(F.col("text")).contains("fox"))
+        turns.where(F.lower(F.col("text")).contains("fox"))
         .select("conv_id", "turn_idx")
     )
 
 
-def viewable(spark, d):
+def viewable(conv):
     """P8: completed OR (cancelled AND turns>0) OR error/failed
     (app/components/document-list.tsx:202-213)."""
-    c = _c(spark, d)
-    return c.select(
+    return conv.select(
         "conv_id",
         "status",
         (
@@ -160,10 +143,10 @@ def viewable(spark, d):
     )
 
 
-def status_invariant(spark, d):
+def status_invariant(conv):
     """P9: no row may have status='queued' AND error set
     (lib/tests/document-status-validation.ts:21-23)."""
-    return _c(spark, d).agg(
+    return conv.agg(
         F.count(
             F.when(
                 (F.col("status") == "queued") & F.col("error").isNotNull(), 1
@@ -192,10 +175,10 @@ def repair_status_invariant(conversations, repaired_at: str):
     )
 
 
-def status_repair(spark, d, repaired_at: str = "2025-01-01 00:00:00+00:00"):
+def status_repair(conv, repaired_at: str = "2025-01-01 00:00:00+00:00"):
     """Oracled view of repair_status_invariant over the conversations
     dim: per-conversation post-repair error + audit columns."""
-    rep = repair_status_invariant(_c(spark, d), repaired_at)
+    rep = repair_status_invariant(conv, repaired_at)
     return rep.select(
         "conv_id",
         "status",
@@ -205,10 +188,10 @@ def status_repair(spark, d, repaired_at: str = "2025-01-01 00:00:00+00:00"):
     )
 
 
-def range_filter(spark, d):
+def range_filter(conv):
     """P4: created_at < cutoff (retention scan, stats-service.ts:163-167)."""
     return (
-        _c(spark, d)
+        conv
         # the +00:00 offset pins the instant regardless of the session
         # timezone (a bare literal would parse in local time)
         .where(
@@ -221,18 +204,17 @@ def range_filter(spark, d):
 
 # ---- aggregates -------------------------------------------------------------
 
-def status_counts(spark, d):
+def status_counts(conv):
     """A1: status distribution (queue-service.ts:76-80)."""
-    return _c(spark, d).groupBy("status").agg(F.count("*").alias("n"))
+    return conv.groupBy("status").agg(F.count("*").alias("n"))
 
 
-def dashboard_stats(spark, d):
+def dashboard_stats(conv):
     """A2: totalProcessed / avg processing seconds / success rate
     (app/page.tsx:168-180)."""
-    c = _c(spark, d)
     done = F.col("status") == "completed"
     failed = F.col("status").isin("failed", "error")
-    return c.agg(
+    return conv.agg(
         F.count(F.when(done | failed, 1)).alias("total_processed"),
         F.round(
             F.avg(
@@ -250,28 +232,27 @@ def dashboard_stats(spark, d):
     )
 
 
-def storage_stats(spark, d):
+def storage_stats(conv):
     """A4: sum of sizes (stats-service.ts:82-103)."""
-    return _c(spark, d).agg(
+    return conv.agg(
         F.sum("size_bytes").alias("total_bytes"),
         F.count("*").alias("n_convs"),
     )
 
 
-def text_size(spark, d):
+def text_size(turns):
     """A4 text variant: total text chars (stats-service.ts:106-127)."""
-    return _t(spark, d).agg(
+    return turns.agg(
         F.sum(F.length(F.coalesce("text", F.lit("")))).alias("total_chars")
     )
 
 
-def turns_per_conversation(spark, d):
+def turns_per_conversation(turns):
     """A6: total turns per conversation via window count
     (file-processor.ts:161,316 total_pages analog)."""
     w = Window.partitionBy("conv_id")
     return (
-        _t(spark, d)
-        .where(F.col("conv_id") == "conv00000002")
+        turns.where(F.col("conv_id") == "conv00000002")
         .select(
             "conv_id",
             "turn_idx",
@@ -280,11 +261,10 @@ def turns_per_conversation(spark, d):
     )
 
 
-def progress(spark, d):
+def progress(turns):
     """A5: floor(done*100/total) per conversation (file-processor.ts:322)."""
     return (
-        _t(spark, d)
-        .groupBy("conv_id")
+        turns.groupBy("conv_id")
         .agg(
             F.floor(
                 F.max("turn_idx") * 100 / F.count("*")
@@ -293,40 +273,38 @@ def progress(spark, d):
     )
 
 
-def role_counts(spark, d):
+def role_counts(turns):
     """A1 analog over turns: per-role counts."""
-    return _t(spark, d).groupBy("role").agg(F.count("*").alias("n"))
+    return turns.groupBy("role").agg(F.count("*").alias("n"))
 
 
 # ---- joins ------------------------------------------------------------------
 
-def semi_join_completed(spark, d):
+def semi_join_completed(turns, conv):
     """J1: turns whose conversation exists & is completed — broadcast
     left-semi (results-service.ts:57-68 existence check)."""
-    t, c = _t(spark, d), _c(spark, d)
-    dim = c.where(F.col("status") == "completed").select("conv_id")
+    dim = conv.where(F.col("status") == "completed").select("conv_id")
     return (
-        t.join(F.broadcast(dim), "conv_id", "left_semi")
+        turns.join(F.broadcast(dim), "conv_id", "left_semi")
         .groupBy("conv_id")
         .agg(F.count("*").alias("n_turns"))
     )
 
 
-def anti_join_cancelled(spark, d):
+def anti_join_cancelled(turns, conv):
     """J2: turns surviving a cascade delete of cancelled conversations
     (queue-service.ts:250-277)."""
-    t, c = _t(spark, d), _c(spark, d)
-    dim = c.where(F.col("status") == "cancelled").select("conv_id")
-    return t.join(F.broadcast(dim), "conv_id", "left_anti").agg(
+    dim = conv.where(F.col("status") == "cancelled").select("conv_id")
+    return turns.join(F.broadcast(dim), "conv_id", "left_anti").agg(
         F.count("*").alias("surviving_turns")
     )
 
 
 # ---- scalar-function queries -------------------------------------------------
 
-def rtl_flags(spark, d):
+def rtl_flags(conv):
     """E5: RTL detection over source names ([id]/page.tsx:100-103)."""
-    return _c(spark, d).select(
+    return conv.select(
         "conv_id",
         "source_name",
         F.col("source_name").rlike(RTL_DETECT_PATTERN).alias("is_rtl"),
@@ -339,19 +317,10 @@ def _arabic_turn_idx() -> F.Column:
     ).alias("turn_idx_ar")
 
 
-def arabic_numerals(spark, d):
-    """E6: digit mapping for ar/fa content ([id]/page.tsx:153-158)."""
-    return (
-        _t(spark, d)
-        .where(F.col("conv_id") == "conv00000004")
-        .select("conv_id", "turn_idx", _arabic_turn_idx())
-    )
-
-
-def arabic_numerals_all(spark, d):
-    """E6 over every turn (the combined gate query's surface — same
-    expression, no conversation filter)."""
-    return _t(spark, d).select("conv_id", "turn_idx", _arabic_turn_idx())
+def arabic_numerals_all(turns):
+    """E6: digit mapping for ar/fa content ([id]/page.tsx:153-158),
+    over every turn (the combined gate query's surface)."""
+    return turns.select("conv_id", "turn_idx", _arabic_turn_idx())
 
 
 # ---- E7 / E10 / A7 — sanitization, human formatting, ETA ------------------
@@ -364,7 +333,7 @@ def _js_ws_class() -> str:
     return "[" + _re.escape(JS_WS) + "]"
 
 
-def safe_names(spark, d):
+def safe_names(conv):
     """E7 distributed: sanitize source names for export
     (lib/utils.ts:29-71), fallback date injected for determinism."""
     from v2_ocr_spark.kernels.markdown import JS_WS
@@ -386,7 +355,7 @@ def safe_names(spark, d):
     # elimination ACROSS conditional branches, so inlining `s` into
     # every branch re-runs the regexp chain per branch (the CLAUDE.md
     # CASE trap; same fix as lang_id_for's counts projection)
-    pre = _c(spark, d).select(
+    pre = conv.select(
         "conv_id",
         "source_name",
         sanitized.alias("_s"),
@@ -418,7 +387,7 @@ def _strip_zeros(col: F.Column) -> F.Column:
     return F.regexp_replace(col.cast("string"), r"\.?0+$", "")
 
 
-def human_sizes(spark, d):
+def human_sizes(conv):
     """E10: bytes -> '1.5 KB' style, exact reference semantics
     (lib/file-utils.ts:94-100: floor(log1024), toFixed(2), parseFloat)."""
     b = F.col("size_bytes").cast("double")
@@ -436,10 +405,10 @@ def human_sizes(spark, d):
     fmt = F.when(F.col("size_bytes") == 0, F.lit("0 B")).otherwise(
         F.concat(val, F.lit(" "), unit)
     )
-    return _c(spark, d).select("conv_id", "size_bytes", fmt.alias("human_size"))
+    return conv.select("conv_id", "size_bytes", fmt.alias("human_size"))
 
 
-def durations(spark, d):
+def durations(conv):
     """E10 duration variant (file-utils.ts:102-116) over completed
     conversations' processing time."""
     ms = (
@@ -469,37 +438,36 @@ def durations(spark, d):
         .otherwise(F.concat(sec.cast("string"), F.lit("s")))
     )
     return (
-        _c(spark, d)
-        .where(F.col("status") == "completed")
+        conv.where(F.col("status") == "completed")
         .select("conv_id", fmt.alias("duration_fmt"))
     )
 
 
-def eta_estimate(spark, d):
+def eta_estimate(conv):
     """A7: processing-time heuristic (file-utils.ts:118-127):
     2000 ms base + ceil(MB*10 pages)*2000 ms."""
     mb = F.col("size_bytes").cast("double") / F.lit(1048576.0)
     eta = (F.lit(2000) + F.ceil(mb * 10) * 2000).cast("long")
-    return _c(spark, d).select("conv_id", eta.alias("eta_ms"))
+    return conv.select("conv_id", eta.alias("eta_ms"))
 
 
 # ---- P7 / E9 / E13 — validity, IO-boundary renames, status labels ---------
 
-def validity_check(spark, d):
+def validity_check(turns):
     """P7: file-validity predicate analog (queue-manager.ts:474-479):
     size cap + kind whitelist, emitted as a boolean column (invalid
     rows are never dropped — P10)."""
     valid = (F.length(F.coalesce("text", F.lit(""))) <= 65536) & F.col(
         "role"
     ).isin("user", "assistant", "tool")
-    return _t(spark, d).select("conv_id", "turn_idx", valid.alias("is_valid"))
+    return turns.select("conv_id", "turn_idx", valid.alias("is_valid"))
 
 
-def camel_case_view(spark, d):
+def camel_case_view(conv):
     """E9: snake_case -> camelCase at the IO boundary
     (lib/database/utils/case-conversion.ts:22-58); `conv_id` plays the
     exempt `id` role and keeps its name."""
-    return _c(spark, d).select(
+    return conv.select(
         "conv_id",
         F.col("source_name").alias("sourceName"),
         F.col("total_turns").alias("totalTurns"),
@@ -507,7 +475,7 @@ def camel_case_view(spark, d):
     )
 
 
-def status_labels(spark, d):
+def status_labels(conv):
     """E13: status -> display text, exact reference getStatusText
     semantics for the 'en' locale without rate-limit state
     (document-list.tsx:229-246; labels lib/i18n/translations.ts:317-365
@@ -528,7 +496,7 @@ def status_labels(spark, d):
         .when(F.col("status") == "failed", F.lit("Failed"))
         .otherwise(F.lit("Error"))
     )
-    return _c(spark, d).select("conv_id", "status", label.alias("label"))
+    return conv.select("conv_id", "status", label.alias("label"))
 
 
 def status_labels_full(df, now_ms: float):
@@ -591,22 +559,17 @@ def status_labels_full(df, now_ms: float):
 
 # ---- events-table operators (stream-shaped batch analytics) ----------------
 
-def _e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
 def _ntz_epoch(col: str) -> F.Column:
     # events.ts is TIMESTAMP_NTZ (parquet without isAdjustedToUTC);
     # route through TIMESTAMP so the cast to epoch seconds resolves
     return F.col(col).cast("timestamp").cast("long")
 
 
-def events_by_type(spark, sf_dir):
+def events_by_type(events):
     """Per-type counts + exact value sums (decimal accumulate so the
     result is order-independent, then surfaced as double)."""
     return (
-        _e(spark, sf_dir)
-        .groupBy("event_type")
+        events.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             F.sum(F.col("value").cast("decimal(28,6)"))
@@ -616,25 +579,24 @@ def events_by_type(spark, sf_dir):
     )
 
 
-def events_daily(spark, sf_dir):
+def events_daily(events):
     """Event-time day rollup — the batch shape of a streaming windowed
     count (no unbounded source in the reference, SURVEY §2.9)."""
     # events.ts is TIMESTAMP_NTZ (wall-clock, no zone): to_date on NTZ
     # is timezone-free in BOTH engines, so the bucket is stable no
     # matter what session timezone the caller's SparkSession uses
     return (
-        _e(spark, sf_dir)
-        .groupBy(F.to_date("ts").cast("string").alias("day"))
+        events.groupBy(F.to_date("ts").cast("string").alias("day"))
         .agg(F.count("*").alias("n"))
     )
 
 
-def sessionize(spark, sf_dir, gap_minutes: int = 30):
+def sessionize(events, gap_minutes: int = 30):
     """Gap-based sessionization per user: a new session starts when the
     time since the previous event exceeds the gap. One window pass
     (lag + running sum) — the scalable formulation; at 100 TB the
     window partitions by user_id so skew = hottest user."""
-    e = _e(spark, sf_dir).select("user_id", "event_id", "ts")
+    e = events.select("user_id", "event_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.lit(gap_minutes * 60)
     new_sess = (
@@ -656,9 +618,9 @@ def sessionize(spark, sf_dir, gap_minutes: int = 30):
     )
 
 
-def top_events_per_user(spark, sf_dir, k: int = 2, n_users: int = 10):
+def top_events_per_user(events, k: int = 2, n_users: int = 10):
     """Top-k per group: the k most recent events for the first users."""
-    e = _e(spark, sf_dir).where(F.col("user_id") < n_users)
+    e = events.where(F.col("user_id") < n_users)
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
@@ -677,11 +639,11 @@ def top_events_per_user(spark, sf_dir, k: int = 2, n_users: int = 10):
 
 # ---- extras the reference lacks but Spark SQL gives for free ---------------
 
-def status_rollup(spark, d):
+def status_rollup(conv):
     """ROLLUP over (status, viewable-ish flag) — subtotals + grand
     total. The reference computes these with separate queries
     (app/page.tsx:547-559); one rollup pass replaces them all."""
-    c = _c(spark, d).withColumn(
+    c = conv.withColumn(
         "is_done", F.col("status").isin("completed", "failed", "error")
     )
     return (
@@ -695,19 +657,18 @@ def status_rollup(spark, d):
     )
 
 
-def distinct_users(spark, sf_dir):
+def distinct_users(events):
     """Exact distinct cardinality over the events stream table."""
-    return _e(spark, sf_dir).agg(
+    return events.agg(
         F.countDistinct("user_id").alias("n_users"),
         F.countDistinct("event_type").alias("n_types"),
     )
 
 
-def value_percentiles(spark, sf_dir):
+def value_percentiles(events):
     """Exact interpolated percentiles of event values per type."""
-    e = _e(spark, sf_dir)
     return (
-        e.groupBy("event_type")
+        events.groupBy("event_type")
         .agg(
             F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
             F.round(F.expr("percentile(value, 0.95)"), 6).alias("p95"),
@@ -715,19 +676,14 @@ def value_percentiles(spark, sf_dir):
     )
 
 
-def value_histogram(spark, sf_dir, n_bins: int = 20):
+def value_histogram_for(e, n_bins: int = 20):
     """Fixed-bin histogram of event values per type — the exact,
     SQL-expressible cousin of a sketch: bin width derives from the
     global min/max (one cheap pre-agg, broadcastable), then one
     codegen'd groupBy. At 10^12 rows both aggregations are map-side
-    partial; no sort, no window."""
-    return value_histogram_for(
-        _e(spark, sf_dir).select("event_type", "value"), n_bins
-    )
+    partial; no sort, no window.
 
-
-def value_histogram_for(e, n_bins: int = 20):
-    """Histogram over any (event_type, value) table. When every value
+    Works over any (event_type, value) table. When every value
     is identical the bin width is 0 and the division would produce
     NaN (and the oracle's CAST(NaN AS INT) errors) — that degenerate
     input collapses to bin 0, guarded identically in the oracle SQL.
@@ -762,17 +718,16 @@ def value_histogram_for(e, n_bins: int = 20):
     )
 
 
-def approx_distinct_users(spark, sf_dir, rsd: float = 0.02):
+def approx_distinct_users(events, rsd: float = 0.02):
     """HyperLogLog++ distinct-user estimate per event type — the
     sketch path for cardinality at 10^12 rows (fixed-size sketch per
     group, map-side mergeable; exact distinct shuffles every key).
     Checked against exact counts within 3*rsd in tests (rows-only for
     the driver: DuckDB's approx sketch differs — HLL++ register layout
     is engine-internal, so this entry is PERMANENTLY rows-only by
-    design; distinct_kmv below is the fully-oracled deterministic
+    design; distinct_kmv_for below is the fully-oracled deterministic
     sketch twin)."""
-    e = _e(spark, sf_dir)
-    return e.groupBy("event_type").agg(
+    return events.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd).alias("approx_users")
     )
 
@@ -782,7 +737,7 @@ def approx_distinct_users(spark, sf_dir, rsd: float = 0.02):
 KMV_K = 64
 
 
-def distinct_kmv(spark, sf_dir, k: int = KMV_K):
+def distinct_kmv_for(e, k: int = KMV_K):
     """Deterministic KMV (bottom-k / k-minimum-values) distinct-user
     sketch per event type — the oracle-able mergeable sketch: keep the
     k smallest xxhash64(user_id) values per group; if the sketch is
@@ -804,12 +759,6 @@ def distinct_kmv(spark, sf_dir, k: int = KMV_K):
     shuffle. (A manual salt pre-pass was measured as a strictly worse
     plan: one extra full exchange of the distinct pairs, with Spark
     inserting its own group limits around it anyway.)"""
-    return distinct_kmv_for(
-        _e(spark, sf_dir).select("event_type", "user_id"), k
-    )
-
-
-def distinct_kmv_for(e, k: int = KMV_K):
     # NULL user ids are DROPPED explicitly: Spark's xxhash64(NULL)
     # degrades to the seed (42) — a phantom "user" that would collide
     # across groups — while the oracle's hash-table join silently

@@ -21,15 +21,11 @@ partition key so each query probes a pruned partition subset.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _materialized(df: DataFrame) -> DataFrame:
@@ -56,16 +52,6 @@ def _dot(a, b) -> F.Column:
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
-    )
-
-
-def _norm(a) -> F.Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
     )
 
 
@@ -118,7 +104,7 @@ def _unit_pd(a):
 # threshold Filter and the final AQE plan carries TWO ArrowEvalPython
 # nodes for the same dot — every surviving row scored twice (the
 # Filter-over-Project duplication trap with_unit_norm documents;
-# observed live on semantic_near_dup_pairs). Marking it
+# observed live on semantic_near_dup_pairs_for). Marking it
 # nondeterministic is a white lie that forbids the inlining; the value
 # is still pure. This MUST be a SEPARATE UDF instance built from the
 # raw function: asNondeterministic() mutates the UserDefinedFunction
@@ -181,11 +167,11 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def brute_force_topk(
-    spark, sf_dir, k: int = 5, n_queries: int = 10
+    emb: DataFrame, k: int = 5, n_queries: int = 10
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for the first n_queries vectors
-    (queries are corpus members; self-matches excluded)."""
-    emb = _emb(spark, sf_dir)
+    """Exact top-k cosine neighbors for the first n_queries vectors of
+    a (vec_id, embedding) table (queries are corpus members;
+    self-matches excluded)."""
     corpus = with_unit_norm(emb).select(
         F.col("vec_id").alias("nbr_id"), F.col("unit").alias("nbr_unit")
     )
@@ -205,7 +191,7 @@ def brute_force_topk(
 
 
 def cosine_near_dup_pairs(
-    spark, sf_dir, threshold: float = 0.4, max_corpus: int = 50_000,
+    emb: DataFrame, threshold: float = 0.4, max_corpus: int = 50_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — EXACT all-pairs, which
     is inherently O(n^2) dot products. This is the small-corpus oracle
@@ -222,7 +208,6 @@ def cosine_near_dup_pairs(
     import numpy as np
     import pandas as pd
 
-    emb = _emb(spark, sf_dir)
     n = emb.count()
     if n > max_corpus:
         raise ValueError(
@@ -239,7 +224,7 @@ def cosine_near_dup_pairs(
     )
     with np.errstate(divide="ignore", invalid="ignore"):
         unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, unit))
+    bc = emb.sparkSession.sparkContext.broadcast((ids, unit))
 
     def block_pairs(batches):
         all_ids, all_unit = bc.value
@@ -317,11 +302,11 @@ def ivf_assign(emb_unit: DataFrame, centroids: DataFrame) -> DataFrame:
 
 
 def ivf_topk(
-    spark, sf_dir, k: int = 5, n_queries: int = 10,
+    emb: DataFrame, k: int = 5, n_queries: int = 10,
     nlist: int = 16, nprobe: int = 4,
 ) -> DataFrame:
     """IVF-style ANN: probe only the nprobe closest cells per query."""
-    emb = with_unit_norm(_emb(spark, sf_dir)).select("vec_id", "unit")
+    emb = with_unit_norm(emb).select("vec_id", "unit")
     cents = _centroids(emb, nlist)
     assigned = ivf_assign(emb, cents)
 
@@ -402,7 +387,7 @@ def srp_signatures(
 
 
 def srp_lsh_topk(
-    spark, sf_dir, k: int = 5, n_queries: int = 10,
+    emb: DataFrame, k: int = 5, n_queries: int = 10,
     n_tables: int = 32, n_bits: int = 6,
 ) -> DataFrame:
     """ANN top-k via SRP-LSH: candidates share a (table, bucket) with
@@ -421,7 +406,7 @@ def srp_lsh_topk(
     (n_tables, n_bits) instead of data size. Exact re-rank cost is
     candidates-only, as in the minhash pipeline.
     """
-    emb = with_unit_norm(_emb(spark, sf_dir)).select("vec_id", "unit")
+    emb = with_unit_norm(emb).select("vec_id", "unit")
     # the BLAS signature pass feeds BOTH sides of the bucket join —
     # persist so the corpus is signed once (same pattern as the
     # minhash pipeline's sig.persist()); released below once the
@@ -589,7 +574,7 @@ def kmeans_assign_for(
 
 
 def kmeans_clusters(
-    spark, sf_dir, k: int = 16, n_iter: int = 3
+    emb: DataFrame, k: int = 16, n_iter: int = 3
 ) -> DataFrame:
     """-> (vec_id, cluster_id): corpus embedding clustering — the
     grouping stage of semantic dedup / topic bucketing. See
@@ -598,7 +583,7 @@ def kmeans_clusters(
     projects from is released here, since unpersist() on a derived
     projection would be a silent no-op for the caller."""
     assigned = kmeans_assign_for(
-        with_unit_norm(_emb(spark, sf_dir)).select("vec_id", "unit"),
+        with_unit_norm(emb).select("vec_id", "unit"),
         k,
         n_iter,
     )
@@ -612,20 +597,6 @@ def kmeans_clusters(
         assigned.unpersist()
 
 
-def semantic_near_dup_pairs(
-    spark,
-    sf_dir,
-    k: int = 16,
-    n_iter: int = 3,
-    threshold: float = 0.9,
-    max_cluster: int = 50_000,
-) -> DataFrame:
-    """SemDeDup-style semantic near-duplicate pairs over the
-    embeddings table — see semantic_near_dup_pairs_for."""
-    emb = with_unit_norm(_emb(spark, sf_dir)).select("vec_id", "unit")
-    return semantic_near_dup_pairs_for(emb, k, n_iter, threshold, max_cluster)
-
-
 def semantic_near_dup_pairs_for(
     emb_unit: DataFrame,
     k: int = 16,
@@ -633,7 +604,9 @@ def semantic_near_dup_pairs_for(
     threshold: float = 0.9,
     max_cluster: int = 50_000,
 ) -> DataFrame:
-    """-> (id_a, id_b, cluster_id, cosine): SemDeDup — cluster the
+    """-> (id_a, id_b, cluster_id, cosine): SemDeDup-style semantic
+    near-duplicate pairs over unit-normalized embeddings
+    (with_unit_norm(emb).select("vec_id", "unit")) — cluster the
     embedding space with k-means, then find cosine near-duplicates
     ONLY within each cluster. The k-means stage turns the O(n^2)
     all-pairs scan into sum-of-cluster-size-squared work: with k

@@ -10,7 +10,7 @@ The regex patterns are chosen to mean the same thing in Java regex
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 # script ranges as literal characters (identical bytes in both engines)
@@ -31,15 +31,6 @@ BPE_ISH = r"\p{L}+|\d+|[^\p{L}\d\s]+"
 WS_TOKEN = r"\S+"
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _word_pat(w: str) -> str:
-    # \b is identical in Java regex and RE2 for ASCII words
-    return rf"\b{w}\b"
-
-
 def stopword_pattern(lang: str) -> str:
     """One alternation per language: count-equivalent to summing the
     per-word counts (each match is a whole \\b-delimited token equal to
@@ -53,14 +44,10 @@ def _stop_hits(col, lang: str) -> F.Column:
     return F.regexp_count(col, F.lit(stopword_pattern(lang)))
 
 
-def lang_id(spark, sf_dir) -> DataFrame:
-    """n-gram/script heuristic language ID over documents."""
-    return lang_id_for(_docs(spark, sf_dir), ["doc_id"])
-
-
 def lang_id_for(d: DataFrame, keys: list[str]) -> DataFrame:
-    """Language ID for any (keys..., text) table: script ratios decide
-    non-latin scripts, stopword votes break latin-script ties."""
+    """n-gram/script heuristic language ID for any (keys..., text)
+    table: script ratios decide non-latin scripts, stopword votes break
+    latin-script ties."""
     text = F.lower(F.col("text"))
     n = F.greatest(F.length(text), F.lit(1))
     # materialize each count ONCE in a first projection — referencing
@@ -99,15 +86,10 @@ def lang_id_for(d: DataFrame, keys: list[str]) -> DataFrame:
     return counts.select(*keys, pred.alias("pred_lang"))
 
 
-def quality_score(spark, sf_dir) -> DataFrame:
-    """Length / punctuation / stopword-ratio quality heuristic over
-    documents."""
-    return quality_score_for(_docs(spark, sf_dir), ["doc_id"])
-
-
 def quality_score_for(d: DataFrame, keys: list[str]) -> DataFrame:
-    """Quality heuristic for any (keys..., text) table — the standard
-    pre-training text filters, one codegen'd projection."""
+    """Length / punctuation / stopword-ratio quality heuristic for any
+    (keys..., text) table — the standard pre-training text filters, one
+    codegen'd projection."""
     text = F.col("text")
     n = F.greatest(F.length(text), F.lit(1)).cast("double")
     n_alpha = F.regexp_count(text, F.lit(r"\p{L}")).cast("double")
@@ -131,14 +113,10 @@ def quality_score_for(d: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def token_counts(spark, sf_dir) -> DataFrame:
-    """Whitespace and BPE-ish token counts per document."""
-    return token_counts_for(_docs(spark, sf_dir), ["doc_id"])
-
-
 def token_counts_for(d: DataFrame, keys: list[str]) -> DataFrame:
-    """Token counts for any (keys..., text) table — the budget signal
-    every training-data pipeline aggregates before packing."""
+    """Whitespace and BPE-ish token counts for any (keys..., text)
+    table — the budget signal every training-data pipeline aggregates
+    before packing."""
     return d.select(
         *keys,
         F.regexp_count(F.col("text"), F.lit(WS_TOKEN)).alias("ws_tokens"),
@@ -146,13 +124,9 @@ def token_counts_for(d: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def fingerprints(spark, sf_dir) -> DataFrame:
-    """Deterministic document fingerprints: md5 of the text and of the
-    whitespace-normalized text (the exact-dedup / lineage key)."""
-    return fingerprints_for(_docs(spark, sf_dir), ["doc_id"])
-
-
 def fingerprints_for(d: DataFrame, keys: list[str]) -> DataFrame:
+    """Deterministic fingerprints: md5 of the text and of the
+    whitespace-normalized text (the exact-dedup / lineage key)."""
     norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     return d.select(
         *keys,
@@ -161,7 +135,7 @@ def fingerprints_for(d: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def rolling_fingerprint(spark, sf_dir, window: int = 8) -> DataFrame:
+def rolling_fingerprint(docs: DataFrame, window: int = 8) -> DataFrame:
     """The GATE surface of the winnowing fingerprint: scalar columns
     only — (doc_id, n_fps, fp_digest) with fp_digest = md5 of the
     comma-joined sorted fingerprint set. The driver canonicalizes every
@@ -171,7 +145,7 @@ def rolling_fingerprint(spark, sf_dir, window: int = 8) -> DataFrame:
     projects it to scalars, the same idiom as _canon_spans. DuckDB twin:
     expected-parquet from the pure-Python winnowing reimplementation
     (fixtures/oracle_expected.py), with the md5 recomputed in DuckDB."""
-    fps = rolling_fingerprint_set(spark, sf_dir, window)
+    fps = rolling_fingerprint_set(docs, window)
     return fps.select(
         "doc_id",
         F.size("fingerprint_set").cast("int").alias("n_fps"),
@@ -186,7 +160,7 @@ def rolling_fingerprint(spark, sf_dir, window: int = 8) -> DataFrame:
     )
 
 
-def rolling_fingerprint_set(spark, sf_dir, window: int = 8) -> DataFrame:
+def rolling_fingerprint_set(docs: DataFrame, window: int = 8) -> DataFrame:
     """Winnowing-style content fingerprint: distinct minima over rolling
     windows of word-shingle hashes — shift-robust. Arrow-batched numpy
     kernel (sliding_window_view min-reduce); the Catalyst nested-slice
@@ -220,8 +194,7 @@ def rolling_fingerprint_set(spark, sf_dir, window: int = 8) -> DataFrame:
                 out.append((doc_id, sorted(set(mins.tolist()))))
             yield pd.DataFrame(out, columns=["doc_id", "fingerprint_set"])
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    return d.mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         run, schema="doc_id long, fingerprint_set array<long>"
     )
 
@@ -291,15 +264,14 @@ def redact_pii(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
-def repetition_stats(spark, sf_dir) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: line counts and
     the duplicate-line fraction (boilerplate/listing detector). Pure
     codegen array ops; DuckDB list functions are the twin."""
-    d = _docs(spark, sf_dir)
     lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
     n = F.size(lines)
     uniq = F.size(F.array_distinct(lines))
-    return d.select(
+    return docs.select(
         "doc_id",
         n.alias("n_lines"),
         uniq.alias("distinct_lines"),
@@ -309,7 +281,7 @@ def repetition_stats(spark, sf_dir) -> DataFrame:
     )
 
 
-def dedup_lines(spark, sf_dir) -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """The TRANSFORM counterpart of repetition_stats: remove repeated
     lines within each document, keeping first occurrences in order —
     the Gopher-style boilerplate/listing scrub applied, not just
@@ -318,7 +290,7 @@ def dedup_lines(spark, sf_dir) -> DataFrame:
     scrub), matching the oracle. DuckDB's list_distinct does NOT
     preserve order, so the twin reconstructs first-occurrence via a
     per-(doc, line) window instead."""
-    d = _docs(spark, sf_dir).where(F.col("text").isNotNull())
+    d = docs.where(F.col("text").isNotNull())
     lines = F.split(F.col("text"), "\n")
     return d.select(
         "doc_id",
@@ -342,7 +314,7 @@ def _md5_bucket(col: str) -> F.Column:
     ).cast("int")
 
 
-def hash_sample(spark, sf_dir, rate: float = 0.1) -> DataFrame:
+def hash_sample(docs: DataFrame, rate: float = 0.1) -> DataFrame:
     """Deterministic hash-bucket sampling: keep docs whose md5(doc_id)
     prefix falls under rate — reproducible across runs, engines and
     cluster sizes (unlike RNG-based df.sample), and stable under
@@ -350,12 +322,11 @@ def hash_sample(spark, sf_dir, rate: float = 0.1) -> DataFrame:
     at 10^12 rows. DuckDB computes the identical md5 bucket."""
     h = _md5_bucket("doc_id")
     cut = hash_sample_cutoff(rate)
-    d = _docs(spark, sf_dir)
     # the bucket expression appears in both the Filter and the Project;
     # aliasing it first would just be substituted back by predicate
     # pushdown. The double md5 per KEPT row is accepted: it is trivial
     # next to the scan and only applies to the sampled fraction.
-    return d.where(h < cut).select("doc_id", h.alias("bucket"))
+    return docs.where(h < cut).select("doc_id", h.alias("bucket"))
 
 
 def sample_conversations(df: DataFrame, rate: float = 0.1) -> DataFrame:

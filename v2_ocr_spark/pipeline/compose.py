@@ -168,7 +168,7 @@ def run_extract_clean_pipeline(
                 docs, threshold=dedup_threshold, shingle_n=shingle_n,
                 max_df=max_df,
             )
-        clusters = duplicate_clusters(spark, None, pairs=pairs)
+        clusters = duplicate_clusters(pairs)
         keep = dedup_keep_list_for(docs, clusters)
         decisions = corpus_filter_for(
             docs, keep,
@@ -193,8 +193,8 @@ def run_extract_clean_pipeline(
             survivors = spark.read.parquet(f"{out_dir}/clean")
             packed = token_pack_for(survivors, budget=budget)
             packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
-            # stats straight off the persisted decisions — calling
-            # corpus_filter_stats here would recompute the whole filter
+            # stats straight off the persisted decisions — never a
+            # second, recomputed filter
             stats = {
                 r["reason"]: {
                     "n_docs": r["n_docs"], "bpe_tokens": r["bpe_tokens"],
@@ -207,13 +207,12 @@ def run_extract_clean_pipeline(
             decisions.unpersist()
     finally:
         if clusters is not None:
-            # the pairs= path hands back a persisted label table the
-            # caller owns (duplicate_clusters docstring)
+            # duplicate_clusters hands back a persisted label table
+            # the caller owns
             clusters.unpersist()
         if dedup_method == "minhash" and pairs is not None:
             # minhash_lsh_pairs_for hands back a persisted pair set
-            # (the memoizing fixture wrapper owns its copies; here
-            # the composed job does). The ngram path is lazy — nothing
+            # the composed job owns. The ngram path is lazy — nothing
             # to release.
             pairs.unpersist()
         docs.unpersist()

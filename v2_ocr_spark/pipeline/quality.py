@@ -3,12 +3,12 @@ table producing the per-document quality ledger a pretraining curation
 run reads before deciding filters — the round-5 operator family joined
 into a single table plus a corpus-level summary:
 
-  * lm_logloss         — unigram-LM bits/token + OOV fraction
-                         (CCNet-style fluency signal)
-  * remove_dup_spans   — duplicate-substring token counts
-                         (Lee-et-al repeated-span signal)
-  * scrub_boilerplate  — inter-document boilerplate line counts
-                         (site-template signal)
+  * lm_logloss_for        — unigram-LM bits/token + OOV fraction
+                            (CCNet-style fluency signal)
+  * remove_dup_spans_for  — duplicate-substring token counts
+                            (Lee-et-al repeated-span signal)
+  * scrub_boilerplate_for — inter-document boilerplate line counts
+                            (site-template signal)
 
 Nothing here is new machinery — the report is two doc_id joins over
 the already-twinned operators (COVERAGE.md), written as parquet with
@@ -17,13 +17,12 @@ keeps its own contracts (NULL-text docs are excluded by all three, so
 the joins are inner-equivalent but written as left joins from the
 span surface, which covers every text-bearing doc).
 
-Scale notes: lm_logloss is two token shuffles + an equi-join;
-remove_dup_spans is the single-pass shingle window chain;
-scrub_boilerplate broadcasts only the Zipf-head drop set. The three
-share nothing but the scan, so they run as independent jobs writing
-one table — at 100 TB you'd run them against the same cached/bucketed
-documents table; here each re-reads the parquet (documented, cheap at
-fixture scale and linear at any scale).
+Scale notes: lm_logloss_for is two token shuffles + an equi-join;
+remove_dup_spans_for is the single-pass shingle window chain;
+scrub_boilerplate_for broadcasts only the Zipf-head drop set. The
+three share nothing but the scan: the job reads the documents table
+once and hands the same DataFrame to all three (at 100 TB, a
+cached/bucketed documents table).
 """
 
 from __future__ import annotations
@@ -55,28 +54,30 @@ def corpus_quality_report(
     and rounded to 6.
     """
     from v2_ocr_spark.operators.corpus import (
-        lm_logloss,
-        remove_dup_spans,
-        scrub_boilerplate,
+        lm_logloss_for,
+        remove_dup_spans_for,
+        scrub_boilerplate_for,
     )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     # the ledger's n_tokens is the SPAN-side count (original-case
     # tokens — the same stream dup_tokens counts over), so every row
     # is internally derivable: dup_token_frac == dup_tokens/n_tokens.
-    # lm_logloss tokenizes lower(text); its per-token stats
+    # lm_logloss_for tokenizes lower(text); its per-token stats
     # (bits_per_token, oov_frac) are carried as-is and documented as
     # computed over the lowercased stream — case-fold-expanding
     # Unicode can make the two counts differ, and mixing them in one
     # fraction would let dup_tokens exceed the row's own denominator.
-    lm = lm_logloss(spark, sf_dir, ref_source).select(
+    lm = lm_logloss_for(docs, ref_source).select(
         "doc_id", "bits_per_token", "oov_frac"
     )
-    spans = remove_dup_spans(spark, sf_dir, span_k, span_min_count).select(
+    spans = remove_dup_spans_for(docs, span_k, span_min_count).select(
         "doc_id",
         "n_tokens",
         "dup_tokens",
     )
-    boiler = scrub_boilerplate(spark, sf_dir, boiler_min_docs).select(
+    boiler = scrub_boilerplate_for(docs, boiler_min_docs).select(
         "doc_id",
         "n_lines",
         (F.col("n_lines") - F.col("kept_lines")).alias("boiler_lines"),
