@@ -4,7 +4,9 @@ tools/ use only public package names. A deletion that leaves a dangling
 import fails here instead of at run time; most CLIs import inside
 main(), so no other test would load them. Operators take tables, not
 paths: no operator function has a `spark` or `sf_dir` parameter and no
-operator module reads parquet."""
+operator module reads parquet. The merge sink owns its table: no
+writer threads a `held` lease tuple or a maintenance `num_partitions`,
+and only the sink module touches SinkLease."""
 
 from __future__ import annotations
 
@@ -17,6 +19,8 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = "v2_ocr_spark"
 TOOLS = sorted((ROOT / "tools").glob("*.py"))
 OPERATORS = sorted((ROOT / PKG / "operators").glob("*.py"))
+MAINTENANCE = ROOT / PKG / "pipeline" / "maintenance.py"
+STREAMING = sorted((ROOT / PKG / "streaming").glob("*.py"))
 SOURCES = [
     *sorted((ROOT / PKG).rglob("*.py")),
     *TOOLS,
@@ -106,4 +110,37 @@ def test_operators_take_tables_not_paths():
                 and node.value.attr == "read"
             ):
                 found.append(f"{path.name}:{node.lineno}: .read.parquet")
+    assert not found, found
+
+
+def _params(node) -> set[str]:
+    a = node.args
+    return {x.arg for x in (*a.posonlyargs, *a.args, *a.kwonlyargs)}
+
+
+def test_sink_owns_its_table():
+    found = []
+    for path in (*sorted((ROOT / PKG / "pipeline").glob("*.py")), *STREAMING):
+        for node in ast.walk(_tree(path)):
+            if isinstance(node, ast.FunctionDef) and "held" in _params(node):
+                found.append(f"{path.name}:{node.lineno}: param held")
+    for node in _tree(MAINTENANCE).body:
+        if (
+            isinstance(node, ast.FunctionDef)
+            and not _private(node.name)
+            and "num_partitions" in _params(node)
+        ):
+            found.append(f"maintenance.py:{node.lineno}: num_partitions")
+    for path in SOURCES:
+        if path != ROOT / PKG / "pipeline" / "sink.py":
+            for node in ast.walk(_tree(path)):
+                if "SinkLease" in {
+                    getattr(node, "id", None), getattr(node, "attr", None),
+                    getattr(node, "name", None),
+                }:
+                    found.append(f"{path.name}:{node.lineno}: SinkLease")
+    for path in (MAINTENANCE, *STREAMING):
+        for _, module, _alias in _package_imports(_tree(path)):
+            if module == f"{PKG}.pipeline.runner":
+                found.append(f"{path.name}: imports pipeline.runner")
     assert not found, found

@@ -37,7 +37,7 @@ def test_merge_upsert_updates_and_inserts(spark, populated):
         ],
         "conv_id string, turn_idx int, extracted_text string, error string",
     )
-    res = merge_upsert(spark, out, updates, num_partitions=NP)
+    res = merge_upsert(spark, out, updates)
     assert res["rewritten"]
     after = job.read_output()
     assert after.count() == n0 + 1
@@ -58,14 +58,14 @@ def test_merge_upsert_idempotent(spark, populated):
         [("conv00000002", 1, "X", None)],
         "conv_id string, turn_idx int, extracted_text string, error string",
     )
-    merge_upsert(spark, out, updates, num_partitions=NP)
+    merge_upsert(spark, out, updates)
     snap1 = (
         job.read_output()
         .orderBy("conv_id", "turn_idx")
         .select("conv_id", "turn_idx", "extracted_text")
         .toPandas()
     )
-    merge_upsert(spark, out, updates, num_partitions=NP)
+    merge_upsert(spark, out, updates)
     snap2 = (
         job.read_output()
         .orderBy("conv_id", "turn_idx")
@@ -86,7 +86,7 @@ def test_merge_upsert_idempotent(spark, populated):
 def test_delete_cascade(spark, populated):
     out, job = populated
     assert job.read_output().where("conv_id = 'conv00000003'").count() > 0
-    res = delete_conversations(spark, out, ["conv00000003"], num_partitions=NP)
+    res = delete_conversations(spark, out, ["conv00000003"])
     assert len(res["rewritten"]) == 1  # only the owning partition rewritten
     after = job.read_output()
     assert after.where("conv_id = 'conv00000003'").count() == 0
@@ -104,9 +104,7 @@ def test_retention_cleanup(spark, populated, sf_small):
         .collect()
     ]
     assert old_ids
-    retention_cleanup(
-        spark, out, conv, "2025-01-01 02:00:00", num_partitions=NP
-    )
+    retention_cleanup(spark, out, conv, "2025-01-01 02:00:00")
     after = job.read_output()
     assert after.where(F.col("conv_id").isin(old_ids)).count() == 0
 
@@ -118,7 +116,7 @@ def test_backfill_column(spark, populated):
     n0 = job.read_output().count()
     backfill_column(
         spark, out, "text_len",
-        F.length(F.coalesce("extracted_text", F.lit(""))), num_partitions=NP,
+        F.length(F.coalesce("extracted_text", F.lit(""))),
     )
     after = job.read_output()
     assert after.count() == n0
@@ -227,9 +225,7 @@ def test_partition_count_mismatch_rejected(spark, populated):
         [("conv00000001", 1, "X", None)],
         "conv_id string, turn_idx int, extracted_text string, error string",
     )
-    with _pytest.raises(ValueError, match="num_partitions=8"):
-        merge_upsert(spark, out, updates, num_partitions=32)
-    # default adopts the pinned count
+    # merge_upsert adopts the pinned count
     merge_upsert(spark, out, updates)
     # a second job over the same sink with a different count fails loudly
     job2 = ExtractionJob(spark, job.input_path, out, num_partitions=16)
@@ -265,7 +261,7 @@ def test_upsert_into_unextracted_partition_refused(
     committed = set(job.sink.committed())
     assert committed and 4 not in committed
     # find a conv hashing to an uncommitted pid
-    from v2_ocr_spark.pipeline.runner import partition_id
+    from v2_ocr_spark.pipeline.sink import partition_id
     import pyspark.sql.functions as F2
 
     conv = (
@@ -282,13 +278,42 @@ def test_upsert_into_unextracted_partition_refused(
         merge_upsert(spark, out, updates)
 
 
+def test_delete_never_commits_unextracted_partition(
+    spark, sf_small, tmp_path, monkeypatch
+):
+    """A delete (or retention pass) reaching a pid that extraction has
+    not committed yet reports it under 'skipped': publishing it empty
+    would make the job treat it as done and never extract its turns."""
+    from v2_ocr_spark.pipeline.sink import MergeSink, partition_id
+
+    src = f"{sf_small}/transcripts.parquet"
+    job = ExtractionJob(spark, src, str(tmp_path / "t"), num_partitions=NP)
+    promote = MergeSink.promote
+
+    def crashing(self, run_id, pid, metrics):
+        if pid == 4:
+            raise RuntimeError("injected crash before promoting pid=4")
+        return promote(self, run_id, pid, metrics)
+
+    with monkeypatch.context() as m:
+        m.setattr(MergeSink, "promote", crashing)
+        with pytest.raises(RuntimeError):
+            job.run()
+    assert 4 not in job.sink.committed()
+    turns = spark.read.parquet(src).where(partition_id("conv_id", NP) == 4)
+    res = delete_conversations(spark, job.out_dir, [turns.first()["conv_id"]])
+    assert res["rewritten"] == [] and res["skipped"] == [4]
+    job.run()
+    assert job.read_output().where("pid = 4").count() == turns.count()
+
+
 def test_retention_accepts_date_only_cutoff(spark, populated, sf_small):
     from v2_ocr_spark.pipeline.maintenance import retention_cleanup
 
     out, job = populated
     conv = spark.read.parquet(f"{sf_small}/conversations.parquet")
     # date-only form must pin to UTC midnight, not crash the ANSI cast
-    res = retention_cleanup(spark, out, conv, "2025-01-01", num_partitions=NP)
+    res = retention_cleanup(spark, out, conv, "2025-01-01")
     # nothing is older than the epoch-day start in the fixture
     assert res["rewritten"] == []
 
@@ -303,12 +328,12 @@ def test_merge_upsert_null_overwrites_matched_column(spark, populated):
         [("conv00000003", 1, "partial", "boom: transient")],
         "conv_id string, turn_idx int, extracted_text string, error string",
     )
-    merge_upsert(spark, out, first, num_partitions=NP)
+    merge_upsert(spark, out, first)
     retry = spark.createDataFrame(
         [("conv00000003", 1, "clean text", None)],
         "conv_id string, turn_idx int, extracted_text string, error string",
     )
-    merge_upsert(spark, out, retry, num_partitions=NP)
+    merge_upsert(spark, out, retry)
     row = (
         job.read_output()
         .where((F.col("conv_id") == "conv00000003") & (F.col("turn_idx") == 1))
@@ -341,7 +366,7 @@ def test_delete_keys_plan_is_anti_join_not_in_literal(spark, populated):
     assert "LeftAnti" in plan
     assert " IN (" not in plan  # no literal id list anywhere
 
-    res = delete_conversation_keys(spark, out, keys, num_partitions=NP)
+    res = delete_conversation_keys(spark, out, keys)
     assert res["rewritten"]
     after = job.read_output()
     assert after.where(F.col("conv_id") == victim).count() == 0

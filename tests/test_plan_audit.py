@@ -84,7 +84,7 @@ def test_events_window_partitions_by_user(spark, events):
 def test_writer_sorts_within_partitions(spark, tdir):
     """W1 at rest: the job writer stages with sortWithinPartitions, no
     global sort (which would add a range exchange)."""
-    from v2_ocr_spark.pipeline.runner import partition_id
+    from v2_ocr_spark.pipeline.sink import partition_id
 
     staged = (
         extract_turns(spark.read.parquet(f"{tdir}/transcripts.parquet"),

@@ -147,7 +147,8 @@ def test_incremental_recomputes_only_changed_partitions(
     its snapshot. Result equals a from-scratch run on the full input."""
     import shutil
 
-    from v2_ocr_spark.pipeline.runner import ExtractionJob, partition_id
+    from v2_ocr_spark.pipeline.runner import ExtractionJob
+    from v2_ocr_spark.pipeline.sink import partition_id
 
     src = str(tmp_path / "inc_in")
     import os
@@ -216,7 +217,7 @@ def test_incremental_preserves_maintenance_results(spark, sf_small, tmp_path):
     job = ExtractionJob(spark, src, out, num_partitions=8)
     job.run()
 
-    delete_conversations(spark, out, ["conv00000003"], num_partitions=8)
+    delete_conversations(spark, out, ["conv00000003"])
     compact_partitions(spark, out)
     assert job.read_output().where("conv_id = 'conv00000003'").count() == 0
 

@@ -190,6 +190,43 @@ def test_stream_extract_upsert_foreachbatch(spark, sf_small, tmp_path):
     assert dups == 0
 
 
+def test_stream_and_batch_share_partition_count(spark, sf_small, tmp_path):
+    """A default stream adopts the count a batch job pinned and pins the
+    batch default on a fresh sink; only an explicit mismatch fails."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from v2_ocr_spark.pipeline.runner import ExtractionJob
+    from v2_ocr_spark.streaming.stateful import stream_extract_upsert
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    shutil.copy(f"{sf_small}/transcripts.parquet", src)
+    out = str(tmp_path / "batch_first")
+    job = ExtractionJob(spark, src, out)
+    job.run()
+    n = job.read_output().count()
+    stream_extract_upsert(
+        spark, src, out, str(tmp_path / "c1")
+    ).awaitTermination(300)
+    assert job.read_output().count() == n
+
+    q = stream_extract_upsert(
+        spark, src, out, str(tmp_path / "c2"), num_partitions=8
+    )
+    with pytest.raises(StreamingQueryException, match="num_partitions=32"):
+        q.awaitTermination(300)
+
+    fresh = str(tmp_path / "stream_first")
+    stream_extract_upsert(
+        spark, src, fresh, str(tmp_path / "c3")
+    ).awaitTermination(300)
+    ExtractionJob(spark, src, fresh).run()  # same default: no mismatch
+    assert ExtractionJob(spark, src, fresh).read_output().count() == n
+
+
 def test_stream_dedup_turns(spark, sf_small, tmp_path):
     """Re-delivered turns (duplicate files from an at-least-once
     upstream) emit exactly once through the watermarked dedup."""

@@ -57,7 +57,8 @@ _SMALL_INPUT_ROWS = 1_000_000
 def token_pack_for(
     docs: DataFrame, budget: int = 2048, shards: int | None = None
 ) -> DataFrame:
-    """Deterministic sequence packing over any (doc_id, source, text)
+    """Eager: runs one driver job when called (the bin boundaries).
+    Deterministic sequence packing over any (doc_id, source, text)
     table: concatenate each SOURCE's docs in doc_id order into a
     running token stream and assign every doc the context window (bin)
     its first token lands in — the standard pretraining packing job,
@@ -722,7 +723,8 @@ def _tokens_indexed(docs: DataFrame) -> DataFrame:
 def remove_dup_spans_for(
     docs: DataFrame, k: int = 8, min_count: int = 2
 ) -> DataFrame:
-    """-> (doc_id, n_tokens, dup_tokens, kept_text): drop every token
+    """Eager: runs Spark jobs when called (span localCheckpoint).
+    -> (doc_id, n_tokens, dup_tokens, kept_text): drop every token
     covered by a duplicate span (see dup_spans_for) and reassemble the
     survivors in order. Reconstruction joins tokens with single
     spaces — token-stream-exact, whitespace-NORMALIZED (the C4-style

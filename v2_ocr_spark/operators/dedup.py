@@ -277,7 +277,8 @@ def minhash_lsh_pairs_for(
     docs: DataFrame, threshold: float = 0.5,
     num_hashes: int = 128, rows_per_band: int = 2, shingle_n: int = 3,
 ) -> DataFrame:
-    """Near-duplicate pairs with word-shingle Jaccard >= threshold,
+    """Eager: runs Spark jobs when called (persisted pair set).
+    Near-duplicate pairs with word-shingle Jaccard >= threshold,
     found via MinHash-LSH candidates + exact verification, over ANY
     (doc_id, text) DataFrame — e.g. assembled conversations with string
     conv_id keys, the sub-quadratic near-dup path the composed pipeline
@@ -578,7 +579,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
 def duplicate_clusters(
     pairs: DataFrame, max_iter: int | None = None
 ) -> DataFrame:
-    """Near-duplicate CLUSTERS: connected components over the near-dup
+    """Eager: runs Spark jobs when called (label localCheckpoints).
+    Near-duplicate CLUSTERS: connected components over the near-dup
     pair graph, labeled by each component's minimum doc_id.
 
     The step after pair-finding in a real dedup pipeline: pairs say

@@ -193,7 +193,8 @@ def brute_force_topk(
 def cosine_near_dup_pairs(
     emb: DataFrame, threshold: float = 0.4, max_corpus: int = 50_000,
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — EXACT all-pairs, which
+    """Eager: runs Spark jobs when called (corpus count guard).
+    Embedding-cosine near-duplicate pairs — EXACT all-pairs, which
     is inherently O(n^2) dot products. This is the small-corpus oracle
     baseline: it REFUSES corpora above max_corpus (use the LSH-bucketed
     srp path — srp_signatures + bucket join — as the scale twin, same
@@ -390,7 +391,8 @@ def srp_lsh_topk(
     emb: DataFrame, k: int = 5, n_queries: int = 10,
     n_tables: int = 32, n_bits: int = 6,
 ) -> DataFrame:
-    """ANN top-k via SRP-LSH: candidates share a (table, bucket) with
+    """Eager: runs Spark jobs when called (signatures, top-k).
+    ANN top-k via SRP-LSH: candidates share a (table, bucket) with
     the query in ANY of the n_tables; exact cosine re-ranks candidates.
 
     Defaults are tuned for the ADVERSARIAL fixture (near-uniform
@@ -529,7 +531,8 @@ def _assign_euclid(emb_unit: DataFrame, cents: DataFrame) -> DataFrame:
 def kmeans_assign_for(
     emb_unit: DataFrame, k: int = 16, n_iter: int = 3
 ) -> DataFrame:
-    """-> (vec_id, unit, cell_id): Lloyd k-means over unit-normalized
+    """Eager: runs Spark jobs when called (k-means loop, result).
+    -> (vec_id, unit, cell_id): Lloyd k-means over unit-normalized
     embeddings — deterministic hash-order seeds (the ivf _centroids
     pick), exactly n_iter integer-exact mean updates (_COORD_NANO),
     assignment against the FINAL centroids. Fixed iteration count (not
@@ -576,7 +579,8 @@ def kmeans_assign_for(
 def kmeans_clusters(
     emb: DataFrame, k: int = 16, n_iter: int = 3
 ) -> DataFrame:
-    """-> (vec_id, cluster_id): corpus embedding clustering — the
+    """Eager: runs Spark jobs when called (persisted assignment).
+    -> (vec_id, cluster_id): corpus embedding clustering — the
     grouping stage of semantic dedup / topic bucketing. See
     kmeans_assign_for. The RETURNED DataFrame is the persisted one
     (caller owns release) — the unit-vector-bearing assignment it
@@ -604,7 +608,8 @@ def semantic_near_dup_pairs_for(
     threshold: float = 0.9,
     max_cluster: int = 50_000,
 ) -> DataFrame:
-    """-> (id_a, id_b, cluster_id, cosine): SemDeDup-style semantic
+    """Eager: runs Spark jobs when called (k-means, pair set).
+    -> (id_a, id_b, cluster_id, cosine): SemDeDup-style semantic
     near-duplicate pairs over unit-normalized embeddings
     (with_unit_norm(emb).select("vec_id", "unit")) — cluster the
     embedding space with k-means, then find cosine near-duplicates

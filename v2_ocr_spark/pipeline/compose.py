@@ -57,6 +57,7 @@ from v2_ocr_spark.operators.dedup import (
 )
 from v2_ocr_spark.operators.textstats import token_counts_for
 from v2_ocr_spark.pipeline.runner import ExtractionJob
+from v2_ocr_spark.pipeline.sink import DEFAULT_PARTITIONS
 
 
 def _drop_summary(out_dir: str) -> None:
@@ -85,7 +86,7 @@ def run_extract_clean_pipeline(
     spark: SparkSession,
     input_path: str,
     out_dir: str,
-    num_partitions: int = 32,
+    num_partitions: int = DEFAULT_PARTITIONS,
     budget: int = 2048,
     min_quality: float = 0.5,
     min_chars: int = 100,

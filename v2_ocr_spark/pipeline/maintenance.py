@@ -17,42 +17,44 @@ partition atomically through MergeSink.stage / MergeSink.publish — the
 copy-on-write pattern Iceberg uses, at per-partition granularity.
 Untouched partitions keep their snapshots: at 100 TB a delete of one
 conversation rewrites 1/P of the table, not all of it. Every public
-mutator takes the sink ownership lease (held_lease) for its whole
-read-modify-promote: two unleased mutators hitting the same pid would
-interleave as lost updates (a concurrent delete's survivors
-overwritten by a merge built from the pre-delete snapshot,
-resurrecting the deleted rows).
+mutator runs its whole read-modify-promote inside MergeSink.owned():
+two unleased mutators hitting the same pid would interleave as lost
+updates (a concurrent delete's survivors overwritten by a merge built
+from the pre-delete snapshot, resurrecting the deleted rows).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from v2_ocr_spark.pipeline.runner import partition_id
-from v2_ocr_spark.pipeline.sink import MergeSink, held_lease
+from v2_ocr_spark.pipeline.sink import MergeSink
 
 
-def _affected_pids(keys: DataFrame, num_partitions: int) -> list[int]:
+def _affected_pids(sink: MergeSink, keys: DataFrame) -> list[int]:
     return [
-        r.pid
-        for r in keys.select(
-            partition_id("conv_id", num_partitions).alias("pid")
-        )
-        .distinct()
-        .collect()
+        r.pid for r in keys.select(sink.pid().alias("pid")).distinct().collect()
     ]
 
 
-def _rewrite(sink: MergeSink, rows: DataFrame, pids: list[int], op: str,
-             held) -> dict:
-    """Copy-on-write: stage ``rows`` (keyed by pid) as the replacement
-    content of ``pids`` and promote each through the sink's commit path
-    — for every maintenance op and the streaming bootstrap, each under
-    its caller's ``held`` lease.
+def _rewrite(spark: SparkSession, sink: MergeSink, pids: list[int],
+             op: str, edit=lambda current: current) -> dict:
+    """Copy-on-write: read the stored rows of ``pids``, stage
+    ``edit(rows)`` (keyed by pid) as their replacement content and
+    promote each through the sink's commit path — for every
+    maintenance op, inside the caller's MergeSink.owned().
+
+    Only COMMITTED pids are rewritten; the rest come back under
+    ``skipped``. Promoting a pid extraction has not committed would
+    publish a commit holding only the rewrite's rows (none, for a
+    delete) that pending_partitions then skips forever — silent loss of
+    the partition's whole input.
 
     Maintenance rewrites do not consume new input, so each promoted
     commit CARRIES FORWARD the prior commit's input fingerprint
@@ -60,12 +62,20 @@ def _rewrite(sink: MergeSink, rows: DataFrame, pids: list[int], op: str,
     would see a missing baseline, treat the partition as changed, and
     re-extract it from the raw source (resurrecting deleted
     conversations and reverting upserts/backfills)."""
-    run_id = f"{op}-{uuid.uuid4().hex[:8]}"
-    staged = sink.stage(rows, run_id, held, F.count("*").alias("n"))
     prior = sink.committed()
+    targets = sorted(set(pids) & set(prior))
+    skipped = sorted(set(pids) - set(prior))
+    if not targets:
+        return {"run_id": None, "rewritten": [], "skipped": skipped}
+    run_id = f"{op}-{uuid.uuid4().hex[:8]}"
+    # prune on the STORED pid directory column, not a recomputed hash —
+    # a pmod(xxhash64(...)) predicate cannot map to the partition dirs,
+    # so Spark would list and scan all P partitions to rewrite one
+    current = sink.read(spark).where(F.col("pid").isin(targets))
+    staged = sink.stage(edit(current), run_id, F.count("*").alias("n"))
     metrics = {}
-    for pid in pids:
-        prev = prior.get(pid, {}).get("metrics", {})
+    for pid in targets:
+        prev = prior[pid].get("metrics", {})
         metrics[pid] = {
             "op": op,
             "rows_after": staged[pid].n if pid in staged else 0,
@@ -73,33 +83,29 @@ def _rewrite(sink: MergeSink, rows: DataFrame, pids: list[int], op: str,
             **{k: prev[k] for k in ("input_rows", "input_sig") if k in prev},
         }
     committed = [pid for pid, _ in sink.publish(run_id, metrics)]
-    return {"run_id": run_id, "rewritten": committed}
+    return {"run_id": run_id, "rewritten": committed, "skipped": skipped}
 
 
 def merge_upsert(
     spark: SparkSession,
     out_dir: str,
     updates: DataFrame,
-    num_partitions: int | None = None,
 ) -> dict:
     """MERGE updates INTO extracted ON (conv_id, turn_idx) —
     matched rows replaced, new rows inserted, everything idempotent.
 
-    num_partitions defaults to the table's pinned count; an explicit
-    value is VALIDATED against it (re-hashing under a different count
-    silently loses rows). Upserting into a partition that extraction
-    has not committed yet is refused — promoting it would publish a
-    commit containing only the upsert rows, and the partition's base
-    turns would never be extracted."""
-    with held_lease(out_dir) as held:
-        return _merge(spark, MergeSink(out_dir), updates, num_partitions, held)
+    Upserting into a partition that extraction has not committed yet is
+    refused — promoting it would publish a commit containing only the
+    upsert rows, and the partition's base turns would never be
+    extracted."""
+    sink = MergeSink(out_dir)
+    with sink.owned():
+        return _merge(spark, sink, updates)
 
 
-def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame,
-           num_partitions: int | None, held) -> dict:
-    """merge_upsert's body, for a caller that already holds the sink
-    lease (``held`` from held_lease) — the streaming landing loop."""
-    num_partitions = sink.ensure_num_partitions(num_partitions)
+def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame) -> dict:
+    """merge_upsert's body, for a caller already inside
+    ``sink.owned()`` — the streaming landing loop."""
     # Iceberg MERGE errors when one target row matches several source
     # rows; a silent full_outer join would instead MULTIPLY rows (and
     # compound on every re-merge). Enforce source-key uniqueness up
@@ -118,17 +124,13 @@ def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame,
             f"(conv_id={r['conv_id']!r}, turn_idx={r['turn_idx']}) x"
             f"{r['count']}; dedupe the batch before merging"
         )
-    pids = _affected_pids(updates.select("conv_id").distinct(), num_partitions)
+    pids = _affected_pids(sink, updates.select("conv_id").distinct())
     uncommitted = sorted(set(pids) - set(sink.committed()))
     if uncommitted:
         raise ValueError(
             f"cannot upsert into unextracted partitions {uncommitted} of "
             f"{sink.out_dir}; run the extraction job first"
         )
-    # prune on the STORED pid directory column, not a recomputed hash —
-    # a pmod(xxhash64(...)) predicate cannot map to the partition dirs,
-    # so Spark would list and scan all P partitions to rewrite one
-    current = sink.read(spark).where(F.col("pid").isin(pids))
     upd_cols = set(updates.columns) - {"conv_id", "turn_idx"}
     # Row presence, not column NULL, decides whether an update applies:
     # a matched source row replaces its columns UNCONDITIONALLY — a
@@ -139,45 +141,46 @@ def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame,
     # is non-NULL only on source rows, so F.when() falls through to the
     # target value for unmatched targets.
     src = updates.withColumn("_src_present", F.lit(True))
-    merged = (
-        current.alias("t")
-        .join(src.alias("s"), ["conv_id", "turn_idx"], "full_outer")
-        .select(
-            "conv_id",
-            "turn_idx",
-            *[
-                (
-                    F.when(F.col("s._src_present"), F.col(f"s.{c}"))
-                    .otherwise(F.col(f"t.{c}"))
-                    if c in upd_cols
-                    else F.col(f"t.{c}")
-                ).alias(c)
-                for c in current.columns
-                if c not in ("conv_id", "turn_idx")
-            ],
+
+    def merged(current: DataFrame) -> DataFrame:
+        return (
+            current.alias("t")
+            .join(src.alias("s"), ["conv_id", "turn_idx"], "full_outer")
+            .select(
+                "conv_id",
+                "turn_idx",
+                *[
+                    (
+                        F.when(F.col("s._src_present"), F.col(f"s.{c}"))
+                        .otherwise(F.col(f"t.{c}"))
+                        if c in upd_cols
+                        else F.col(f"t.{c}")
+                    ).alias(c)
+                    for c in current.columns
+                    if c not in ("conv_id", "turn_idx")
+                ],
+            )
+            # inserted rows carry no stored pid — derive it for every row
+            .withColumn("pid", sink.pid())
         )
-        # inserted rows carry no stored pid — derive it for every row
-        .withColumn("pid", partition_id("conv_id", num_partitions))
-    )
-    return _rewrite(sink, merged, pids, "merge", held)
+
+    return _rewrite(spark, sink, pids, "merge", merged)
 
 
 def delete_conversations(
     spark: SparkSession,
     out_dir: str,
     conv_ids: list[str],
-    num_partitions: int | None = None,
 ) -> dict:
     """Cascade-delete by explicit id list (the point-delete API)."""
     keys = spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-    return delete_conversation_keys(spark, out_dir, keys, num_partitions)
+    return delete_conversation_keys(spark, out_dir, keys)
 
 
 def delete_conversation_keys(
     spark: SparkSession,
     out_dir: str,
     keys: DataFrame,
-    num_partitions: int | None = None,
 ) -> dict:
     """Cascade-delete every turn of the conversations in the `keys`
     DataFrame (column conv_id).
@@ -188,19 +191,16 @@ def delete_conversation_keys(
     would OOM the driver and blow up the plan. The only driver-side
     materialization is the affected PARTITION id set, bounded by the
     table's partition count regardless of key volume. Survivors keep
-    their stored pid."""
-    with held_lease(out_dir) as held:
-        sink = MergeSink(out_dir)
-        num_partitions = sink.ensure_num_partitions(num_partitions)
+    their stored pid; a pid extraction has not committed yet is
+    reported under ``skipped``, not published empty."""
+    sink = MergeSink(out_dir)
+    with sink.owned():
         keys = keys.select("conv_id").distinct().persist()
         try:
-            pids = _affected_pids(keys, num_partitions)
-            if not pids:
-                return {"run_id": None, "rewritten": []}
-            # stored-pid pruning, not a recomputed hash (see merge_upsert)
-            current = sink.read(spark).where(F.col("pid").isin(pids))
-            survivors = current.join(keys, "conv_id", "left_anti")
-            return _rewrite(sink, survivors, pids, "delete", held)
+            return _rewrite(
+                spark, sink, _affected_pids(sink, keys), "delete",
+                lambda current: current.join(keys, "conv_id", "left_anti"),
+            )
         finally:
             keys.unpersist()
 
@@ -210,7 +210,6 @@ def retention_cleanup(
     out_dir: str,
     conversations: DataFrame,
     cutoff: str,
-    num_partitions: int | None = None,
 ) -> dict:
     """Drop turns of conversations created before the cutoff timestamp
     (S8; the conversations dim supplies created_at).
@@ -232,7 +231,7 @@ def retention_cleanup(
     ).select("conv_id")
     # keys flow into the delete as a DataFrame (anti-join), never as a
     # collected id list — retention can match millions of conversations
-    return delete_conversation_keys(spark, out_dir, old, num_partitions)
+    return delete_conversation_keys(spark, out_dir, old)
 
 
 def clear_all_data(spark: SparkSession, out_dir: str) -> dict:
@@ -248,64 +247,46 @@ def clear_all_data(spark: SparkSession, out_dir: str) -> dict:
     existed and when it was removed, without retaining the data. On
     Iceberg: DROP TABLE ... PURGE + a lineage row in an ops table.
 
-    Takes the sink ownership lease first: wiping a sink under a LIVE
-    driver would let its promote loop resurrect partitions into the
-    'cleared' layout and falsify the lastCleared audit row — with an
-    active owner this raises LeaseHeld instead."""
-    from v2_ocr_spark.pipeline.sink import SinkLease
-
-    lease = SinkLease(out_dir).acquire()
-    try:
-        return _clear_all_owned(out_dir)
-    finally:
-        lease.release()
-
-
-def _clear_all_owned(out_dir: str) -> dict:
-    import json as _json
-    import os as _os
-    import shutil
-
+    Runs inside MergeSink.owned(): wiping a sink under a LIVE driver
+    would let its promote loop resurrect partitions into the 'cleared'
+    layout and falsify the lastCleared audit row — with an active owner
+    this raises LeaseHeld instead."""
     sink = MergeSink(out_dir)
-    committed = sink.committed()
-    rows_cleared = sum(
-        int(c.get("metrics", {}).get("turns_seen", 0) or 0)
-        for c in committed.values()
-    )
-    marker = {
-        "cleared_at": time.time(),
-        "partitions_cleared": sorted(committed),
-        "snapshot_ids": [
-            committed[p]["snapshot_id"] for p in sorted(committed)
-        ],
-        "rows_cleared": rows_cleared,
-    }
-    # the sink/store objects OWN the layout — deriving the paths from
-    # them (not a hardcoded name tuple) means a renamed or added
-    # directory can never silently survive a 'clear all' (an audit
-    # defect: stale data after a recorded wipe)
-    from v2_ocr_spark.pipeline.sink import CheckpointStore
-
-    for p in (*sink.dirs, CheckpointStore(out_dir).dir):
-        shutil.rmtree(p, ignore_errors=True)
-        # recreate the empty layout: live MergeSink/CheckpointStore
-        # handles keep working (reads report 'no committed partitions',
-        # not a missing-directory crash)
-        _os.makedirs(p, exist_ok=True)
-    tmp = f"{out_dir}/_cleared.json.tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        _json.dump(marker, f)
-    _os.replace(tmp, f"{out_dir}/_cleared.json")
-    return marker
+    with sink.owned():
+        committed = sink.committed()
+        marker = {
+            "cleared_at": time.time(),
+            "partitions_cleared": sorted(committed),
+            "snapshot_ids": [
+                committed[p]["snapshot_id"] for p in sorted(committed)
+            ],
+            "rows_cleared": sum(
+                int(c.get("metrics", {}).get("turns_seen", 0) or 0)
+                for c in committed.values()
+            ),
+        }
+        # the sink OWNS the layout — deriving the paths from it (not a
+        # hardcoded name tuple) means a renamed or added directory can
+        # never silently survive a 'clear all' (an audit defect: stale
+        # data after a recorded wipe)
+        for p in sink.dirs:
+            shutil.rmtree(p, ignore_errors=True)
+            # recreate the empty layout: live MergeSink/CheckpointStore
+            # handles keep working (reads report 'no committed
+            # partitions', not a missing-directory crash)
+            os.makedirs(p, exist_ok=True)
+        tmp = f"{out_dir}/_cleared.json.tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(marker, f)
+        os.replace(tmp, f"{out_dir}/_cleared.json")
+        return marker
 
 
 def last_cleared(out_dir: str) -> dict | None:
     """The lastCleared lineage marker, or None if never cleared."""
-    import json as _json
-
     try:
         with open(f"{out_dir}/_cleared.json", encoding="utf-8") as f:
-            return _json.load(f)
+            return json.load(f)
     except FileNotFoundError:
         return None
 
@@ -373,7 +354,6 @@ def backfill_column(
     out_dir: str,
     col_name: str,
     expr: F.Column,
-    num_partitions: int | None = None,
 ) -> dict:
     """S11 — schema-evolution backfill (reference:
     dist/scripts/migrate-base64-to-storage.js:44-120 migrates a column
@@ -382,12 +362,11 @@ def backfill_column(
     this is ``ALTER TABLE ADD COLUMN`` + ``UPDATE``, metadata-cheap.
     Rows keep their stored pid (conv_id is untouched, so re-hashing is
     both unnecessary and the class of bug this module guards against)."""
-    with held_lease(out_dir) as held:
-        sink = MergeSink(out_dir)
-        sink.ensure_num_partitions(num_partitions)  # validate only
-        rewritten = sink.read(spark).withColumn(col_name, expr)
+    sink = MergeSink(out_dir)
+    with sink.owned():
         return _rewrite(
-            sink, rewritten, sorted(sink.committed()), "backfill", held
+            spark, sink, sorted(sink.committed()), "backfill",
+            lambda current: current.withColumn(col_name, expr),
         )
 
 
@@ -408,24 +387,14 @@ def compact_partitions(
     Each row KEEPS the pid it is already stored under — compaction must
     never re-derive partition assignment (a conv_id re-hash under a
     different partition count would scatter rows into pids that are not
-    being promoted, i.e. silent data loss).
+    being promoted, i.e. silent data loss). Uncommitted pids are
+    returned under ``skipped``.
 
     At 100 TB: run per-partition on a schedule (the pids argument
     bounds each run), exactly like Iceberg compaction jobs."""
-    with held_lease(out_dir) as held:
-        sink = MergeSink(out_dir)
-        committed_pids = set(sink.committed())
-        # only COMMITTED partitions can be compacted: promoting an
-        # uncommitted pid would publish an empty dir + commit marker
-        # that pending_partitions then skips forever — silent data loss
-        if pids is None:
-            targets, skipped = sorted(committed_pids), []
-        else:
-            targets = sorted(set(pids) & committed_pids)
-            skipped = sorted(set(pids) - committed_pids)
-        if not targets:
-            return {"run_id": None, "rewritten": [], "skipped": skipped}
-        current = sink.read(spark).where(F.col("pid").isin(targets))
-        res = _rewrite(sink, current, targets, "compact", held)
-        res["skipped"] = skipped
-        return res
+    sink = MergeSink(out_dir)
+    with sink.owned():
+        return _rewrite(
+            spark, sink, sorted(sink.committed()) if pids is None else pids,
+            "compact",
+        )

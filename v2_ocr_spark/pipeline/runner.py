@@ -32,18 +32,13 @@ import pyspark.sql.functions as F
 from v2_ocr_spark.operators.extract import extract_turns
 from v2_ocr_spark.pipeline.sink import (
     COMPLETED,
+    DEFAULT_PARTITIONS,
     ERROR,
     PROCESSING,
-    QUEUED,
-    CheckpointStore,
     LeaseHeld,
     MergeSink,
-    held_lease,
+    partition_id,
 )
-
-
-def partition_id(col: str = "conv_id", num_partitions: int = 32) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
 
 
 class ExtractionJob:
@@ -52,7 +47,7 @@ class ExtractionJob:
         spark: SparkSession,
         input_path: str,
         out_dir: str,
-        num_partitions: int = 32,
+        num_partitions: int = DEFAULT_PARTITIONS,
         max_attempts: int = 3,
         lease_ttl_seconds: float = 600.0,
     ):
@@ -63,7 +58,7 @@ class ExtractionJob:
         self.max_attempts = max_attempts
         self.lease_ttl = lease_ttl_seconds
         self.sink = MergeSink(out_dir)
-        self.checkpoints = CheckpointStore(out_dir)
+        self.checkpoints = self.sink.checkpoints
 
     # ---------------------------------------------------------------
 
@@ -135,13 +130,13 @@ class ExtractionJob:
 
     def _extracted(self, pids: list[int]) -> DataFrame:
         df = self.spark.read.parquet(self.input_path)
-        df = df.withColumn("pid", partition_id("conv_id", self.num_partitions))
+        df = df.withColumn("pid", self.sink.pid())
         if len(pids) < self.num_partitions:
             df = df.where(F.col("pid").isin(pids))  # resume: pruned rescan
         return extract_turns(
             df.select("conv_id", "turn_idx", "role", "text", "tool"),
             with_metrics=True,
-        ).withColumn("pid", partition_id("conv_id", self.num_partitions))
+        ).withColumn("pid", self.sink.pid())
 
     # ---------------------------------------------------------------
 
@@ -155,23 +150,15 @@ class ExtractionJob:
         appended conversation, not the whole job."""
         run_id = uuid.uuid4().hex[:12]
         # ONE driver owns a sink at a time: the claim loop's
-        # checkpoint get+set is not cross-process atomic, so ownership
-        # is enforced up front — a second concurrent driver fails its
-        # claim cleanly with LeaseHeld instead of double-promoting.
-        # held_lease keeps a heartbeat fresh for the whole run (a long
-        # stage must never look like a dead owner); if the lease is
-        # somehow lost anyway, MergeSink.stage refuses to promote.
-        with held_lease(self.out_dir, self.lease_ttl) as held:
-            return self._run_owned(run_id, held, incremental)
+        # checkpoint get+set is not cross-process atomic, so a second
+        # concurrent driver fails its claim cleanly with LeaseHeld
+        # instead of double-promoting; a second job with a different
+        # partition count fails with ValueError instead of scattering
+        # rows (MergeSink.owned)
+        with self.sink.owned(self.num_partitions, self.lease_ttl):
+            return self._run_owned(run_id, incremental)
 
-    def _run_owned(self, run_id: str, held, incremental: bool) -> dict:
-        # pin/validate the table's partition count before any staging —
-        # a second job pointed at the same sink with a different count
-        # must fail loudly, not scatter rows
-        self.sink.ensure_num_partitions(self.num_partitions)
-        # the job owns the sink exclusively: heal any interrupted
-        # promote immediately (no grace needed)
-        self.sink.recover_partials(grace_seconds=0)
+    def _run_owned(self, run_id: str, incremental: bool) -> dict:
         self.checkpoints.recover()  # Q2
         pids = self.pending_partitions()
         if incremental:
@@ -205,7 +192,7 @@ class ExtractionJob:
 
         try:
             staged = self.sink.stage(
-                self._extracted(pids), run_id, held,
+                self._extracted(pids), run_id,
                 F.count("*").alias("turns"),
                 F.sum("nodes_seen").alias("nodes"),
                 F.sum("n_spans").alias("kept"),

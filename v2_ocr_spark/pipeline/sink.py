@@ -20,11 +20,12 @@ Layout:
       _commits/<N>.json               (atomic marker: snapshot + metrics)
       _checkpoints/<N>.json           (claim-state machine, Q1/Q2)
 
-This module is the single owner of the staging/promote protocol:
-every writer of the table — the extraction job, each maintenance
-rewrite, the streaming landing loop — hands its rows (already keyed by
-``pid``) to MergeSink.stage and its per-pid commit metrics to
-MergeSink.publish, under held_lease. No caller touches ``_staging``.
+This module is the single owner of the table's write rules: every
+writer — the extraction job, each maintenance rewrite, the streaming
+landing loop — enters ``with sink.owned():`` (lease + heartbeat,
+pinned partition count, healed promotes), keys its rows with
+``sink.pid()``, hands them to MergeSink.stage and its per-pid commit
+metrics to MergeSink.publish. No caller touches ``_staging``.
 
 On a real cluster the same call sites target Iceberg:
 ``MERGE INTO extracted t USING updates s ON t.conv_id = s.conv_id AND
@@ -34,14 +35,26 @@ THEN INSERT ...`` — only this module changes.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
+import pyspark.sql.functions as F
+
 # 7-status lifecycle, reference types/index.ts:33
 QUEUED, PROCESSING, COMPLETED, ERROR = "queued", "processing", "completed", "error"
+
+# logical partition count of a table whose first writer names none
+DEFAULT_PARTITIONS = 32
+
+
+def partition_id(col: str = "conv_id",
+                 num_partitions: int = DEFAULT_PARTITIONS) -> F.Column:
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
 
 
 class CheckpointStore:
@@ -146,23 +159,19 @@ class SinkLease:
         self.ttl = ttl_seconds
         self.gen = 0
 
+    @contextlib.contextmanager
     def _locked(self):
         """Exclusive flock on the sidecar lock file for the duration of
         one lease read-decide-write."""
-        import contextlib
         import fcntl
 
-        @contextlib.contextmanager
-        def cm():
-            fd = os.open(self.path + ".lock", os.O_CREAT | os.O_WRONLY)
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-                os.close(fd)
-
-        return cm()
+        fd = os.open(self.path + ".lock", os.O_CREAT | os.O_WRONLY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield
+        finally:
+            fcntl.flock(fd, fcntl.LOCK_UN)
+            os.close(fd)
 
     def _read(self) -> dict | None:
         try:
@@ -291,32 +300,40 @@ class SinkLease:
                 except FileNotFoundError:
                     pass
 
-    def __enter__(self) -> "SinkLease":
-        return self.acquire()
 
-    def __exit__(self, *exc) -> None:
-        self.release()
+class MergeSink:
+    def __init__(self, out_dir: str):
+        self.out_dir = out_dir
+        self.data_dir = os.path.join(out_dir, "data")
+        self.commits_dir = os.path.join(out_dir, "_commits")
+        self.staging_root = os.path.join(out_dir, "_staging")
+        self.checkpoints = CheckpointStore(out_dir)
+        self.dirs = (self.data_dir, self.commits_dir, self.staging_root,
+                     self.checkpoints.dir)
+        for d in self.dirs:
+            os.makedirs(d, exist_ok=True)
+        self.num_partitions = None
+        self._lease = self._lost = None
 
-
-def held_lease(out_dir: str, ttl_seconds: float = 600.0):
-    """Acquire the sink lease AND keep it heartbeat-fresh for the whole
-    block — the ownership wrapper every sink MUTATOR runs under (the
-    extraction job, all maintenance rewrites, the streaming landing
-    loop). A long Spark stage must never look like a dead owner and
-    get taken over mid-write; conversely, if the lease IS lost to a
-    takeover anyway, the yielded Event is set so the caller can refuse
-    to promote. Yields (lease, lost_event). The beat interval is capped
-    at ttl/2 — the old max(ttl/3, 1.0) floor let a sub-1.5s ttl sleep
-    PAST its own ttl, so a rival could take over a live owner between
-    beats."""
-    import contextlib
-    import threading
+    # -- ownership -----------------------------------------------------------
 
     @contextlib.contextmanager
-    def cm():
-        lease = SinkLease(out_dir, ttl_seconds=ttl_seconds).acquire()
-        stop = threading.Event()
-        lost = threading.Event()
+    def owned(self, num_partitions: int | None = None,
+              ttl_seconds: float = 600.0):
+        """Own the table for the block; every writer stages in here.
+
+        1. Hold the SinkLease, heartbeat every min(max(ttl/3, 1), ttl/2)
+           seconds: a long Spark stage must never look like a dead
+           owner. If the lease is lost anyway, stage() won't promote.
+        2. Pin the partition count in ``_table.json`` at first write and
+           VALIDATE every later caller against it — re-hashing conv_id
+           under another count scatters rows into partitions that are
+           never promoted. None adopts the stored count
+           (DEFAULT_PARTITIONS on a fresh table); pid() derives under it.
+        3. Heal interrupted promotes with no grace: the owner is the
+           only writer, so no '.old' dir belongs to a live promote."""
+        lease = SinkLease(self.out_dir, ttl_seconds=ttl_seconds).acquire()
+        stop, lost = threading.Event(), threading.Event()
         interval = min(max(ttl_seconds / 3.0, 1.0), ttl_seconds / 2.0)
 
         def _beat() -> None:
@@ -330,56 +347,37 @@ def held_lease(out_dir: str, ttl_seconds: float = 600.0):
         beater = threading.Thread(target=_beat, daemon=True)
         beater.start()
         try:
-            yield lease, lost
+            path = os.path.join(self.out_dir, "_table.json")
+            try:
+                with open(path, encoding="utf-8") as f:
+                    stored = int(json.load(f)["num_partitions"])
+            except FileNotFoundError:
+                stored = int(num_partitions or DEFAULT_PARTITIONS)
+                with open(path + ".tmp", "w", encoding="utf-8") as f:
+                    json.dump({"num_partitions": stored}, f)
+                os.replace(path + ".tmp", path)
+            if num_partitions is not None and int(num_partitions) != stored:
+                raise ValueError(
+                    f"table at {self.out_dir} was written with "
+                    f"num_partitions={stored}; caller passed "
+                    f"{num_partitions} — re-hashing under a different "
+                    "count would lose rows"
+                )
+            self.num_partitions = stored
+            self.recover_partials(grace_seconds=0)
+            self._lease, self._lost = lease, lost
+            yield self
         finally:
+            self._lease = self._lost = None
             stop.set()
             beater.join(timeout=5)
             lease.release()
 
-    return cm()
-
-
-class MergeSink:
-    def __init__(self, out_dir: str):
-        self.out_dir = out_dir
-        self.data_dir = os.path.join(out_dir, "data")
-        self.commits_dir = os.path.join(out_dir, "_commits")
-        self.staging_root = os.path.join(out_dir, "_staging")
-        self.dirs = (self.data_dir, self.commits_dir, self.staging_root)
-        for d in self.dirs:
-            os.makedirs(d, exist_ok=True)
-
-    # -- table metadata ----------------------------------------------------
-
-    def ensure_num_partitions(self, num_partitions: int | None) -> int:
-        """Pin the table's logical partition count at first write and
-        VALIDATE every later caller against it — re-hashing conv_id
-        under a different count scatters rows into partitions that are
-        never promoted (silent data loss). Pass None to adopt the
-        stored value."""
-        path = os.path.join(self.out_dir, "_table.json")
-        try:
-            with open(path, encoding="utf-8") as f:
-                stored = int(json.load(f)["num_partitions"])
-        except FileNotFoundError:
-            stored = None
-        if stored is None:
-            if num_partitions is None:
-                raise ValueError(
-                    f"no table metadata at {path} and no num_partitions given"
-                )
-            tmp = path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump({"num_partitions": int(num_partitions)}, f)
-            os.replace(tmp, path)
-            return int(num_partitions)
-        if num_partitions is not None and int(num_partitions) != stored:
-            raise ValueError(
-                f"table at {self.out_dir} was written with "
-                f"num_partitions={stored}; caller passed {num_partitions} — "
-                "re-hashing under a different count would lose rows"
-            )
-        return stored
+    def pid(self, col: str = "conv_id") -> F.Column:
+        """The pid column under the table's pinned partition count."""
+        if self.num_partitions is None:
+            raise RuntimeError(f"pid() before owned() on {self.out_dir}")
+        return partition_id(col, self.num_partitions)
 
     # -- read side ---------------------------------------------------------
 
@@ -402,7 +400,7 @@ class MergeSink:
         most likely belong to an in-flight promote() in another
         process, and restoring (or deleting) them mid-swap would make
         the promoter's second rename fail. Pass grace_seconds=0 only
-        from a context that owns the sink exclusively (job start)."""
+        from a context that owns the sink exclusively (owned())."""
         import glob
 
         restored = []
@@ -485,11 +483,11 @@ class MergeSink:
     def staging_dir(self, run_id: str) -> str:
         return os.path.join(self.staging_root, run_id)
 
-    def stage(self, rows, run_id: str, held, *aggs) -> dict:
+    def stage(self, rows, run_id: str, *aggs) -> dict:
         """Stage ``rows`` (which carry ``pid``) as run ``run_id`` and
         return {pid: Row of ``aggs``} over what was staged — steps 1-5
-        of the commit protocol; ``publish`` is steps 6-7. ``held`` is
-        the (lease, lost) pair from held_lease.
+        of the commit protocol; ``publish`` is steps 6-7. Only inside
+        owned().
 
         1. Sweep stale run dirs: a crash between staging and promote
            strands a complete staged copy, and every writer runs under
@@ -504,7 +502,8 @@ class MergeSink:
            promoting now would race the new owner — raise LeaseHeld."""
         from pyspark.errors import AnalysisException
 
-        lease, lost = held
+        if self._lease is None:
+            raise RuntimeError(f"stage() outside owned() on {self.out_dir}")
         for stale in os.listdir(self.staging_root):
             if stale != run_id:
                 shutil.rmtree(
@@ -531,12 +530,12 @@ class MergeSink:
                 int(r.pid): r
                 for r in staged.groupBy("pid").agg(*aggs).collect()
             }
-        if lost.is_set():
+        if self._lost.is_set():
             raise LeaseHeld(
                 f"sink lease for {self.out_dir} was lost during staging "
                 f"of run {run_id}; refusing to promote"
             )
-        lease.heartbeat()
+        self._lease.heartbeat()
         return by_pid
 
     def publish(self, run_id: str, metrics: dict[int, dict]):

@@ -22,6 +22,8 @@ hottest user, same as the batch window formulation
 
 from __future__ import annotations
 
+import time
+import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -175,7 +177,7 @@ def stream_extract_upsert(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming extraction landing in the transactional MergeSink via
@@ -187,12 +189,12 @@ def stream_extract_upsert(
     the source commit log makes batch replay the only duplication mode,
     and merge_upsert is idempotent, so a replayed batch is a no-op.
     The same pattern targets Iceberg MERGE INTO on a real cluster
-    (pipeline/iceberg.py).
+    (pipeline/iceberg.py). ``num_partitions`` None adopts the table's
+    pinned count (the batch job's default on a fresh table).
     """
     from v2_ocr_spark.operators.extract import extract_turns
-    from v2_ocr_spark.pipeline.maintenance import _merge, _rewrite
-    from v2_ocr_spark.pipeline.runner import partition_id
-    from v2_ocr_spark.pipeline.sink import MergeSink, held_lease
+    from v2_ocr_spark.pipeline.maintenance import _merge
+    from v2_ocr_spark.pipeline.sink import MergeSink
 
     stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
 
@@ -215,16 +217,12 @@ def stream_extract_upsert(
             .persist()
         )
         try:
-            # ONE lease spans the whole micro-batch (bootstrap + merge)
-            # INCLUDING the partition-count pin — ensure_num_partitions
-            # is a read-decide-write on _table.json, and pinning it
-            # unleased could race a batch runner on a brand-new sink
-            # (both read stored=None, both write, loser scatters rows)
-            with held_lease(out_dir) as held:
-                np = sink.ensure_num_partitions(num_partitions)
-                keyed = extracted.withColumn(
-                    "pid", partition_id("conv_id", np)
-                )
+            # ONE ownership block spans the whole micro-batch (bootstrap
+            # + merge) INCLUDING the partition-count pin, a
+            # read-decide-write on _table.json that must not race a
+            # batch runner on a brand-new sink
+            with sink.owned(num_partitions):
+                keyed = extracted.withColumn("pid", sink.pid())
                 pids = {
                     r.pid for r in keyed.select("pid").distinct().collect()
                 }
@@ -236,16 +234,21 @@ def stream_extract_upsert(
                     # commit path (merge_upsert's extraction-first
                     # policy is for BATCH maintenance callers, not this
                     # source)
-                    _rewrite(
-                        sink, keyed.where(F.col("pid").isin(fresh)), fresh,
-                        "bootstrap", held,
+                    run_id = f"bootstrap-{uuid.uuid4().hex[:8]}"
+                    staged = sink.stage(
+                        keyed.where(F.col("pid").isin(fresh)), run_id,
+                        F.count("*").alias("n"),
                     )
+                    list(sink.publish(run_id, {
+                        pid: {"op": "bootstrap", "rows_after": r.n,
+                              "at": time.time()}
+                        for pid, r in sorted(staged.items())
+                    }))
                 touched = sorted(pids & done)
                 if touched:
                     _merge(
                         spark, sink,
                         keyed.where(F.col("pid").isin(touched)).drop("pid"),
-                        np, held,
                     )
         finally:
             # unpersist on EVERY exit — a failed micro-batch is retried
