@@ -4,10 +4,18 @@ byte-for-byte on every turn, never dropping rows (P10)."""
 
 from __future__ import annotations
 
+import time
+
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from v2_ocr_spark.operators.extract import extract_pandas, extract_turns
+from v2_ocr_spark.kernels import KERNELS
+from v2_ocr_spark.operators.extract import (
+    _extract_batch,
+    extract_pandas,
+    extract_turns,
+)
 
 
 @pytest.fixture(scope="module")
@@ -102,3 +110,69 @@ def test_stable_ordering_under_repartition(spark, sf_small):
         .toPandas()
     )
     assert a.equals(b)
+
+
+def _batch(rows):
+    """(payload_kind, text) pairs -> an _extract_batch input frame."""
+    return pd.DataFrame(
+        {
+            "conv_id": "c",
+            "turn_idx": range(len(rows)),
+            "text": [t for _, t in rows],
+            "payload_kind": [k for k, _ in rows],
+        }
+    )
+
+
+def test_proc_us_is_per_kind_kernel_time(monkeypatch):
+    """proc_us is the kernel time of the row's own kind, not the batch
+    wall time smeared over every row."""
+    html = KERNELS["html"]
+
+    def slow_html(texts):
+        time.sleep(0.05)
+        return html(texts)
+
+    monkeypatch.setitem(KERNELS, "html", slow_html)
+    rows = [("html", "<p>some html content long enough to keep</p>")]
+    rows += [("plain", f"turn {i}") for i in range(9)]
+    out = _extract_batch(_batch(rows), True)
+    assert out["proc_us"].iloc[0] >= 50_000
+    assert out["proc_us"].iloc[1:].sum() < 5_000
+
+
+def test_kernel_failure_isolated_to_its_row(monkeypatch):
+    """P10: a raising kernel call and an unknown kind become error rows;
+    every other row, and the row order, are untouched."""
+    plain = KERNELS["plain"]
+
+    def fragile_plain(texts):
+        if (texts == "boom").any():
+            raise ValueError("kernel exploded")
+        return plain(texts)
+
+    monkeypatch.setitem(KERNELS, "plain", fragile_plain)
+    rows = [
+        ("markdown", "# a\n\n![i](x) b"),
+        ("plain", "one"),
+        ("markdown", "$$m$$"),
+        ("plain", "boom"),
+        ("bogus", "??"),
+        ("plain", None),
+        ("markdown", None),
+        ("plain", "two"),
+    ]
+    batch = _batch(rows)
+    out = _extract_batch(batch, False)
+    assert len(out) == len(batch)
+    assert list(zip(out["conv_id"], out["turn_idx"])) == list(
+        zip(batch["conv_id"], batch["turn_idx"])
+    )
+    boom = out.iloc[3]
+    assert (boom["extracted_text"], boom["spans"]) == ("", [])
+    assert "kernel exploded" in boom["error"]
+    assert out.iloc[4]["error"] == "unknown payload kind: bogus"
+    for i in (0, 1, 2, 5, 6, 7):
+        alone = _extract_batch(batch.iloc[i:i + 1], False)
+        pd.testing.assert_frame_equal(out.iloc[i:i + 1], alone)
+        assert alone["error"].iloc[0] is None

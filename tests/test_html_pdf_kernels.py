@@ -13,14 +13,14 @@ import os
 import pandas as pd
 import pytest
 
+from v2_ocr_spark.kernels import KERNELS
 from v2_ocr_spark.kernels.htmlx import (
     extract_html,
-    extract_html_series,
     flatten_html,
     is_content,
     is_content_mask,
 )
-from v2_ocr_spark.kernels.pdflayout import layout_text, layout_text_series
+from v2_ocr_spark.kernels.pdflayout import layout_text
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 
@@ -48,7 +48,7 @@ def test_e15_flatten_nodes(case):
 
 def test_e15_vectorized_matches_scalar():
     inputs = [c["input"] for c in E15["cases"]] + [None]
-    texts, spans, nodes = extract_html_series(pd.Series(inputs, dtype=object))
+    texts, spans, nodes = KERNELS["html"](pd.Series(inputs, dtype=object))
     for i, val in enumerate(inputs):
         t, s = extract_html(val)
         assert texts.iloc[i] == t
@@ -145,7 +145,7 @@ def test_e16_pdf_layout_scalar(case):
 
 def test_e16_vectorized_matches_scalar():
     inputs = [c["input"] for c in E16["cases"]] + [None]
-    texts, spans = layout_text_series(pd.Series(inputs, dtype=object))
+    texts, spans = KERNELS["pdf_layout"](pd.Series(inputs, dtype=object))
     for i, val in enumerate(inputs):
         t, s = layout_text(val)
         assert texts.iloc[i] == t

@@ -6,7 +6,9 @@ main(), so no other test would load them. Operators take tables, not
 paths: no operator function has a `spark` or `sf_dir` parameter and no
 operator module reads parquet. The merge sink owns its table: no
 writer threads a `held` lease tuple or a maintenance `num_partitions`,
-and only the sink module touches SinkLease."""
+and only the sink module touches SinkLease. A kernel is one scalar
+function: no `*_series` wrappers, no `.loc`/`.at` writes in the
+extraction pass, no kind if-chain in the fixture generator."""
 
 from __future__ import annotations
 
@@ -143,4 +145,33 @@ def test_sink_owns_its_table():
         for _, module, _alias in _package_imports(_tree(path)):
             if module == f"{PKG}.pipeline.runner":
                 found.append(f"{path.name}: imports pipeline.runner")
+    assert not found, found
+
+
+def test_one_kernel_contract():
+    """A kernel is one scalar function that KERNELS lifts: no hand-written
+    Series wrappers, no per-kind .loc/.at writes in the extraction pass,
+    no second kind dispatch in the fixture generator."""
+    found = []
+    for path in sorted((ROOT / PKG / "kernels").glob("*.py")):
+        for node in ast.walk(_tree(path)):
+            if isinstance(node, ast.FunctionDef) and node.name.endswith("_series"):
+                found.append(f"{path.name}:{node.lineno}: def {node.name}")
+    for node in ast.walk(_tree(ROOT / PKG / "operators" / "extract.py")):
+        targets = getattr(node, "targets", None) or [getattr(node, "target", None)]
+        for sub in (s for t in targets if t for s in ast.walk(t)):
+            if (
+                isinstance(sub, ast.Subscript)
+                and isinstance(sub.value, ast.Attribute)
+                and sub.value.attr in ("loc", "at")
+            ):
+                found.append(f"extract.py:{sub.lineno}: .{sub.value.attr}[...] =")
+    generate = _tree(ROOT / PKG / "fixtures" / "generate.py")
+    expected_for = next(
+        n for n in generate.body
+        if isinstance(n, ast.FunctionDef) and n.name == "expected_for"
+    )
+    for node in ast.walk(expected_for):
+        if isinstance(node, (ast.If, ast.IfExp, ast.Match)):
+            found.append(f"generate.py:{node.lineno}: expected_for branches")
     assert not found, found

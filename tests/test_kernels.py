@@ -12,14 +12,13 @@ import os
 import pandas as pd
 import pytest
 
-from v2_ocr_spark.kernels.blocks import reassemble_blocks, reassemble_blocks_series
+from v2_ocr_spark.kernels import KERNELS
+from v2_ocr_spark.kernels.blocks import reassemble_blocks
 from v2_ocr_spark.kernels.markdown import (
     clean_markdown,
-    clean_markdown_series,
     js_trim,
     paragraph_spans,
 )
-from v2_ocr_spark.kernels.plain import passthrough_series
 from v2_ocr_spark.kernels.textfns import (
     export_document_text,
     is_rtl_text,
@@ -47,7 +46,7 @@ def test_e1_markdown_scalar(case):
 
 def test_e1_markdown_vectorized_matches_scalar():
     s = pd.Series([c["input"] for c in E1], dtype=object)
-    cleaned, spans = clean_markdown_series(s)
+    cleaned, spans = KERNELS["markdown"](s)
     assert list(cleaned) == [c["expected"] for c in E1]
     # spans: contiguous, non-overlapping, inside the cleaned string
     for text, sp in zip(cleaned, spans):
@@ -68,7 +67,7 @@ def test_e3_blocks_scalar(case):
 
 def test_e3_blocks_vectorized_and_spans():
     s = pd.Series([c["input"] for c in E3], dtype=object)
-    texts, spans = reassemble_blocks_series(s)
+    texts, spans = KERNELS["blocks_rtl"](s)
     assert list(texts) == [c["expected"] for c in E3]
     for text, sp in zip(texts, spans):
         for (start, end, kind) in sp:
@@ -92,7 +91,7 @@ def test_e3_region_spans_slice_to_region_text():
 
 def test_e4_passthrough_preserves_bytes():
     vals = ["", "   \t ", "abc", "ن ص", "a\n\nb"]
-    out, spans = passthrough_series(pd.Series(vals, dtype=object))
+    out, spans = KERNELS["plain"](pd.Series(vals, dtype=object))
     assert list(out) == vals
     assert list(spans.map(len)) == [0, 1, 1, 1, 1]
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -326,3 +327,60 @@ def test_e16_input_order_invariant(boxes):
     a = json.dumps({"page": {"w": 612}, "boxes": boxes})
     b = json.dumps({"page": {"w": 612}, "boxes": boxes[::-1]})
     assert layout_text(a) == layout_text(b)
+
+
+# ---------------------------------------------------------------------------
+# _extract_batch: one output assembly
+# ---------------------------------------------------------------------------
+
+BLOCKS_PAYLOAD = st.builds(
+    lambda lang, words: json.dumps(
+        {"language": lang, "regions": [{"lines": [{"words": [
+            {"text": w} for w in words]}]}]}
+    ),
+    st.sampled_from(["en", "ar", "he-IL"]),
+    st.lists(st.text(alphabet="ab ", max_size=4), max_size=4),
+)
+PDF_PAYLOAD = st.lists(BOX, max_size=4).map(
+    lambda boxes: json.dumps({"page": {"w": 612}, "boxes": boxes})
+)
+TURN = st.tuples(
+    st.sampled_from(
+        ["markdown", "blocks_rtl", "plain", "html", "pdf_layout", "ocr_v9"]
+    ),
+    st.one_of(
+        st.none(), MARKDOWNISH, HTMLISH, BLOCKS_PAYLOAD, PDF_PAYLOAD
+    ),
+)
+
+
+@st.composite
+def turn_batches(draw):
+    turns = draw(st.lists(TURN, min_size=1, max_size=40))
+    index = draw(st.permutations(range(3, 3 + len(turns))))
+    return pd.DataFrame(
+        {
+            "conv_id": [f"c{i % 3}" for i in range(len(turns))],
+            "turn_idx": range(len(turns)),
+            "text": [t for _, t in turns],
+            "payload_kind": [k for k, _ in turns],
+        },
+        index=index,
+    )
+
+
+@given(turn_batches())
+@settings(max_examples=150, deadline=None)
+def test_extract_batch_keeps_input_order_and_rowwise_results(batch):
+    """Per-kind results are concatenated and reindexed once: the output
+    keeps the batch's index order and equals the row-by-row runs."""
+    from v2_ocr_spark.operators.extract import _extract_batch
+
+    out = _extract_batch(batch, True)
+    assert list(out.index) == list(batch.index)
+    rowwise = pd.concat(
+        [_extract_batch(batch.iloc[i:i + 1], True) for i in range(len(batch))]
+    )
+    pd.testing.assert_frame_equal(
+        out.drop(columns="proc_us"), rowwise.drop(columns="proc_us")
+    )

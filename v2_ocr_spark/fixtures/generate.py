@@ -14,10 +14,11 @@ Tables written per scale (sf0.001 / sf0.01 / sf0.1) under --out:
                 processing_started_at, processing_completed_at,
                 source_name, size_bytes)
 
-The expected table is produced by the pure-pandas reference kernels —
-the same code that runs inside the Spark mapInPandas pass — while the
-hand-derived golden fixtures in tests/fixtures/*.json independently pin
-the kernels themselves to the reference's JS semantics.
+The expected table is produced by the scalar kernels
+(``kernels.SCALARS``) — the same functions that ``KERNELS`` lifts into
+the Spark mapInPandas pass — while the hand-derived golden fixtures in
+tests/fixtures/*.json independently pin the kernels themselves to the
+reference's JS semantics.
 """
 
 from __future__ import annotations
@@ -32,11 +33,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from v2_ocr_spark.kernels.blocks import reassemble_blocks
-from v2_ocr_spark.kernels.htmlx import extract_html, flatten_html, is_content
-from v2_ocr_spark.kernels.markdown import clean_markdown, paragraph_spans
-from v2_ocr_spark.kernels.pdflayout import layout_text
-from v2_ocr_spark.kernels.plain import passthrough
+from v2_ocr_spark.kernels import SCALARS
+from v2_ocr_spark.kernels.htmlx import flatten_html, is_content
 
 SEED = 42
 EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
@@ -338,17 +336,9 @@ GEN = {
 
 
 def expected_for(kind: str, text: str) -> tuple[str, list[dict]]:
-    if kind == "markdown":
-        cleaned = clean_markdown(text)
-        spans = paragraph_spans(cleaned)
-    elif kind == "blocks_rtl":
-        cleaned, spans = reassemble_blocks(text)
-    elif kind == "html":
-        cleaned, spans = extract_html(text)
-    elif kind == "pdf_layout":
-        cleaned, spans = layout_text(text)
-    else:
-        cleaned, spans = passthrough(text)
+    """Expected (text, spans) of one turn through its scalar kernel —
+    the table ``KERNELS`` is built from — with spans as struct dicts."""
+    cleaned, spans, *_ = SCALARS[kind](text)
     return cleaned, [{"start": s, "end": e, "kind": k} for s, e, k in spans]
 
 

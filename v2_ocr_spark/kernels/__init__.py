@@ -1,33 +1,45 @@
-"""Extraction kernels — pure, vectorized pandas functions.
+"""Extraction kernels — one scalar function per payload kind.
 
-Each kernel is a plain ``pandas.Series -> (pandas.Series, pandas.Series)``
-(text, spans) transform so the same code runs (a) inside Spark's
-``mapInPandas`` over Arrow batches and (b) driver-side as the pure-pandas
-reference implementation used to build golden expected outputs.
+A kernel is ``payload (str | None) -> (text, spans[, nodes_seen])``:
+the cleaned text, its ``(start, end, kind)`` spans and, for html, the
+DOM blocks inspected. ``SCALARS`` is the one payload-kind -> kernel
+table. ``KERNELS`` lifts each scalar through one row-wise adapter to
+``pandas.Series -> tuple of Series`` (same index), the form
+``mapInPandas`` runs over each Arrow batch; the fixture generator calls
+the scalars directly to build the golden expected tables. A new payload
+kind is one scalar and one ``SCALARS`` entry.
 """
 
-from v2_ocr_spark.kernels.markdown import JS_WS, clean_markdown_series, js_trim
-from v2_ocr_spark.kernels.blocks import reassemble_blocks_series, RTL_LANGUAGES
-from v2_ocr_spark.kernels.plain import passthrough_series
-from v2_ocr_spark.kernels.htmlx import extract_html_series
-from v2_ocr_spark.kernels.pdflayout import layout_text_series
+import pandas as pd
 
-KERNELS = {
-    "markdown": clean_markdown_series,
-    "blocks_rtl": reassemble_blocks_series,
-    "plain": passthrough_series,
-    "html": extract_html_series,
-    "pdf_layout": layout_text_series,
+from v2_ocr_spark.kernels.markdown import JS_WS, extract_markdown, js_trim
+from v2_ocr_spark.kernels.blocks import reassemble_blocks, RTL_LANGUAGES
+from v2_ocr_spark.kernels.plain import passthrough
+from v2_ocr_spark.kernels.htmlx import extract_html_counted
+from v2_ocr_spark.kernels.pdflayout import layout_text
+
+SCALARS = {
+    "markdown": extract_markdown,
+    "blocks_rtl": reassemble_blocks,
+    "plain": passthrough,
+    "html": extract_html_counted,
+    "pdf_layout": layout_text,
 }
 
-__all__ = [
-    "JS_WS",
-    "KERNELS",
-    "RTL_LANGUAGES",
-    "clean_markdown_series",
-    "extract_html_series",
-    "js_trim",
-    "layout_text_series",
-    "passthrough_series",
-    "reassemble_blocks_series",
-]
+
+def _rowwise(scalar):
+    """Scalar kernel -> Series kernel: one call per row, one Series per
+    output field, on the input's index (``texts`` must be non-empty)."""
+
+    def kernel(texts: pd.Series) -> tuple[pd.Series, ...]:
+        return tuple(
+            pd.Series(list(field), index=texts.index)
+            for field in zip(*map(scalar, texts))
+        )
+
+    return kernel
+
+
+KERNELS = {kind: _rowwise(scalar) for kind, scalar in SCALARS.items()}
+
+__all__ = ["JS_WS", "KERNELS", "RTL_LANGUAGES", "SCALARS", "js_trim"]

@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 # microsoft.ts:58-68 — exact set.
 RTL_LANGUAGES = frozenset(
     ["ar", "he", "fa", "ur", "syr", "n-bh", "sam", "mend", "man"]
@@ -77,14 +75,3 @@ def reassemble_blocks(payload: str | None) -> tuple[str, list[tuple[int, int, st
         pos = end + 2  # the "\n\n" joiner
     return text, spans
 
-
-def reassemble_blocks_series(texts: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Vectorized E3 over an Arrow batch.
-
-    json.loads is CPU-bound C code per element; the batch-level loop
-    stays inside pandas (no Spark per-row Python UDF round-trips).
-    """
-    pairs = texts.map(reassemble_blocks)
-    out_text = pairs.map(lambda p: p[0])
-    out_spans = pairs.map(lambda p: p[1])
-    return out_text, out_spans

@@ -428,32 +428,18 @@ def assemble_content(nodes: list[dict]) -> tuple[str, list[tuple[int, int, str]]
     return "\n\n".join(nd["text"] for nd in kept), spans
 
 
+def extract_html_counted(
+    text: str | None,
+) -> tuple[str, list[tuple[int, int, str]], int]:
+    """Scalar E15 kernel: HTML -> (main-content text, block spans,
+    nodes_seen). nodes_seen (DOM blocks inspected) feeds the north
+    rule's extraction metrics: dropped = seen - kept; kernels without
+    a notion of dropped blocks return 2-tuples and the extraction pass
+    defaults nodes_seen to the kept-span count."""
+    nodes = flatten_html(text)
+    return (*assemble_content(nodes), len(nodes))
+
+
 def extract_html(text: str | None) -> tuple[str, list[tuple[int, int, str]]]:
-    """Scalar E15 kernel: HTML -> (main-content text, block spans)."""
-    return assemble_content(flatten_html(text))
-
-
-def extract_html_series(
-    texts: pd.Series,
-) -> tuple[pd.Series, pd.Series, pd.Series]:
-    """Vectorized E15 — runs once per Arrow batch inside mapInPandas.
-
-    Returns a third series, nodes_seen (DOM blocks inspected per turn),
-    feeding the north rule's extraction metrics: dropped = seen - kept.
-    Kernels without a notion of dropped blocks return 2-tuples and the
-    dispatcher defaults nodes_seen to the kept-span count.
-    """
-    out_text: list[str] = []
-    out_spans: list[list[tuple[int, int, str]]] = []
-    out_nodes: list[int] = []
-    for val in texts:
-        nodes = flatten_html(None if val is None else str(val))
-        t, s = assemble_content(nodes)
-        out_text.append(t)
-        out_spans.append(s)
-        out_nodes.append(len(nodes))
-    return (
-        pd.Series(out_text, index=texts.index, dtype=object),
-        pd.Series(out_spans, index=texts.index, dtype=object),
-        pd.Series(out_nodes, index=texts.index, dtype="int64"),
-    )
+    """(text, block spans) of the E15 kernel, without the node count."""
+    return extract_html_counted(text)[:2]

@@ -31,8 +31,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 # ECMA-262 WhiteSpace (U+0009..U+000D handled via literals, U+0020,
 # U+00A0, U+1680, U+2000..U+200A, U+202F, U+205F, U+3000, U+FEFF)
 # plus LineTerminator (U+000A, U+000D, U+2028, U+2029).
@@ -63,7 +61,7 @@ def js_trim(s: str) -> str:
 
 
 def clean_markdown(text: str | None) -> str:
-    """Scalar E1 kernel (the vectorized entry point is below)."""
+    """E1 cleanup of one turn; ``extract_markdown`` adds its spans."""
     if text is None:
         return ""
     out = _IMAGE_REF.sub("", text)
@@ -90,16 +88,7 @@ def paragraph_spans(cleaned: str) -> list[tuple[int, int, str]]:
     return spans
 
 
-def clean_markdown_series(texts: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Vectorized E1: returns (cleaned_text, spans) Series.
-
-    Runs pandas' C-level string machinery over each Arrow batch —
-    the regex chain mirrors mistral.ts:211-215 in the same order.
-    """
-    s = texts.fillna("").astype(str)
-    s = s.str.replace(_IMAGE_REF, "", regex=True)
-    s = s.str.replace(_DISPLAY_MATH, r"\1", regex=True)
-    s = s.str.replace(_ALIGNED, r"\1", regex=True)
-    s = s.str.strip(JS_WS)
-    spans = s.map(paragraph_spans)
-    return s, spans
+def extract_markdown(text: str | None) -> tuple[str, list[tuple[int, int, str]]]:
+    """Scalar E1 kernel: markdown -> (cleaned text, paragraph spans)."""
+    cleaned = clean_markdown(text)
+    return cleaned, paragraph_spans(cleaned)

@@ -42,8 +42,6 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 try:  # orjson parses ~6x faster; plain json is the fallback everywhere
     import orjson as _fastjson
 except ImportError:  # pragma: no cover - orjson is in the image
@@ -223,20 +221,6 @@ def layout_text(payload: str | None) -> tuple[str, list[tuple[int, int, str]]]:
         spans.append((pos, end, "pdf_block"))
         pos = end + 2
     return "\n\n".join(paras), spans
-
-
-def layout_text_series(texts: pd.Series) -> tuple[pd.Series, pd.Series]:
-    """Vectorized E16 — one call per Arrow batch inside mapInPandas."""
-    out_text: list[str] = []
-    out_spans: list[list[tuple[int, int, str]]] = []
-    for val in texts:
-        t, s = layout_text(None if val is None else str(val))
-        out_text.append(t)
-        out_spans.append(s)
-    return (
-        pd.Series(out_text, index=texts.index, dtype=object),
-        pd.Series(out_spans, index=texts.index, dtype=object),
-    )
 
 
 def boxes_from_pdf_bytes(data: bytes) -> list[dict]:

@@ -10,8 +10,6 @@ payloads (the passthrough keeps exactly one block).
 
 from __future__ import annotations
 
-import pandas as pd
-
 
 def passthrough(text: str | None) -> tuple[str, list[tuple[int, int, str]]]:
     if text is None:
@@ -20,8 +18,3 @@ def passthrough(text: str | None) -> tuple[str, list[tuple[int, int, str]]]:
         return "", []
     return text, [(0, len(text), "text")]
 
-
-def passthrough_series(texts: pd.Series) -> tuple[pd.Series, pd.Series]:
-    s = texts.fillna("").astype(str)
-    spans = s.map(lambda t: [(0, len(t), "text")] if t else [])
-    return s, spans

@@ -5,12 +5,15 @@ Reference parity:
   * kernel dispatch == the provider factory switch
     (reference: lib/ocr/providers/index.ts:82-99) — a payload-kind
     column selects the kernel per row, so dispatch costs no shuffle
-    and no extra pass (SURVEY.md §2.10).
+    and no extra pass (SURVEY.md §2.10). Each Arrow batch calls
+    ``KERNELS[kind]`` once per kind present, concatenates the per-kind
+    results and reindexes them to input order in one step.
   * error-as-row == P10 (file-processor.ts:474-504): a failing turn
     produces a result row with empty text and the error message —
     turns are never dropped.
   * per-turn metrics == the per-page progress/metrics stamps
-    (file-processor.ts:312-327).
+    (file-processor.ts:312-327); ``proc_us`` is the kernel time of the
+    row's kind in its batch divided by that kind's rows.
 
 Scale notes (100 TB / 10^12 turns):
   * This stage is embarrassingly parallel: no groupBy, no join, no
@@ -72,67 +75,65 @@ def with_payload_kind(df: DataFrame) -> DataFrame:
 # building dicts per row costs ~10% of the whole pass (measured)
 
 
+def _error_rows(index: pd.Index, error: str) -> pd.DataFrame:
+    return pd.DataFrame(
+        {"extracted_text": "", "spans": [[] for _ in index], "error": error},
+        index=index,
+    )
+
+
+def _apply(kernel, texts: pd.Series) -> pd.DataFrame:
+    """One kind's rows through its kernel. P10 fallback: a failing call
+    is retried row by row, so only the failing rows become error rows."""
+    try:
+        fields = kernel(texts)
+    except Exception as exc:  # noqa: BLE001
+        if len(texts) == 1:
+            return _error_rows(texts.index, f"{type(exc).__name__}: {exc}")
+        return pd.concat(
+            [_apply(kernel, texts.iloc[i:i + 1]) for i in range(len(texts))]
+        )
+    cols = dict(zip(("extracted_text", "spans", "nodes_seen"), fields))
+    return pd.DataFrame(cols, index=texts.index)
+
+
 def _extract_batch(pdf: pd.DataFrame, with_metrics: bool) -> pd.DataFrame:
-    t0 = time.perf_counter_ns()
-    n = len(pdf)
-    out_text = pd.Series([""] * n, index=pdf.index, dtype=object)
-    out_spans = pd.Series([[] for _ in range(n)], index=pdf.index, dtype=object)
-    out_err = pd.Series([None] * n, index=pdf.index, dtype=object)
-    # nodes inspected per turn (north-rule metrics: dropped = seen-kept);
-    # kernels without a dropped-block notion report seen == kept below
-    out_nodes = pd.Series([-1] * n, index=pdf.index, dtype="int64")
-
-    for kind, kernel in KERNELS.items():
-        mask = pdf["payload_kind"] == kind
-        if not mask.any():
-            continue
-        texts = pdf.loc[mask, "text"]
-        try:
-            cleaned, spans, *extra = kernel(texts)
-            out_text.loc[mask] = cleaned
-            out_spans.loc[mask] = spans
-            if extra:
-                out_nodes.loc[mask] = extra[0]
-        except Exception:
-            # P10 fallback: isolate the failing rows, keep the rest.
-            for idx, val in texts.items():
-                try:
-                    c, s, *ex = kernel(pd.Series([val]))
-                    out_text.at[idx] = c.iloc[0]
-                    out_spans.at[idx] = s.iloc[0]
-                    if ex:
-                        out_nodes.at[idx] = ex[0].iloc[0]
-                except Exception as exc:  # noqa: BLE001
-                    out_text.at[idx] = ""
-                    out_spans.at[idx] = []
-                    out_err.at[idx] = f"{type(exc).__name__}: {exc}"
-
-    # unknown kinds -> error rows, never dropped (P10)
-    known = pdf["payload_kind"].isin(KERNELS.keys())
-    if not known.all():
-        out_err.loc[~known] = "unknown payload kind: " + pdf.loc[
-            ~known, "payload_kind"
-        ].astype(str)
-
-    res = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"],
-            "extracted_text": out_text,
-            "spans": out_spans,
-            "error": out_err,
-        }
+    parts = []
+    for kind, texts in pdf["text"].groupby(
+        pdf["payload_kind"], sort=False, dropna=False
+    ):
+        t0 = time.perf_counter_ns()
+        kernel = KERNELS.get(kind)
+        part = (  # unknown kinds -> error rows, never dropped (P10)
+            _apply(kernel, texts) if kernel else
+            _error_rows(texts.index, f"unknown payload kind: {kind}")
+        )
+        # per-kind kernel time, shared by that kind's rows in the batch
+        part["proc_us"] = (time.perf_counter_ns() - t0) // 1000 // len(texts)
+        parts.append(part)
+    # only error rows carry "error" and only html rows "nodes_seen": an
+    # all-None object column makes concat test every value for NA
+    res = pd.concat(parts).reindex(
+        index=pdf.index,
+        columns=["extracted_text", "spans", "error", "nodes_seen", "proc_us"],
+    )
+    error = res["error"].astype(object)
+    out = pdf[["conv_id", "turn_idx"]].assign(
+        extracted_text=res["extracted_text"], spans=res["spans"],
+        error=error.where(error.notna(), None),
     )
     if with_metrics:
-        elapsed = time.perf_counter_ns() - t0
-        res["chars_in"] = pdf["text"].fillna("").str.len().astype("int64")
-        res["chars_out"] = out_text.str.len().astype("int64")
-        res["n_spans"] = out_spans.map(len).astype("int32")
-        res["nodes_seen"] = out_nodes.where(
-            out_nodes >= 0, res["n_spans"]
-        ).astype("int64")
-        res["proc_us"] = int(elapsed // 1000) // max(n, 1)
-    return res
+        # nodes inspected per turn (north-rule metrics: dropped =
+        # seen-kept); kernels without a dropped-block notion: seen == kept
+        n_spans = res["spans"].map(len).astype("int32")
+        out = out.assign(
+            chars_in=pdf["text"].fillna("").str.len().astype("int64"),
+            chars_out=res["extracted_text"].str.len().astype("int64"),
+            n_spans=n_spans,
+            nodes_seen=res["nodes_seen"].fillna(n_spans).astype("int64"),
+            proc_us=res["proc_us"],
+        )
+    return out
 
 
 def extract_turns(df: DataFrame, with_metrics: bool = False) -> DataFrame:
