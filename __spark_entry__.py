@@ -31,6 +31,7 @@ from v2_ocr_spark.operators import (
     combined,
     corpus,
     dedup,
+    materialized,
     multimodal,
     relational,
     similarity,
@@ -38,6 +39,7 @@ from v2_ocr_spark.operators import (
 )
 from v2_ocr_spark.operators.assemble import assemble, export_documents
 from v2_ocr_spark.operators.extract import extract_turns
+from v2_ocr_spark.pipeline.compose import clean_and_pack
 
 REPO_DATA = os.environ.get("V2OCR_DATA_DIR", "/root/repo/data")
 EXPORT_TS = "2025-01-01 00:00:00"
@@ -142,9 +144,7 @@ def _extracted(spark: SparkSession, sf_dir: str) -> DataFrame:
     consume it (spans, assembly, dedup, export). ~25k rows at sf0.01 —
     executor storage cost is trivial."""
     def build():
-        df = extract_turns(_transcripts(spark, sf_dir)).persist()
-        df.count()
-        return df
+        return materialized(extract_turns(_transcripts(spark, sf_dir)))
 
     path = f"{_data_dir(sf_dir)}/transcripts.parquet"
     return _memo(spark, path, "extract", build)
@@ -299,7 +299,10 @@ def _conv_corpus(spark, sf_dir):
     TURN-level rows: per-element lambdas over a 130k-token
     whole-conversation list are quadratic in DuckDB, while turn-level
     lists stay small and a window supplies the cross-turn shingles);
-    pairs = exact ngram Jaccard >= 0.1 over docs. Both persisted."""
+    pairs = exact ngram Jaccard >= 0.1 over docs. docs is persisted and
+    pairs localCheckpointed; both stay in the memo, and
+    pipeline_clean_pack hands them to compose.clean_and_pack, which
+    owns every intermediate downstream of them."""
     def build():
         out = _extracted(spark, sf_dir)
         docs = (
@@ -315,12 +318,11 @@ def _conv_corpus(spark, sf_dir):
             .persist()
         )
         # localCheckpoint, not persist: the pair set feeds
-        # duplicate_clusters' iterative joins in pipeline_clean_pack,
-        # and each iteration would re-embed the full extraction ->
+        # duplicate_clusters' iterative joins in clean_and_pack, and
+        # each iteration would re-embed the full extraction ->
         # assembly -> inverted-index lineage — the plan STRING alone
-        # OOMs the driver when AQE renders it (the compose.py
-        # stage-boundary lesson, in-memory form). Checkpointing
-        # truncates the plan at the materialized pairs.
+        # OOMs the driver when AQE renders it. Checkpointing truncates
+        # the plan at the materialized pairs.
         pairs = dedup.ngram_jaccard_pairs_for(docs, threshold=0.1)
         return docs, pairs.localCheckpoint(eager=True)
 
@@ -348,47 +350,23 @@ def q_conversation_near_dup(spark, sf_dir):
 
 
 def q_pipeline_clean_pack(spark, sf_dir):
-    """The composed FLAGSHIP tail as one driver-verifiable row set:
-    extraction -> assembly -> conversation-level near-dup keeper ->
-    corpus filter (quality + language + length) -> token packing of the
-    survivors — run_extract_clean_pipeline's cleaning stages
-    (pipeline/compose.py) over the same memoized extraction the other
-    gate queries consume, minus only the sink machinery (gate queries
-    must stay side-effect-free). One row per non-empty conversation:
-    the filter decision columns plus, for kept conversations, their
-    position in the packed token stream (NULL pack columns = dropped).
-    The DuckDB twin recomputes the ENTIRE tail — turn-level shingles,
-    recursive-CTE transitive closure, the same quality/lang SQL the
-    corpus_filter oracle uses, and the running-sum pack window."""
+    """The composed FLAGSHIP tail as one driver-verifiable row set: the
+    clean_and_pack that run_extract_clean_pipeline runs (near-dup
+    keeper -> corpus filter -> token packing), over the memoized
+    conversation corpus, writing nothing. One row per non-empty
+    conversation: the filter decision columns plus, for kept
+    conversations, their position in the packed token stream (NULL pack
+    columns = dropped). The DuckDB twin recomputes the ENTIRE tail —
+    turn-level shingles, recursive-CTE transitive closure, the same
+    quality/lang SQL the corpus_filter oracle uses, and the running-sum
+    pack window."""
     docs, pairs = _conv_corpus(spark, sf_dir)
-    clusters = dedup.duplicate_clusters(pairs)
-    try:
-        # STAGE BOUNDARIES, in-memory form: compose.py re-reads the
-        # clean/ parquet between filter and pack because carrying the
-        # dedup-closure lineage into token_pack's two prefix-sum
-        # branches explodes the logical plan (measured driver OOM just
-        # analyzing it — CLAUDE.md). A gate query must stay
-        # side-effect-free, so localCheckpoint is the parquet-less
-        # equivalent: it truncates the plan at the materialized result.
-        cl = clusters.localCheckpoint(eager=True)
-        keep = dedup.dedup_keep_list_for(docs, cl)
-        decisions = corpus.corpus_filter_for(docs, keep).localCheckpoint(
-            eager=True
-        )
-        kept = docs.join(
-            decisions.where(F.col("keep")).select("doc_id"), "doc_id"
-        )
-        packed = corpus.token_pack_for(kept, budget=2048)
-        return decisions.join(
-            packed.select("doc_id", "n_tokens", "start_token", "bin"),
-            "doc_id",
-            "left",
-        ).orderBy("doc_id")
-    finally:
-        # duplicate_clusters hands back a persisted label table the
-        # caller owns; the shared docs/pairs stay cached for the
-        # sibling gate query
-        clusters.unpersist()
+    decisions, packed = clean_and_pack(docs, pairs)
+    return decisions.join(
+        packed.select("doc_id", "n_tokens", "start_token", "bin"),
+        "doc_id",
+        "left",
+    ).orderBy("doc_id")
 
 
 def q_export(spark, sf_dir):

@@ -91,9 +91,10 @@ def test_run_extract_clean_pipeline_end_to_end(
 def test_crashed_rerun_leaves_no_stale_summary(
     spark, small_transcripts, tmp_path, monkeypatch
 ):
-    """A re-run that dies after overwriting clean/ but before its new
-    summary must not leave the previous run's summary.json beside the
-    new tables: the stale summary is removed before the first write."""
+    """A re-run that dies in its cleaning tail, before its new summary,
+    must not leave the previous run's summary.json beside the tables it
+    has rewritten: the stale summary is removed before the first
+    write."""
     out = str(tmp_path / "composed")
     run_extract_clean_pipeline(
         spark, small_transcripts, out, num_partitions=NP, budget=500
@@ -110,6 +111,54 @@ def test_crashed_rerun_leaves_no_stale_summary(
         )
     assert os.path.exists(f"{out}/clean")
     assert not os.path.exists(f"{out}/summary.json")
+
+
+def test_clean_and_pack_plan_bounded_and_releases_labels(
+    spark, small_transcripts, monkeypatch
+):
+    """The shared cleaning tail on the composed job's own input shape
+    (unnormalized assembled text, ngram pairs at 0.5): with no parquet
+    re-read, the checkpointed decisions keep the pack plan bounded, and
+    a failing filter stage releases every persist the call made, the
+    cluster labels included."""
+    from v2_ocr_spark.operators.assemble import assemble
+    from v2_ocr_spark.operators.dedup import ngram_jaccard_pairs_for
+    from v2_ocr_spark.operators.extract import extract_turns
+
+    turns = extract_turns(spark.read.parquet(small_transcripts))
+    docs = assemble(turns.where(F.col("error").isNull())).select(
+        F.col("conv_id").alias("doc_id"),
+        F.col("document_text").alias("text"),
+        F.lit("transcripts").alias("source"),
+    ).persist()
+    try:
+        pairs = ngram_jaccard_pairs_for(docs, threshold=0.5)
+        _, packed = compose.clean_and_pack(docs, pairs, budget=500)
+        qe = packed._jdf.queryExecution()
+        p = qe.executedPlan().toString()
+        assert len(p) < 100_000, f"plan string blew up: {len(p)} chars"
+        assert "LogicalRDD" in qe.optimizedPlan().toString()
+
+        persisted = []
+        orig_persist = type(docs).persist
+
+        def tracking(df, *args, **kw):
+            persisted.append(df)
+            return orig_persist(df, *args, **kw)
+
+        def crash(*args, **kwargs):
+            raise RuntimeError("filter crashed")
+
+        monkeypatch.setattr(type(docs), "persist", tracking)
+        monkeypatch.setattr(compose, "corpus_filter_for", crash)
+        with pytest.raises(RuntimeError, match="filter crashed"):
+            compose.clean_and_pack(docs, pairs, budget=500)
+        assert persisted and not [
+            df for df in persisted
+            if df.storageLevel.useMemory or df.storageLevel.useDisk
+        ]
+    finally:
+        docs.unpersist()
 
 
 def _naive_pack(docs, budget):

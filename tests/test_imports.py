@@ -8,7 +8,9 @@ operator module reads parquet. The merge sink owns its table: no
 writer threads a `held` lease tuple or a maintenance `num_partitions`,
 and only the sink module touches SinkLease. A kernel is one scalar
 function: no `*_series` wrappers, no `.loc`/`.at` writes in the
-extraction pass, no kind if-chain in the fixture generator."""
+extraction pass, no kind if-chain in the fixture generator. The
+composed job and the pipeline_clean_pack gate entry share one cleaning
+tail, clean_and_pack."""
 
 from __future__ import annotations
 
@@ -174,4 +176,32 @@ def test_one_kernel_contract():
     for node in ast.walk(expected_for):
         if isinstance(node, (ast.If, ast.IfExp, ast.Match)):
             found.append(f"generate.py:{node.lineno}: expected_for branches")
+    assert not found, found
+
+
+TAIL = {
+    "duplicate_clusters", "dedup_keep_list_for", "corpus_filter_for",
+    "token_pack_for",
+}
+
+
+def test_one_cleaning_tail():
+    """The composed job and the gate entry that checks it run the same
+    clean_and_pack; neither chains the tail's operators itself."""
+    found = []
+    for path, name in (
+        (ROOT / "__spark_entry__.py", "q_pipeline_clean_pack"),
+        (ROOT / PKG / "pipeline" / "compose.py", "run_extract_clean_pipeline"),
+    ):
+        fn = next(
+            n for n in _tree(path).body
+            if isinstance(n, ast.FunctionDef) and n.name == name
+        )
+        calls = {
+            getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            for n in ast.walk(fn) if isinstance(n, ast.Call)
+        }
+        if "clean_and_pack" not in calls:
+            found.append(f"{name}: no clean_and_pack call")
+        found += [f"{name}: calls {c}" for c in sorted(calls & TAIL)]
     assert not found, found

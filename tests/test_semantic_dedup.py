@@ -280,12 +280,21 @@ def test_kmeans_recovers_separable_mixture(spark):
     assert all(comp_of[r.id_a] == comp_of[r.id_b] for r in prows)
 
 
-@pytest.mark.parametrize("op", ["cluster_pairs", "kmeans", "srp_lsh"])
-def test_failed_materialization_releases_persists(spark, embeddings, monkeypatch, op):
+@pytest.mark.parametrize(
+    "op",
+    ["cluster_pairs", "kmeans", "srp_lsh", "minhash", "clusters",
+     "kmeans_clusters"],
+)
+def test_failed_materialization_releases_persists(
+    spark, embeddings, documents, monkeypatch, op
+):
     """A persist whose materializing count fails is released before the
     error propagates — no cached RDD outlives the call without an
-    owner. The failure is planted with a raise_error column on the
-    persisted result (ragged vectors for the pair set)."""
+    owner, and neither do the call's other intermediates. The failure
+    is planted with a raise_error column on the persisted result
+    (ragged vectors for the pair set, a poisoned input edge for the
+    clusters, a failing count for the k-means cluster projection)."""
+    from v2_ocr_spark.operators import dedup as D
     from v2_ocr_spark.operators import similarity as S
 
     boom = F.raise_error(F.lit("planted failure"))
@@ -333,6 +342,34 @@ def test_failed_materialization_releases_persists(spark, embeddings, monkeypatch
             lambda e, c: orig(e, c).withColumn("boom", boom),
         )
         call = lambda: kmeans_assign_for(emb, 4, 0)  # noqa: E731
+    elif op == "minhash":
+        # candidates and the owned docs cache materialize; the verified
+        # pair set's count fails
+        orig = D.verify_jaccard
+        monkeypatch.setattr(
+            D, "verify_jaccard",
+            lambda *a: orig(*a).withColumn(
+                "jaccard", F.coalesce(boom.cast("double"), F.col("jaccard"))
+            ),
+        )
+        call = lambda: D.minhash_lsh_pairs_for(documents)  # noqa: E731
+    elif op == "clusters":
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+        ).withColumn("doc_b", F.coalesce(boom.cast("long"), F.col("doc_b")))
+        call = lambda: D.duplicate_clusters(pairs)  # noqa: E731
+    elif op == "kmeans_clusters":
+        # the assignment is cached whole, so no planted column can fail
+        # only the projection kmeans_clusters persists: fail its count
+        orig_count = type(emb).count
+
+        def count(df):
+            if df.columns == ["vec_id", "cluster_id"]:
+                raise RuntimeError(planted)
+            return orig_count(df)
+
+        monkeypatch.setattr(type(emb), "count", count)
+        call = lambda: kmeans_clusters(embeddings, 4, 0)  # noqa: E731
     else:
         orig = S._topk
         monkeypatch.setattr(

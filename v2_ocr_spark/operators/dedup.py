@@ -35,8 +35,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+
+from v2_ocr_spark.operators import materialized
 
 MERSENNE_P = (1 << 31) - 1
 
@@ -309,26 +313,29 @@ def minhash_lsh_pairs_for(
     owns_docs_cache = not (lvl.useMemory or lvl.useDisk)
     if owns_docs_cache:
         docs = docs.persist()
-    # cache the one-pass signatures: they feed 64 band projections
-    sig = minhash_signatures(docs, num_hashes, shingle_n).persist()
-    cand = lsh_candidate_pairs(sig, rows_per_band, num_hashes).persist()
-    cand.count()  # materialize candidates, then free the signatures
-    sig.unpersist()
-    verified = verify_jaccard(cand, docs, shingle_n)
-    result = (
-        verified.where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-        .persist()
-    )
-    # materialize the (small) final pair set, then release every
-    # intermediate cache — repeated calls in one session must not pin
-    # extra copies of the corpus in executor storage. The persisted
-    # result itself stays cached until its owner releases it.
-    result.count()
-    cand.unpersist()
-    if owns_docs_cache:
-        docs.unpersist()
-    return result
+    # every intermediate cache is released on every exit path, failure
+    # included: repeated calls must not pin extra corpus copies
+    try:
+        # the one-pass signatures feed 64 band projections
+        sig = minhash_signatures(docs, num_hashes, shingle_n).persist()
+        try:
+            cand = materialized(
+                lsh_candidate_pairs(sig, rows_per_band, num_hashes)
+            )
+        finally:
+            sig.unpersist()
+        try:
+            verified = verify_jaccard(cand, docs, shingle_n)
+            return materialized(
+                verified.where(F.col("jaccard") >= threshold).select(
+                    "doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard")
+                )
+            )
+        finally:
+            cand.unpersist()
+    finally:
+        if owns_docs_cache:
+            docs.unpersist()
 
 
 def shingle_explode(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
@@ -628,86 +635,83 @@ def duplicate_clusters(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
     ).persist()
-
-    labels = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .persist()
-    )
-    labels.count()
-
-    import itertools
-
-    for _ in (range(max_iter) if max_iter is not None else itertools.count()):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("cluster_id").alias("nbr_label"),
-                ),
-                "doc_b",
+    labels = None
+    # released on every exit path: a leaked copy would have NO owner
+    # and outlive every run in the session (ADVICE r3)
+    try:
+        labels = materialized(
+            edges.select(F.col("doc_a").alias("doc_id"))
+            .distinct()
+            .withColumn("cluster_id", F.col("doc_id"))
+        )
+        rounds = itertools.count() if max_iter is None else range(max_iter)
+        for _ in rounds:
+            neighbor_min = (
+                edges.join(
+                    labels.select(
+                        F.col("doc_id").alias("doc_b"),
+                        F.col("cluster_id").alias("nbr_label"),
+                    ),
+                    "doc_b",
+                )
+                .groupBy(F.col("doc_a").alias("doc_id"))
+                .agg(F.min("nbr_label").alias("nbr_min"))
             )
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("nbr_label").alias("nbr_min"))
-        )
-        # persisted: the pointer jump below references relabeled on
-        # BOTH sides of its self-join — unpersisted, ReuseExchange
-        # shares only the shuffle files and the post-shuffle agg +
-        # left join + projection run twice per round (at 100 TB label
-        # scale that doubles every iteration's relabel work). Released
-        # right after localCheckpoint(eager) materializes new_labels.
-        relabeled = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
+            # persisted: the pointer jump below references relabeled on
+            # BOTH sides of its self-join — unpersisted, ReuseExchange
+            # shares only the shuffle files and the post-shuffle agg +
+            # left join + projection run twice per round (at 100 TB
+            # label scale that doubles every iteration's relabel work)
+            relabeled = (
+                labels.join(neighbor_min, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(
+                        F.col("cluster_id"),
+                        F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
+                    ).alias("cluster_id"),
+                )
+                .persist()
             )
-            .persist()
-        )
-        # pointer jump: label <- label(label). Labels are always node
-        # ids (initially self; thereafter minima of labels), so the
-        # label table can look itself up — total inner join. One extra
-        # small self-join per round turns O(diameter) convergence into
-        # O(log diameter): the sf0.1 conversation graph at threshold
-        # 0.1 has a diameter-31 chain component (31 rounds, 37 s);
-        # jumped it converges in ~6. At 100 TB chain-y graphs this is
-        # the difference between feasible and not.
-        # localCheckpoint, not persist: cut the doubling lineage at the
-        # materialized iteration result (see Scale notes above).
-        new_labels = (
-            relabeled.join(
-                relabeled.select(
-                    F.col("doc_id").alias("_target"),
-                    F.col("cluster_id").alias("_jump"),
-                ),
-                F.col("cluster_id") == F.col("_target"),
+            # pointer jump: label <- label(label). Labels are always
+            # node ids (initially self; thereafter minima of labels), so
+            # the label table can look itself up — total inner join.
+            # One extra small self-join per round turns O(diameter)
+            # convergence into O(log diameter): the sf0.1 conversation
+            # graph at threshold 0.1 has a diameter-31 chain component
+            # (31 rounds, 37 s); jumped it converges in ~6. At 100 TB
+            # chain-y graphs this is the difference between feasible
+            # and not. localCheckpoint, not persist: cut the doubling
+            # lineage at the materialized iteration result (see Scale
+            # notes above).
+            try:
+                new_labels = (
+                    relabeled.join(
+                        relabeled.select(
+                            F.col("doc_id").alias("_target"),
+                            F.col("cluster_id").alias("_jump"),
+                        ),
+                        F.col("cluster_id") == F.col("_target"),
+                    )
+                    .select("doc_id", F.col("_jump").alias("cluster_id"))
+                    .localCheckpoint(eager=True)
+                )
+            finally:
+                relabeled.unpersist()
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "doc_id")
+                .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
+                .count()
             )
-            .select("doc_id", F.col("_jump").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        relabeled.unpersist()  # new_labels is materialized above
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels.unpersist()  # releases iteration 0's cache; no-op after
-        labels = new_labels
-        if changed == 0:
-            break
-
-    edges.unpersist()
-    # materialize the final projection, then RELEASE the loop's last
-    # labels cache — a leaked copy would have NO owner at all and
-    # outlive every run in the session (ADVICE r3). The CALLER owns
-    # unpersisting the returned DataFrame — compose releases it once
-    # filter decisions are materialized, the gate memo on eviction.
-    result = labels.select("doc_id", "cluster_id").persist()
-    result.count()
-    labels.unpersist()
-    return result
+            labels.unpersist()  # releases iteration 0's cache; no-op after
+            labels = new_labels
+            if changed == 0:
+                break
+        # the CALLER owns the result (clean_and_pack releases it once
+        # its decisions are checkpointed, the gate memo on eviction)
+        return materialized(labels.select("doc_id", "cluster_id"))
+    finally:
+        edges.unpersist()
+        if labels is not None:
+            labels.unpersist()

@@ -27,18 +27,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.window import Window
 
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """persist + count. If the count fails, the persist is released
-    before the error propagates — a failed materialization must not
-    leave a cached copy that no caller ever sees."""
-    out = df.persist()
-    try:
-        out.count()
-    except BaseException:
-        out.unpersist()
-        raise
-    return out
+from v2_ocr_spark.operators import materialized
 
 
 def _dot(a, b) -> F.Column:
@@ -415,7 +404,7 @@ def srp_lsh_topk(
     # (small) top-k result is materialized, so no n_tables x corpus
     # signature table outlives the call (the leak class ADVICE r3
     # flagged on the dedup path)
-    sig = _materialized(srp_signatures(emb, n_tables, n_bits))
+    sig = materialized(srp_signatures(emb, n_tables, n_bits))
     try:
         q_sig = sig.where(F.col("vec_id") < n_queries).select(
             F.col("vec_id").alias("query_id"), "table", "bucket"
@@ -442,7 +431,7 @@ def srp_lsh_topk(
         # materialize the k*n_queries result, then RELEASE the signature
         # table — returning lazily would pin n_tables x corpus rows in
         # executor storage with no owner (callers never see `sig`)
-        return _materialized(_topk(scored, k))
+        return materialized(_topk(scored, k))
     finally:
         sig.unpersist()
 
@@ -556,9 +545,8 @@ def kmeans_assign_for(
         raise ValueError(f"k must be >= 1, got {k}")
     if n_iter < 0:
         raise ValueError(f"n_iter must be >= 0, got {n_iter}")
-    emb = emb_unit.select("vec_id", "unit").persist()
+    emb = materialized(emb_unit.select("vec_id", "unit"))
     try:
-        emb.count()
         cents = (
             _centroids(emb, k)
             .withColumn("c2", _dot_pd(F.col("centroid"), F.col("centroid")))
@@ -568,7 +556,7 @@ def kmeans_assign_for(
             cents = _mean_centroids(
                 _assign_euclid(emb, cents)
             ).localCheckpoint(eager=True)
-        return _materialized(_assign_euclid(emb, cents))
+        return materialized(_assign_euclid(emb, cents))
     finally:
         # also on failure mid-loop — a corpus-scale persist must never
         # outlive the call without an owner (the compose cleanup
@@ -592,11 +580,9 @@ def kmeans_clusters(
         n_iter,
     )
     try:
-        out = assigned.select(
-            "vec_id", F.col("cell_id").alias("cluster_id")
-        ).persist()
-        out.count()
-        return out
+        return materialized(
+            assigned.select("vec_id", F.col("cell_id").alias("cluster_id"))
+        )
     finally:
         assigned.unpersist()
 
@@ -697,4 +683,4 @@ def _cluster_pairs(
             "id_a", "id_b", "cluster_id", F.round("cosine", 6).alias("cosine")
         )
     )
-    return _materialized(pairs)
+    return materialized(pairs)

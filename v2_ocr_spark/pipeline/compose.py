@@ -16,7 +16,10 @@ Stage boundary discipline: the extraction output is COMMITTED parquet
 (the MergeSink table), so the cleaning stages re-read a real table
 exactly as a production pipeline would — a crash in cleaning never
 invalidates the extraction commits, and a re-run resumes extraction
-as up-to-date and recomputes only the cleaning tail.
+as up-to-date and recomputes only the cleaning tail. The tail itself
+is clean_and_pack, the one function the pipeline_clean_pack gate
+entry also runs; its in-memory cuts (localCheckpointed labels and
+decisions) keep the pack plan bounded without a parquet re-read.
 
 Scale notes per stage: extraction is the audited zero-shuffle
 MapInPandas; assembly the two-phase chunked merge (turn-derived salt);
@@ -40,7 +43,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from v2_ocr_spark.operators.assemble import assemble
@@ -80,6 +83,40 @@ def _write_summary(out_dir: str, summary: dict) -> None:
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(summary, f)
     os.replace(tmp, os.path.join(out_dir, "summary.json"))
+
+
+def clean_and_pack(
+    docs: DataFrame,
+    pairs: DataFrame,
+    budget: int = 2048,
+    min_quality: float = 0.5,
+    min_chars: int = 100,
+    langs: tuple[str, ...] = ("en", "de", "fr", "es"),
+) -> tuple[DataFrame, DataFrame]:
+    """Eager: runs Spark jobs when called. The cleaning tail of the
+    composed job and the body of the pipeline_clean_pack gate entry:
+    near-dup clusters over ``pairs`` -> keeper selection -> corpus
+    filter over ``docs`` -> token packing of the survivors.
+    -> (corpus_filter_for decisions, token_pack_for rows of the kept).
+
+    Labels and decisions are localCheckpointed: carrying the closure
+    lineage into token_pack's two prefix-sum branches explodes the plan
+    (measured: driver OOM just rendering explain at sf0.001). The
+    cluster labels are released on every path; docs and pairs stay the
+    caller's."""
+    clusters = duplicate_clusters(pairs)
+    try:
+        keep = dedup_keep_list_for(docs, clusters.localCheckpoint(eager=True))
+        decisions = corpus_filter_for(
+            docs, keep,
+            min_quality=min_quality, min_chars=min_chars, langs=langs,
+        ).localCheckpoint(eager=True)
+    finally:
+        clusters.unpersist()
+    # pack the SURVIVORS: packing before the filter would leave every
+    # window underfilled by the tokens of later-dropped docs
+    kept = docs.join(decisions.where(F.col("keep")).select("doc_id"), "doc_id")
+    return decisions, token_pack_for(kept, budget=budget)
 
 
 def run_extract_clean_pipeline(
@@ -140,96 +177,51 @@ def run_extract_clean_pipeline(
 
     # errored turns stay rows in the extract table (P10) but carry no
     # text; the cleaning stages consume successful extractions only
-    extracted = job.read_output().where(F.col("error").isNull())
-    convs = assemble(extracted)
-    docs = convs.select(
+    docs = assemble(job.read_output().where(F.col("error").isNull())).select(
         F.col("conv_id").alias("doc_id"),
         F.col("document_text").alias("text"),
         F.lit("transcripts").alias("source"),
     ).persist()
-    # every persisted intermediate this job OWNS is released on every
-    # exit path — pairs (minhash hands back a persisted set) and the
-    # cluster label table are created INSIDE the try so a failure in
-    # any cleaning stage cannot leak them in executor storage for the
-    # rest of a long-lived session (ADVICE r3)
     pairs = None
-    clusters = None
     try:
-        # near-dup pair finding: 'ngram' is the EXACT inverted-index
-        # path (default; sum-of-df^2 cost, max_df skew cap available);
-        # 'minhash' is the sub-quadratic signature->LSH->verify path —
-        # the tunable at 100 TB, where even capped df^2 over assembled
-        # conversations can dominate
-        if dedup_method == "minhash":
-            pairs = minhash_lsh_pairs_for(
-                docs, threshold=dedup_threshold, shingle_n=shingle_n,
-            )
-        else:
-            pairs = ngram_jaccard_pairs_for(
-                docs, threshold=dedup_threshold, shingle_n=shingle_n,
-                max_df=max_df,
-            )
-        clusters = duplicate_clusters(pairs)
-        keep = dedup_keep_list_for(docs, clusters)
-        decisions = corpus_filter_for(
-            docs, keep,
+        # 'ngram': the EXACT inverted index (default; max_df skew cap);
+        # 'minhash': sub-quadratic signature->LSH->verify, the tunable at
+        # 100 TB where even capped df^2 over conversations dominates
+        kw = {"threshold": dedup_threshold, "shingle_n": shingle_n}
+        pairs = (
+            minhash_lsh_pairs_for(docs, **kw) if dedup_method == "minhash"
+            else ngram_jaccard_pairs_for(docs, max_df=max_df, **kw)
+        )
+        decisions, packed = clean_and_pack(
+            docs, pairs, budget=budget,
             min_quality=min_quality, min_chars=min_chars, langs=langs,
-        ).persist()
-        try:
-            kept = decisions.where(F.col("keep")).select(
-                "doc_id", "pred_lang", "quality"
-            )
-            docs.join(kept, "doc_id").write.mode("overwrite").parquet(
-                f"{out_dir}/clean"
-            )
-            # pack the SURVIVORS, not the raw corpus: packing before the
-            # filter would assign offsets/bins that include later-dropped
-            # docs, leaving every training window underfilled. Read them
-            # back from the clean/ files just written — a stage boundary:
-            # the pack plan references both its window branch and its
-            # shard-totals branch, and carrying the whole filter lineage
-            # (LSH pair join + stopword alternation regexes) into each
-            # branch makes the composed plan explode (measured: driver OOM
-            # just RENDERING the explain string at sf0.001)
-            survivors = spark.read.parquet(f"{out_dir}/clean")
-            packed = token_pack_for(survivors, budget=budget)
-            packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
-            # stats straight off the persisted decisions — never a
-            # second, recomputed filter
-            stats = {
-                r["reason"]: {
-                    "n_docs": r["n_docs"], "bpe_tokens": r["bpe_tokens"],
-                }
-                for r in _filter_stats_for(
-                    decisions, token_counts_for(docs, ["doc_id"])
-                ).collect()
-            }
-        finally:
-            decisions.unpersist()
+        )
+        kept = decisions.where("keep").select("doc_id", "pred_lang", "quality")
+        docs.join(kept, "doc_id").write.mode("overwrite").parquet(
+            f"{out_dir}/clean"
+        )
+        packed.write.mode("overwrite").parquet(f"{out_dir}/packed")
+        # stats straight off the checkpointed decisions — never a
+        # second, recomputed filter
+        toks = token_counts_for(docs, ["doc_id"])
+        stats = {
+            r["reason"]: {k: r[k] for k in ("n_docs", "bpe_tokens")}
+            for r in _filter_stats_for(decisions, toks).collect()
+        }
     finally:
-        if clusters is not None:
-            # duplicate_clusters hands back a persisted label table
-            # the caller owns
-            clusters.unpersist()
-        if dedup_method == "minhash" and pairs is not None:
-            # minhash_lsh_pairs_for hands back a persisted pair set
-            # the composed job owns. The ngram path is lazy — nothing
-            # to release.
+        if pairs is not None:
+            # minhash hands back a persisted pair set the job owns (a
+            # no-op on the lazy ngram pairs)
             pairs.unpersist()
         docs.unpersist()
 
     # count bins from the files just written, not by re-running the
     # pack plan (window + scan + join) a second time
-    n_bins = (
-        spark.read.parquet(f"{out_dir}/packed")
-        .select("source", "bin")
-        .distinct()
-        .count()
-    )
+    bins = spark.read.parquet(f"{out_dir}/packed").select("source", "bin")
     summary = {
         "outcomes": stats,
         "kept_docs": int(stats.get("kept", {}).get("n_docs", 0)),
-        "kept_bins": int(n_bins),
+        "kept_bins": bins.distinct().count(),
         "budget": budget,
         "extraction": extraction,
     }
