@@ -25,3 +25,10 @@ Design principles (see SURVEY.md):
 """
 
 __version__ = "0.1.0"
+
+# the only import-time side effect: inside a Spark Python worker, stop
+# the per-task importer invalidation from re-reading zip archives and
+# freeze the import-time heap (workerhook.py); a no-op in the driver
+from v2_ocr_spark.workerhook import lighten_worker
+
+lighten_worker()
