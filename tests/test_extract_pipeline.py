@@ -1,18 +1,21 @@
 """End-to-end per-turn equality (SURVEY.md §5.2 item 3): the Spark
-mapInPandas pipeline must reproduce the pregenerated expected table
+mapInArrow pipeline must reproduce the pregenerated expected table
 byte-for-byte on every turn, never dropping rows (P10)."""
 
 from __future__ import annotations
 
 import time
 
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from v2_ocr_spark.kernels import KERNELS
+from v2_ocr_spark.kernels import SCALARS
 from v2_ocr_spark.operators.extract import (
-    _extract_batch,
+    EXTRACTED_DDL,
+    EXTRACTED_METRICS_DDL,
+    extract_batch,
     extract_pandas,
     extract_turns,
 )
@@ -113,45 +116,54 @@ def test_stable_ordering_under_repartition(spark, sf_small):
 
 
 def _batch(rows):
-    """(payload_kind, text) pairs -> an _extract_batch input frame."""
-    return pd.DataFrame(
+    """(payload_kind, text) pairs -> an extract_batch input batch."""
+    return pa.RecordBatch.from_pydict(
         {
-            "conv_id": "c",
-            "turn_idx": range(len(rows)),
+            "conv_id": ["c"] * len(rows),
+            "turn_idx": pa.array(range(len(rows)), pa.int32()),
             "text": [t for _, t in rows],
             "payload_kind": [k for k, _ in rows],
         }
     )
 
 
+def test_batch_schema_is_the_arrow_form_of_the_ddl(spark):
+    """The batch function builds exactly the Arrow schema Spark derives
+    from each declared DDL, with and without metrics."""
+    rows = [("html", "<p>a paragraph</p>"), ("plain", None), ("bogus", "x")]
+    for ddl, metrics in ((EXTRACTED_DDL, False), (EXTRACTED_METRICS_DDL, True)):
+        want = to_arrow_schema(spark.createDataFrame([], ddl).schema)
+        assert extract_batch(_batch(rows), metrics).schema.equals(want)
+
+
 def test_proc_us_is_per_kind_kernel_time(monkeypatch):
     """proc_us is the kernel time of the row's own kind, not the batch
     wall time smeared over every row."""
-    html = KERNELS["html"]
+    html = SCALARS["html"]
 
-    def slow_html(texts):
+    def slow_html(text):
         time.sleep(0.05)
-        return html(texts)
+        return html(text)
 
-    monkeypatch.setitem(KERNELS, "html", slow_html)
+    monkeypatch.setitem(SCALARS, "html", slow_html)
     rows = [("html", "<p>some html content long enough to keep</p>")]
     rows += [("plain", f"turn {i}") for i in range(9)]
-    out = _extract_batch(_batch(rows), True)
-    assert out["proc_us"].iloc[0] >= 50_000
-    assert out["proc_us"].iloc[1:].sum() < 5_000
+    proc_us = extract_batch(_batch(rows), True).column("proc_us").to_pylist()
+    assert proc_us[0] >= 50_000
+    assert sum(proc_us[1:]) < 5_000
 
 
 def test_kernel_failure_isolated_to_its_row(monkeypatch):
     """P10: a raising kernel call and an unknown kind become error rows;
     every other row, and the row order, are untouched."""
-    plain = KERNELS["plain"]
+    plain = SCALARS["plain"]
 
-    def fragile_plain(texts):
-        if (texts == "boom").any():
+    def fragile_plain(text):
+        if text == "boom":
             raise ValueError("kernel exploded")
-        return plain(texts)
+        return plain(text)
 
-    monkeypatch.setitem(KERNELS, "plain", fragile_plain)
+    monkeypatch.setitem(SCALARS, "plain", fragile_plain)
     rows = [
         ("markdown", "# a\n\n![i](x) b"),
         ("plain", "one"),
@@ -163,16 +175,17 @@ def test_kernel_failure_isolated_to_its_row(monkeypatch):
         ("plain", "two"),
     ]
     batch = _batch(rows)
-    out = _extract_batch(batch, False)
-    assert len(out) == len(batch)
-    assert list(zip(out["conv_id"], out["turn_idx"])) == list(
-        zip(batch["conv_id"], batch["turn_idx"])
+    out = extract_batch(batch, False).to_pylist()
+    assert len(out) == batch.num_rows
+    assert [(r["conv_id"], r["turn_idx"]) for r in out] == list(
+        zip(batch.column("conv_id").to_pylist(),
+            batch.column("turn_idx").to_pylist())
     )
-    boom = out.iloc[3]
+    boom = out[3]
     assert (boom["extracted_text"], boom["spans"]) == ("", [])
-    assert "kernel exploded" in boom["error"]
-    assert out.iloc[4]["error"] == "unknown payload kind: bogus"
+    assert boom["error"] == "ValueError: kernel exploded"
+    assert out[4]["error"] == "unknown payload kind: bogus"
     for i in (0, 1, 2, 5, 6, 7):
-        alone = _extract_batch(batch.iloc[i:i + 1], False)
-        pd.testing.assert_frame_equal(out.iloc[i:i + 1], alone)
-        assert alone["error"].iloc[0] is None
+        alone = extract_batch(batch.slice(i, 1), False).to_pylist()
+        assert alone == [out[i]]
+        assert alone[0]["error"] is None

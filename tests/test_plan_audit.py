@@ -28,7 +28,8 @@ def tdir(sf_small):
 
 def test_extract_is_single_python_stage_zero_shuffle(spark, tdir):
     p = plan(extract_turns(spark.read.parquet(f"{tdir}/transcripts.parquet")))
-    assert p.count("MapInPandas") == 1
+    assert p.count("MapInArrow") == 1
+    assert "MapInPandas" not in p
     assert "Exchange" not in p  # embarrassingly parallel: no shuffle
     # scan pruned to exactly the dispatch+payload columns — ts unread
     assert "ReadSchema: struct<conv_id:string,turn_idx:int,role:string,text:string,tool:string>" in p
@@ -72,6 +73,7 @@ def test_jvm_only_paths_have_no_python(spark, documents, transcripts):
         assert "BatchEvalPython" not in p
         assert "ArrowEvalPython" not in p
         assert "MapInPandas" not in p
+        assert "MapInArrow" not in p
 
 
 def test_events_window_partitions_by_user(spark, events):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -25,6 +25,40 @@ MARKDOWNISH = st.lists(
     ),
     max_size=60,
 ).map("".join)
+
+
+# the literals the kernel's prefilters test for, and the characters JS
+# '.' does not cross, in fragments that split and join them
+MARKDOWN_LITERALS = st.lists(
+    st.sampled_from(
+        list("ab $!\\[](){}\n\r\u2028\u2029\ufeff ")
+        + ["![", "$$", "![x](y)", "![](", "![a\rb](c)", "\\begin{aligned}",
+           "\\begin{align", "ned}", "\\end{aligned}", "\n\n"]
+    ),
+    max_size=60,
+).map("".join)
+
+
+@given(MARKDOWN_LITERALS)
+@settings(max_examples=500, deadline=None)
+def test_e1_prefilters_equal_the_unfiltered_chain(s):
+    """Skipping a regex whose literal is absent, and the paragraph scan
+    when there is no blank line, changes no output."""
+    from v2_ocr_spark.kernels.markdown import (
+        _ALIGNED, _DISPLAY_MATH, _IMAGE_REF, _PARA_SPLIT, extract_markdown,
+    )
+
+    cleaned = js_trim(_ALIGNED.sub(
+        r"\1", _DISPLAY_MATH.sub(r"\1", _IMAGE_REF.sub("", s))
+    ))
+    spans, pos = [], 0
+    for m in _PARA_SPLIT.finditer(cleaned):
+        if m.start() > pos:
+            spans.append((pos, m.start(), "paragraph"))
+        pos = m.end()
+    if pos < len(cleaned):
+        spans.append((pos, len(cleaned), "paragraph"))
+    assert extract_markdown(s) == (cleaned, spans)
 
 
 @given(MARKDOWNISH)
@@ -330,7 +364,7 @@ def test_e16_input_order_invariant(boxes):
 
 
 # ---------------------------------------------------------------------------
-# _extract_batch: one output assembly
+# extract_batch: one Arrow batch in, one out
 # ---------------------------------------------------------------------------
 
 BLOCKS_PAYLOAD = st.builds(
@@ -354,33 +388,74 @@ TURN = st.tuples(
 )
 
 
-@st.composite
-def turn_batches(draw):
-    turns = draw(st.lists(TURN, min_size=1, max_size=40))
-    index = draw(st.permutations(range(3, 3 + len(turns))))
-    return pd.DataFrame(
+EXTRACT_INPUT = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+    ("text", pa.string()), ("payload_kind", pa.string()),
+])
+
+
+def _record_batch(turns, turn_idx=None):
+    """(payload_kind, text) pairs -> an extract_batch input batch."""
+    return pa.RecordBatch.from_pydict(
         {
             "conv_id": [f"c{i % 3}" for i in range(len(turns))],
-            "turn_idx": range(len(turns)),
+            "turn_idx": range(len(turns)) if turn_idx is None else turn_idx,
             "text": [t for _, t in turns],
             "payload_kind": [k for k, _ in turns],
         },
-        index=index,
+        schema=EXTRACT_INPUT,
     )
+
+
+@st.composite
+def turn_batches(draw):
+    turns = draw(st.lists(TURN, min_size=1, max_size=40))
+    order = draw(st.permutations(range(3, 3 + len(turns))))
+    return _record_batch(turns, order)
 
 
 @given(turn_batches())
 @settings(max_examples=150, deadline=None)
 def test_extract_batch_keeps_input_order_and_rowwise_results(batch):
-    """Per-kind results are concatenated and reindexed once: the output
-    keeps the batch's index order and equals the row-by-row runs."""
-    from v2_ocr_spark.operators.extract import _extract_batch
+    """Rows are grouped by kind only for dispatch: the output keeps the
+    batch's row order and equals the row-by-row runs."""
+    from v2_ocr_spark.operators.extract import extract_batch
 
-    out = _extract_batch(batch, True)
-    assert list(out.index) == list(batch.index)
-    rowwise = pd.concat(
-        [_extract_batch(batch.iloc[i:i + 1], True) for i in range(len(batch))]
+    out = pa.Table.from_batches([extract_batch(batch, True)])
+    assert out.column("turn_idx").to_pylist() == (
+        batch.column("turn_idx").to_pylist()
     )
-    pd.testing.assert_frame_equal(
-        out.drop(columns="proc_us"), rowwise.drop(columns="proc_us")
+    rowwise = pa.Table.from_batches(
+        [extract_batch(batch.slice(i, 1), True) for i in range(batch.num_rows)]
     )
+    assert out.drop_columns(["proc_us"]).equals(
+        rowwise.drop_columns(["proc_us"])
+    )
+
+
+NON_BMP_TEXT = st.lists(
+    st.sampled_from(
+        ["a", " ", "\n", "\n\n", "\u00e9", "\u2028", "\U0001f600",
+         "\U0001d518", "\U0010fffd", "$$", "![x](y)", "<p>", "</p>"]
+    ),
+    max_size=30,
+).map("".join)
+
+
+@given(st.lists(
+    st.tuples(
+        st.sampled_from(["markdown", "plain", "html", "ocr_v9"]),
+        st.one_of(st.none(), NON_BMP_TEXT),
+    ),
+    min_size=1, max_size=12,
+))
+@settings(max_examples=150, deadline=None)
+def test_extract_batch_char_counts_are_code_points(turns):
+    """chars_in / chars_out count code points, as Python len does, also
+    for characters outside the BMP (4 UTF-8 bytes, 2 UTF-16 units)."""
+    from v2_ocr_spark.operators.extract import extract_batch
+
+    out = extract_batch(_record_batch(turns), True).to_pylist()
+    for (_, text), row in zip(turns, out):
+        assert row["chars_in"] == len(text or "")
+        assert row["chars_out"] == len(row["extracted_text"])

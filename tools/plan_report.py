@@ -39,7 +39,7 @@ def main() -> None:
     sections = [
         (
             "extract_turns — the per-turn hot path",
-            "zero Exchange (embarrassingly parallel); ONE MapInPandas; "
+            "zero Exchange (embarrassingly parallel); ONE MapInArrow; "
             "scan pruned to the 5 dispatch/payload columns (no ts)",
             extract_turns(t),
         ),

@@ -12,9 +12,9 @@ conversation-transcript tables:
                  spans array<struct<start:int,end:int,kind:string>>)
 
 Design principles (see SURVEY.md):
-  * DataFrame/Catalyst first; extraction kernels are vectorized
-    pandas/Arrow UDFs inside a single ``mapInPandas`` pass (never
-    per-row Python UDFs).
+  * DataFrame/Catalyst first; extraction kernels run over whole Arrow
+    batches inside a single ``mapInArrow`` pass (never per-row Python
+    UDFs).
   * Per-turn extraction is a narrow map — zero shuffles.
   * Per-conversation assembly is JVM-side
     ``sort_array(collect_list(...))`` with an optional two-phase

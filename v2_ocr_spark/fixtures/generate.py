@@ -15,8 +15,8 @@ Tables written per scale (sf0.001 / sf0.01 / sf0.1) under --out:
                 source_name, size_bytes)
 
 The expected table is produced by the scalar kernels
-(``kernels.SCALARS``) — the same functions that ``KERNELS`` lifts into
-the Spark mapInPandas pass — while the hand-derived golden fixtures in
+(``kernels.SCALARS``) — the same functions the Spark mapInArrow pass
+calls per row — while the hand-derived golden fixtures in
 tests/fixtures/*.json independently pin the kernels themselves to the
 reference's JS semantics.
 """
@@ -337,7 +337,8 @@ GEN = {
 
 def expected_for(kind: str, text: str) -> tuple[str, list[dict]]:
     """Expected (text, spans) of one turn through its scalar kernel —
-    the table ``KERNELS`` is built from — with spans as struct dicts."""
+    the table the extraction pass dispatches on — with spans as struct
+    dicts."""
     cleaned, spans, *_ = SCALARS[kind](text)
     return cleaned, [{"start": s, "end": e, "kind": k} for s, e, k in spans]
 

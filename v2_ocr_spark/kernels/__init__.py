@@ -3,10 +3,11 @@
 A kernel is ``payload (str | None) -> (text, spans[, nodes_seen])``:
 the cleaned text, its ``(start, end, kind)`` spans and, for html, the
 DOM blocks inspected. ``SCALARS`` is the one payload-kind -> kernel
-table. ``KERNELS`` lifts each scalar through one row-wise adapter to
-``pandas.Series -> tuple of Series`` (same index), the form
-``mapInPandas`` runs over each Arrow batch; the fixture generator calls
-the scalars directly to build the golden expected tables. A new payload
+table: the ``mapInArrow`` extraction pass calls it per row of each
+Arrow batch, and the fixture generator calls it to build the golden
+expected tables. ``KERNELS`` lifts each scalar through one row-wise
+adapter to ``pandas.Series -> tuple of Series`` (same index), the form
+the kernel tests and perfbench's kernel probe call. A new payload
 kind is one scalar and one ``SCALARS`` entry.
 """
 

@@ -16,7 +16,7 @@ two places:
      bytes between environments) into a flat list of block nodes:
      ``(block_id, tag, depth, boiler, text, n_chars, link_chars,
      n_inline)``.  This is the only stage that needs Python; inside
-     Spark it runs batched per Arrow chunk (mapInPandas), never as a
+     Spark it runs batched per Arrow chunk (mapInArrow), never as a
      per-row Python UDF round-trip.
   2. classification + reassembly — pure integer arithmetic over the
      node table (``is_content_mask`` below).  ``operators/dom.py``

@@ -64,10 +64,15 @@ def clean_markdown(text: str | None) -> str:
     """E1 cleanup of one turn; ``extract_markdown`` adds its spans."""
     if text is None:
         return ""
-    out = _IMAGE_REF.sub("", text)
-    out = _DISPLAY_MATH.sub(r"\1", out)
-    out = _ALIGNED.sub(r"\1", out)
-    return js_trim(out)
+    # each pattern starts with a literal: without it there is no match
+    # and the JS .replace returns its input, so the scan can be skipped
+    if "![" in text:
+        text = _IMAGE_REF.sub("", text)
+    if "$$" in text:
+        text = _DISPLAY_MATH.sub(r"\1", text)
+    if "\\begin{aligned}" in text:
+        text = _ALIGNED.sub(r"\1", text)
+    return js_trim(text)
 
 
 def paragraph_spans(cleaned: str) -> list[tuple[int, int, str]]:
@@ -77,6 +82,8 @@ def paragraph_spans(cleaned: str) -> list[tuple[int, int, str]]:
     results-service.ts:101); paragraph offsets are the engine's analog
     of its block-level structure.
     """
+    if "\n\n" not in cleaned:  # one paragraph, or none
+        return [(0, len(cleaned), "paragraph")] if cleaned else []
     spans: list[tuple[int, int, str]] = []
     pos = 0
     for m in _PARA_SPLIT.finditer(cleaned):

@@ -3,7 +3,7 @@
 The north star calls for "Readability-style text-density and
 link-density scoring over a flattened DOM-node table".  The production
 extract path runs the whole thing fused inside one zero-shuffle
-mapInPandas kernel (kernels/htmlx.py via operators/extract.py); THIS
+mapInArrow kernel (kernels/htmlx.py via operators/extract.py); THIS
 module exposes the intermediate node table as a real DataFrame so the
 scoring + classification can run as JVM-side Column arithmetic
 (whole-stage codegen) and be queried/audited relationally.

@@ -1,19 +1,23 @@
 """The extraction pipeline — per-turn text cleanup as ONE narrow
-mapInPandas pass.
+mapInArrow pass.
 
 Reference parity:
   * kernel dispatch == the provider factory switch
     (reference: lib/ocr/providers/index.ts:82-99) — a payload-kind
     column selects the kernel per row, so dispatch costs no shuffle
-    and no extra pass (SURVEY.md §2.10). Each Arrow batch calls
-    ``KERNELS[kind]`` once per kind present, concatenates the per-kind
-    results and reindexes them to input order in one step.
+    and no extra pass (SURVEY.md §2.10). Each Arrow batch groups its
+    row indices by kind and calls ``SCALARS[kind]`` per row.
   * error-as-row == P10 (file-processor.ts:474-504): a failing turn
     produces a result row with empty text and the error message —
     turns are never dropped.
   * per-turn metrics == the per-page progress/metrics stamps
     (file-processor.ts:312-327); ``proc_us`` is the kernel time of the
     row's kind in its batch divided by that kind's rows.
+
+The boundary is Arrow on both sides: the batch function reads ``text``
+and ``payload_kind`` once as Python lists, passes the key columns
+through untouched and builds its output arrays directly — no pandas
+frame and no per-row span dicts.
 
 Scale notes (100 TB / 10^12 turns):
   * This stage is embarrassingly parallel: no groupBy, no join, no
@@ -30,15 +34,19 @@ Scale notes (100 TB / 10^12 turns):
 
 from __future__ import annotations
 
+import re
 import time
 from collections.abc import Iterator
+from itertools import accumulate
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from v2_ocr_spark.kernels import KERNELS
+from v2_ocr_spark.kernels import SCALARS
 
 # dispatch rule (P11 analog): tool turns declare their kind in the tool
 # column ("<name> extract:<kind>"); assistant turns carry provider
@@ -56,6 +64,22 @@ EXTRACTED_METRICS_DDL = (
     "proc_us long"
 )
 
+# the Arrow form of the two DDLs, built without a JVM (workers have none)
+_SPAN = pa.struct(
+    [("start", pa.int32()), ("end", pa.int32()), ("kind", pa.string())]
+)
+EXTRACTED_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()),
+    ("extracted_text", pa.string()), ("spans", pa.list_(_SPAN)),
+    ("error", pa.string()),
+])
+EXTRACTED_METRICS_SCHEMA = pa.schema([
+    *EXTRACTED_SCHEMA,
+    ("chars_in", pa.int64()), ("chars_out", pa.int64()),
+    ("n_spans", pa.int32()), ("nodes_seen", pa.int64()),
+    ("proc_us", pa.int64()),
+])
+
 
 def with_payload_kind(df: DataFrame) -> DataFrame:
     """Derive the kernel-dispatch column (JVM-side, codegen'd)."""
@@ -71,69 +95,79 @@ def with_payload_kind(df: DataFrame) -> DataFrame:
     )
 
 
-# span tuples (start, end, kind) convert to Arrow struct rows directly —
-# building dicts per row costs ~10% of the whole pass (measured)
+def _pylist(col: pa.Array) -> list:
+    """A string column as a list of ``str`` (None for null): the same
+    list as ``to_pylist()``, which builds an Arrow scalar per value and
+    costs ~5x more on 4096-row batches (measured)."""
+    return col.to_numpy(zero_copy_only=False).tolist()
 
 
-def _error_rows(index: pd.Index, error: str) -> pd.DataFrame:
-    return pd.DataFrame(
-        {"extracted_text": "", "spans": [[] for _ in index], "error": error},
-        index=index,
+def _spans_array(spans: list) -> pa.ListArray:
+    """Per-row ``(start, end, kind)`` lists -> one list<struct> array
+    over flat child arrays (no per-span dicts)."""
+    flat = [span for row in spans for span in row]
+    starts, ends, kinds = zip(*flat) if flat else ((), (), ())
+    return pa.ListArray.from_arrays(
+        pa.array(list(accumulate(map(len, spans), initial=0)), pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(starts, pa.int32()), pa.array(ends, pa.int32()),
+             pa.array(kinds, pa.string())],
+            fields=list(_SPAN),
+        ),
     )
 
 
-def _apply(kernel, texts: pd.Series) -> pd.DataFrame:
-    """One kind's rows through its kernel. P10 fallback: a failing call
-    is retried row by row, so only the failing rows become error rows."""
-    try:
-        fields = kernel(texts)
-    except Exception as exc:  # noqa: BLE001
-        if len(texts) == 1:
-            return _error_rows(texts.index, f"{type(exc).__name__}: {exc}")
-        return pd.concat(
-            [_apply(kernel, texts.iloc[i:i + 1]) for i in range(len(texts))]
-        )
-    cols = dict(zip(("extracted_text", "spans", "nodes_seen"), fields))
-    return pd.DataFrame(cols, index=texts.index)
-
-
-def _extract_batch(pdf: pd.DataFrame, with_metrics: bool) -> pd.DataFrame:
-    parts = []
-    for kind, texts in pdf["text"].groupby(
-        pdf["payload_kind"], sort=False, dropna=False
-    ):
+def extract_batch(batch: pa.RecordBatch, with_metrics: bool) -> pa.RecordBatch:
+    """One Arrow batch of (conv_id, turn_idx, text, payload_kind) through
+    the kernels, in input order. P10: a raising row and a row of an
+    unknown kind become error rows; no row is dropped."""
+    texts = _pylist(batch.column("text"))
+    rows_of: dict[str | None, list[int]] = {}
+    for i, kind in enumerate(_pylist(batch.column("payload_kind"))):
+        rows_of.setdefault(kind, []).append(i)
+    n = len(texts)
+    out, spans, errors = [""] * n, [()] * n, [None] * n
+    nodes_seen, proc_us = [None] * n, [0] * n
+    for kind, rows in rows_of.items():
         t0 = time.perf_counter_ns()
-        kernel = KERNELS.get(kind)
-        part = (  # unknown kinds -> error rows, never dropped (P10)
-            _apply(kernel, texts) if kernel else
-            _error_rows(texts.index, f"unknown payload kind: {kind}")
-        )
+        kernel = SCALARS.get(kind)
+        if kernel is None:
+            for i in rows:
+                errors[i] = f"unknown payload kind: {kind}"
+        else:
+            for i in rows:
+                try:
+                    res = kernel(texts[i])
+                except Exception as exc:  # noqa: BLE001
+                    errors[i] = f"{type(exc).__name__}: {exc}"
+                    continue
+                out[i], spans[i] = res[0], res[1]
+                if len(res) > 2:  # html: the DOM blocks it inspected
+                    nodes_seen[i] = res[2]
         # per-kind kernel time, shared by that kind's rows in the batch
-        part["proc_us"] = (time.perf_counter_ns() - t0) // 1000 // len(texts)
-        parts.append(part)
-    # only error rows carry "error" and only html rows "nodes_seen": an
-    # all-None object column makes concat test every value for NA
-    res = pd.concat(parts).reindex(
-        index=pdf.index,
-        columns=["extracted_text", "spans", "error", "nodes_seen", "proc_us"],
+        us = (time.perf_counter_ns() - t0) // 1000 // len(rows)
+        for i in rows:
+            proc_us[i] = us
+    text_out = pa.array(out, pa.string())
+    span_col = _spans_array(spans)
+    cols = [
+        batch.column("conv_id"), batch.column("turn_idx"), text_out,
+        span_col, pa.array(errors, pa.string()),
+    ]
+    if not with_metrics:
+        return pa.RecordBatch.from_arrays(cols, schema=EXTRACTED_SCHEMA)
+    n_spans = span_col.value_lengths()
+    # nodes inspected per turn (north-rule metrics: dropped = seen-kept);
+    # kernels without a dropped-block notion: seen == kept
+    seen = pc.coalesce(
+        pa.array(nodes_seen, pa.int64()), n_spans.cast(pa.int64())
     )
-    error = res["error"].astype(object)
-    out = pdf[["conv_id", "turn_idx"]].assign(
-        extracted_text=res["extracted_text"], spans=res["spans"],
-        error=error.where(error.notna(), None),
-    )
-    if with_metrics:
-        # nodes inspected per turn (north-rule metrics: dropped =
-        # seen-kept); kernels without a dropped-block notion: seen == kept
-        n_spans = res["spans"].map(len).astype("int32")
-        out = out.assign(
-            chars_in=pdf["text"].fillna("").str.len().astype("int64"),
-            chars_out=res["extracted_text"].str.len().astype("int64"),
-            n_spans=n_spans,
-            nodes_seen=res["nodes_seen"].fillna(n_spans).astype("int64"),
-            proc_us=res["proc_us"],
-        )
-    return out
+    cols += [  # utf8_length counts code points, as Python len does
+        pc.utf8_length(batch.column("text")).fill_null(0).cast(pa.int64()),
+        pc.utf8_length(text_out).cast(pa.int64()),
+        n_spans, seen, pa.array(proc_us, pa.int64()),
+    ]
+    return pa.RecordBatch.from_arrays(cols, schema=EXTRACTED_METRICS_SCHEMA)
 
 
 def extract_turns(df: DataFrame, with_metrics: bool = False) -> DataFrame:
@@ -144,26 +178,32 @@ def extract_turns(df: DataFrame, with_metrics: bool = False) -> DataFrame:
     )
     schema = EXTRACTED_METRICS_DDL if with_metrics else EXTRACTED_DDL
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield _extract_batch(pdf, with_metrics)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                yield extract_batch(batch, with_metrics)
 
-    return src.mapInPandas(run, schema=schema)
+    return src.mapInArrow(run, schema=schema)
 
 
 def extract_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Driver-side pure-pandas reference run of the same kernels —
-    used by e2e tests to check the Spark pipeline row-for-row."""
-    tool = pdf["tool"].fillna("")
-    kind = tool.str.extract(_KIND_RE, expand=False)
-    kind = kind.where(
-        kind.notna(),
-        pd.Series(
-            ["markdown" if r == "assistant" else "plain" for r in pdf["role"]],
-            index=pdf.index,
-        ),
+    """Driver-side row loop over the same scalar kernels, with its own
+    kind dispatch — the independent reference the e2e tests hold the
+    Spark pass to, row for row."""
+    rows = []
+    for tool, role, text in zip(pdf["tool"], pdf["role"], pdf["text"]):
+        m = re.search(_KIND_RE, tool) if isinstance(tool, str) else None
+        kind = m[1] if m else "markdown" if role == "assistant" else "plain"
+        if kind not in SCALARS:
+            rows.append(("", [], f"unknown payload kind: {kind}"))
+            continue
+        try:
+            cleaned, spans, *_ = SCALARS[kind](text)
+        except Exception as exc:  # noqa: BLE001
+            rows.append(("", [], f"{type(exc).__name__}: {exc}"))
+        else:
+            rows.append((cleaned, spans, None))
+    res = pd.DataFrame(
+        rows, columns=["extracted_text", "spans", "error"], index=pdf.index
     )
-    work = pdf[["conv_id", "turn_idx", "text"]].copy()
-    work["payload_kind"] = kind
-    return _extract_batch(work, with_metrics=False)
+    return pd.concat([pdf[["conv_id", "turn_idx"]], res], axis=1)

@@ -22,7 +22,7 @@ entry also runs; its in-memory cuts (localCheckpointed labels and
 decisions) keep the pack plan bounded without a parquet re-read.
 
 Scale notes per stage: extraction is the audited zero-shuffle
-MapInPandas; assembly the two-phase chunked merge (turn-derived salt);
+MapInArrow; assembly the two-phase chunked merge (turn-derived salt);
 near-dup over assembled conversations is selectable — the exact
 shingle inverted index (ngram_jaccard_pairs_for, default, max_df cap
 available) or the sub-quadratic MinHash->LSH->verify cascade

@@ -8,7 +8,7 @@ which is both closer in semantics (status rows, crash recovery by
 status reset, idempotent upserts) and faster (no micro-batch overhead).
 
 For genuinely unbounded transcript sources, the same extraction pass
-runs unchanged under Structured Streaming — mapInPandas is supported in
+runs unchanged under Structured Streaming — mapInArrow is supported in
 streaming plans — see stream_extract.py (file-source -> extract ->
 parquet sink with checkpointing; exactly-once via the streaming
 commit log, the Structured-Streaming analog of the batch sink's
