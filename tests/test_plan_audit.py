@@ -83,23 +83,35 @@ def test_events_window_partitions_by_user(spark, events):
     assert "hashpartitioning(user_id" in p
 
 
-def test_writer_sorts_within_partitions(spark, tdir):
-    """W1 at rest: the job writer stages with sortWithinPartitions, no
-    global sort (which would add a range exchange)."""
-    from v2_ocr_spark.pipeline.sink import partition_id
+def test_writer_sorts_within_partitions(spark, sf_small, tmp_path):
+    """W1 at rest: every file ExtractionJob.run() leaves in the sink is
+    one row group sorted by (conv_id, turn_idx), with no pid column (pid
+    lives in the directory name only). The input is shuffled first, so
+    the order comes from the writer's sort, not from the fixture's."""
+    import glob
 
-    staged = (
-        extract_turns(spark.read.parquet(f"{tdir}/transcripts.parquet"),
-                      with_metrics=True)
-        .withColumn("pid", partition_id(num_partitions=4))
-        .sortWithinPartitions("conv_id", "turn_idx")
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from v2_ocr_spark.pipeline.runner import ExtractionJob
+
+    src = pq.read_table(f"{sf_small}/transcripts.parquet")
+    shuffled = str(tmp_path / "shuffled.parquet")
+    pq.write_table(
+        src.take(np.random.default_rng(7).permutation(src.num_rows)),
+        shuffled,
     )
-    p = plan(staged)
-    # "..., false, 0" after the sort keys = global=false (no range
-    # exchange; each task sorts its own partition)
-    assert "Sort [conv_id" in p and "], false, 0" in p
-    assert "rangepartitioning" not in p.lower()
-    assert "Exchange" not in p
+    out = str(tmp_path / "sorted")
+    ExtractionJob(spark, shuffled, out, num_partitions=4).run()
+    files = glob.glob(f"{out}/data/pid=*/part-*.parquet")
+    assert len(files) >= 4
+    for f in files:
+        pf = pq.ParquetFile(f)
+        assert pf.metadata.num_row_groups == 1
+        t = pf.read()
+        assert "pid" not in t.column_names
+        keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+        assert keys == sorted(keys)
 
 
 def test_ngram_jaccard_plan_has_no_cartesian(spark, documents):

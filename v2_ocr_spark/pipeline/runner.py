@@ -14,11 +14,12 @@ Mirrors the reference's queue semantics (SURVEY.md §2.9) on Spark:
     (committed) independently; a crash loses at most in-flight
     partitions, and re-running them is idempotent (S5 MERGE key).
 
-Efficiency at scale: the job makes ONE pass over the input per run —
-all uncommitted partitions are staged in a single Spark write with
-``partitionBy(pid)`` (each task writes only its partitions' files),
-then promoted per-partition. Resume scans only the pruned subset
-(pid pushdown via pmod filter at the scan).
+Efficiency at scale: the job reads the input ONCE per run (one
+listing, shared by the fingerprint scan and the extraction) and stages
+all uncommitted partitions in one MergeSink.stage pass — each task
+writes only its pids' files — then promotes them per partition. Resume
+scans only the pruned subset (pid pushdown via pmod filter at the
+scan).
 """
 
 from __future__ import annotations
@@ -84,7 +85,12 @@ class ExtractionJob:
         outside the change model (transcript stores are append-only
         event logs); re-run non-incrementally to force full recompute.
         """
-        df = self.spark.read.parquet(self.input_path).withColumn(
+        return self._fingerprints(
+            self.spark.read.parquet(self.input_path), pids)
+
+    def _fingerprints(self, source: DataFrame,
+                      pids: list[int] | None = None) -> dict[int, dict]:
+        df = source.withColumn(
             "pid", partition_id("conv_id", self.num_partitions)
         )
         if pids is not None and len(pids) < self.num_partitions:
@@ -128,9 +134,8 @@ class ExtractionJob:
                 changed.append(pid)
         return changed
 
-    def _extracted(self, pids: list[int]) -> DataFrame:
-        df = self.spark.read.parquet(self.input_path)
-        df = df.withColumn("pid", self.sink.pid())
+    def _extracted(self, source: DataFrame, pids: list[int]) -> DataFrame:
+        df = source.withColumn("pid", self.sink.pid())
         if len(pids) < self.num_partitions:
             df = df.where(F.col("pid").isin(pids))  # resume: pruned rescan
         return extract_turns(
@@ -161,8 +166,12 @@ class ExtractionJob:
     def _run_owned(self, run_id: str, incremental: bool) -> dict:
         self.checkpoints.recover()  # Q2
         pids = self.pending_partitions()
+        # ONE read of the input per run: its listing and footer job are
+        # shared by the fingerprint scan and the extraction
+        source = (self.spark.read.parquet(self.input_path)
+                  if pids or incremental else None)
         if incremental:
-            fps = self.input_fingerprints()
+            fps = self._fingerprints(source)
             # changed COMMITTED partitions respect the same Q4 retry
             # cap as uncommitted ones — without this, a committed
             # partition whose appended input keeps failing to stage is
@@ -181,7 +190,7 @@ class ExtractionJob:
         if not incremental:
             # fingerprint only the partitions being staged (pruned,
             # narrow scan) so future incremental runs have baselines
-            fps = self.input_fingerprints(pids)
+            fps = self._fingerprints(source, pids)
 
         for pid in pids:
             st = self.checkpoints.get(pid)
@@ -192,7 +201,7 @@ class ExtractionJob:
 
         try:
             staged = self.sink.stage(
-                self._extracted(pids), run_id,
+                self._extracted(source, pids), run_id,
                 F.count("*").alias("turns"),
                 F.sum("nodes_seen").alias("nodes"),
                 F.sum("n_spans").alias("kept"),

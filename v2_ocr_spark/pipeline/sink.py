@@ -15,8 +15,9 @@ results-service.ts:125,137):
 
 Layout:
     out/
-      data/pid=<N>/part-*.parquet     (staged by Spark, then promoted)
-      _staging/<run>/pid=<N>/...      (invisible until promoted)
+      data/pid=<N>/part-*.parquet     (+ .crc sidecars; staged, then promoted)
+      _staging/<run>/pid=<N>/...      (written by stage()'s own pass, one
+                                       per task; invisible until promoted)
       _commits/<N>.json               (atomic marker: snapshot + metrics)
       _checkpoints/<N>.json           (claim-state machine, Q1/Q2)
 
@@ -36,13 +37,19 @@ THEN INSERT ...`` — only this module changes.
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
+import struct
 import threading
 import time
 import uuid
+import zlib
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 # 7-status lifecycle, reference types/index.ts:33
@@ -55,6 +62,76 @@ DEFAULT_PARTITIONS = 32
 def partition_id(col: str = "conv_id",
                  num_partitions: int = DEFAULT_PARTITIONS) -> F.Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
+
+
+# Hadoop's checksum sidecar, the one LocalFileSystem verifies on every
+# read: "crc\0", the chunk size, then one CRC32 per chunk, big-endian
+CRC_CHUNK = 512
+
+
+def crc_sidecar(data) -> bytes:
+    view = memoryview(data)
+    sums = [zlib.crc32(view[i:i + CRC_CHUNK])
+            for i in range(0, len(view), CRC_CHUNK)]
+    return b"crc\0" + struct.pack(f">i{len(sums)}I", CRC_CHUNK, *sums)
+
+
+def _write_file(path: str, table: pa.Table, tag) -> None:
+    """``table`` as one snappy row group at ``path`` (no Arrow schema in
+    the footer: Spark reads the parquet types), then its ``.crc``
+    sidecar, each written under a hidden temp name unique to ``tag``
+    (the task attempt) and renamed into place."""
+    out = pa.BufferOutputStream()
+    pq.write_table(table, out, compression="snappy",
+                   row_group_size=table.num_rows, store_schema=False)
+    data = out.getvalue()
+    d, name = os.path.split(path)
+    for final, payload in ((name, data), (f".{name}.crc", crc_sidecar(data))):
+        tmp = os.path.join(d, f".{final}.{tag}.tmp")
+        with open(tmp, "wb") as f:
+            f.write(payload)
+        os.replace(tmp, os.path.join(d, final))
+
+
+def _write_pids(batches, staging: str, limit: int):
+    """MergeSink.stage's mapInArrow body. One task's rows, sorted by
+    (pid, conv_id, turn_idx), become ``pid=<N>/part-<partition>.parquet``
+    under ``staging``, without the pid column; with ``limit`` > 0 a file
+    rolls to ``part-<partition>-<k>.parquet`` every ``limit`` rows. A
+    retried attempt rewrites the same names. Every batch is passed on
+    for the caller's aggregates. A task holds one file's rows until it
+    writes them."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    stem, tag = f"part-{ctx.partitionId():05d}", ctx.taskAttemptId()
+    held, pid, rows, k = [], None, 0, 0
+
+    def flush():
+        nonlocal held, rows, k
+        if held:
+            d = os.path.join(staging, f"pid={pid}")
+            os.makedirs(d, exist_ok=True)
+            name = f"{stem}-{k}.parquet" if k else f"{stem}.parquet"
+            table = pa.Table.from_batches(held).drop_columns(["pid"])
+            _write_file(os.path.join(d, name), table, tag)
+            held, rows, k = [], 0, k + 1
+
+    for batch in batches:
+        col = batch.column("pid").to_numpy()
+        cuts = [0, *(np.flatnonzero(col[1:] != col[:-1]) + 1), len(col)]
+        for lo, hi in zip(cuts, cuts[1:]):
+            if col[lo] != pid:
+                flush()
+                pid, k = int(col[lo]), 0
+            while lo < hi:
+                n = hi - lo if limit <= 0 else min(hi - lo, limit - rows)
+                held.append(batch.slice(lo, n))
+                rows, lo = rows + n, lo + n
+                if rows == limit:
+                    flush()
+        yield batch
+    flush()
 
 
 class CheckpointStore:
@@ -401,8 +478,6 @@ class MergeSink:
         process, and restoring (or deleting) them mid-swap would make
         the promoter's second rename fail. Pass grace_seconds=0 only
         from a context that owns the sink exclusively (owned())."""
-        import glob
-
         restored = []
         now = time.time()
         for pid in self.committed():
@@ -494,42 +569,42 @@ class MergeSink:
            the lease, so no other run's staging is live.
         2. Schema sidecar BEFORE staging: keeps the table readable even
            if every partition later empties (see record_schema).
-        3. One write, partitioned by pid, turn-sorted at rest (W1).
-        4. ONE groupBy over the staged files fills every pid's
-           aggregates — a per-pid job each would serialize up to P
-           scheduler round-trips. Pids that staged no rows are absent.
+        3. One pass per task writes its pids' files itself
+           (``_write_pids``: pyarrow, ``.crc`` sidecars, no pid
+           column), turn-sorted at rest (W1). No file goes through
+           Hadoop's local filesystem, which forks a ``chmod`` per file
+           and directory where no native library loads.
+        4. The same action aggregates the batches the writer passed on:
+           ONE groupBy fills every pid's aggregates. Pids that staged
+           no rows are absent. Temp files a failed attempt stranded
+           are swept once it succeeded.
         5. Fence: if the heartbeater lost the lease to a takeover,
            promoting now would race the new owner — raise LeaseHeld."""
-        from pyspark.errors import AnalysisException
-
         if self._lease is None:
             raise RuntimeError(f"stage() outside owned() on {self.out_dir}")
         for stale in os.listdir(self.staging_root):
-            if stale != run_id:
-                shutil.rmtree(
-                    os.path.join(self.staging_root, stale), ignore_errors=True
-                )
+            shutil.rmtree(
+                os.path.join(self.staging_root, stale), ignore_errors=True
+            )
         self.record_schema(rows.schema)
-        staging = self.staging_dir(run_id)
-        (
+        staging = os.path.abspath(self.staging_dir(run_id))
+        # Spark's own writer honours this setting; so does ours
+        limit = int(rows.sparkSession.conf.get(
+            "spark.sql.files.maxRecordsPerFile"))
+        written = (
             rows.repartition("pid")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.partitionBy("pid")
-            .mode("overwrite")
-            .parquet(staging)
+            .sortWithinPartitions("pid", "conv_id", "turn_idx")
+            .mapInArrow(
+                lambda batches: _write_pids(batches, staging, limit),
+                rows.schema,
+            )
         )
-        try:
-            staged = rows.sparkSession.read.parquet(staging)
-        except AnalysisException:  # nothing staged at all (no footer)
-            # ONLY the empty-staging case yields no rows — a blanket
-            # except would swallow a transient read failure and promote
-            # real data with zeroed metrics, corrupting the lineage
-            by_pid = {}
-        else:
-            by_pid = {
-                int(r.pid): r
-                for r in staged.groupBy("pid").agg(*aggs).collect()
-            }
+        by_pid = {
+            int(r.pid): r for r in written.groupBy("pid").agg(*aggs).collect()
+        }
+        for tmp in glob.glob(os.path.join(glob.escape(staging), "pid=*",
+                                          ".*.tmp")):
+            os.remove(tmp)
         if self._lost.is_set():
             raise LeaseHeld(
                 f"sink lease for {self.out_dir} was lost during staging "
