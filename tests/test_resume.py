@@ -231,6 +231,85 @@ def test_incremental_preserves_maintenance_results(spark, sf_small, tmp_path):
     assert job.run(incremental=True)["status"] == "up-to-date"
 
 
+def test_commit_fingerprint_is_the_staged_rows_aggregate(job_factory):
+    """Each commit's (input_rows, input_sig) is an aggregate of the rows
+    its staging action wrote — one per input row, so it equals the
+    input's own fingerprint of that pid, and input_rows == turns_seen."""
+    job = job_factory("fp")
+    job.run()
+    fps = job.input_fingerprints()
+    stored = {
+        int(r.pid): (r.n, r.sig)
+        for r in job.read_output().groupBy("pid").agg(
+            F.count("*").alias("n"),
+            F.expr("bit_xor(xxhash64(conv_id, turn_idx))").alias("sig"),
+        ).collect()
+    }
+    commits = job.sink.committed()
+    assert sorted(commits) == sorted(fps) == list(range(8))
+    for pid, commit in commits.items():
+        m = commit["metrics"]
+        got = (m["input_rows"], m["input_sig"])
+        assert got == (fps[pid]["input_rows"], fps[pid]["input_sig"])
+        assert got == stored[pid]
+        assert m["input_rows"] == m["turns_seen"]
+
+
+def test_ts_only_rewrite_is_up_to_date(spark, sf_small, tmp_path):
+    """ts does not survive extraction, so it is not part of the input
+    fingerprint: an input that differs only in ts cannot change the
+    sink, and an incremental run over it re-extracts nothing."""
+    src = str(tmp_path / "ts_in")
+    (
+        spark.read.parquet(f"{sf_small}/transcripts.parquet")
+        .withColumn("ts", F.coalesce(
+            F.col("ts") + F.expr("INTERVAL 1 HOUR"),
+            F.lit("2001-01-01 00:00:00").cast("timestamp"),
+        ))
+        .write.parquet(src)
+    )
+    out = str(tmp_path / "ts_out")
+    ExtractionJob(spark, f"{sf_small}/transcripts.parquet", out, 8).run()
+    res = ExtractionJob(spark, src, out, 8).run(incremental=True)
+    assert res["status"] == "up-to-date", res
+
+
+# Spark jobs one run() launches at the fixture (sf0.001, 8 pids, the
+# shared local[8] session). Lower a count when a change removes jobs;
+# never raise one to make a change pass.
+RUN_MAX_JOBS = {
+    # the input's footer inference + the staging action (the writer's
+    # shuffle map stage, then the per-pid aggregate's two stages); the
+    # commits' metrics and fingerprints are that action's aggregates
+    "fresh": 4,
+    # every pid committed: the input is not even read
+    "plain": 0,
+    # footer inference + the change scan's two-stage groupBy
+    "incremental": 3,
+}
+
+
+def test_run_launches_at_most_its_job_budget(spark, job_factory):
+    sc = spark.sparkContext
+    job = job_factory("jobs")
+    got = {}
+    try:
+        for name, kw in (("fresh", {}), ("plain", {}),
+                         ("incremental", {"incremental": True})):
+            group = f"run-{name}-{job.out_dir}"
+            sc.setJobGroup(group, name)
+            res = job.run(**kw)
+            assert res["status"] == ("ok" if name == "fresh"
+                                     else "up-to-date"), (name, res)
+            got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    over = {n: (got[n], RUN_MAX_JOBS[n]) for n in got
+            if got[n] > RUN_MAX_JOBS[n]}
+    assert not over, (over, got)
+
+
 def test_second_driver_claim_fails_while_lease_held(job_factory):
     """Q-concurrency: the claim loop assumes ONE driver owns a sink —
     with a live lease in place, a second driver's run() must fail

@@ -15,11 +15,14 @@ Mirrors the reference's queue semantics (SURVEY.md §2.9) on Spark:
     partitions, and re-running them is idempotent (S5 MERGE key).
 
 Efficiency at scale: the job reads the input ONCE per run (one
-listing, shared by the fingerprint scan and the extraction) and stages
-all uncommitted partitions in one MergeSink.stage pass — each task
-writes only its pids' files — then promotes them per partition. Resume
-scans only the pruned subset (pid pushdown via pmod filter at the
-scan).
+listing, shared by the incremental change scan and the extraction) and
+stages all uncommitted partitions in one MergeSink.stage pass — each
+task writes only its pids' files — then promotes them per partition.
+Each commit's metrics and input fingerprint are aggregates of that
+staging action; a plain run scans the input only to extract it. The
+pid filter of a resume is not pushed to the scan (the pmod(xxhash64)
+predicate lands in DataFilters, PushedFilters: []), so every rescan
+reads the whole input and drops other pids' rows before extraction.
 """
 
 from __future__ import annotations
@@ -40,6 +43,29 @@ from v2_ocr_spark.pipeline.sink import (
     MergeSink,
     partition_id,
 )
+
+
+def _fingerprint() -> dict:
+    """A partition's input fingerprint, as aggregates over its input
+    rows or over the rows staged from them (one per input row)."""
+    return {"input_rows": F.count("*"),
+            "input_sig": F.expr("bit_xor(xxhash64(conv_id, turn_idx))")}
+
+
+def _commit_aggs() -> dict:
+    """A commit's metrics, each an aggregate of the staging action."""
+    nodes, kept = F.sum("nodes_seen"), F.sum("n_spans")
+    return {
+        "turns_seen": F.count("*"),
+        "nodes_seen": nodes,
+        "blocks_kept": kept,
+        "blocks_dropped": nodes - kept,
+        "turns_errored": F.count(F.when(F.col("error").isNotNull(), 1)),
+        "chars_in": F.sum("chars_in"),
+        "chars_out": F.sum("chars_out"),
+        "proc_ms": F.expr("sum(proc_us) div 1000"),
+        **_fingerprint(),
+    }
 
 
 class ExtractionJob:
@@ -75,38 +101,26 @@ class ExtractionJob:
             pending.append(pid)
         return pending
 
-    def input_fingerprints(
-        self, pids: list[int] | None = None
-    ) -> dict[int, dict]:
+    def input_fingerprints(self) -> dict[int, dict]:
         """Per-partition input fingerprint: (row count, order-independent
-        bit_xor of xxhash64(conv_id, turn_idx, ts)). One narrow agg scan
-        (3 columns, map-side partial) — detects appended, removed or
-        re-keyed turns without reading text. In-place text edits are
-        outside the change model (transcript stores are append-only
-        event logs); re-run non-incrementally to force full recompute.
+        bit_xor of xxhash64(conv_id, turn_idx)). One narrow agg scan
+        (2 columns, map-side partial) — detects appended, removed or
+        re-keyed turns without reading text. Each commit records the
+        same aggregates over the rows it staged (_commit_aggs), which
+        are its input rows: extraction keeps every row. In-place edits
+        (text, ts) are outside the change model (transcript stores are
+        append-only event logs); ts is not fingerprinted because it
+        does not survive extraction. To force a full recompute, clear
+        the sink (maintenance.clear_all_data) or use a fresh out_dir.
         """
-        return self._fingerprints(
-            self.spark.read.parquet(self.input_path), pids)
+        return self._fingerprints(self.spark.read.parquet(self.input_path))
 
-    def _fingerprints(self, source: DataFrame,
-                      pids: list[int] | None = None) -> dict[int, dict]:
-        df = source.withColumn(
-            "pid", partition_id("conv_id", self.num_partitions)
-        )
-        if pids is not None and len(pids) < self.num_partitions:
-            df = df.where(F.col("pid").isin(pids))
-        rows = (
-            df.groupBy("pid")
-            .agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(conv_id, turn_idx, ts))").alias("sig"),
-            )
-            .collect()
-        )
-        return {
-            int(r.pid): {"input_rows": int(r.n), "input_sig": int(r.sig or 0)}
-            for r in rows
-        }
+    def _fingerprints(self, source: DataFrame) -> dict[int, dict]:
+        fp = _fingerprint()
+        rows = source.groupBy(
+            partition_id("conv_id", self.num_partitions).alias("pid")
+        ).agg(*(c.alias(k) for k, c in fp.items())).collect()
+        return {int(r.pid): {k: int(r[k] or 0) for k in fp} for r in rows}
 
     def changed_partitions(self, fps: dict[int, dict]) -> list[int]:
         """Committed partitions whose CURRENT input fingerprint differs
@@ -137,7 +151,8 @@ class ExtractionJob:
     def _extracted(self, source: DataFrame, pids: list[int]) -> DataFrame:
         df = source.withColumn("pid", self.sink.pid())
         if len(pids) < self.num_partitions:
-            df = df.where(F.col("pid").isin(pids))  # resume: pruned rescan
+            # resume: a row filter, not a pruned scan (module docstring)
+            df = df.where(F.col("pid").isin(pids))
         return extract_turns(
             df.select("conv_id", "turn_idx", "role", "text", "tool"),
             with_metrics=True,
@@ -167,18 +182,18 @@ class ExtractionJob:
         self.checkpoints.recover()  # Q2
         pids = self.pending_partitions()
         # ONE read of the input per run: its listing and footer job are
-        # shared by the fingerprint scan and the extraction
+        # shared by the incremental change scan and the extraction
         source = (self.spark.read.parquet(self.input_path)
                   if pids or incremental else None)
         if incremental:
-            fps = self._fingerprints(source)
             # changed COMMITTED partitions respect the same Q4 retry
             # cap as uncommitted ones — without this, a committed
             # partition whose appended input keeps failing to stage is
             # re-selected on every incremental run forever instead of
             # parking at max_attempts (it stays visible in checkpoints)
             changed = [
-                p for p in self.changed_partitions(fps)
+                p for p in self.changed_partitions(
+                    self._fingerprints(source))
                 if not (
                     (st := self.checkpoints.get(p))["status"] == ERROR
                     and st["attempt"] >= self.max_attempts
@@ -187,10 +202,6 @@ class ExtractionJob:
             pids = sorted(set(pids) | set(changed))
         if not pids:
             return {"run_id": run_id, "committed": [], "status": "up-to-date"}
-        if not incremental:
-            # fingerprint only the partitions being staged (pruned,
-            # narrow scan) so future incremental runs have baselines
-            fps = self._fingerprints(source, pids)
 
         for pid in pids:
             st = self.checkpoints.get(pid)
@@ -199,16 +210,11 @@ class ExtractionJob:
                 attempt=st["attempt"] + 1, started_at=time.time(),
             )
 
+        aggs = _commit_aggs()
         try:
             staged = self.sink.stage(
                 self._extracted(source, pids), run_id,
-                F.count("*").alias("turns"),
-                F.sum("nodes_seen").alias("nodes"),
-                F.sum("n_spans").alias("kept"),
-                F.count(F.when(F.col("error").isNotNull(), 1)).alias("errs"),
-                F.sum("chars_in").alias("ci"),
-                F.sum("chars_out").alias("co"),
-                F.sum("proc_us").alias("us"),
+                *(c.alias(k) for k, c in aggs.items()),
             )
         except LeaseHeld:
             raise  # ownership lost: the checkpoints are the new owner's
@@ -219,22 +225,12 @@ class ExtractionJob:
                 )
             raise
 
-        metrics = {}
-        for pid in pids:
-            r = staged.get(pid)
-            n = {k: int((r[k] if r else 0) or 0)
-                 for k in ("turns", "nodes", "kept", "errs", "ci", "co", "us")}
-            metrics[pid] = {
-                "turns_seen": n["turns"],
-                "nodes_seen": n["nodes"],
-                "blocks_kept": n["kept"],
-                "blocks_dropped": n["nodes"] - n["kept"],
-                "turns_errored": n["errs"],
-                "chars_in": n["ci"],
-                "chars_out": n["co"],
-                "proc_ms": n["us"] // 1000,
-                **fps.get(pid, {"input_rows": 0, "input_sig": 0}),
-            }
+        # a pid that staged no rows commits zeros
+        metrics = {
+            pid: {k: int((staged[pid][k] if pid in staged else 0) or 0)
+                  for k in aggs}
+            for pid in pids
+        }
         committed = []
         for pid, commit in self.sink.publish(run_id, metrics):
             # attempt resets on success: the cap bounds a FAILURE
