@@ -282,6 +282,8 @@ RUN_MAX_JOBS = {
     # shuffle map stage, then the per-pid aggregate's two stages); the
     # commits' metrics and fingerprints are that action's aggregates
     "fresh": 4,
+    # nothing committed, so no change scan: the same jobs as fresh
+    "fresh-incremental": 4,
     # every pid committed: the input is not even read
     "plain": 0,
     # footer inference + the change scan's two-stage groupBy
@@ -291,15 +293,17 @@ RUN_MAX_JOBS = {
 
 def test_run_launches_at_most_its_job_budget(spark, job_factory):
     sc = spark.sparkContext
-    job = job_factory("jobs")
+    job, inc = job_factory("jobs"), {"incremental": True}
+    runs = (("fresh", job, {}), ("plain", job, {}),
+            ("incremental", job, inc),
+            ("fresh-incremental", job_factory("jobs-inc"), inc))
     got = {}
     try:
-        for name, kw in (("fresh", {}), ("plain", {}),
-                         ("incremental", {"incremental": True})):
-            group = f"run-{name}-{job.out_dir}"
+        for name, j, kw in runs:
+            group = f"run-{name}-{j.out_dir}"
             sc.setJobGroup(group, name)
-            res = job.run(**kw)
-            assert res["status"] == ("ok" if name == "fresh"
+            res = j.run(**kw)
+            assert res["status"] == ("ok" if name.startswith("fresh")
                                      else "up-to-date"), (name, res)
             got[name] = len(sc.statusTracker().getJobIdsForGroup(group))
     finally:

@@ -190,6 +190,105 @@ def test_stream_extract_upsert_foreachbatch(spark, sf_small, tmp_path):
     assert dups == 0
 
 
+def _land(spark, src: str, out: str, ckpt: str) -> tuple[int, int]:
+    """One availableNow landing run into a 4-pid sink: (micro-batches
+    that read rows, Spark jobs in the query's runId job group)."""
+    from v2_ocr_spark.streaming.stateful import stream_extract_upsert
+
+    q = stream_extract_upsert(spark, src, out, ckpt, num_partitions=4)
+    q.awaitTermination(300)
+    batches = sum(1 for p in q.recentProgress if p.numInputRows)
+    tracker = spark.sparkContext.statusTracker()
+    return batches, len(tracker.getJobIdsForGroup(str(q.runId)))
+
+
+def _first_conversation_and_rest(spark, sf_small):
+    t = spark.read.parquet(f"{sf_small}/transcripts.parquet")
+    first = t.agg(F.min("conv_id")).first()[0]
+    return t.where(F.col("conv_id") == first), t.where(
+        F.col("conv_id") != first)
+
+
+def test_stream_mixed_micro_batch_is_one_rewrite(spark, sf_small, tmp_path):
+    """A micro-batch reaching committed and new pids commits all of them
+    under one run_id: new pids as bootstrap commits without an input
+    fingerprint, the touched pid as a merge. The sink holds exactly the
+    extraction of the input, and an incremental batch run over the same
+    input keeps every streamed row."""
+    from v2_ocr_spark.pipeline.runner import ExtractionJob
+    from v2_ocr_spark.pipeline.sink import MergeSink
+
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    first, rest = _first_conversation_and_rest(spark, sf_small)
+    first.coalesce(1).write.parquet(src)
+    assert _land(spark, src, out, ckpt)[0] == 1
+    sink = MergeSink(out)
+    (touched,) = sink.committed()  # the first conversation's pid
+
+    rest.coalesce(1).write.mode("append").parquet(src)
+    assert _land(spark, src, out, ckpt)[0] == 1
+    commits = sink.committed()
+    assert sorted(commits) == [0, 1, 2, 3]
+    assert len({c["run_id"] for c in commits.values()}) == 1, commits
+    for pid, c in commits.items():
+        m = c["metrics"]
+        if pid == touched:
+            assert m["op"] == "merge", (pid, m)
+        else:
+            assert m["op"] == "bootstrap" and "input_rows" not in m, (pid, m)
+
+    cols = ["conv_id", "turn_idx", "extracted_text", "spans", "error"]
+    want = extract_turns(spark.read.parquet(src)).select(cols)
+
+    def assert_sink_is_extraction():
+        got = sink.read(spark).select(cols)
+        assert got.count() == want.count()
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+    assert_sink_is_extraction()
+    res = ExtractionJob(spark, src, out, 4).run(incremental=True)
+    assert res["status"] == "up-to-date", res
+    assert_sink_is_extraction()
+
+
+# Spark jobs one micro-batch of stream_extract_upsert launches at the
+# fixture (sf0.001, 4 pids, the shared local[8] session), counted in
+# the query's runId job group. Lower a count when a change removes
+# jobs; never raise one to make a change pass.
+STREAM_MAX_JOBS = {
+    # the pid collect over the input (the distinct's map job and its
+    # result), then the staging action: the key dedupe's shuffle, the
+    # writer's shuffle, the per-pid aggregate's two stages; an empty
+    # table has no merge join
+    "fresh": 6,
+    # as fresh, plus the full_outer join's shuffle of the stored rows
+    # (16 when new pids staged apart from the merge of touched ones)
+    "mixed": 7,
+    # the same single rewrite (13 when the merge re-checked a
+    # persisted extraction)
+    "touched": 7,
+}
+
+
+def test_stream_landing_launches_at_most_its_job_budget(
+        spark, sf_small, tmp_path):
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    first, rest = _first_conversation_and_rest(spark, sf_small)
+    got = {}
+    # one conversation into an empty sink, then the rest of the corpus
+    # (new pids and the first one), then the first conversation again
+    for name, rows in (("fresh", first), ("mixed", rest),
+                       ("touched", first)):
+        rows.coalesce(1).write.mode("append").parquet(src)
+        batches, got[name] = _land(spark, src, out, ckpt)
+        assert batches == 1, (name, batches)
+    over = {n: (got[n], STREAM_MAX_JOBS[n]) for n in got
+            if got[n] > STREAM_MAX_JOBS[n]}
+    assert not over, (over, got)
+
+
 def test_stream_and_batch_share_partition_count(spark, sf_small, tmp_path):
     """A default stream adopts the count a batch job pinned and pins the
     batch default on a fresh sink; only an explicit mismatch fails."""

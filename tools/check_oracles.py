@@ -22,7 +22,11 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package too: give them this tree
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (REPO, os.environ.get("PYTHONPATH"))))
 
 TESTDATA = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [

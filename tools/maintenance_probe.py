@@ -30,10 +30,14 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package too: give them this tree
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (REPO, os.environ.get("PYTHONPATH"))))
 
 INPUT = os.environ.get(
-    "MAINT_PROBE_INPUT", "/root/repo/data/sf0.1/transcripts.parquet"
+    "MAINT_PROBE_INPUT", f"{REPO}/data/sf0.1/transcripts.parquet"
 )
 WORK = os.environ.get("MAINT_PROBE_DIR", "/tmp/v2ocr_maint_probe")
 

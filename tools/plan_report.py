@@ -8,7 +8,11 @@ import io
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package too: give them this tree
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (REPO, os.environ.get("PYTHONPATH"))))
 
 
 def fmt_plan(df) -> str:
@@ -154,7 +158,7 @@ def main() -> None:
         out.write(f"\n## {title}\n\n{why}\n\n```\n")
         out.write(fmt_plan(df).strip())
         out.write("\n```\n")
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    with open(f"{REPO}/PLANS.md", "w", encoding="utf-8") as f:
         f.write(out.getvalue())
     print("wrote PLANS.md", len(out.getvalue()), "bytes")
     spark.stop()

@@ -32,7 +32,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Spark's Python workers import the package too: give them this tree
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (REPO, os.environ.get("PYTHONPATH"))))
 
 REPL = int(os.environ.get("SCALE_PROBE_REPL", "20"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

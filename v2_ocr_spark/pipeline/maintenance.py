@@ -13,8 +13,11 @@ row-level-operation stand-ins.
 All of them (and backfill_column / compact_partitions) rewrite ONLY
 the partitions that contain affected rows (pmod(xxhash64(conv_id), P)
 pins each conversation to one partition), then commit each rewritten
-partition atomically through MergeSink.stage / MergeSink.publish — the
-copy-on-write pattern Iceberg uses, at per-partition granularity.
+partition atomically through ONE MergeSink.stage action and
+MergeSink.publish — the copy-on-write pattern Iceberg uses, at
+per-partition granularity. The streaming landing
+(stateful.stream_extract_upsert) commits each micro-batch through the
+same rewrite: its first-reached pids ride along as ``fresh`` pids.
 Untouched partitions keep their snapshots: at 100 TB a delete of one
 conversation rewrites 1/P of the table, not all of it. Every public
 mutator runs its whole read-modify-promote inside MergeSink.owned():
@@ -44,7 +47,7 @@ def _affected_pids(sink: MergeSink, keys: DataFrame) -> list[int]:
 
 
 def _rewrite(spark: SparkSession, sink: MergeSink, pids: list[int],
-             op: str, edit=lambda current: current) -> dict:
+             op: str, edit=lambda current: current, fresh=()) -> dict:
     """Copy-on-write: read the stored rows of ``pids``, stage
     ``edit(rows)`` (keyed by pid) as their replacement content and
     promote each through the sink's commit path — for every
@@ -54,7 +57,12 @@ def _rewrite(spark: SparkSession, sink: MergeSink, pids: list[int],
     ``skipped``. Promoting a pid extraction has not committed would
     publish a commit holding only the rewrite's rows (none, for a
     delete) that pending_partitions then skips forever — silent loss of
-    the partition's whole input.
+    the partition's whole input. The one exception is ``fresh``:
+    uncommitted pids whose rows ``edit`` itself brings, because the
+    caller's input IS their extraction (a streamed micro-batch). They
+    stage in the same action and commit under the same run_id with
+    ``op: "bootstrap"`` and no input fingerprint, so changed_partitions
+    skips them. On a table with no committed pid, ``edit`` gets None.
 
     Maintenance rewrites do not consume new input, so each promoted
     commit CARRIES FORWARD the prior commit's input fingerprint
@@ -64,20 +72,22 @@ def _rewrite(spark: SparkSession, sink: MergeSink, pids: list[int],
     conversations and reverting upserts/backfills)."""
     prior = sink.committed()
     targets = sorted(set(pids) & set(prior))
-    skipped = sorted(set(pids) - set(prior))
-    if not targets:
+    fresh = set(fresh)
+    skipped = sorted(set(pids) - set(prior) - fresh)
+    if not targets and not fresh:
         return {"run_id": None, "rewritten": [], "skipped": skipped}
     run_id = f"{op}-{uuid.uuid4().hex[:8]}"
     # prune on the STORED pid directory column, not a recomputed hash —
     # a pmod(xxhash64(...)) predicate cannot map to the partition dirs,
     # so Spark would list and scan all P partitions to rewrite one
-    current = sink.read(spark).where(F.col("pid").isin(targets))
+    current = (sink.read(spark).where(F.col("pid").isin(targets))
+               if prior else None)
     staged = sink.stage(edit(current), run_id, F.count("*").alias("n"))
     metrics = {}
-    for pid in targets:
-        prev = prior[pid].get("metrics", {})
+    for pid in sorted(fresh.union(targets)):
+        prev = prior.get(pid, {}).get("metrics", {})
         metrics[pid] = {
-            "op": op,
+            "op": op if pid in prior else "bootstrap",
             "rows_after": staged[pid].n if pid in staged else 0,
             "at": time.time(),
             **{k: prev[k] for k in ("input_rows", "input_sig") if k in prev},
@@ -100,37 +110,40 @@ def merge_upsert(
     extracted."""
     sink = MergeSink(out_dir)
     with sink.owned():
-        return _merge(spark, sink, updates)
+        # Iceberg MERGE errors when one target row matches several
+        # source rows; a silent full_outer join would instead MULTIPLY
+        # rows (and compound on every re-merge). Enforce source-key
+        # uniqueness up front — one agg pass over the (small) updates.
+        dup = (
+            updates.groupBy("conv_id", "turn_idx")
+            .count()
+            .where(F.col("count") > 1)
+            .limit(1)
+            .collect()
+        )
+        if dup:
+            r = dup[0]
+            raise ValueError(
+                "updates contain duplicate merge keys, e.g. "
+                f"(conv_id={r['conv_id']!r}, turn_idx={r['turn_idx']}) x"
+                f"{r['count']}; dedupe the batch before merging"
+            )
+        pids = _affected_pids(sink, updates.select("conv_id").distinct())
+        uncommitted = sorted(set(pids) - set(sink.committed()))
+        if uncommitted:
+            raise ValueError(
+                f"cannot upsert into unextracted partitions {uncommitted} "
+                f"of {sink.out_dir}; run the extraction job first"
+            )
+        return _merge(spark, sink, updates, pids, fresh=())
 
 
-def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame) -> dict:
-    """merge_upsert's body, for a caller already inside
-    ``sink.owned()`` — the streaming landing loop."""
-    # Iceberg MERGE errors when one target row matches several source
-    # rows; a silent full_outer join would instead MULTIPLY rows (and
-    # compound on every re-merge). Enforce source-key uniqueness up
-    # front — one agg pass over the (small) updates side.
-    dup = (
-        updates.groupBy("conv_id", "turn_idx")
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        r = dup[0]
-        raise ValueError(
-            "updates contain duplicate merge keys, e.g. "
-            f"(conv_id={r['conv_id']!r}, turn_idx={r['turn_idx']}) x"
-            f"{r['count']}; dedupe the batch before merging"
-        )
-    pids = _affected_pids(sink, updates.select("conv_id").distinct())
-    uncommitted = sorted(set(pids) - set(sink.committed()))
-    if uncommitted:
-        raise ValueError(
-            f"cannot upsert into unextracted partitions {uncommitted} of "
-            f"{sink.out_dir}; run the extraction job first"
-        )
+def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame,
+           pids: list[int], fresh) -> dict:
+    """The merge rewrite of ``pids``, for a caller inside
+    ``sink.owned()`` that has already checked ``updates``: unique keys,
+    and every pid committed except the ``fresh`` ones its rows
+    bootstrap (see _rewrite)."""
     upd_cols = set(updates.columns) - {"conv_id", "turn_idx"}
     # Row presence, not column NULL, decides whether an update applies:
     # a matched source row replaces its columns UNCONDITIONALLY — a
@@ -142,7 +155,9 @@ def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame) -> dict:
     # target value for unmatched targets.
     src = updates.withColumn("_src_present", F.lit(True))
 
-    def merged(current: DataFrame) -> DataFrame:
+    def merged(current: DataFrame | None) -> DataFrame:
+        if current is None:  # nothing committed: every row is inserted
+            return updates.withColumn("pid", sink.pid())
         return (
             current.alias("t")
             .join(src.alias("s"), ["conv_id", "turn_idx"], "full_outer")
@@ -164,7 +179,7 @@ def _merge(spark: SparkSession, sink: MergeSink, updates: DataFrame) -> dict:
             .withColumn("pid", sink.pid())
         )
 
-    return _rewrite(spark, sink, pids, "merge", merged)
+    return _rewrite(spark, sink, pids, "merge", merged, fresh)
 
 
 def delete_conversations(

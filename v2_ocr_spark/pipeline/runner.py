@@ -185,7 +185,8 @@ class ExtractionJob:
         # shared by the incremental change scan and the extraction
         source = (self.spark.read.parquet(self.input_path)
                   if pids or incremental else None)
-        if incremental:
+        # nothing committed, nothing changed: skip the change scan
+        if incremental and self.sink.committed():
             # changed COMMITTED partitions respect the same Q4 retry
             # cap as uncommitted ones — without this, a committed
             # partition whose appended input keeps failing to stage is

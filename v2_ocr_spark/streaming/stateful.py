@@ -22,8 +22,6 @@ hottest user, same as the batch window formulation
 
 from __future__ import annotations
 
-import time
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -184,77 +182,50 @@ def stream_extract_upsert(
     foreachBatch — the third Structured Streaming idiom next to the
     append sink (stream_extract) and arbitrary state (sessionizer).
 
-    Each micro-batch extracts its files' turns and MERGEs them into the
-    batch table keyed (conv_id, turn_idx). End-to-end effectively-once:
-    the source commit log makes batch replay the only duplication mode,
-    and merge_upsert is idempotent, so a replayed batch is a no-op.
-    The same pattern targets Iceberg MERGE INTO on a real cluster
-    (pipeline/iceberg.py). ``num_partitions`` None adopts the table's
-    pinned count (the batch job's default on a fresh table).
+    Each micro-batch is ONE copy-on-write rewrite (maintenance._rewrite)
+    keyed (conv_id, turn_idx): one pid collect over the batch's input
+    rows, then one MergeSink.stage action that extracts the batch,
+    merges it into the pids already committed and writes the pids it
+    reaches first (``fresh``: the stream IS their extraction, so they
+    commit with ``op: "bootstrap"`` under the same run_id). Extraction
+    runs once, inside that action; nothing is persisted. End-to-end
+    effectively-once: the source commit log makes batch replay the only
+    duplication mode, and the merge is idempotent, so a replayed batch
+    is a no-op. The same pattern targets Iceberg MERGE INTO on a real
+    cluster (pipeline/iceberg.py). ``num_partitions`` None adopts the
+    table's pinned count (the batch job's default on a fresh table).
     """
     from v2_ocr_spark.operators.extract import extract_turns
-    from v2_ocr_spark.pipeline.maintenance import _merge
+    from v2_ocr_spark.pipeline.maintenance import _affected_pids, _merge
     from v2_ocr_spark.pipeline.sink import MergeSink
 
     stream = read_parquet_stream(spark, TRANSCRIPT_DDL, input_dir)
 
     def land(batch_df, batch_id: int) -> None:
         sink = MergeSink(out_dir)
-        # with_metrics matches the BATCH staging schema — a narrow
-        # bootstrap partition would otherwise become the table's first
-        # parquet footer and silently drop metrics columns on read.
-        # The key dedupe handles an at-least-once upstream writing one
-        # turn into two files picked up by the same trigger: extraction
-        # is deterministic per input row, so replayed keys carry
-        # byte-identical payloads and dropDuplicates picks one of the
-        # equals — without it the bootstrap path would commit both rows
-        # (breaking the keyed table forever) and the merge path would
-        # raise on its duplicate-key guard, replaying the same batch on
-        # every restart (a permanent poison pill).
-        extracted = (
-            extract_turns(batch_df, with_metrics=True)
-            .dropDuplicates(["conv_id", "turn_idx"])
-            .persist()
-        )
-        try:
-            # ONE ownership block spans the whole micro-batch (bootstrap
-            # + merge) INCLUDING the partition-count pin, a
-            # read-decide-write on _table.json that must not race a
-            # batch runner on a brand-new sink
-            with sink.owned(num_partitions):
-                keyed = extracted.withColumn("pid", sink.pid())
-                pids = {
-                    r.pid for r in keyed.select("pid").distinct().collect()
-                }
-                done = set(sink.committed())
-                fresh = sorted(pids - done)
-                if fresh:
-                    # the stream IS the extraction for partitions it
-                    # reaches first: bootstrap them through the sink's
-                    # commit path (merge_upsert's extraction-first
-                    # policy is for BATCH maintenance callers, not this
-                    # source)
-                    run_id = f"bootstrap-{uuid.uuid4().hex[:8]}"
-                    staged = sink.stage(
-                        keyed.where(F.col("pid").isin(fresh)), run_id,
-                        F.count("*").alias("n"),
-                    )
-                    list(sink.publish(run_id, {
-                        pid: {"op": "bootstrap", "rows_after": r.n,
-                              "at": time.time()}
-                        for pid, r in sorted(staged.items())
-                    }))
-                touched = sorted(pids & done)
-                if touched:
-                    _merge(
-                        spark, sink,
-                        keyed.where(F.col("pid").isin(touched)).drop("pid"),
-                    )
-        finally:
-            # unpersist on EVERY exit — a failed micro-batch is retried
-            # by the engine, and each retry would otherwise pin another
-            # cached copy in executor storage for the session's life
-            extracted.unpersist()
+        # ONE ownership block spans the micro-batch INCLUDING the
+        # partition-count pin, a read-decide-write on _table.json that
+        # must not race a batch runner on a brand-new sink
+        with sink.owned(num_partitions):
+            # extraction keeps every input row, so the input's pids are
+            # the extraction's: nothing is extracted to find them
+            pids = _affected_pids(sink, batch_df)
+            fresh = set(pids) - set(sink.committed())
+            # with_metrics matches the BATCH staging schema (a narrow
+            # first partition would become the table's schema and drop
+            # the metrics columns on read). The key dedupe handles an
+            # at-least-once upstream writing one turn into two files
+            # picked up by the same trigger: extraction is deterministic
+            # per input row, so replayed keys carry byte-identical
+            # payloads and dropDuplicates picks one of the equals —
+            # without it the full_outer merge would commit both rows
+            # and break the keyed table forever.
+            _merge(
+                spark, sink,
+                extract_turns(batch_df, with_metrics=True)
+                .dropDuplicates(["conv_id", "turn_idx"]),
+                pids, fresh,
+            )
 
     writer = stream.writeStream.foreachBatch(land).option(
         "checkpointLocation", checkpoint_dir
